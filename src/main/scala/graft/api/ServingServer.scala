@@ -46,12 +46,13 @@ import graft.queries.{DedupIndex, Maintenance, VectorIndex}
   * envelopes are bounded by what the client sent, never by index size
   * (heap-pinned in `ServingServerSpec` like the sf0.1 FinOps scale spec).
   * Concurrent ingest requests are safe — same-JVM and across server
-  * replicas on a shared filesystem: appends coordinate via wave leases
-  * and publish from writer-private staging by rename
-  * ([[graft.operators.Bucketing.appendWaveByRename]]), under the
+  * replicas on a shared filesystem or object store: appends coordinate
+  * via wave leases and publish from writer-private staging by per-file
+  * moves plus a manifest commit
+  * ([[graft.operators.Bucketing.appendWave]]), under the
   * disjoint-content contract documented on the appends. (Takedowns are
   * not exposed here; `DedupIndex.remove`/`VectorIndex.remove` carry their
-  * own cross-replica contract — rename-staged since r17, including the
+  * own cross-replica contract — privately staged since r17, including the
   * first-tombstone table creation.)
   */
 final class ServingServer(spark: SparkSession,

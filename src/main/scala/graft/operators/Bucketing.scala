@@ -101,9 +101,9 @@ object Bucketing {
   /** Register an existing [[writePartitionedBucketedExternal]] artifact —
     * metadata plus partition discovery (no data read): partition
     * registration is what re-arms planning-time pruning in the fresh
-    * session. Discovery prefers the WAVE MANIFESTS when the artifact
-    * carries them ([[registerPartitions]] — zero listing); rename-mode
-    * and legacy artifacts RECOVER (one recursive listing). */
+    * session. Discovery reads the WAVE MANIFESTS ([[registerPartitions]]
+    * — zero listing); artifacts whose markers predate manifest bodies
+    * RECOVER (one recursive listing). */
   def attachPartitionedBucketed(spark: SparkSession, table: String,
       partCols: Seq[String], keys: Seq[String], location: String,
       buckets: Int): Unit = {
@@ -119,8 +119,8 @@ object Bucketing {
     registerPartitions(spark, table, partCols, location)
   }
 
-  /** Partition discovery for a fresh attach. Manifest-mode indexes
-    * already inventory every key per wave in their commit markers, so
+  /** Partition discovery for a fresh attach. Wave markers inventory
+    * every key of their wave ([[commitWave]]), so
     * the table's partitions derive from ~|waves| SMALL OBJECT READS with
     * zero directory listing — where `RECOVER PARTITIONS` walks the whole
     * prefix tree: O(partitions) LIST calls against an object store, the
@@ -128,8 +128,8 @@ object Bucketing {
     * subs per attach). Quarantined waves' retained manifests register
     * too, so a later [[unquarantineWave]] serves from already-known
     * partitions. Falls back to RECOVER whenever any committed wave lacks
-    * a manifest body (rename-mode artifacts, legacy layouts) or carries
-    * no rows for this table. */
+    * a manifest body (an empty marker written before every commit carried
+    * one, or a legacy layout) or carries no rows for this table. */
   private def registerPartitions(spark: SparkSession, table: String,
       partCols: Seq[String], location: String): Unit = {
     def recover(): Unit =
@@ -161,7 +161,7 @@ object Bucketing {
     val parts = parsed.map(_.get).distinct
     // directory names are Hive-escaped: unescape and quote so the
     // catalog stores true values and re-derives locations itself (the
-    // appendWaveStaged registration rationale, r16 advisor)
+    // appendWave registration rationale, r16 advisor)
     val specs = parts.map(_.map { kv =>
       val Array(k, v) = kv.split("=", 2)
       val lit = org.apache.spark.sql.catalyst.catalog
@@ -360,8 +360,9 @@ object Bucketing {
   // classic staged-write + single-commit-object pattern, Spark-native:
   // every data table carries `wave` as its FIRST partition column, a wave's
   // files land under wave=W directories across all tables, and the wave
-  // becomes visible only when the writer creates the empty marker file
-  // `<dir>/_wave_W` — ONE atomic FS create. Readers resolve
+  // becomes visible only when the writer creates the marker file
+  // `<dir>/_wave_W` — ONE atomic conditional create whose body is the
+  // wave's file manifest ([[commitWave]]). Readers resolve
   // [[committedWave]] once per probe and filter `wave <= committed`
   // (planning-time directory pruning, so the filter costs nothing), which
   // makes a mid-append crash leave only INVISIBLE garbage (reclaimed by
@@ -476,37 +477,6 @@ object Bucketing {
       }
     }
 
-  /** The staging/publish mode from `spark.graft.append.staging`:
-    *
-    *   - `rename` (default) — writer-private staging published by ONE
-    *     directory rename per table; atomic on HDFS/local, NOT a legal
-    *     publish primitive on object stores (no directory rename there);
-    *   - `manifest` — the OBJECT-STORE protocol (r16 verdict item 1):
-    *     writer-private staging published by per-FILE moves into the live
-    *     `wave=W` prefixes (one-object copy is atomic on S3-class
-    *     stores; order/timing is irrelevant because nothing is visible
-    *     yet), then ONE conditional-put of a `_wave_W` MANIFEST listing
-    *     the wave's keys. Readers are unchanged — visibility is still the
-    *     marker NAME; the manifest body makes garbage reclamation precise
-    *     ([[reclaimGarbage]]) and doubles as a per-wave file inventory;
-    *   - `inplace` — the legacy pre-r16 `saveAsTable(Append)` on the live
-    *     path (same-JVM-locked).
-    */
-  def stagingMode(spark: SparkSession): String = {
-    val m = spark.conf.get("spark.graft.append.staging", "rename")
-    // a typo here ("manifests", "renames") previously fell through to the
-    // legacy in-place saveAsTable path — same-JVM-locked, cross-JVM-UNSAFE
-    // — while remove() read the same value as staged-rename: inconsistent
-    // semantics with no error (r17 advisor). Unknown values fail loudly.
-    require(StagingModes(m),
-      s"spark.graft.append.staging='$m' is not a staging mode — expected " +
-        s"one of ${StagingModes.toSeq.sorted.mkString(", ")}")
-    m
-  }
-
-  /** The legal `spark.graft.append.staging` values ([[stagingMode]]). */
-  val StagingModes: Set[String] = Set("rename", "manifest", "inplace")
-
   /** PUBLISH wave `wave` under `dir` — one atomic create-no-overwrite;
     * the moment this returns, every reader's next [[committedWave]]
     * includes the wave's staged files across all tables. No-overwrite is
@@ -515,21 +485,21 @@ object Bucketing {
     * loudly here turns a silent interleaved-content corruption into an
     * immediate error.
     *
-    * In `manifest` mode ([[stagingMode]]) the marker is not empty: it
-    * lists every data file of the wave (size + path relative to `dir`),
-    * gathered by listing the writer's own just-written `wave=W`
-    * directories — a read-your-writes listing, strongly consistent on
-    * S3-class stores since 2020 and trivially so on HDFS/local. The
-    * conditional-put (If-None-Match semantics) is the same primitive
+    * The marker is a MANIFEST: it lists every data file of the wave
+    * (size + path relative to `dir`), gathered by listing the writer's
+    * own just-written `wave=W` directories — a read-your-writes listing,
+    * strongly consistent on S3-class stores since 2020 and trivially so
+    * on HDFS/local. Readers gate visibility on the marker NAME; the body
+    * buys precise garbage reclamation ([[reclaimGarbage]]), the
+    * integrity audit ([[verifyWaveManifests]]) and listing-free attach
+    * ([[registerPartitions]]). The conditional-put (If-None-Match
+    * semantics, [[createNoOverwriteContent]]) is the same primitive
     * [[createNoOverwrite]] already demands of the store. */
   def commitWave(spark: SparkSession, dir: String, wave: Int): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/_wave_$wave")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val ok =
-      if (stagingMode(spark) == "manifest")
-        createNoOverwriteContent(fs, p, manifestBody(spark, dir, wave)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      else createNoOverwrite(fs, p)
+    val ok = createNoOverwriteContent(fs, p, manifestBody(spark, dir, wave)
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     require(ok,
       s"wave marker $p already exists — a second writer committed this " +
         "wave number; the lease protocol was bypassed or the filesystem " +
@@ -567,8 +537,8 @@ object Bucketing {
   }
 
   /** Parse the `_wave_<wave>` manifest under `dir`: Some(relPath → size)
-    * when the marker carries a manifest body, None for an empty
-    * marker-mode file or a missing marker. */
+    * when the marker carries a manifest body, None for an empty marker
+    * (written before every commit carried a manifest) or a missing one. */
   def waveManifest(spark: SparkSession, dir: String,
       wave: Int): Option[Map[String, Long]] =
     manifestAt(spark, s"$dir/_wave_$wave")
@@ -600,20 +570,25 @@ object Bucketing {
 
   /** [[createNoOverwrite]] carrying CONTENT — the conditional-put shape
     * (S3 `If-None-Match: *`): the object appears only if the key was
-    * absent. On `file:` the CLAIM is the O_EXCL create and the body lands
-    * immediately after (a reader that races the two sees an empty marker
-    * whose NAME already gates visibility correctly — the body is consumed
-    * only by maintenance-cadence reclamation, never by probes). */
+    * absent, and it appears WHOLE. On `file:` the body is written to a
+    * hidden `.stage_`-prefixed sibling first (no `_wave_N` scan matches
+    * it; a crashed writer's leftover is stale staging that
+    * [[reclaimGarbage]] deletes) and then published with one hard link
+    * — `link(2)` is atomic and fails when the target exists, so a reader
+    * never parses a partial body: an O_EXCL create followed by a write
+    * left a window in which [[reclaimGarbage]] would delete committed
+    * files the partial body did not list yet. */
   def createNoOverwriteContent(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path, content: Array[Byte]): Boolean =
     if (fs.getUri.getScheme == "file") {
       val local = new java.io.File(p.toUri.getPath)
       Option(local.getParentFile).foreach(_.mkdirs())
-      try {
-        java.nio.file.Files.createFile(local.toPath)
-        java.nio.file.Files.write(local.toPath, content)
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      val tmp = new java.io.File(local.getParentFile,
+        s".stage_${local.getName}.${java.util.UUID.randomUUID()}").toPath
+      java.nio.file.Files.write(tmp, content)
+      try { java.nio.file.Files.createLink(local.toPath, tmp); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      finally java.nio.file.Files.deleteIfExists(tmp)
     } else {
       try {
         val out = fs.create(p, false)
@@ -627,7 +602,7 @@ object Bucketing {
       }
     }
 
-  /** Drop every wave marker, lease, AND crashed-append staging root
+  /** Drop every wave marker, lease, AND staging root of a crashed append
     * under `dir` — a rebuild/compact starts the history over (its own
     * wave 0 is committed after the tables are written), and stale leases
     * or `.stage_w*` garbage from the retired history must not inflate
@@ -803,20 +778,14 @@ object Bucketing {
     }
   }
 
-  /** Serialize the PHYSICAL table writes of concurrent same-JVM writers
-    * to one index: wave leases make concurrent appends land on disjoint
-    * waves, but the underlying `saveAsTable(Append)` jobs share the
-    * table path's Hadoop committer staging directory (`_temporary/0`) —
-    * one job's commit-cleanup can delete another in-flight job's task
-    * files, silently truncating its wave. Within a JVM this mutex closes
-    * that race (lease acquisition stays concurrent; only the write
-    * section serializes). ACROSS JVMs it cannot — which is why the
-    * DEFAULT append path is [[appendWaveByRename]] (writer-private
-    * staging moved in by one directory rename: no shared committer dir,
-    * no lock needed, safe across processes); this mutex remains for the
-    * legacy in-place staging mode (`spark.graft.append.staging=inplace`)
-    * and the tombstone-table CREATE race. Keyed by the qualified index
-    * directory, so two spellings of one location share a lock. */
+  /** Serialize same-JVM catalog DDL on one index: the FIRST tombstone
+    * of an index publishes its files and then CREATEs the `<prefix>_tombs`
+    * table over them, and two concurrent removers in one session must not
+    * both run that CREATE. Every data write is lock-free — appends and
+    * removes stage under writer-private roots and publish by per-file
+    * moves ([[appendWave]], [[appendFilesByRenameTo]]). Keyed by the
+    * qualified index directory, so two spellings of one location share a
+    * lock. */
   def withWriteLock[A](spark: SparkSession, dir: String)(body: => A): A = {
     val lock = writeLocks.computeIfAbsent(normPath(spark, dir),
       _ => new Object)
@@ -826,67 +795,16 @@ object Bucketing {
   private val writeLocks =
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), Object]()
 
-  /** CROSS-JVM-safe staged append of ONE wave's rows to a partitioned
-    * bucketed table: the rows are written to a WRITER-PRIVATE staging
-    * table under `<indexDir>/.stage_w<wave>/<liveTable>`, then published
-    * into the live table by a single directory RENAME of its `wave=W`
-    * subtree, and the moved partitions are registered with one batched
-    * `ALTER TABLE ADD IF NOT EXISTS PARTITION`. Two concurrent writers —
-    * threads OR processes — never share a Hadoop committer staging dir
-    * (`_temporary/0`), so the commit-cleanup race [[withWriteLock]]
-    * guards against cannot occur and no lock is taken: the wave lease
-    * already guarantees the `wave=W` destination is this writer's alone.
-    *
-    * `df` must already carry the `wave` column (= `wave`) and the
-    * partition/bucket columns, pre-repartitioned by the caller exactly as
-    * the in-place path would. A dot-prefixed staging root is invisible to
-    * every table scan (Hadoop's hidden-path filter), and a crash before
-    * the rename leaves garbage ONLY there — reclaimed by
-    * [[clearWaveMarkers]] at compact/rebuild; a crash after some tables'
-    * renames leaves uncommitted `wave=W` dirs under those tables, exactly
-    * the abandoned-wave garbage the marker protocol already makes
-    * invisible. Same-FS rename is the publish primitive (atomic on
-    * HDFS/local; object stores emulate rename by copy — there, prefer
-    * the in-place mode with an external writer lock, or a manifest
-    * committer).
-    *
-    * Registration note: the live tables are catalog-partitioned (attach
-    * runs `RECOVER PARTITIONS`), so moved-in dirs must be ADDed for
-    * planning-time pruning to see them — the statement is
-    * batch-proportional (only partitions the batch touched exist under
-    * `wave=W`). */
-  def appendWaveByRename(spark: SparkSession, df: DataFrame,
-      liveTable: String, keys: Seq[String], partColsAfterWave: Seq[String],
-      buckets: Int, indexDir: String, wave: Int): Unit =
-    appendWaveStaged(spark, df, liveTable, keys, partColsAfterWave,
-      buckets, indexDir, wave, perFile = false)
-
-  /** [[appendWaveByRename]] with the OBJECT-STORE publish primitive:
-    * instead of one directory rename (which S3-class stores cannot do
-    * atomically — or at all, short of an O(files) server-side copy), the
-    * staged files are moved ONE AT A TIME into the live `wave=W`
-    * prefixes. Per-object copy IS atomic on object stores, and the
-    * non-atomicity of the sequence is irrelevant: nothing under `wave=W`
-    * is visible to any reader until the `_wave_W` manifest lands
-    * ([[commitWave]] in `manifest` mode). A crash mid-move leaves a
-    * partial file set under an uncommitted wave — invisible garbage,
-    * reclaimed precisely by [[reclaimGarbage]]. */
-  def appendWaveByMove(spark: SparkSession, df: DataFrame,
-      liveTable: String, keys: Seq[String], partColsAfterWave: Seq[String],
-      buckets: Int, indexDir: String, wave: Int): Unit =
-    appendWaveStaged(spark, df, liveTable, keys, partColsAfterWave,
-      buckets, indexDir, wave, perFile = true)
-
   /** Move every FILE under `src` to the mirrored path under `dst` —
     * per-file renames only (the object-store-legal shape; a Hadoop
     * object-store FS implements single-file rename as one atomic
     * server-side copy + delete). The moves run on a bounded thread pool:
     * a wave can carry thousands of small files (batch partitions ×
     * buckets × tables at fine grain), and a sequential driver loop made
-    * the manifest-mode publish measurably slower than rename mode
-    * (PublishModeProbe r17) — per-object latency dominates on real
-    * stores too, and these moves are embarrassingly parallel (the S3A
-    * committers batch exactly the same way). */
+    * the per-file publish measurably slower than one directory rename
+    * (r17 A/B) — per-object latency dominates on real stores too, and
+    * these moves are embarrassingly parallel (the S3A committers batch
+    * exactly the same way). */
   private def moveTree(fs: org.apache.hadoop.fs.FileSystem,
       src: org.apache.hadoop.fs.Path,
       dst: org.apache.hadoop.fs.Path): Unit = {
@@ -954,9 +872,37 @@ object Bucketing {
   /** Per-move retry budget against store throttling. */
   private val MoveRetries = 4
 
-  private def appendWaveStaged(spark: SparkSession, df: DataFrame,
+  /** CROSS-JVM-safe staged append of ONE wave's rows to a partitioned
+    * bucketed table — the one publish path on every filesystem: the rows
+    * are written to a WRITER-PRIVATE staging table under
+    * `<indexDir>/.stage_w<wave>/<liveTable>`, their files are MOVED one at
+    * a time into the live table's `wave=W` subtree ([[moveTree]]), and
+    * the moved partitions are registered with one batched
+    * `ALTER TABLE ADD IF NOT EXISTS PARTITION`. Two concurrent writers —
+    * threads OR processes — never share a Hadoop committer staging dir
+    * (`_temporary/0`), so no lock is taken: the wave lease already
+    * guarantees the `wave=W` destination is this writer's alone.
+    *
+    * Per-object moves are atomic on object stores (no directory rename
+    * is needed, which S3-class stores cannot do), and the non-atomicity
+    * of the sequence is irrelevant: nothing under `wave=W` is visible to
+    * any reader until [[commitWave]] lands the `_wave_W` manifest. A
+    * dot-prefixed staging root is invisible to every table scan
+    * (Hadoop's hidden-path filter); a crash before the moves leaves
+    * garbage only there, and a crash mid-move leaves a partial file set
+    * under an uncommitted wave — invisible garbage, reclaimed precisely
+    * by [[reclaimGarbage]].
+    *
+    * `df` must already carry the `wave` column (= `wave`) and the
+    * partition/bucket columns, pre-repartitioned by the caller.
+    * Registration note: the live tables are catalog-partitioned (attach
+    * registers partitions), so moved-in dirs must be ADDed for
+    * planning-time pruning to see them — the statement is
+    * batch-proportional (only partitions the batch touched exist under
+    * `wave=W`). */
+  def appendWave(spark: SparkSession, df: DataFrame,
       liveTable: String, keys: Seq[String], partColsAfterWave: Seq[String],
-      buckets: Int, indexDir: String, wave: Int, perFile: Boolean): Unit = {
+      buckets: Int, indexDir: String, wave: Int): Unit = {
     val stagePath = s"$indexDir/.stage_w$wave/$liveTable"
     val stageTable = s"${liveTable}__stage_w$wave"
     spark.sql(s"DROP TABLE IF EXISTS $stageTable")
@@ -977,10 +923,7 @@ object Bucketing {
           org.apache.spark.sql.catalyst.TableIdentifier(liveTable))
         .location.toString
       val dst = new org.apache.hadoop.fs.Path(s"$liveLoc/wave=$wave")
-      if (perFile) moveTree(fs, src, dst)
-      else require(fs.rename(src, dst),
-        s"publish rename failed: $src -> $dst (wave $wave was leased, so " +
-          "the destination cannot be another writer's — check FS health)")
+      moveTree(fs, src, dst)
       val parts =
         if (partColsAfterWave.isEmpty) Seq(s"PARTITION (wave=$wave)")
         else fs.listStatus(dst).map(_.getPath.getName)
@@ -1004,37 +947,21 @@ object Bucketing {
     spark.catalog.refreshTable(liveTable)
   }
 
-  /** [[appendWaveByRename]] for an UNPARTITIONED live table (the
+  /** [[appendWave]] for an UNPARTITIONED live table at `liveLoc` (the
     * tombstone tables): writes `df` as plain parquet under a private
-    * `.stage_t<tag>` root, then renames each part file into the live
-    * table's directory (job-UUID file names never collide) and refreshes
-    * the listing. Cross-JVM-safe for the same reason — no shared
-    * committer dir; concurrent removers still share the tombs SNAPSHOT
-    * their novel-anti-join read, so the same id removed concurrently by
-    * two processes can double-insert (verdicts stay right — the probe
-    * anti-join dedups — but the raw tombstone row count inflates;
-    * compact collapses the rows). */
-  def appendFilesByRename(spark: SparkSession, df: DataFrame,
-      liveTable: String, indexDir: String): Unit = {
-    val liveLoc = spark.sessionState.catalog
-      .getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(liveTable))
-      .location.toString
-    appendFilesByRenameTo(spark, df, liveLoc, indexDir)
-    spark.catalog.refreshTable(liveTable)
-  }
-
-  /** [[appendFilesByRename]] against an explicit LOCATION — the form the
+    * `.stage_t<tag>` root, then moves each part file into the live
+    * directory (job-UUID file names never collide). Also the form the
     * FIRST tombstone of an index takes, before any `<prefix>_tombs` table
-    * exists to look the location up from: publish the files, THEN register
-    * the table over them. Two replicas' first removes are safe against
-    * each other — writer-private staging (no shared committer dir) and
-    * job-UUID part names that cannot collide; each replica's CREATE lands
-    * in its own catalog (r16 advisor: the saveAsTable fallback shared
-    * `$dir/tombs`' committer staging dir across processes, the exact race
-    * rename staging was introduced to close). Per-FILE renames only — the
-    * object-store-legal publish shape (one-object copy is atomic there;
-    * directory rename is not). */
+    * exists to look the location up from: publish the files, THEN the
+    * caller registers the table over them. Two replicas' removes are safe
+    * against each other — writer-private staging (no shared committer
+    * dir) and job-UUID part names; each replica's CREATE lands in its own
+    * catalog (r16 advisor: a saveAsTable on `$dir/tombs` shared its
+    * committer staging dir across processes). Concurrent removers still
+    * share the tombs SNAPSHOT their novel-anti-join read, so the same id
+    * removed concurrently by two processes can double-insert (verdicts
+    * stay right — the probe anti-join dedups — but the raw tombstone row
+    * count inflates; compact collapses the rows). */
   def appendFilesByRenameTo(spark: SparkSession, df: DataFrame,
       liveLoc: String, indexDir: String): Unit = {
     val tag = java.util.UUID.randomUUID().toString.take(12)
@@ -1067,21 +994,15 @@ object Bucketing {
         .map(_.stripPrefix("wave=").toInt)).toSet
 
   /** Drop ONE wave's staging root (normal end-of-append cleanup; the
-    * per-table subtrees are already gone after their renames). */
+    * per-table subtrees are already gone after their moves). */
   def releaseStaging(spark: SparkSession, dir: String, wave: Int): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/.stage_w$wave")
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
   }
 
-  /** Count of `.stage_*` staging roots under `dir` (in-flight or
-    * crashed rename-mode appends/removes — the stats/maintenance
-    * signal). */
-  def stagingDirCount(spark: SparkSession, dir: String): Int =
-    stagingDirAges(spark, dir).size
-
   /** (name, ageMs) of every `.stage_*` staging root under `dir`, age from
-    * the root's mtime — distinguishes a healthy IN-FLIGHT rename-mode
-    * append (young) from crash garbage (old): the r16 advisor's finding
+    * the root's mtime — distinguishes a healthy IN-FLIGHT append (young)
+    * from crash garbage (old): the r16 advisor's finding
     * that counting them all as a compact reason made a live append alone
     * trigger an executed compact mid-write. */
   def stagingDirAges(spark: SparkSession, dir: String): Seq[(String, Long)] = {
@@ -1144,8 +1065,8 @@ object Bucketing {
   /** AUDIT every committed wave's manifest against the filesystem — the
     * integrity check the manifest bodies make cheap (one listing, no data
     * read): an empty result means every committed key is exactly where
-    * its commit said. Marker-mode waves (empty `_wave_N`) have no
-    * inventory and are skipped. */
+    * its commit said. Empty markers (written before every commit carried
+    * a manifest) have no inventory and are skipped. */
   def verifyWaveManifests(spark: SparkSession,
       dir: String): Seq[ManifestAudit] = {
     val root = new org.apache.hadoop.fs.Path(dir)
@@ -1183,15 +1104,16 @@ object Bucketing {
     * compact REWRITES the whole index, which at 100 TB is the expensive
     * lever — this one only deletes dead bytes). Removes, under `dir`:
     *
-    *   - stale `.stage_*` roots (crashed rename/manifest-mode writers;
-    *     roots younger than [[writerLiveTtlMs]] are presumed a live
-    *     writer and skipped),
+    *   - stale `.stage_*` roots (crashed writers' staged data or marker
+    *     bodies; roots younger than [[writerLiveTtlMs]] are presumed a
+    *     live writer and skipped),
     *   - `wave=N` directories of UNCOMMITTED waves under each
     *     `dir/<sub>`, unless N's lease is live (a writer mid-publish),
-    *   - in manifest mode, files inside COMMITTED wave directories that
-    *     the wave's manifest does not list (belt-and-braces: the lease
-    *     protocol means these should not exist; the manifest makes
-    *     checking cheap).
+    *   - files inside COMMITTED wave directories that the wave's
+    *     manifest does not list (belt-and-braces: the lease protocol
+    *     means these should not exist; the manifest makes checking
+    *     cheap). Waves with an empty marker have no inventory and are
+    *     left alone.
     *
     * Returns the deleted paths. Safe to run concurrently with readers
     * (everything deleted was invisible to them) and with live writers
@@ -1640,18 +1562,20 @@ object Bucketing {
       .exists(_.getPath.getName.startsWith("part-"))
   }
 
-  /** PUBLISH a carried wave at `toDir`: the marker is copied from the
-    * source — verbatim for empty (rename-mode) markers; manifest bodies
-    * get their `wave=<from>` path segment rewritten to the (possibly
-    * remapped) `wave=<to>`, so [[verifyWaveManifests]] audits the carried
-    * wave exactly as a natively-appended one. Same no-overwrite contract
-    * as [[commitWave]] — the number was leased by [[claimCarryWave]]. */
+  /** PUBLISH a carried wave at `toDir`: the source manifest gets its
+    * `wave=<from>` path segment rewritten to the (possibly remapped)
+    * `wave=<to>`, so [[verifyWaveManifests]] audits the carried wave
+    * exactly as a natively-appended one; a source with an empty marker
+    * (written before every commit carried a manifest) is committed by
+    * [[commitWave]], which lists the just-copied files. Same
+    * no-overwrite contract as [[commitWave]] — the number was leased by
+    * [[claimCarryWave]]. */
   def commitCarriedWave(spark: SparkSession, fromDir: String, toDir: String,
       fromWave: Int, toWave: Int): Unit = {
     val tp = new org.apache.hadoop.fs.Path(s"$toDir/_wave_$toWave")
     val tfs = tp.getFileSystem(spark.sessionState.newHadoopConf())
     val ok = waveManifest(spark, fromDir, fromWave) match {
-      case None => createNoOverwrite(tfs, tp)
+      case None => commitWave(spark, toDir, toWave); true
       case Some(listed) =>
         val entries = listed.toSeq.map { case (rel, sz) =>
           val remapped = rel.split("/").map(seg =>

@@ -174,38 +174,22 @@ object DedupIndex {
       if (s.catalog.tableExists(s"${prefix}_tombs"))
         fresh.join(s.table(s"${prefix}_tombs"), Seq("doc_id"), "left_anti")
       else fresh
-    // stagingMode (not a raw conf read): rename AND manifest both take
-    // the per-file staged path below — and an unknown value fails loudly
-    // there instead of silently diverging from the append side (r17
-    // advisor)
-    if (Bucketing.stagingMode(s) != "inplace") {
-      // writer-private staging + per-FILE rename: cross-JVM-safe,
-      // lock-free ([[Bucketing.appendFilesByRenameTo]] — incl. its
-      // concurrent same-id double-insert caveat). The FIRST tombstone
-      // publishes the files the same way and only then registers the
-      // table over them, so two replicas' first removes never share a
-      // committer staging dir either (r16 advisor) — the same-JVM lock
-      // below serializes only the catalog DDL
-      val dir = dirOf(s, prefix)
-      Bucketing.appendFilesByRenameTo(s, novel.coalesce(1), s"$dir/tombs",
-        dir)
-      if (s.catalog.tableExists(s"${prefix}_tombs"))
-        s.catalog.refreshTable(s"${prefix}_tombs")
-      else Bucketing.withWriteLock(s, dir) {
-        if (!s.catalog.tableExists(s"${prefix}_tombs"))
-          Bucketing.attachPlain(s, s"${prefix}_tombs", s"$dir/tombs")
-      }
-    } else
-      // legacy in-place mode: same-JVM write serialization — concurrent
-      // takedown jobs (or a takedown racing an append's catalog refresh)
-      // share the committer staging dir like any same-path writers
-      Bucketing.withWriteLock(s, dirOf(s, prefix)) {
-        novel.coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .option("path", s"${dirOf(s, prefix)}/tombs")
-          .option("compression", "snappy")
-          .saveAsTable(s"${prefix}_tombs")
-      }
+    // writer-private staging + per-FILE moves: cross-JVM-safe,
+    // lock-free ([[Bucketing.appendFilesByRenameTo]] — incl. its
+    // concurrent same-id double-insert caveat). The FIRST tombstone
+    // publishes the files the same way and only then registers the
+    // table over them, so two replicas' first removes never share a
+    // committer staging dir either (r16 advisor) — the same-JVM lock
+    // below serializes only the catalog DDL
+    val dir = dirOf(s, prefix)
+    Bucketing.appendFilesByRenameTo(s, novel.coalesce(1), s"$dir/tombs",
+      dir)
+    if (s.catalog.tableExists(s"${prefix}_tombs"))
+      s.catalog.refreshTable(s"${prefix}_tombs")
+    else Bucketing.withWriteLock(s, dir) {
+      if (!s.catalog.tableExists(s"${prefix}_tombs"))
+        Bucketing.attachPlain(s, s"${prefix}_tombs", s"$dir/tombs")
+    }
   }
 
   /** [[remove]] for a driver-known takedown list. */
@@ -361,7 +345,7 @@ object DedupIndex {
       sub -> Bucketing.partFileCount(spark, loc(s"${prefix}_$sub"))
     }.toMap
     // staging roots split by age against the presumed-live writer TTL:
-    // a YOUNG root is probably an in-flight rename-mode append (not a
+    // a YOUNG root is probably an in-flight append (not a
     // compact reason — the r16 advisor's live-writer-triggers-compact
     // hole); an OLD one is crash garbage
     val stages = if (pvals > 0)
@@ -464,15 +448,13 @@ object DedupIndex {
     * CONSISTENT index, never a torn one (exact-dup rows present, near-dup
     * rows missing); a crash mid-append leaves only invisible garbage a
     * later [[compact]] reclaims, and the retried append stages wave W+1.
-    * Staging is WRITER-PRIVATE by default ([[Bucketing.appendWaveByRename]]:
-    * the wave's files are written under a dot-prefixed private root and
-    * published by one directory rename), so concurrent appenders — other
-    * threads AND other processes — interleave safely with no lock;
-    * `spark.graft.append.staging=inplace` restores the pre-r16
-    * saveAsTable(Append) path, which is same-JVM-locked only. The
-    * concurrent writers' DISJOINT-CONTENT contract (below) applies
-    * either way. Legacy flat indexes (pvals = 0) keep the old per-table
-    * commit semantics.
+    * Staging is WRITER-PRIVATE ([[Bucketing.appendWave]]: the wave's
+    * files are written under a dot-prefixed private root and moved into
+    * place file by file, then the marker lands as the wave's manifest),
+    * so concurrent appenders — other threads AND other processes, on
+    * local disk, HDFS or an object store — interleave safely with no
+    * lock, under the DISJOINT-CONTENT contract (below). Legacy flat
+    * indexes (pvals = 0) keep the old per-table commit semantics.
     *
     * Visibility: the writing session (and any session attached LATER)
     * sees the append immediately; a DIFFERENT already-attached session
@@ -555,35 +537,25 @@ object DedupIndex {
         .getTableMetadata(
           org.apache.spark.sql.catalyst.TableIdentifier(table))
         .bucketSpec.map(_.numBuckets).getOrElse(DefaultBuckets)
-    // "rename" (default): writer-private staging published by directory
-    // rename — no shared committer dir, cross-JVM-safe, no lock
-    // ([[Bucketing.appendWaveByRename]]); "manifest": the object-store
-    // protocol — same private staging, per-FILE moves, and the commit
-    // marker becomes a key manifest ([[Bucketing.appendWaveByMove]] /
-    // [[Bucketing.commitWave]]); "inplace": the pre-r16
-    // saveAsTable(Append) on the live path, same-JVM-locked
-    val mode = if (pvals == 0) "flat" else Bucketing.stagingMode(s)
-    val privateStaging = mode == "rename" || mode == "manifest"
+    // partitioned layout: writer-private staging, per-FILE moves — no
+    // shared committer dir, cross-JVM-safe, no lock
+    // ([[Bucketing.appendWave]]; [[append]] commits the manifest); the
+    // flat layout appends in place and publishes per table
     def appendTo(df: DataFrame, table: String, keys: Seq[String],
         partCol: String): Unit = {
       val staged = (if (pvals > 0)
           df.withColumn(partCol, partValue(partCol, pvals))
             .withColumn("wave", lit(wave)) else df)
         .repartition(bucketsOf(table), keys.map(col): _*)
-      if (mode == "manifest")
-        Bucketing.appendWaveByMove(s, staged, table, keys, Seq(partCol),
+      if (pvals > 0)
+        Bucketing.appendWave(s, staged, table, keys, Seq(partCol),
           bucketsOf(table), dir, wave)
-      else if (mode == "rename")
-        Bucketing.appendWaveByRename(s, staged, table, keys, Seq(partCol),
-          bucketsOf(table), dir, wave)
-      else {
-        val w = staged.write.mode(org.apache.spark.sql.SaveMode.Append)
-        (if (pvals > 0) w.partitionBy("wave", partCol) else w)
+      else
+        staged.write.mode(org.apache.spark.sql.SaveMode.Append)
           .bucketBy(bucketsOf(table), keys.head, keys.tail: _*)
           .sortBy(keys.head, keys.tail: _*)
           .option("compression", "snappy")
           .saveAsTable(table)
-      }
     }
     // novel-ch anti-join, PRUNED on the partitioned layout: any index ch
     // equal to a batch ch necessarily lives in one of the batch's pch
@@ -616,17 +588,8 @@ object DedupIndex {
         beat() },
       () => appendTo(TextDedup.shingleSetsOf(nc), s"${prefix}_shingles",
         Seq("doc_id"), "pdoc"))
-    // private-staging modes need no serialization (writer-private staging
-    // dirs; the wave=W destinations are lease-disjoint); the legacy
-    // in-place mode serializes same-JVM physical writes (the shared
-    // Hadoop committer staging dir — [[Bucketing.withWriteLock]])
-    if (privateStaging || pvals == 0)
-      writes.take(math.max(0, maxTables)).foreach(_())
-    else
-      Bucketing.withWriteLock(s, dir) {
-        writes.take(math.max(0, maxTables)).foreach(_())
-      }
-    if (privateStaging) Bucketing.releaseStaging(s, dir, wave)
+    writes.take(math.max(0, maxTables)).foreach(_())
+    if (pvals > 0) Bucketing.releaseStaging(s, dir, wave)
     TextDedup.unpersistDerivationsOf(nc)
     wave
   }

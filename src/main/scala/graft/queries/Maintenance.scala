@@ -110,7 +110,7 @@ object Maintenance {
   /** Compose the compact-side rules shared by both indexes. Only STALE
     * staging roots (older than `spark.graft.writerLiveTtlMs`) count as a
     * compact reason — a young root is most likely a HEALTHY in-flight
-    * rename-mode append, and letting it alone trigger an EXECUTED compact
+    * append, and letting it alone trigger an EXECUTED compact
     * would run the compact concurrently with that live writer, the exact
     * quiesce violation [[graft.operators.Bucketing.requireQuiesced]]
     * exists to stop (r16 advisor); fresh roots surface as a warning
@@ -130,7 +130,7 @@ object Maintenance {
           "invisible to probes, reclaimed only by compact"),
       Option.when(staleStagingDirs > 0)(
         s"$staleStagingDirs STALE staging root(s) (.stage_*, older than " +
-          "the live-writer TTL) on disk — crashed rename-mode appends; " +
+          "the live-writer TTL) on disk — crashed appends or removes; " +
           "dead bytes, reclaimed by compact"),
       Option.when(waveCount >= CompactWaveCount)(
         s"$waveCount committed waves >= $CompactWaveCount — marker " +
@@ -146,8 +146,8 @@ object Maintenance {
       r.contains("abandoned (crashed-append)") ||
         r.contains("STALE staging") || r.contains("stray key"))
 
-  /** Manifest-audit findings folded into the decision (manifest-mode
-    * indexes only — marker-mode waves carry no inventory and audit to
+  /** Manifest-audit findings folded into the decision (waves whose
+    * marker predates manifest bodies carry no inventory and audit to
     * nothing): STRAY keys are reclaimable garbage (a reason — reclaim
     * deletes exactly them); MISSING manifested keys are data loss and
     * deliberately NOT an action — an automated rewrite would bake the
@@ -199,7 +199,7 @@ object Maintenance {
       staleStagingDirs: Int): Option[String] =
     Option.when(stagingDirs > staleStagingDirs)(
       s"${stagingDirs - staleStagingDirs} staging root(s) younger than " +
-        "the live-writer TTL — a rename-mode append is probably in " +
+        "the live-writer TTL — an append is probably in " +
         "flight; maintenance actions will refuse until it commits or " +
         "goes stale (requireQuiesced)")
 

@@ -457,30 +457,17 @@ object VectorIndex {
       if (s.catalog.tableExists(s"${prefix}_tombs"))
         fresh.join(s.table(s"${prefix}_tombs"), Seq("vec_id"), "left_anti")
       else fresh
-    // stagingMode (not a raw conf read) — unknown values fail loudly and
-    // both staged modes share the per-file path ([[DedupIndex.remove]])
-    if (Bucketing.stagingMode(s) != "inplace") {
-      // cross-JVM-safe per-file rename, first-tombstone table creation
-      // included ([[DedupIndex.remove]] twin — publish files, then
-      // register; the lock serializes only same-JVM catalog DDL)
-      Bucketing.appendFilesByRenameTo(s, novel.coalesce(1), s"$dir/tombs",
-        dir)
-      if (s.catalog.tableExists(s"${prefix}_tombs"))
-        s.catalog.refreshTable(s"${prefix}_tombs")
-      else Bucketing.withWriteLock(s, dir) {
-        if (!s.catalog.tableExists(s"${prefix}_tombs"))
-          attachPlain(s, s"${prefix}_tombs", s"$dir/tombs")
-      }
-    } else
-      // legacy in-place mode: same-JVM write serialization
-      // ([[DedupIndex.remove]] rationale)
-      Bucketing.withWriteLock(s, dir) {
-        novel.coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .option("path", s"$dir/tombs")
-          .option("compression", "snappy")
-          .saveAsTable(s"${prefix}_tombs")
-      }
+    // cross-JVM-safe per-file moves, first-tombstone table creation
+    // included ([[DedupIndex.remove]] twin — publish files, then
+    // register; the lock serializes only same-JVM catalog DDL)
+    Bucketing.appendFilesByRenameTo(s, novel.coalesce(1), s"$dir/tombs",
+      dir)
+    if (s.catalog.tableExists(s"${prefix}_tombs"))
+      s.catalog.refreshTable(s"${prefix}_tombs")
+    else Bucketing.withWriteLock(s, dir) {
+      if (!s.catalog.tableExists(s"${prefix}_tombs"))
+        attachPlain(s, s"${prefix}_tombs", s"$dir/tombs")
+    }
   }
 
   /** [[remove]] for a driver-known takedown list. */
@@ -753,11 +740,11 @@ object VectorIndex {
     * ([[Bucketing.commitWave]]; [[DedupIndex.append]] twin) — a reader
     * between the four table commits, or after a mid-append crash, always
     * resolves a consistent committed snapshot. Staging is WRITER-PRIVATE
-    * by default ([[Bucketing.appendWaveByRename]]), so concurrent
-    * appenders — threads AND processes — interleave safely lock-free
-    * under the disjoint-content contract;
-    * `spark.graft.append.staging=inplace` restores the pre-r16 path.
-    * Legacy pcells = 0 indexes keep per-table commit semantics.
+    * ([[Bucketing.appendWave]]: per-file moves, then the manifest
+    * marker), so concurrent appenders — threads AND processes, on any
+    * supported filesystem — interleave safely lock-free under the
+    * disjoint-content contract. Legacy pcells = 0 indexes keep per-table
+    * commit semantics.
     *
     * Visibility: the writing session (and any session attached LATER)
     * sees the append immediately; a DIFFERENT already-attached session
@@ -809,33 +796,24 @@ object VectorIndex {
       .localCheckpoint(true)
     try {
       val cells = VectorOps.assignCells(bIdx, cents)
-      // "rename" (default): writer-private staging published by directory
-      // rename — cross-JVM-safe, lock-free ([[Bucketing.appendWaveByRename]];
-      // [[DedupIndex.appendStaged]] twin); "manifest": the object-store
-      // protocol (per-file moves + manifest commit); "inplace": pre-r16
-      val mode = if (m.pcells == 0) "flat" else Bucketing.stagingMode(s)
-      val privateStaging = mode == "rename" || mode == "manifest"
+      // partitioned layout: writer-private staging, per-FILE moves —
+      // cross-JVM-safe, lock-free ([[Bucketing.appendWave]];
+      // [[DedupIndex.appendStaged]] twin); the flat layout appends in
+      // place and publishes per table
       def appendTo(df: DataFrame, table: String, keys: Seq[String],
           partCols: Seq[String] = Nil): Unit = {
         val staged =
           (if (m.pcells > 0) df.withColumn("wave", lit(wave)) else df)
             .repartition(m.buckets, keys.map(col): _*)
-        if (mode == "manifest")
-          Bucketing.appendWaveByMove(s, staged, s"${prefix}_$table", keys,
+        if (m.pcells > 0)
+          Bucketing.appendWave(s, staged, s"${prefix}_$table", keys,
             partCols, m.buckets, dirOf(s, prefix), wave)
-        else if (mode == "rename")
-          Bucketing.appendWaveByRename(s, staged, s"${prefix}_$table", keys,
-            partCols, m.buckets, dirOf(s, prefix), wave)
-        else {
-          val w = staged.write.mode(org.apache.spark.sql.SaveMode.Append)
-          val allPartCols =
-            if (m.pcells > 0) "wave" +: partCols else partCols
-          (if (allPartCols.nonEmpty) w.partitionBy(allPartCols: _*) else w)
+        else
+          staged.write.mode(org.apache.spark.sql.SaveMode.Append)
             .bucketBy(m.buckets, keys.head, keys.tail: _*)
             .sortBy(keys.head, keys.tail: _*)
             .option("compression", "snappy")
             .saveAsTable(s"${prefix}_$table")
-        }
       }
       val pcellOf = pmod(col("cell"), lit(m.pcells)).cast("int").as("pcell")
       // only vecs/bands differ between layouts (the pcell partition
@@ -874,18 +852,8 @@ object VectorIndex {
               .withColumn("rnorm2",
                 VectorOps.pqRnorm2Col(col("codes"), books)),
             "pqcodes", Seq("vec_id")))
-      // private-staging modes are lock-free (writer-private staging;
-      // lease-disjoint destinations); legacy in-place serializes same-JVM
-      // physical writes ([[Bucketing.withWriteLock]]; [[DedupIndex]]
-      // rationale)
-      if (privateStaging || m.pcells == 0)
-        writes.take(math.max(0, maxTables)).foreach(_())
-      else
-        Bucketing.withWriteLock(s, dirOf(s, prefix)) {
-          writes.take(math.max(0, maxTables)).foreach(_())
-        }
-      if (privateStaging)
-        Bucketing.releaseStaging(s, dirOf(s, prefix), wave)
+      writes.take(math.max(0, maxTables)).foreach(_())
+      if (m.pcells > 0) Bucketing.releaseStaging(s, dirOf(s, prefix), wave)
       wave
     } finally bIdx.unpersist(false) // checkpoint blocks also free on GC
   }

@@ -20,12 +20,10 @@ import java.nio.charset.StandardCharsets
   * old copy reclaimed via `/retire`. */
 class ServingServerObjectStoreSpec extends SparkSpec {
 
-  private def withManifestMos[A](body: => A): A = {
+  private def withMos[A](body: => A): A = {
     spark.sparkContext.hadoopConfiguration.set("fs.mos.impl",
       classOf[graft.sources.MockObjectStoreFileSystem].getName)
-    spark.conf.set("spark.graft.append.staging", "manifest")
-    try body
-    finally spark.conf.unset("spark.graft.append.staging")
+    body
   }
 
   private def exists(p: String): Boolean = {
@@ -34,7 +32,7 @@ class ServingServerObjectStoreSpec extends SparkSpec {
   }
 
   test("full REST lifecycle on mos://: damage -> audit -> quarantine -> re-ingest -> compact -> retire") {
-    withManifestMos {
+    withMos {
       val tLocal = java.nio.file.Files.createTempDirectory("srvmos_t").toString
       val vLocal = java.nio.file.Files.createTempDirectory("srvmos_v").toString
       val td = "mos://" + tLocal

@@ -57,26 +57,7 @@ class BucketingSpec extends SparkSpec {
     assert(Bucketing.samePath(spark, "mock://tmp/graft_sp/x", "mock://tmp/graft_sp/x"))
   }
 
-  test("stagingMode rejects unknown conf values instead of silently routing to the legacy path") {
-    // a typo ('manifests') used to fall through to the in-place
-    // saveAsTable path — same-JVM-locked, cross-JVM-unsafe — while
-    // remove() read the same value as staged: divergent semantics with
-    // no error (r17 advisor)
-    assert(Bucketing.stagingMode(spark) == "rename") // the default
-    for (m <- Seq("rename", "manifest", "inplace")) {
-      spark.conf.set("spark.graft.append.staging", m)
-      try assert(Bucketing.stagingMode(spark) == m)
-      finally spark.conf.unset("spark.graft.append.staging")
-    }
-    spark.conf.set("spark.graft.append.staging", "manifests")
-    try {
-      val e = intercept[IllegalArgumentException](Bucketing.stagingMode(spark))
-      assert(e.getMessage.contains("manifests") &&
-        e.getMessage.contains("rename"), e.getMessage)
-    } finally spark.conf.unset("spark.graft.append.staging")
-  }
-
-  test("appendWaveByRename registers Hive-escaped STRING partition values unescaped") {
+  test("appendWave registers Hive-escaped STRING partition values unescaped") {
     val s = spark
     import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("bk_esc").toString
@@ -88,7 +69,7 @@ class BucketingSpec extends SparkSpec {
     Bucketing.commitWave(spark, dir, 0)
     val batch = Seq((2L, "d:e f", 1)).toDF("id", "tag", "wave")
       .repartition(2, col("id"))
-    Bucketing.appendWaveByRename(spark, batch, "bk_esc_t", Seq("id"),
+    Bucketing.appendWave(spark, batch, "bk_esc_t", Seq("id"),
       Seq("tag"), 2, dir, 1)
     // the catalog must hold the TRUE value (it re-derives the escaped
     // location itself); splicing the raw directory name registered the
@@ -99,6 +80,65 @@ class BucketingSpec extends SparkSpec {
     assert(spark.sql("SHOW PARTITIONS bk_esc_t").collect()
       .map(_.getString(0)).exists(_.contains("tag=d%3Ae f")),
       "partition location lost its Hive escaping")
+  }
+
+  test("two threads committing one wave: exactly one wins and its manifest body is whole") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("bk_race").toString
+    // enough files that a body written after the marker's creation would
+    // be visibly partial to a reader racing the commit
+    Bucketing.writePartitionedBucketedExternal(
+      (0 until 400).map(i => (i.toLong, i % 50, 0)).toDF("id", "p", "wave"),
+      "bk_race_t", Seq("wave", "p"), Seq("id"), s"$dir/t", 4)
+    val expected = Bucketing.listFileStatuses(
+      new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sessionState.newHadoopConf()),
+      new org.apache.hadoop.fs.Path(s"$dir/t/wave=0"))
+      .count(_.getPath.getName.startsWith("part-"))
+    assert(expected >= 50, s"fixture: $expected files")
+    val marker = new java.io.File(s"$dir/_wave_0")
+    for (round <- 0 until 10) {
+      marker.delete()
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      // a reader polling the marker's size in a tight loop while it is
+      // being published: once the marker exists it must already hold
+      // the whole body (a create-then-write publish shows 0 or a prefix)
+      val sizes = scala.collection.mutable.Set.empty[Long]
+      val reader = new Thread(() => {
+        start.await()
+        while (!done.get) {
+          try sizes += java.nio.file.Files.size(marker.toPath)
+          catch { case _: java.nio.file.NoSuchFileException => () }
+        }
+      })
+      reader.start()
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      val results =
+        try {
+          val fs = (0 until 2).map(_ => pool.submit(
+            new java.util.concurrent.Callable[Boolean] {
+              def call(): Boolean = {
+                start.await()
+                scala.util.Try(Bucketing.commitWave(spark, dir, 0)).isSuccess
+              }
+            }))
+          start.countDown()
+          fs.map(_.get())
+        } finally { pool.shutdown(); done.set(true); reader.join() }
+      assert(results.count(identity) == 1,
+        s"round $round: exactly one commit must win: $results")
+      val body = Bucketing.waveManifest(spark, dir, 0)
+      assert(body.exists(_.size == expected),
+        s"round $round: winner's body lists ${body.map(_.size)} of " +
+          s"$expected files")
+      assert(sizes.forall(_ == marker.length()),
+        s"round $round: a reader saw a partial marker body: " +
+          s"${sizes.toSeq.sorted} of ${marker.length()} bytes")
+      // the body was staged under a hidden name and nothing is left over
+      assert(!new java.io.File(dir).list().exists(_.startsWith(".stage_")))
+    }
   }
 
   test("createNoOverwrite distinguishes collisions from environmental FS errors") {

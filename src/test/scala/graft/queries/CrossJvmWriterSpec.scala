@@ -42,9 +42,10 @@ object CrossJvmAppendMain {
 }
 
 /** CROSS-JVM cooperative multi-writer append — the residual the r15/r16
-  * same-JVM work could not reach with thread mutexes: rename-mode
-  * staging ([[Bucketing.appendWaveByRename]], the r16 default) gives
-  * every writer a PRIVATE committer staging dir, so two PROCESSES
+  * same-JVM work could not reach with thread mutexes: writer-private
+  * staging ([[Bucketing.appendWave]] — per-file moves, then a manifest
+  * commit) gives every writer a PRIVATE committer staging dir, so two
+  * PROCESSES
   * appending to one index concurrently interleave safely with no lock —
   * wave leases coordinate their numbering through the shared filesystem
   * alone. This spec runs a genuine second JVM (ProcessBuilder) appending

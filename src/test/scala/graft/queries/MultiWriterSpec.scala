@@ -12,10 +12,9 @@ import scala.concurrent.ExecutionContext.Implicits.global
   * CONCURRENT appenders to one index both land — on disjoint leased
   * waves — where the r15 design failed loudly at the wave marker (after
   * the damage: both writers had already staged the same wave number).
-  * The lease moves the atomic create BEFORE staging; a same-JVM mutex
-  * serializes only the physical table writes (shared Hadoop committer
-  * staging dir). Cross-JVM writers remain single-writer-per-JVM by
-  * contract — documented in Bucketing.withWriteLock and PLANS.md. */
+  * The lease moves the atomic create BEFORE staging, and every writer
+  * stages privately ([[Bucketing.appendWave]]), so no lock is taken —
+  * across threads or processes ([[CrossJvmWriterSpec]]). */
 class MultiWriterSpec extends SparkSpec {
 
   private lazy val docs = Tables.load(spark, sfDir, "documents")

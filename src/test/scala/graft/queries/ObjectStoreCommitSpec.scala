@@ -10,15 +10,16 @@ import scala.concurrent.ExecutionContext.Implicits.global
 
 /** The OBJECT-STORE commit protocol end to end (r16 verdict item 1): the
   * wave machinery previously assumed atomic create/rename, which S3-class
-  * stores do not give. `spark.graft.append.staging=manifest` swaps the
-  * publish primitive — per-FILE moves into the live `wave=W` prefixes
-  * (atomic per object), then ONE conditional-put `_wave_W` MANIFEST
-  * listing the wave's keys — with readers unchanged (visibility is still
-  * the marker name). Exercised on [[graft.sources.MockObjectStoreFileSystem]]
-  * (`mos://`), which FORBIDS directory-rename-as-publish and emulates
-  * conditional-put create, so any protocol path still relying on the
-  * rename primitive throws instead of silently passing on the
-  * rename-atomic local FS. */
+  * stores do not give. Every wave publishes by per-FILE moves into the
+  * live `wave=W` prefixes (atomic per object), then ONE conditional-put
+  * `_wave_W` MANIFEST listing the wave's keys — with readers unchanged
+  * (visibility is still the marker name). Exercised on
+  * [[graft.sources.MockObjectStoreFileSystem]] (`mos://`), which FORBIDS
+  * directory-rename-as-publish and emulates conditional-put create, so
+  * any protocol path still relying on the rename primitive throws instead
+  * of silently passing on the rename-atomic local FS; the manifest cases
+  * run on a plain local directory too, since the same protocol is the
+  * only one on every filesystem. */
 class ObjectStoreCommitSpec extends SparkSpec {
 
   private lazy val docs = Tables.load(spark, sfDir, "documents")
@@ -26,12 +27,10 @@ class ObjectStoreCommitSpec extends SparkSpec {
   private lazy val emb = Tables.load(spark, sfDir, "embeddings")
     .select("vec_id", "embedding")
 
-  private def withManifestMos[A](body: => A): A = {
+  private def withMos[A](body: => A): A = {
     spark.sparkContext.hadoopConfiguration.set("fs.mos.impl",
       classOf[graft.sources.MockObjectStoreFileSystem].getName)
-    spark.conf.set("spark.graft.append.staging", "manifest")
-    try body
-    finally spark.conf.unset("spark.graft.append.staging")
+    body
   }
 
   /** Every data file currently on disk under `dir/<sub>/wave=<w>`,
@@ -59,7 +58,7 @@ class ObjectStoreCommitSpec extends SparkSpec {
   }
 
   test("text index lifecycle on mos://: build, concurrent appends, crash, reclaim, compact — no directory rename, manifests exact") {
-    withManifestMos {
+    withMos {
       val local = java.nio.file.Files.createTempDirectory("mos_txt").toString
       val d = "mos://" + local
       val prefix = "mos_txt"
@@ -164,11 +163,22 @@ class ObjectStoreCommitSpec extends SparkSpec {
     }
   }
 
-  test("manifest-precise sweep: a stray file inside a committed wave is deleted, listed keys survive") {
-    withManifestMos {
-      val local = java.nio.file.Files.createTempDirectory("mos_stray").toString
-      val d = "mos://" + local
-      val prefix = "mos_stray"
+  /** The substrates the manifest cases run on — the object-store mock
+    * and a plain local directory (the same protocol publishes on both) —
+    * as (scheme, test-name suffix). */
+  private val substrates = Seq("mos" -> "", "file" -> " (file://)")
+
+  /** A fresh index directory on `scheme`: (local path, index URI). */
+  private def indexDir(scheme: String, tag: String): (String, String) = {
+    val local = java.nio.file.Files.createTempDirectory(tag).toString
+    (local, s"$scheme://$local")
+  }
+
+  for ((scheme, suffix) <- substrates)
+  test("manifest-precise sweep: a stray file inside a committed wave is deleted, listed keys survive" + suffix) {
+    withMos {
+      val (local, d) = indexDir(scheme, s"${scheme}_stray")
+      val prefix = s"${scheme}_stray"
       val corpus = docs.filter(col("doc_id") % 10 =!= 3).limit(50)
       DedupIndex.build(corpus, "doc_id", "text", d, prefix = prefix)
       // plant a stray (a torn multipart upload, an overwritten-wave
@@ -217,7 +227,7 @@ class ObjectStoreCommitSpec extends SparkSpec {
   }
 
   test("quarantineWave retires a damaged wave: probes skip it, files stay for forensics, re-ingest recovers") {
-    withManifestMos {
+    withMos {
       val local = java.nio.file.Files.createTempDirectory("mos_quar").toString
       val d = "mos://" + local
       val prefix = "mos_quar"
@@ -306,22 +316,26 @@ class ObjectStoreCommitSpec extends SparkSpec {
     }
   }
 
-  test("attach derives partitions from wave manifests — no listing walk, quarantine-aware") {
-    withManifestMos {
-      val local = java.nio.file.Files.createTempDirectory("mos_att").toString
-      val d = "mos://" + local
+  for ((scheme, suffix) <- substrates)
+  test("attach derives partitions from wave manifests — no listing walk, quarantine-aware" + suffix) {
+    withMos {
+      val (local, d) = indexDir(scheme, s"${scheme}_att")
+      val p1 = s"${scheme}_att1"
       DedupIndex.build(docs.filter(col("doc_id") % 10 =!= 3).limit(60),
-        "doc_id", "text", d, prefix = "mos_att1")
+        "doc_id", "text", d, prefix = p1)
+      assert(Bucketing.verifyWaveManifests(spark, d).isEmpty)
       val batch = docs.filter(col("doc_id") % 40 === 3).limit(5)
         .select((col("doc_id") + 950000L).as("doc_id"), col("text"))
         .localCheckpoint(true)
-      DedupIndex.append(batch, "doc_id", "text", "mos_att1") // wave 1
+      DedupIndex.append(batch, "doc_id", "text", p1) // wave 1
+      assert(Seq(0, 1).forall(Bucketing.waveManifest(spark, d, _).isDefined))
+      assert(Bucketing.verifyWaveManifests(spark, d).isEmpty)
       val twins = batch.select((col("doc_id") + 50000L).as("doc_id"),
         col("text")).localCheckpoint(true)
       def probe(pfx: String) = DedupIndex
         .incrementalDedup(twins, "doc_id", "text", pfx)
         .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-      val v1 = probe("mos_att1")
+      val v1 = probe(p1)
       assert(v1.forall(_._2 == "exact_dup"), s"fixture: $v1")
 
       // DISCRIMINATOR: an abandoned (uncommitted) wave directory — the
@@ -335,57 +349,103 @@ class ObjectStoreCommitSpec extends SparkSpec {
 
       // fresh-prefix attach (a new session's catalog shape): partitions
       // come from the manifests — committed waves only, probes identical
-      DedupIndex.attach(spark, d, "mos_att2")
-      assert(Bucketing.catalogWaves(spark, "mos_att2_hashes") == Set(0, 1),
+      val p2 = s"${scheme}_att2"
+      DedupIndex.attach(spark, d, p2)
+      assert(Bucketing.catalogWaves(spark, s"${p2}_hashes") == Set(0, 1),
         "manifest-derived partitions must cover exactly the committed " +
-          s"waves: ${Bucketing.catalogWaves(spark, "mos_att2_hashes")}")
-      assert(probe("mos_att2") == v1, "manifest-attached probe diverged")
+          s"waves: ${Bucketing.catalogWaves(spark, s"${p2}_hashes")}")
+      assert(probe(p2) == v1, "manifest-attached probe diverged")
 
       // quarantined waves' retained manifests register too: an attach
       // taken DURING quarantine serves the wave the moment it is
       // restored — no re-attach, no recover
       Bucketing.quarantineWave(spark, d, 1)
-      DedupIndex.attach(spark, d, "mos_att3")
-      assert(Bucketing.catalogWaves(spark, "mos_att3_hashes") == Set(0, 1))
-      assert(probe("mos_att3").forall(_._2 == "new"),
+      val p3 = s"${scheme}_att3"
+      DedupIndex.attach(spark, d, p3)
+      assert(Bucketing.catalogWaves(spark, s"${p3}_hashes") == Set(0, 1))
+      assert(probe(p3).forall(_._2 == "new"),
         "a quarantined wave served through a fresh attach")
       Bucketing.unquarantineWave(spark, d, 1)
-      assert(probe("mos_att3") == v1,
+      assert(probe(p3) == v1,
         "restored wave not serving through the quarantine-time attach")
     }
+  }
+
+  test("file:// publish cycle: build, append, remove and compact commit manifests that audit clean") {
+    // the protocol is the same on local disk: every marker written on
+    // the way carries a manifest body and the audit stays empty
+    def audited(dir: String, step: String): Unit = {
+      val cws = Bucketing.committedWaves(spark, dir)
+      assert(cws.nonEmpty && cws.forall(w =>
+        Bucketing.waveManifest(spark, dir, w).isDefined),
+        s"empty marker after $step: $cws")
+      assert(Bucketing.verifyWaveManifests(spark, dir).isEmpty,
+        s"audit not clean after $step: " +
+          Bucketing.verifyWaveManifests(spark, dir))
+    }
+    val (_, td) = indexDir("file", "file_cyc_t")
+    DedupIndex.build(docs.filter(col("doc_id") % 10 =!= 3).limit(60),
+      "doc_id", "text", td, prefix = "file_cyc_t")
+    audited(td, "text build")
+    val batch = docs.filter(col("doc_id") % 40 === 3).limit(6)
+      .select((col("doc_id") + 970000L).as("doc_id"), col("text"))
+      .localCheckpoint(true)
+    DedupIndex.append(batch, "doc_id", "text", "file_cyc_t")
+    assert(Bucketing.committedWaves(spark, td) == Seq(0, 1))
+    audited(td, "text append")
+    DedupIndex.remove(spark,
+      Seq(batch.head().getLong(0)), "file_cyc_t")
+    assert(DedupIndex.stats(spark, "file_cyc_t").tombstones == 1)
+    audited(td, "text remove")
+    val (_, tout) = indexDir("file", "file_cyc_tc")
+    DedupIndex.compact(spark, tout, "file_cyc_t", force = true)
+    audited(tout, "text compact")
+
+    val (_, vd) = indexDir("file", "file_cyc_v")
+    VectorIndex.build(emb.filter(col("vec_id") % 7 =!= 3), "vec_id",
+      "embedding", vd, minCos = 0.35, prefix = "file_cyc_v")
+    audited(vd, "vector build")
+    val vb = emb.filter(col("vec_id") % 14 === 3).limit(6)
+      .select((col("vec_id") + 970000L).as("vec_id"), col("embedding"))
+      .localCheckpoint(true)
+    VectorIndex.append(vb, "vec_id", "embedding", "file_cyc_v")
+    assert(Bucketing.committedWaves(spark, vd) == Seq(0, 1))
+    audited(vd, "vector append")
+    VectorIndex.remove(spark, Seq(vb.head().getLong(0)), "file_cyc_v")
+    audited(vd, "vector remove")
+    val (_, vout) = indexDir("file", "file_cyc_vc")
+    VectorIndex.compact(spark, vout, "file_cyc_v", force = true)
+    audited(vout, "vector compact")
   }
 
   test("per-file publishes survive store throttling (503-style rename failures)") {
     spark.sparkContext.hadoopConfiguration.set("fs.thr.impl",
       classOf[graft.sources.ThrottlingObjectStoreFileSystem].getName)
-    spark.conf.set("spark.graft.append.staging", "manifest")
-    try {
-      val local = java.nio.file.Files.createTempDirectory("thr_txt").toString
-      val d = "thr://" + local
-      val prefix = "thr_txt"
-      val corpus = docs.filter(col("doc_id") % 10 =!= 3).limit(80)
-      DedupIndex.build(corpus, "doc_id", "text", d, prefix = prefix)
-      graft.sources.ThrottlingObjectStoreFileSystem.reset()
-      val batch = docs.filter(col("doc_id") % 40 === 3).limit(6)
-        .select((col("doc_id") + 960000L).as("doc_id"), col("text"))
-        .localCheckpoint(true)
-      DedupIndex.append(batch, "doc_id", "text", prefix)
-      assert(graft.sources.ThrottlingObjectStoreFileSystem.throttled.get > 0,
-        "fixture degenerate: no publish move was throttled")
-      assert(Bucketing.committedWaves(spark, d) == Seq(0, 1))
-      val twins = batch.select((col("doc_id") + 50000L).as("doc_id"),
-        col("text"))
-      val got = DedupIndex
-        .incrementalDedup(twins, "doc_id", "text", prefix).collect()
-      assert(got.nonEmpty && got.forall(_.getString(1) == "exact_dup"),
-        s"throttled publish lost content: ${got.take(4).mkString(";")}")
-      assert(Bucketing.verifyWaveManifests(spark, d).isEmpty,
-        "throttled publish left an inconsistent manifest")
-    } finally spark.conf.unset("spark.graft.append.staging")
+    val local = java.nio.file.Files.createTempDirectory("thr_txt").toString
+    val d = "thr://" + local
+    val prefix = "thr_txt"
+    val corpus = docs.filter(col("doc_id") % 10 =!= 3).limit(80)
+    DedupIndex.build(corpus, "doc_id", "text", d, prefix = prefix)
+    graft.sources.ThrottlingObjectStoreFileSystem.reset()
+    val batch = docs.filter(col("doc_id") % 40 === 3).limit(6)
+      .select((col("doc_id") + 960000L).as("doc_id"), col("text"))
+      .localCheckpoint(true)
+    DedupIndex.append(batch, "doc_id", "text", prefix)
+    assert(graft.sources.ThrottlingObjectStoreFileSystem.throttled.get > 0,
+      "fixture degenerate: no publish move was throttled")
+    assert(Bucketing.committedWaves(spark, d) == Seq(0, 1))
+    val twins = batch.select((col("doc_id") + 50000L).as("doc_id"),
+      col("text"))
+    val got = DedupIndex
+      .incrementalDedup(twins, "doc_id", "text", prefix).collect()
+    assert(got.nonEmpty && got.forall(_.getString(1) == "exact_dup"),
+      s"throttled publish lost content: ${got.take(4).mkString(";")}")
+    assert(Bucketing.verifyWaveManifests(spark, d).isEmpty,
+      "throttled publish left an inconsistent manifest")
   }
 
   test("vector index serves, appends, and time-travels on mos:// manifest mode") {
-    withManifestMos {
+    withMos {
       val local = java.nio.file.Files.createTempDirectory("mos_vec").toString
       val d = "mos://" + local
       val prefix = "mos_vec"
@@ -421,7 +481,7 @@ class ObjectStoreCommitSpec extends SparkSpec {
     // overwrite-put fallback keeps liveness protection alive there: a
     // silent no-op meant any reader/writer outliving the TTL lost its
     // guard while still active (r18 advisor)
-    withManifestMos {
+    withMos {
       val d = "mos://" +
         java.nio.file.Files.createTempDirectory("mos_beat").toString
       val fs = new org.apache.hadoop.fs.Path(d)

@@ -5,13 +5,13 @@ import graft.operators.Bucketing
 import org.apache.spark.sql.functions._
 
 /** Two PROCESSES appending concurrently through the OBJECT-STORE commit
-  * protocol (manifest mode on `mos://` — [[ObjectStoreCommitSpec]]'s
+  * protocol (on `mos://` — [[ObjectStoreCommitSpec]]'s
   * store, [[CrossJvmWriterSpec]]'s harness): leases coordinate numbering
   * via conditional-put create, each wave publishes by per-file moves +
   * one manifest, and directory-rename-as-publish would THROW on this FS —
   * so both writers landing proves the protocol never needed it. The child
-  * JVM inherits the store registration and the staging mode through
-  * `spark.*` system properties, exactly how a cluster ships
+  * JVM inherits the store registration through `spark.*` system
+  * properties, exactly how a cluster ships
   * `fs.s3a.impl` + job conf to executors/drivers. */
 class ObjectStoreCrossJvmSpec extends SparkSpec {
 
@@ -31,7 +31,6 @@ class ObjectStoreCrossJvmSpec extends SparkSpec {
   test("two PROCESSES appending concurrently both land on mos:// (manifest commits)") {
     spark.sparkContext.hadoopConfiguration.set("fs.mos.impl",
       classOf[graft.sources.MockObjectStoreFileSystem].getName)
-    spark.conf.set("spark.graft.append.staging", "manifest")
     val local = java.nio.file.Files.createTempDirectory("mosx_idx").toString
     val d = "mos://" + local
     val sync = java.nio.file.Files.createTempDirectory("mosx_sync").toFile
@@ -44,7 +43,6 @@ class ObjectStoreCrossJvmSpec extends SparkSpec {
       "-Dspark.ui.enabled=false",
       "-Dspark.hadoop.fs.mos.impl=" +
         classOf[graft.sources.MockObjectStoreFileSystem].getName,
-      "-Dspark.graft.append.staging=manifest",
       "-cp", sys.props("java.class.path"),
       "graft.queries.CrossJvmAppendMain",
       d, prefix, sfDir, "940000", sync.toString)
@@ -105,9 +103,6 @@ class ObjectStoreCrossJvmSpec extends SparkSpec {
           s"process at offset $off lost content: " +
             got.take(4).mkString(";"))
       }
-    } finally {
-      if (proc.isAlive) proc.destroyForcibly()
-      spark.conf.unset("spark.graft.append.staging")
-    }
+    } finally if (proc.isAlive) proc.destroyForcibly()
   }
 }

@@ -7,33 +7,31 @@ import org.apache.spark.sql.functions._
 
 /** The PRODUCTION ingest composition on the object-store substrate (r17
   * verdict item 1): the streaming appendAdmitted loops were spec'd on
-  * rename-mode local FS only, while `ObjectStoreCommitSpec` covered the
-  * index-level lifecycle — the unit appends dispatch on `stagingMode`,
-  * so transparency was LIKELY, but "likely" is exactly what the
+  * local FS only, while `ObjectStoreCommitSpec` covered the index-level
+  * lifecycle — the loops call the same unit appends, so transparency
+  * was LIKELY, but "likely" is exactly what the
   * two-process rename spec said before it found the O_EXCL hole. These
   * tests run the actual serving loops — `runIncrementalDedupIndexed`,
   * `runVectorIngestIndexed`, `runJointIngestIndexed`, all with
   * `appendAdmitted = true` — cross-epoch under
-  * `spark.graft.append.staging=manifest` on `mos://`
+  * the manifest commit protocol on `mos://`
   * ([[graft.sources.MockObjectStoreFileSystem]]: no directory rename as
   * publish, conditional-put create), with a crash-mid-epoch +
   * `reclaimGarbage` arm and an at-least-once replay arm on the joint
   * loop. Same two-run/one-checkpoint epoch shape as `IngestPrepSpec`. */
 class ObjectStoreStreamingSpec extends SparkSpec {
 
-  private def withManifestMos[A](body: => A): A = {
+  private def withMos[A](body: => A): A = {
     spark.sparkContext.hadoopConfiguration.set("fs.mos.impl",
       classOf[graft.sources.MockObjectStoreFileSystem].getName)
-    spark.conf.set("spark.graft.append.staging", "manifest")
-    try body
-    finally spark.conf.unset("spark.graft.append.staging")
+    body
   }
 
   private def mosTmp(tag: String): String =
     "mos://" + java.nio.file.Files.createTempDirectory(tag).toString
 
   test("text appendAdmitted loop runs cross-epoch on mos:// manifest staging") {
-    withManifestMos {
+    withMos {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), col("text"))
       val prefix = "moss_txt1"
@@ -83,7 +81,7 @@ class ObjectStoreStreamingSpec extends SparkSpec {
   }
 
   test("vector appendAdmitted loop runs cross-epoch on mos:// manifest staging") {
-    withManifestMos {
+    withMos {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id"), col("embedding"))
       val prefix = "moss_vec1"
@@ -126,7 +124,7 @@ class ObjectStoreStreamingSpec extends SparkSpec {
   }
 
   test("joint ingest on mos://: cross-epoch admission, crash-mid-epoch reclaim, at-least-once replay") {
-    withManifestMos {
+    withMos {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), col("text"))
       val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -121,49 +121,46 @@ class OnlineCompactSpec extends SparkSpec {
   test("text on mos://: carried waves remap on collision with a new-location writer; manifests rewrite and audit clean") {
     spark.sparkContext.hadoopConfiguration.set("fs.mos.impl",
       classOf[graft.sources.MockObjectStoreFileSystem].getName)
-    spark.conf.set("spark.graft.append.staging", "manifest")
-    try {
-      val a = "mos://" +
-        java.nio.file.Files.createTempDirectory("olc_mos_a").toString
-      val b = "mos://" +
-        java.nio.file.Files.createTempDirectory("olc_mos_b").toString
-      val prefix = "olc_mos"
-      DedupIndex.build(docs.limit(50), "doc_id", "text", a, prefix = prefix)
-      // horizon at 0: everything appended from here on must be carried
-      DedupIndex.compact(spark, b, prefix, upToWave = 0)
-      // writers not yet redirected: two more waves land at the OLD dir
-      DedupIndex.attach(spark, a, "olc_mos_w")
-      val w1 = novelBatch(800000L, "mosA1", 4)
-      val w2 = novelBatch(810000L, "mosA2", 4)
-      DedupIndex.append(w1, "doc_id", "text", "olc_mos_w") // a: wave 1
-      DedupIndex.append(w2, "doc_id", "text", "olc_mos_w") // a: wave 2
-      // ...while a writer ALREADY at the new location takes wave 1 there
-      val nb = novelBatch(820000L, "mosB", 4)
-      DedupIndex.append(nb, "doc_id", "text", prefix) // b: wave 1
-      val carried = DedupIndex.carryNewWaves(spark, prefix)
-      assert(carried.map(_._1) == Seq(1, 2) &&
-        carried.forall { case (f, t) => t != f },
-        s"expected a collision remap: $carried")
-      // the rewritten manifests audit clean against the copied files
-      assert(Bucketing.verifyWaveManifests(spark, b).isEmpty,
-        "carried manifest bodies disagree with the carried files")
-      // every batch — folded, carried, natively appended — serves
-      val twins = Seq(w1, w2, nb).map(w =>
-          w.select((col("doc_id") + 50000L).as("doc_id"), col("text")))
-        .reduce(_ unionAll _).localCheckpoint(true)
-      val got = DedupIndex.incrementalDedup(twins, "doc_id", "text", prefix)
-        .collect()
-      assert(got.length == 12 && got.forall(_.getString(1) == "exact_dup"),
-        s"${got.take(5).mkString(";")}")
-      // a FRESH attach of the carried artifact registers the carried
-      // partitions from the rewritten manifests (zero-listing path) and
-      // serves identically
-      val before = got.map(_.toString).sorted.toSeq
-      DedupIndex.attach(spark, b, "olc_mos2")
-      val re = DedupIndex.incrementalDedup(twins, "doc_id", "text",
-        "olc_mos2").collect().map(_.toString).sorted.toSeq
-      assert(re == before, "fresh attach of the carried artifact diverged")
-    } finally spark.conf.unset("spark.graft.append.staging")
+    val a = "mos://" +
+      java.nio.file.Files.createTempDirectory("olc_mos_a").toString
+    val b = "mos://" +
+      java.nio.file.Files.createTempDirectory("olc_mos_b").toString
+    val prefix = "olc_mos"
+    DedupIndex.build(docs.limit(50), "doc_id", "text", a, prefix = prefix)
+    // horizon at 0: everything appended from here on must be carried
+    DedupIndex.compact(spark, b, prefix, upToWave = 0)
+    // writers not yet redirected: two more waves land at the OLD dir
+    DedupIndex.attach(spark, a, "olc_mos_w")
+    val w1 = novelBatch(800000L, "mosA1", 4)
+    val w2 = novelBatch(810000L, "mosA2", 4)
+    DedupIndex.append(w1, "doc_id", "text", "olc_mos_w") // a: wave 1
+    DedupIndex.append(w2, "doc_id", "text", "olc_mos_w") // a: wave 2
+    // ...while a writer ALREADY at the new location takes wave 1 there
+    val nb = novelBatch(820000L, "mosB", 4)
+    DedupIndex.append(nb, "doc_id", "text", prefix) // b: wave 1
+    val carried = DedupIndex.carryNewWaves(spark, prefix)
+    assert(carried.map(_._1) == Seq(1, 2) &&
+      carried.forall { case (f, t) => t != f },
+      s"expected a collision remap: $carried")
+    // the rewritten manifests audit clean against the copied files
+    assert(Bucketing.verifyWaveManifests(spark, b).isEmpty,
+      "carried manifest bodies disagree with the carried files")
+    // every batch — folded, carried, natively appended — serves
+    val twins = Seq(w1, w2, nb).map(w =>
+        w.select((col("doc_id") + 50000L).as("doc_id"), col("text")))
+      .reduce(_ unionAll _).localCheckpoint(true)
+    val got = DedupIndex.incrementalDedup(twins, "doc_id", "text", prefix)
+      .collect()
+    assert(got.length == 12 && got.forall(_.getString(1) == "exact_dup"),
+      s"${got.take(5).mkString(";")}")
+    // a FRESH attach of the carried artifact registers the carried
+    // partitions from the rewritten manifests (zero-listing path) and
+    // serves identically
+    val before = got.map(_.toString).sorted.toSeq
+    DedupIndex.attach(spark, b, "olc_mos2")
+    val re = DedupIndex.incrementalDedup(twins, "doc_id", "text",
+      "olc_mos2").collect().map(_.toString).sorted.toSeq
+    assert(re == before, "fresh attach of the carried artifact diverged")
   }
 
   test("vector: horizon compact carries appended waves and the tombstone list; knn + verdict parity; rebuild keeps its quiesce") {

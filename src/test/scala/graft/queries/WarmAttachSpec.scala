@@ -71,16 +71,13 @@ class WarmAttachSpec extends SparkSpec {
     // along.
     spark.sparkContext.hadoopConfiguration.set("fs.mos.impl",
       classOf[graft.sources.MockObjectStoreFileSystem].getName)
-    spark.conf.set("spark.graft.append.staging", "manifest")
-    try {
-      val local = java.nio.file.Files.createTempDirectory("warm_mos").toString
-      val d = "mos://" + local
-      val prefix = "warm_mos"
-      DedupIndex.build(docs.limit(60), "doc_id", "text", d, prefix = prefix)
-      val warmed = DedupIndex.warm(spark, prefix)
-      assert(warmed == diskBytes(d,
-        Seq("hashes", "bands", "shingles", "meta", "tombs")) && warmed > 0,
-        s"mos:// warm read $warmed bytes")
-    } finally spark.conf.unset("spark.graft.append.staging")
+    val local = java.nio.file.Files.createTempDirectory("warm_mos").toString
+    val d = "mos://" + local
+    val prefix = "warm_mos"
+    DedupIndex.build(docs.limit(60), "doc_id", "text", d, prefix = prefix)
+    val warmed = DedupIndex.warm(spark, prefix)
+    assert(warmed == diskBytes(d,
+      Seq("hashes", "bands", "shingles", "meta", "tombs")) && warmed > 0,
+      s"mos:// warm read $warmed bytes")
   }
 }

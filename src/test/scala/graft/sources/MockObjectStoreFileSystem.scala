@@ -68,7 +68,7 @@ class MockObjectStoreFileSystem extends MockRemoteFileSystem {
       throw new java.io.IOException(
         s"mos:// forbids directory rename as a publish primitive " +
           s"(object stores have none): $src -> $dst — use per-file moves " +
-          "+ a manifest commit (spark.graft.append.staging=manifest)")
+          "+ a manifest commit (Bucketing.appendWave / commitWave)")
     super.rename(src, dst)
   }
 
