@@ -94,14 +94,15 @@ final class FinOps(val spark: SparkSession, val table: String = "CUR",
   }
 
   /** Dashboard composite: the 8 module summaries merged
-    * (finops_engine.py:203-233) — here as a map of collected frames. */
+    * (finops_engine.py:203-233) — summaries as values, tabular components
+    * as uncollected frames for the caller to shape. */
   def dashboard(): Map[String, Any] = Map(
     "invoice_summary" -> spend.invoiceSummary(),
-    "top_services" -> spend.topServices().collect().toSeq,
-    "top_regions" -> spend.topRegions().collect().toSeq,
-    "idle_resources" -> optimization.idleResources().collect().toSeq,
+    "top_services" -> spend.topServices(),
+    "top_regions" -> spend.topRegions(),
+    "idle_resources" -> optimization.idleResources(),
     "tagging" -> allocation.complianceSummary(),
-    "pricing_models" -> discounts.pricingModelBreakdown().collect().toSeq,
-    "anomalies" -> ai.detectAnomalies().collect().toSeq,
-    "trends" -> ai.trendInsights().collect().toSeq)
+    "pricing_models" -> discounts.pricingModelBreakdown(),
+    "anomalies" -> ai.detectAnomalies(),
+    "trends" -> ai.trendInsights())
 }

@@ -83,17 +83,11 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
     ("GET", "/api/v1/finops/kpi/health-check") -> (_ => finops.healthCheck()),
     ("GET", "/api/v1/finops/kpi/executive-summary") -> (_ => finops.executiveSummary()),
     ("GET", "/api/v1/finops/kpi/dashboard-data") -> { _ =>
-      // finops_engine.py:203-233 — every dashboard component in one call,
-      // JSON-shaped here (the FinOps.dashboard() variant returns Rows)
-      Map(
-        "invoice_summary" -> finops.spend.invoiceSummary(),
-        "top_services" -> collectRows(finops.spend.topServices()),
-        "top_regions" -> collectRows(finops.spend.topRegions()),
-        "idle_resources" -> collectRows(finops.optimization.idleResources()),
-        "tagging" -> finops.allocation.complianceSummary(),
-        "pricing_models" -> collectRows(finops.discounts.pricingModelBreakdown()),
-        "anomalies" -> collectRows(finops.ai.detectAnomalies()),
-        "trends" -> collectRows(finops.ai.trendInsights()))
+      // finops_engine.py:203-233 — every dashboard component in one call
+      finops.dashboard().map {
+        case (k, frame: DataFrame) => k -> collectRows(frame)
+        case kv => kv
+      }
     },
 
     // Spend (spend_endpoints.py)

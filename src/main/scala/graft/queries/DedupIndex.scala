@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Bucketing
+import graft.operators.{Bucketing, IndexLifecycle, WaveStats}
+import graft.operators.IndexLifecycle.WaveTable
 
 /** PERSISTED text-dedup serving index — the q48 counterpart of the proven
   * vector-index parquet round-trip (`AnnRecallSpec`): the three corpus-side
@@ -81,11 +82,30 @@ object DedupIndex {
     * fixed-grain operating point ([[graft.ServingScaleProbe]]'s A/B). */
   val DefaultPvals = 64
 
-  /** (table, bucket keys, subdir, partition column) per artifact. */
-  private def tables(prefix: String): Seq[(String, Seq[String], String, String)] =
-    Seq((s"${prefix}_hashes", Seq("ch"), "hashes", "pch"),
-      (s"${prefix}_bands", Seq("b", "h"), "bands", "pbh"),
-      (s"${prefix}_shingles", Seq("doc_id"), "shingles", "pdoc"))
+  /** The lifecycle layout of the index under `prefix`
+    * ([[IndexLifecycle]]): each table bucketed on its probe-join key and
+    * hash-partitioned on `partValue` of it; tombstones match the
+    * partner-bearing id column. */
+  private[queries] def layout(prefix: String): IndexLifecycle.Layout =
+    IndexLifecycle.Layout(prefix, anchor = "hashes", idCol = "doc_id",
+      tables = Seq(
+        WaveTable("hashes", Seq("ch"), Seq("pch"), "exact_partner",
+          Seq("ch")),
+        WaveTable("bands", Seq("b", "h"), Seq("pbh"), "doc_id",
+          Seq("doc_id", "b", "h")),
+        WaveTable("shingles", Seq("doc_id"), Seq("pdoc"), "doc_id",
+          Seq("doc_id"))),
+      plain = Seq("meta"),
+      // wave `w`'s stats sidecar: shingle doc ids, hash aux column, band
+      // occupancy
+      waveStats = (spark, d, w) => WaveStats.ensure(spark, d, w,
+        ids = spark.table(s"${prefix}_shingles")
+          .where(col("wave") === w).select("doc_id"),
+        aux = Some(spark.table(s"${prefix}_hashes")
+          .where(col("wave") === w).select("ch")),
+        occ = spark.table(s"${prefix}_bands")
+          .where(col("wave") === w).groupBy("b", "h")
+          .agg(count_distinct(col("doc_id")).as("n"))))
 
   /** The partition-value derivation per partition column — shared by the
     * build side (layout) and the probe side (pruning filter), so the two
@@ -107,48 +127,22 @@ object DedupIndex {
       spark.table(s"${prefix}_meta").head().getAs[Int]("pvals")
     else 0
 
-  /** The live directory of an attached/built index (parent of the hashes
-    * table's location) — Hadoop-Path arithmetic, so remote schemes
-    * (s3a://, mock://) keep their scheme. */
-  private def dirOf(spark: SparkSession, prefix: String): String =
-    new org.apache.hadoop.fs.Path(spark.sessionState.catalog
-      .getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(s"${prefix}_hashes"))
-      .location).getParent.toString
+  /** The live index directory of an attached/built index (parent of the
+    * hashes table's location) — the REST stats surface reports
+    * lease/staging/reader telemetry against it; operators pass it to the
+    * [[graft.operators.Bucketing]] diagnostics. */
+  def location(spark: SparkSession, prefix: String = "dedup_idx"): String =
+    IndexLifecycle.dirOf(spark, layout(prefix))
 
-  /** [[dirOf]] for the maintenance layer (reclaim targets the live
+  /** [[location]] for the maintenance layer (reclaim targets the live
     * directory in place). */
   private[queries] def liveDir(spark: SparkSession, prefix: String): String =
-    dirOf(spark, prefix)
-
-  /** The live index directory of an attached/built index — the PUBLIC
-    * form (the REST stats surface reports lease/staging/reader telemetry
-    * against it; operators pass it to the [[graft.operators.Bucketing]]
-    * diagnostics). */
-  def location(spark: SparkSession, prefix: String = "dedup_idx"): String =
-    dirOf(spark, prefix)
-
-  /** Scheme-agnostic existence check (attach runs against whatever FS
-    * the artifact lives on). */
-  private def fsExists(spark: SparkSession, p: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path)
-  }
-
-  /** Delete `dir/tombs` on disk (recursive, scheme-agnostic, no-op when
-    * absent) — a rebuild's removals reset. */
-  private[queries] def deleteTombFiles(spark: SparkSession,
-      dir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/tombs")
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(path)) fs.delete(path, true)
-  }
+    location(spark, prefix)
 
   /** TOMBSTONE documents out of an attached/built index — the takedown /
     * deletion half of index maintenance ([[append]] is the growth half):
-    * the removed ids are appended to a tiny `<prefix>_tombs` table (one
-    * long column, persisted next to the index so a fresh session's
-    * [[attach]] keeps honoring the removal), and every probe anti-joins
+    * the removed ids land in a tiny `<prefix>_tombs` table persisted next
+    * to the index ([[IndexLifecycle.remove]]), and every probe anti-joins
     * the BROADCAST tombstone set against the partner-bearing index sides
     * — map-side, no extra exchange, no index rewrite. [[compact]]
     * materializes the deletion physically and clears the tombstones.
@@ -164,54 +158,16 @@ object DedupIndex {
     * no shingles, lose the fallback — they dedup by hash alone.)
     * Tombstones key on the ID: re-admitting a removed id needs a
     * [[compact]] (which clears the tombstones) first. */
-  def remove(ids: DataFrame, id: String, prefix: String = "dedup_idx"): Unit = {
-    val s = ids.sparkSession
-    val fresh = ids.select(col(id).cast("long").as("doc_id")).distinct()
-    // anti-join the PERSISTED set too: a retried takedown job must not
-    // double-count (verdicts would stay right — the anti-join dedups —
-    // but stats' tombstone fraction, the compaction trigger, would lie)
-    val novel =
-      if (s.catalog.tableExists(s"${prefix}_tombs"))
-        fresh.join(s.table(s"${prefix}_tombs"), Seq("doc_id"), "left_anti")
-      else fresh
-    // writer-private staging + per-FILE moves: cross-JVM-safe,
-    // lock-free ([[Bucketing.appendFilesByRenameTo]] — incl. its
-    // concurrent same-id double-insert caveat). The FIRST tombstone
-    // publishes the files the same way and only then registers the
-    // table over them, so two replicas' first removes never share a
-    // committer staging dir either (r16 advisor) — the same-JVM lock
-    // below serializes only the catalog DDL
-    val dir = dirOf(s, prefix)
-    Bucketing.appendFilesByRenameTo(s, novel.coalesce(1), s"$dir/tombs",
-      dir)
-    if (s.catalog.tableExists(s"${prefix}_tombs"))
-      s.catalog.refreshTable(s"${prefix}_tombs")
-    else Bucketing.withWriteLock(s, dir) {
-      if (!s.catalog.tableExists(s"${prefix}_tombs"))
-        Bucketing.attachPlain(s, s"${prefix}_tombs", s"$dir/tombs")
-    }
-  }
+  def remove(ids: DataFrame, id: String, prefix: String = "dedup_idx"): Unit =
+    IndexLifecycle.remove(ids, id, layout(prefix))
 
   /** [[remove]] for a driver-known takedown list. */
-  def remove(spark: SparkSession, ids: Seq[Long], prefix: String): Unit = {
-    import spark.implicits._
-    remove(ids.toDF("doc_id"), "doc_id", prefix)
-  }
-
-  /** `df` minus rows whose `idCol` is tombstoned — a broadcast anti-join
-    * (map-side; the takedown set is tiny by nature); identity when the
-    * index has no tombstones. */
-  private def notTombstoned(s: SparkSession, prefix: String, df: DataFrame,
-      idCol: String): DataFrame =
-    if (!s.catalog.tableExists(s"${prefix}_tombs")) df
-    else df.join(
-      broadcast(s.table(s"${prefix}_tombs")
-        .select(col("doc_id").as("__tomb_id"))),
-      col(idCol) === col("__tomb_id"), "left_anti")
+  def remove(spark: SparkSession, ids: Seq[Long], prefix: String): Unit =
+    IndexLifecycle.remove(spark, ids, layout(prefix))
 
   /** Operational statistics of an attached index — the maintenance
-    * decision surface ([[VectorIndex.stats]] twin). What the numbers
-    * drive:
+    * decision surface (lifecycle counters from
+    * [[IndexLifecycle.census]]). What the numbers drive:
     *
     *   - `maxBandBucket` / `bandSkew` — a hot (b, h) bucket (boilerplate
     *     mass: every copy of a template shares every band) multiplies
@@ -244,123 +200,58 @@ object DedupIndex {
       stagingDirs: Int = 0, staleStagingDirs: Int = 0,
       priorDirs: Seq[String] = Nil, quarantinedWaveCount: Int = 0)
 
-  /** Build (or read back) wave `w`'s stats sidecar — folded mode's unit
-    * of work ([[graft.operators.WaveStats.ensure]]) bound to this
-    * index's tables. Shared by the read-side backfill in [[stats]] and
-    * the commit-time builders. */
-  private def ensureWaveStats(spark: SparkSession, d: String,
-      prefix: String, w: Int): graft.operators.WaveStats.PerWave =
-    graft.operators.WaveStats.ensure(spark, d, w,
-      ids = spark.table(s"${prefix}_shingles")
-        .where(col("wave") === w).select("doc_id"),
-      aux = Some(spark.table(s"${prefix}_hashes")
-        .where(col("wave") === w).select("ch")),
-      occ = spark.table(s"${prefix}_bands")
-        .where(col("wave") === w).groupBy("b", "h")
-        .agg(count_distinct(col("doc_id")).as("n")))
-
-  /** Commit-time sidecar build (r20 optimization): building lazily on
-    * the first folded `stats()` put the wave's full aggregate on the
-    * READ path — measured 8.8 s at the 5M-doc decade against the 0.08 s
-    * steady fold, i.e. a first maintenance call paid MORE than the
-    * full-mode aggregate the sidecars replace. At commit the wave's
-    * data pass just happened (page-cache-warm) and the cost is
-    * wave-proportional by construction. Failures are logged, never
-    * thrown: the wave is ALREADY committed (a caller retrying the
-    * append would double-append), and the sidecar is derived data the
-    * next `stats()` backfills. No-op outside folded mode. */
-  private[queries] def buildWaveStatsAtCommit(spark: SparkSession,
-      d: String, prefix: String, w: Int)(
-      ensure: (SparkSession, String, String, Int) =>
-        graft.operators.WaveStats.PerWave): Unit =
-    if (graft.operators.WaveStats.mode(spark) == "folded")
-      try { ensure(spark, d, prefix, w); () }
-      catch {
-        case e: Exception => Console.err.println(
-          s"[graft] wave $w sidecar build under $d failed " +
-            s"(stats() will backfill): $e")
-      }
-
   def stats(spark: SparkSession, prefix: String = "dedup_idx"): IndexStats = {
     // DISTINCT ids, not row counts: an at-least-once REPLAYED append
     // (verdict-neutral by the probe cores' batch-id anti-join) writes
     // duplicate shingle/band rows per doc, and raw counts would drift
     // docs/liveDocs and the tombstones/docs compaction trigger after any
     // replay (r14 advisor). [[compact]] dedups by id, re-aligning the
-    // physical artifact with these logical counts. Counting sees what
-    // probes see — committed waves only; `abandonedWaves > 0` is the
-    // crashed-append detector (invisible garbage; compact reclaims it).
-    val pvals = pvalsOf(spark, prefix)
-    val (cws, abandoned) =
-      if (pvals > 0) {
-        val d = dirOf(spark, prefix)
-        (Bucketing.committedWaves(spark, d),
-          Bucketing.abandonedWaves(spark, d,
-            Seq("hashes", "bands", "shingles")))
-      } else (Nil, 0)
-    def committedT(table: String) =
-      if (pvals > 0) spark.table(table)
-        .where(col("wave").isin(cws.map(Integer.valueOf): _*))
-      else spark.table(table)
+    // physical artifact with these logical counts.
+    val l = layout(prefix)
+    val part = pvalsOf(spark, prefix) > 0
+    val c = IndexLifecycle.census(spark, l, part)
     val (docs, hashes, buckets, maxN, meanN) =
-      if (pvals > 0 && graft.operators.WaveStats.mode(spark) == "folded") {
-        val d = dirOf(spark, prefix)
-        // catalog self-heal before computing sidecars: a wave committed
-        // by ANOTHER process prunes out of this session's scans until a
-        // RECOVER ([[appendStaged]] rationale) — and a sidecar computed
-        // over that pruned view would PERSIST zeros for the wave
-        if ({
-          val known = Bucketing.catalogWaves(spark, s"${prefix}_hashes")
-          cws.exists(!known(_))
-        }) tables(prefix).foreach { case (t, _, _, _) =>
-          spark.sql(s"ALTER TABLE $t RECOVER PARTITIONS")
-          spark.catalog.refreshTable(t)
-        }
-        val perWave = cws.map(w => ensureWaveStats(spark, d, prefix, w))
-        val f = graft.operators.WaveStats.fold(spark, d, perWave,
-          Seq("b", "h"))
-        (f.nIds, f.nAux, f.occCnt, f.occMax, f.occMean)
-      } else {
-        val dc = committedT(s"${prefix}_shingles")
-          .agg(count_distinct(col("doc_id"))).head().getLong(0)
-        val hc = committedT(s"${prefix}_hashes")
-          .agg(count_distinct(col("ch"))).head().getLong(0)
-        val occ = committedT(s"${prefix}_bands")
-          .groupBy("b", "h").agg(count_distinct(col("doc_id")).as("n"))
-          .agg(count(lit(1)), max("n"), avg("n")).head()
-        // an empty index (degenerate but attachable) aggregates to nulls
-        (dc, hc, occ.getLong(0),
-          if (occ.isNullAt(1)) 0L else occ.getLong(1),
-          if (occ.isNullAt(2)) 0.0 else occ.getDouble(2))
+      IndexLifecycle.foldedStats(spark, l, part, c.committedWaves,
+          Seq("b", "h")) match {
+        case Some(f) => (f.nIds, f.nAux, f.occCnt, f.occMax, f.occMean)
+        case None =>
+          def committedT(sub: String) =
+            IndexLifecycle.committedTable(spark, l, sub, part,
+              c.committedWaves)
+          val dc = committedT("shingles")
+            .agg(count_distinct(col("doc_id"))).head().getLong(0)
+          val hc = committedT("hashes")
+            .agg(count_distinct(col("ch"))).head().getLong(0)
+          val occ = committedT("bands")
+            .groupBy("b", "h").agg(count_distinct(col("doc_id")).as("n"))
+            .agg(count(lit(1)), max("n"), avg("n")).head()
+          // an empty index (degenerate but attachable) aggregates to nulls
+          (dc, hc, occ.getLong(0),
+            if (occ.isNullAt(1)) 0L else occ.getLong(1),
+            if (occ.isNullAt(2)) 0.0 else occ.getDouble(2))
       }
-    val tombs =
-      if (spark.catalog.tableExists(s"${prefix}_tombs"))
-        spark.table(s"${prefix}_tombs").count()
-      else 0L
-    def loc(table: String) = spark.sessionState.catalog
-      .getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .location.toString
-    val files = Seq("hashes", "bands", "shingles").map { sub =>
-      sub -> Bucketing.partFileCount(spark, loc(s"${prefix}_$sub"))
-    }.toMap
-    // staging roots split by age against the presumed-live writer TTL:
-    // a YOUNG root is probably an in-flight append (not a
-    // compact reason — the r16 advisor's live-writer-triggers-compact
-    // hole); an OLD one is crash garbage
-    val stages = if (pvals > 0)
-      Bucketing.stagingDirAges(spark, dirOf(spark, prefix)) else Nil
-    val ttl = Bucketing.writerLiveTtlMs(spark)
-    IndexStats(docs, docs - tombs, tombs, hashes, buckets, maxN, meanN,
-      if (meanN == 0.0) 0.0 else maxN / meanN, files,
-      cws.foldLeft(-1)(math.max), abandoned, cws.length,
-      stages.size, stages.count(_._2 >= ttl),
-      // stranded prior locations (past in-place compacts) — dead full
-      // copies of the index until retirePrior deletes them
-      Bucketing.priorLocations(spark, dirOf(spark, prefix)),
-      if (pvals > 0)
-        Bucketing.quarantinedWaves(spark, dirOf(spark, prefix)).size
-      else 0)
+    IndexStats(docs, docs - c.tombstones, c.tombstones, hashes, buckets,
+      maxN, meanN, if (meanN == 0.0) 0.0 else maxN / meanN, c.fileSets,
+      c.committedWave, c.abandonedWaves, c.committedWaves.length,
+      c.stagingDirs, c.staleStagingDirs, c.priorDirs, c.quarantinedWaves)
+  }
+
+  /** `df` with table `t`'s partition column derived at grain `pvals`. */
+  private def withPart(t: WaveTable, df: DataFrame, pvals: Int): DataFrame =
+    df.withColumn(t.partCols.head, partValue(t.partCols.head, pvals))
+
+  /** Bucket count of the index's tables (all three share one). */
+  private def bucketsOf(s: SparkSession, prefix: String): Int =
+    s.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(s"${prefix}_hashes"))
+      .bucketSpec.map(_.numBuckets).getOrElse(DefaultBuckets)
+
+  private def writeMeta(s: SparkSession, prefix: String, dir: String,
+      pvals: Int, buckets: Int): Unit = {
+    import s.implicits._
+    Bucketing.writePlainExternal(
+      Seq((pvals, buckets)).toDF("pvals", "buckets").coalesce(1),
+      s"${prefix}_meta", s"$dir/meta")
   }
 
   /** Derive the corpus artifacts and persist them under `dir` (also
@@ -371,6 +262,7 @@ object DedupIndex {
       prefix: String = "dedup_idx", buckets: Int = DefaultBuckets,
       pvals: Int = AutoPvals): Unit = {
     val s = corpus.sparkSession
+    val l = layout(prefix)
     val nc = corpus.select(col(id).cast("long").as("doc_id"),
       col(text).cast("string").as("text"))
     // AUTO grain: one count of the narrow (id, text) projection — a small
@@ -378,73 +270,46 @@ object DedupIndex {
     // a grain that probes at constant cost as the corpus decades up
     val pv = if (pvals == AutoPvals) Bucketing.autoGrain(nc.count())
       else pvals
-    buildFrames(s, nc, dir, prefix, buckets, pv)
-  }
-
-  private def buildFrames(s: SparkSession, nc: DataFrame, dir: String,
-      prefix: String, buckets: Int, pvals: Int): Unit = {
     // the wave history restarts with the rebuild: old markers must not
     // make the new tables' wave=0 visible before it is written (build is
     // not atomic — the single-writer contract covers rebuilds; readers
     // of a LIVE index rebuild into a fresh directory instead)
-    if (pvals > 0) Bucketing.clearWaveMarkers(s, dir)
-    val frames = Map(
-      "hashes" -> nc.select(col("doc_id"), md5(col("text")).as("ch"))
+    if (pv > 0) Bucketing.clearWaveMarkers(s, dir)
+    val frames = Seq(
+      nc.select(col("doc_id"), md5(col("text")).as("ch"))
         .groupBy("ch").agg(min("doc_id").as("exact_partner")),
-      "bands" -> TextDedup.bandRowsOf(nc),
-      "shingles" -> TextDedup.shingleSetsOf(nc))
-    tables(prefix).foreach { case (table, keys, sub, partCol) =>
-      if (pvals > 0)
-        Bucketing.writePartitionedBucketedExternal(
-          frames(sub).withColumn(partCol, partValue(partCol, pvals))
-            .withColumn("wave", lit(0)),
-          table, Seq("wave", partCol), keys, s"$dir/$sub", buckets)
-      else
-        Bucketing.writeBucketedExternal(frames(sub), table, keys,
-          s"$dir/$sub", buckets)
+      TextDedup.bandRowsOf(nc),
+      TextDedup.shingleSetsOf(nc))
+    l.tables.zip(frames).foreach { case (t, df) =>
+      IndexLifecycle.writeTable(l, t,
+        if (pv > 0) withPart(t, df, pv).withColumn("wave", lit(0)) else df,
+        dir, pv > 0, buckets)
     }
-    if (pvals > 0) {
-      import s.implicits._
-      Bucketing.writePlainExternal(
-        Seq((pvals, buckets)).toDF("pvals", "buckets").coalesce(1),
-        s"${prefix}_meta", s"$dir/meta")
-    }
-    // a rebuild starts with no removals: drop any stale tombstone entry
-    // a previous index under this prefix left in the catalog AND delete
-    // the on-disk tombstone files at this location — otherwise a fresh
-    // session's attach would re-arm the previous index's takedown list
-    // against the rebuilt data (cross-session divergence)
-    s.sql(s"DROP TABLE IF EXISTS ${prefix}_tombs")
-    deleteTombFiles(s, dir)
-    // PUBLISH wave 0 — last, so every table (and the meta/tomb state)
-    // is in place before any reader can resolve a committed wave
-    if (pvals > 0) {
-      Bucketing.commitWave(s, dir, 0)
-      buildWaveStatsAtCommit(s, dir, prefix, 0)(ensureWaveStats)
-    }
+    if (pv > 0) writeMeta(s, prefix, dir, pv, buckets)
+    IndexLifecycle.finishBuild(s, l, dir, pv > 0)
     // release the derivation caches build() itself populated: the index
     // is on disk now, and a long-lived builder session should not keep
     // the corpus-sized shingle/band plans pinned
     TextDedup.unpersistDerivationsOf(nc)
   }
 
-  /** APPEND a batch of documents to an attached/built index — the text
-    * twin of [[VectorIndex.append]], and STRONGER: the MinHash/shingle
-    * derivations are model-free (no quantizer to freeze), so an appended
-    * index serves verdicts bit-identical to a full rebuild over
-    * corpus ∪ batch whenever the appended content is novel (the admitted
-    * ingest stream — spec-pinned in DedupIndexSpec). The one divergence:
-    * a batch doc whose content hash ALREADY exists keeps the corpus's
-    * exact-partner row (its novel-ch filter skips the collision), where a
-    * rebuild would re-minimize over both ids — irrelevant for admitted
-    * (verdict `new`) docs, which have no existing partner by definition.
-    * Each append adds one file set per bucket; rebuild to compact.
+  /** APPEND a batch of documents to an attached/built index. The
+    * MinHash/shingle derivations are model-free (no quantizer to
+    * freeze), so an appended index serves verdicts bit-identical to a
+    * full rebuild over corpus ∪ batch whenever the appended content is
+    * novel (the admitted ingest stream — spec-pinned in DedupIndexSpec).
+    * The one divergence: a batch doc whose content hash ALREADY exists
+    * keeps the corpus's exact-partner row (its novel-ch filter skips the
+    * collision), where a rebuild would re-minimize over both ids —
+    * irrelevant for admitted (verdict `new`) docs, which have no existing
+    * partner by definition. Each append adds one file set per bucket;
+    * compact to collapse them.
     *
     * ATOMIC PUBLISH (partitioned layout): the wave's rows are staged
     * under `wave=W` partition directories across all three tables and
     * become visible only when the single `_wave_W` marker is created
-    * LAST ([[Bucketing.commitWave]]) — a reader between the three table
-    * commits still resolves the previous committed wave and sees a
+    * LAST ([[IndexLifecycle.commit]]) — a reader between the three table
+    * writes still resolves the previous committed wave and sees a
     * CONSISTENT index, never a torn one (exact-dup rows present, near-dup
     * rows missing); a crash mid-append leaves only invisible garbage a
     * later [[compact]] reclaims, and the retried append stages wave W+1.
@@ -453,8 +318,9 @@ object DedupIndex {
     * place file by file, then the marker lands as the wave's manifest),
     * so concurrent appenders — other threads AND other processes, on
     * local disk, HDFS or an object store — interleave safely with no
-    * lock, under the DISJOINT-CONTENT contract (below). Legacy flat
-    * indexes (pvals = 0) keep the old per-table commit semantics.
+    * lock, under the DISJOINT-CONTENT contract (see [[appendStaged]]).
+    * Legacy flat indexes (pvals = 0) keep the old per-table commit
+    * semantics.
     *
     * Visibility: the writing session (and any session attached LATER)
     * sees the append immediately; a DIFFERENT already-attached session
@@ -466,139 +332,72 @@ object DedupIndex {
     * only in its own catalog (a shared metastore deployment sees it
     * directly; CrossJvmWriterSpec pins both halves). */
   def append(batch: DataFrame, id: String, text: String,
-      prefix: String = "dedup_idx"): Unit = {
-    val s = batch.sparkSession
-    val w = appendStaged(batch, id, text, prefix)
-    if (w >= 0) {
-      val d = dirOf(s, prefix)
-      Bucketing.commitWave(s, d, w)
-      Bucketing.releaseWave(s, d, w) // the marker supersedes the lease
-      buildWaveStatsAtCommit(s, d, prefix, w)(ensureWaveStats)
-    }
-  }
+      prefix: String = "dedup_idx"): Unit =
+    IndexLifecycle.commit(batch.sparkSession, layout(prefix),
+      appendStaged(batch, id, text, prefix))
 
-  /** The staging half of [[append]]: writes the wave's files across all
-    * tables WITHOUT publishing them (partitioned layout; returns the
-    * staged wave number, or −1 on the legacy flat layout whose writes are
-    * visible per-table as before). `maxTables` is the fault-injection
-    * knob the torn-write spec uses to stop after N table commits —
-    * production callers never pass it. */
+  /** The staging half of [[append]] ([[IndexLifecycle.appendStaged]]):
+    * writes the wave's files across all tables WITHOUT publishing them
+    * and returns the staged wave number (−1 on the legacy flat layout).
+    * `maxTables` is the fault-injection knob the torn-write spec uses to
+    * stop after N table writes. */
   private[queries] def appendStaged(batch: DataFrame, id: String,
       text: String, prefix: String = "dedup_idx",
       maxTables: Int = Int.MaxValue): Int = {
     val s = batch.sparkSession
+    val l = layout(prefix)
     val pvals = pvalsOf(s, prefix)
-    val dir = if (pvals > 0) dirOf(s, prefix) else ""
     // committed-set horizon for the novel-ch anti-join: an UNCOMMITTED
     // leftover wave (crashed append) must not suppress re-appending its
     // content — those rows are invisible to every probe forever
-    val cws = if (pvals > 0) Bucketing.committedWaves(s, dir) else Nil
-    // WRITE-SIDE catalog self-heal: with per-process in-memory catalogs a
-    // session that attached BEFORE another process's append prunes that
-    // wave's partitions out of the anti-join scan below and would
-    // re-insert its hashes as novel — duplicate exact-verdict rows until
-    // compact (r16 advisor). A committed wave the catalog does not know
-    // ⇒ RECOVER first (one listing, append-cadence; a shared-metastore
-    // deployment never hits this — the writer's ADD PARTITION is global)
-    if (pvals > 0 && {
-        val known = Bucketing.catalogWaves(s, s"${prefix}_hashes")
-        cws.exists(!known(_))
-      })
-      tables(prefix).foreach { case (t, _, _, _) =>
-        s.sql(s"ALTER TABLE $t RECOVER PARTITIONS")
-        s.catalog.refreshTable(t)
-      }
-    // the wave number is LEASED (atomic create-no-overwrite) before any
-    // staging, so two concurrent appenders land on DISJOINT waves instead
-    // of interleaving one ([[Bucketing.acquireWave]]). Concurrent writers
-    // must append DISJOINT content: the novel-ch anti-join below reads
-    // the committed snapshot, so two writers carrying the same new text
-    // would each see it as novel and both insert its hash row (compact
-    // collapses the duplicates by ch, but probes in between would serve
-    // duplicate exact-verdict rows). Parallel ingest shards partitioned
-    // by id/hash satisfy this by construction.
-    val wave =
-      if (pvals == 0) -1
-      else Bucketing.acquireWave(s, dir, Seq("hashes", "bands", "shingles"))
-    // EAGER local checkpoint: a caller's `batch` routinely derives from
-    // probe verdicts against THIS index (the appendAdmitted loop), and
-    // the FIRST write below (hashes) refreshes its catalog table — which
-    // invalidates every cache whose lineage reads it, so the bands and
-    // shingles writes would silently recompute the batch against the
-    // half-appended index, where each row now exact-dups ITSELF ⇒ empty
-    // appends (the bug JointDebug exposed: hashes present, bands/shingles
-    // missing, near-dup serving of appended content silently lost). The
-    // checkpoint severs the lineage; blocks free on GC after the writes.
-    val nc = batch.select(col(id).cast("long").as("doc_id"),
-      col(text).cast("string").as("text"))
-      .localCheckpoint(true)
-    def bucketsOf(table: String): Int =
-      s.sessionState.catalog
-        .getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(table))
-        .bucketSpec.map(_.numBuckets).getOrElse(DefaultBuckets)
-    // partitioned layout: writer-private staging, per-FILE moves — no
-    // shared committer dir, cross-JVM-safe, no lock
-    // ([[Bucketing.appendWave]]; [[append]] commits the manifest); the
-    // flat layout appends in place and publishes per table
-    def appendTo(df: DataFrame, table: String, keys: Seq[String],
-        partCol: String): Unit = {
-      val staged = (if (pvals > 0)
-          df.withColumn(partCol, partValue(partCol, pvals))
-            .withColumn("wave", lit(wave)) else df)
-        .repartition(bucketsOf(table), keys.map(col): _*)
+    val cws =
+      if (pvals > 0) Bucketing.committedWaves(s, location(s, prefix)) else Nil
+    // the anti-join below would re-insert the hashes of a wave this
+    // session's catalog does not know as novel — duplicate exact-verdict
+    // rows until compact; self-heal first
+    if (pvals > 0) IndexLifecycle.recoverUnseenWaves(s, l, cws)
+    IndexLifecycle.appendStaged(
+      batch.select(col(id).cast("long").as("doc_id"),
+        col(text).cast("string").as("text")),
+      l, pvals, bucketsOf(s, prefix), maxTables,
+      TextDedup.unpersistDerivationsOf) { nc =>
+      // novel-ch anti-join, PRUNED on the partitioned layout: any index ch
+      // equal to a batch ch necessarily lives in one of the batch's pch
+      // partitions (same partValue derivation), so the anti-join scans
+      // |batch ch|/pvals of the corpus-sized table instead of all of it.
+      // It reads the committed snapshot, so two concurrent writers
+      // carrying the same new text would each see it as novel and both
+      // insert its hash row (compact collapses them by ch) — hence the
+      // disjoint-content contract
+      val existingCh =
+        if (pvals > 0) {
+          val pch = nc.select(md5(col("text")).as("ch"))
+            .select(partValue("pch", pvals).as("p"))
+            .distinct().collect().map(_.getInt(0)).sorted
+          s.table(s"${prefix}_hashes")
+            .where(col("wave").isin(cws.map(Integer.valueOf): _*) &&
+              col("pch").isin(pch.map(Integer.valueOf): _*))
+            .select("ch")
+        } else s.table(s"${prefix}_hashes").select("ch")
+      val frames = Seq(
+        nc.select(col("doc_id"), md5(col("text")).as("ch"))
+          .groupBy("ch").agg(min("doc_id").as("exact_partner"))
+          // novel-ch only: a second row per ch would multiply the probe join
+          .join(existingCh, Seq("ch"), "left_anti"),
+        TextDedup.bandRowsOf(nc),
+        TextDedup.shingleSetsOf(nc))
       if (pvals > 0)
-        Bucketing.appendWave(s, staged, table, keys, Seq(partCol),
-          bucketsOf(table), dir, wave)
-      else
-        staged.write.mode(org.apache.spark.sql.SaveMode.Append)
-          .bucketBy(bucketsOf(table), keys.head, keys.tail: _*)
-          .sortBy(keys.head, keys.tail: _*)
-          .option("compression", "snappy")
-          .saveAsTable(table)
+        l.tables.zip(frames).map { case (t, df) => withPart(t, df, pvals) }
+      else frames
     }
-    // novel-ch anti-join, PRUNED on the partitioned layout: any index ch
-    // equal to a batch ch necessarily lives in one of the batch's pch
-    // partitions (same partValue derivation), so the anti-join scans
-    // |batch ch|/pvals of the corpus-sized table instead of all of it —
-    // the probe-side pruning argument applied to the append path
-    val existingCh =
-      if (pvals > 0) {
-        val pch = nc.select(md5(col("text")).as("ch"))
-          .select(partValue("pch", pvals).as("p"))
-          .distinct().collect().map(_.getInt(0)).sorted
-        s.table(s"${prefix}_hashes")
-          .where(col("wave").isin(cws.map(Integer.valueOf): _*) &&
-            col("pch").isin(pch.map(Integer.valueOf): _*))
-          .select("ch")
-      } else s.table(s"${prefix}_hashes").select("ch")
-    val hashes = nc.select(col("doc_id"), md5(col("text")).as("ch"))
-      .groupBy("ch").agg(min("doc_id").as("exact_partner"))
-      // novel-ch only: a second row per ch would multiply the probe join
-      .join(existingCh, Seq("ch"), "left_anti")
-    // lease heartbeat between table writes: liveness age measures time
-    // since last PROGRESS, so an append longer than the writer TTL is not
-    // misread as crashed mid-write ([[Bucketing.touchLease]])
-    def beat(): Unit = if (wave >= 0) Bucketing.touchLease(s, dir, wave)
-    val writes = Seq(
-      () => { appendTo(hashes, s"${prefix}_hashes", Seq("ch"), "pch")
-        beat() },
-      () => { appendTo(TextDedup.bandRowsOf(nc), s"${prefix}_bands",
-        Seq("b", "h"), "pbh")
-        beat() },
-      () => appendTo(TextDedup.shingleSetsOf(nc), s"${prefix}_shingles",
-        Seq("doc_id"), "pdoc"))
-    writes.take(math.max(0, maxTables)).foreach(_())
-    if (pvals > 0) Bucketing.releaseStaging(s, dir, wave)
-    TextDedup.unpersistDerivationsOf(nc)
-    wave
   }
 
-  /** COMPACT an attached index into `outDir` — the [[VectorIndex.compact]]
-    * twin: every [[append]] adds one file set per bucket (and partition),
-    * compaction rewrites the three tables (collapsing them) with identical
-    * content, so serving is bit-identical (the derivations are data, not
-    * model — nothing to freeze). Refuses the live location.
+  /** COMPACT an attached index into `outDir`
+    * ([[IndexLifecycle.compact]]): every [[append]] adds one file set per
+    * bucket (and partition); compaction rewrites the three tables
+    * (collapsing them) with identical content, so serving is
+    * bit-identical (the derivations are data, not model — nothing to
+    * freeze). Refuses the live location.
     *
     * `buckets <= 0` (the default) INHERITS the source index's bucket
     * count — the meta row when present, else the attached table's bucket
@@ -631,280 +430,103 @@ object DedupIndex {
     * writers are known dead or drained. Readers of the OLD location are
     * unaffected throughout. Abandoned (never-committed) waves are
     * physically reclaimed here — they are excluded from the rewrite and
-    * the fresh history starts at wave 0.
+    * the fresh history starts at wave 0. Deletions materialize here too:
+    * tombstoned rows are dropped (hashes by their partner id,
+    * bands/shingles by doc id), and duplicate rows a replayed append left
+    * behind (identical by construction — the derivations are
+    * deterministic) collapse, so the compacted artifact matches
+    * [[stats]]' distinct-id counts.
     *
     * `upToWave` — the WAVE-HORIZON (online) mode (r18 verdict item 1): at
     * 100 TB a full-index rewrite is hours, and the enforced quiesce above
     * halts ingest for all of it — the last stop-the-world in the design.
     * Passing a horizon H folds committed waves ≤ H into `outDir` as a
     * fresh wave 0 WHILE WRITERS KEEP APPENDING waves > H at the old
-    * location (no quiesce check — waves are immutable once committed and
-    * the fold never reads anything above its snapshot); the > H waves are
-    * then CARRIED over — per-file copies published one marker at a time
-    * under the ordinary wave protocol, numbers preserved when free and
-    * lease-remapped when a writer already appending at `outDir` took one
-    * ([[Bucketing.claimCarryWave]]). The compact's own carry loop runs
-    * until it finds nothing new; waves committed at the OLD location
-    * after it returns reach the new one via [[carryNewWaves]] (the
-    * catch-up — idempotent through the `_carried` ledger) until the
-    * operator redirects writers. Horizon mode differences:
-    * TOMBSTONES are carried, not cleared (deletions stay materialized in
-    * the folded wave 0; carried waves keep honoring the list — so
+    * location; the > H waves are then CARRIED over — per-file copies
+    * published one marker at a time under the ordinary wave protocol,
+    * numbers preserved when free and lease-remapped when a writer already
+    * appending at `outDir` took one ([[Bucketing.claimCarryWave]]). The
+    * compact's own carry loop runs until it finds nothing new; waves
+    * committed at the OLD location after it returns reach the new one
+    * via [[carryNewWaves]] until the operator redirects writers. Horizon
+    * mode differences: TOMBSTONES are carried, not cleared (so
     * re-admitting a removed id still needs a FULL compact);
     * re-graining/re-bucketing is refused (carried waves' partition values
-    * were derived at the source grain — a new grain would silently
-    * mis-prune them); quarantined waves stay behind at the old location
-    * (forensics) exactly as a full compact purges them. */
+    * were derived at the source grain); quarantined waves stay behind at
+    * the old location (forensics) exactly as a full compact purges
+    * them. */
   def compact(spark: SparkSession, outDir: String,
       prefix: String = "dedup_idx", outPrefix: String = null,
       buckets: Int = 0, pvals: Int = 0, force: Boolean = false,
       upToWave: Int = Int.MaxValue): Unit = {
-    val horizon = upToWave != Int.MaxValue
-    if (horizon) {
-      require(pvalsOf(spark, prefix) > 0,
-        "wave-horizon compact needs the wave-partitioned layout")
-      require(pvals == 0 && buckets <= 0,
-        "wave-horizon compact cannot re-grain or re-bucket: carried " +
-          "waves keep their source-grain partition values, which a new " +
-          "grain would silently mis-prune — run a full (quiesced) " +
-          "compact to re-shape")
-      require(upToWave >= 0, s"upToWave=$upToWave is not a wave horizon")
-    }
-    if (pvalsOf(spark, prefix) > 0 && !horizon)
-      Bucketing.requireQuiesced(spark, dirOf(spark, prefix), force,
-        "compact")
     // null outPrefix (the default) = in place under `prefix`: a literal
     // "dedup_idx" default silently compacted a prefix="x" index into the
-    // unrelated "dedup_idx" catalog entries ([[VectorIndex.rebuild]]
-    // rationale; Scala cannot default one parameter to another)
+    // unrelated "dedup_idx" catalog entries (Scala cannot default one
+    // parameter to another)
     val outPfx = Option(outPrefix).getOrElse(prefix)
-    val oldLoc = spark.sessionState.catalog
-      .getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(s"${prefix}_hashes"))
-      .location.toString
-    // Hadoop-Path comparison, NOT java.io.File: scheme-qualified live
-    // locations (s3a://, mock://) never match a File path, which would
-    // let a compact silently destroy the index it is reading (r15 review)
-    require(!Bucketing.samePath(spark, oldLoc, s"$outDir/hashes"),
-      s"compact target $outDir is the live index location — compaction " +
-        "rewrites tables while reading them, so it needs a fresh directory")
+    val out = layout(outPfx)
+    val srcPvals = pvalsOf(spark, prefix)
     val outBuckets =
       if (buckets > 0) buckets
       else if (spark.catalog.tableExists(s"${prefix}_meta"))
         spark.table(s"${prefix}_meta").head().getAs[Int]("buckets")
-      else spark.sessionState.catalog
-        .getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(s"${prefix}_hashes"))
-        .bucketSpec.map(_.numBuckets).getOrElse(DefaultBuckets)
-    // read each source from its FILES, not the catalog table: when
-    // outPrefix == prefix the write drops the catalog entry first, and a
-    // PARTITIONED table's scan consults the catalog lazily at execution
-    // (CatalogFileIndex) — reading the location keeps the plan
-    // catalog-independent (partition columns come back via directory
-    // inference, identically valued)
-    def srcDf(table: String) = spark.read.parquet(
-      spark.sessionState.catalog
-        .getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(table))
-        .location.toString)
-    // deletions materialize here: tombstoned rows are dropped from the
-    // rewrite (hashes by their partner id, bands/shingles by doc id) and
-    // the tombstone table is NOT carried into the compacted artifact.
-    // Duplicate rows a replayed append left behind (identical by
-    // construction — the derivations are deterministic) collapse too, so
-    // the compacted artifact matches [[stats]]' distinct-id counts.
-    val idColOf = Map("hashes" -> "exact_partner", "bands" -> "doc_id",
-      "shingles" -> "doc_id")
-    val dedupKeysOf = Map("hashes" -> Seq("ch"),
-      "bands" -> Seq("doc_id", "b", "h"), "shingles" -> Seq("doc_id"))
-    // the committed-set horizon: abandoned (crashed-append) waves were
-    // never visible to any probe, and compaction is where their garbage
-    // files are physically reclaimed — filter them out, then restart the
-    // wave history at 0 in the compacted artifact
-    val srcPvals = pvalsOf(spark, prefix)
-    val cws = (if (srcPvals > 0)
-      Bucketing.committedWaves(spark, dirOf(spark, prefix)) else Nil)
-      .filter(_ <= upToWave)
-    def liveOf(sub: String): DataFrame = {
-      val (src, _, _, _) = tables(prefix).find(_._3 == sub).get
-      val committed =
-        if (srcPvals > 0) srcDf(src)
-          .where(col("wave").isin(cws.map(Integer.valueOf): _*))
-          .withColumn("wave", lit(0))
-        else srcDf(src)
-      notTombstoned(spark, prefix, committed, idColOf(sub))
-        .dropDuplicates(dedupKeysOf(sub))
-    }
-    // the output grain: inherit / auto-size from the LIVE doc count /
-    // explicit; re-graining a flat source upgrades it to the partitioned
-    // layout (wave 0 + computed partition columns added in the rewrite)
-    val outPvals =
-      if (pvals == 0) srcPvals
-      else if (pvals == AutoPvals) Bucketing.autoGrain(
-        liveOf("shingles").select("doc_id").distinct().count())
-      else pvals
-    require(outPvals > 0 || srcPvals == 0,
-      "downgrading a partitioned index to the flat layout is not supported")
-    if (outPvals > 0) Bucketing.clearWaveMarkers(spark, outDir)
-    tables(prefix).zip(tables(outPfx)).foreach {
-      case ((_, keys, sub, partCol), (dst, _, _, _)) =>
-        val live = liveOf(sub)
-        if (outPvals > 0) {
+      else bucketsOf(spark, prefix)
+    IndexLifecycle.compact(spark, layout(prefix), out, outDir, srcPvals,
+      pvals, AutoPvals, pvals != 0 || buckets > 0, force, upToWave)(
+      live => live("shingles").select("doc_id").distinct().count()) {
+      (live, outPvals) =>
+        out.tables.foreach { t =>
           // ALWAYS recompute the partition column at the output grain
           // (identical values when the grain is inherited — partValue is
           // the one shared derivation — and the re-grain path otherwise);
           // a flat source additionally gains its wave column here
-          val base = (if (srcPvals > 0) live.drop(partCol)
-            else live.withColumn("wave", lit(0)))
-            .withColumn(partCol, partValue(partCol, outPvals))
-          Bucketing.writePartitionedBucketedExternal(base, dst,
-            Seq("wave", partCol), keys, s"$outDir/$sub", outBuckets)
-        } else
-          Bucketing.writeBucketedExternal(live, dst, keys,
-            s"$outDir/$sub", outBuckets)
+          val df = live(t.sub)
+          IndexLifecycle.writeTable(out, t,
+            if (outPvals == 0) df
+            else withPart(t, if (srcPvals > 0) df.drop(t.partCols.head)
+              else df.withColumn("wave", lit(0)), outPvals),
+            outDir, outPvals > 0, outBuckets)
+        }
+        if (outPvals > 0) writeMeta(spark, outPfx, outDir, outPvals,
+          outBuckets)
     }
-    if (outPvals > 0) {
-      import spark.implicits._
-      Bucketing.writePlainExternal(
-        Seq((outPvals, outBuckets)).toDF("pvals", "buckets").coalesce(1),
-        s"${outPfx}_meta", s"$outDir/meta")
-    }
-    val oldDir = new org.apache.hadoop.fs.Path(oldLoc).getParent.toString
-    spark.sql(s"DROP TABLE IF EXISTS ${outPfx}_tombs")
-    if (horizon) {
-      // carried forward, not cleared: deletions are materialized in the
-      // folded wave 0, but carried (> H) waves — and takedowns landing at
-      // the old location mid-transition — still need the list
-      if (Bucketing.syncTombFiles(spark, oldDir, outDir))
-        Bucketing.attachPlain(spark, s"${outPfx}_tombs", s"$outDir/tombs")
-    }
-    if (outPvals > 0) {
-      Bucketing.commitWave(spark, outDir, 0)
-      // carried (> H) waves stay lazy: each is batch-proportional, and
-      // the carry loop below races appenders — the next stats() backfills
-      buildWaveStatsAtCommit(spark, outDir, outPfx, 0)(ensureWaveStats)
-    }
-    if (horizon) {
-      Bucketing.writeCarryLedger(spark, outDir, oldDir, upToWave, Nil)
-      // carry committed > H waves until a round brings nothing new — a
-      // writer appending DURING this loop lands in a later round; one
-      // committing after the loop exits reaches the new location via the
-      // carryNewWaves catch-up
-      while (carryNewWaves(spark, outPfx).nonEmpty) ()
-    }
-    // in-place flip (outPrefix == prefix): the old location is now
-    // STRANDED — nobody serves it, nothing deletes it, and at 100 TB each
-    // maintenance compact doubles storage until someone does (r17 verdict
-    // item 2). Record it (plus any chain it carried) for the guarded
-    // [[retirePrior]]; stats/Maintenance surface it until retired.
-    if (outPfx == prefix)
-      Bucketing.recordPriorLocation(spark, outDir, oldDir)
   }
 
-  /** CATCH-UP carry for a wave-horizon [[compact]]: copies (never moves)
-    * committed waves that landed at the retired source location since the
-    * last carry into the live index — per-file copies registered and then
-    * published one marker at a time, numbers preserved when free and
-    * lease-remapped on collision with a writer already appending here.
-    * Idempotent through the `_carried` ledger (safe to call at any
-    * cadence from any session attached to the live index); also re-syncs
-    * the tombstone list. Returns the (fromWave → toWave) pairs carried
-    * this call; an empty result with quiesced source writers means the
-    * transition is complete — redirect writers and [[retirePrior]] the
-    * old location. */
+  /** CATCH-UP carry for a wave-horizon [[compact]]
+    * ([[IndexLifecycle.carryNewWaves]]): returns the (fromWave → toWave)
+    * pairs carried this call; empty once the old location is drained. */
   def carryNewWaves(spark: SparkSession,
-      prefix: String = "dedup_idx"): Seq[(Int, Int)] = {
-    val dir = dirOf(spark, prefix)
-    val ledger = Bucketing.readCarryLedger(spark, dir)
-    require(ledger.isDefined,
-      s"$dir has no _carried ledger — not a wave-horizon compact target")
-    val (from, upTo, mapping) = ledger.get
-    if (Bucketing.syncTombFiles(spark, from, dir) &&
-        !spark.catalog.tableExists(s"${prefix}_tombs"))
-      Bucketing.attachPlain(spark, s"${prefix}_tombs", s"$dir/tombs")
-    else if (spark.catalog.tableExists(s"${prefix}_tombs"))
-      spark.catalog.refreshTable(s"${prefix}_tombs")
-    val pending = Bucketing.committedWaves(spark, from)
-      .filter(_ > upTo).filterNot(mapping.contains)
-    var m = mapping
-    pending.map { w =>
-      val toW = Bucketing.claimCarryWave(spark, dir,
-        Seq("hashes", "bands", "shingles"), w)
-      val parts = Bucketing.copyWaveFiles(spark, from, dir, w, toW)
-      tables(prefix).foreach { case (table, _, sub, _) =>
-        parts.get(sub).foreach(rel =>
-          Bucketing.registerWavePartitions(spark, table, toW, rel))
-      }
-      // marker LAST: a probe between registration and this commit still
-      // resolves a consistent horizon without the carried wave
-      Bucketing.commitCarriedWave(spark, from, dir, w, toW)
-      Bucketing.releaseWave(spark, dir, toW)
-      m = m + (w -> toW)
-      Bucketing.writeCarryLedger(spark, dir, from, upTo, m.toSeq)
-      (w, toW)
-    }
-  }
+      prefix: String = "dedup_idx"): Seq[(Int, Int)] =
+    IndexLifecycle.carryNewWaves(spark, layout(prefix))
 
   /** RETIRE the stranded prior locations a past in-place [[compact]] left
-    * behind — the guarded grace-period delete
-    * ([[Bucketing.retirePriors]]): refuses while any live writer lease or
-    * reader marker sits on an old location; `force = true` overrides for
-    * known-drained replicas. Returns the deleted directories. */
+    * behind ([[IndexLifecycle.retirePrior]]); `force = true` overrides
+    * the live-lease/reader guard. Returns the deleted directories. */
   def retirePrior(spark: SparkSession, prefix: String = "dedup_idx",
       force: Boolean = false): Seq[String] =
-    Bucketing.retirePriors(spark, dirOf(spark, prefix), force)
+    IndexLifecycle.retirePrior(spark, layout(prefix), force)
 
   /** Register an existing index written by [[build]] in `spark`'s catalog
     * — metadata only (no data job, no corpus recomputation, plus one
-    * partition-discovery file listing for the partitioned layout).
-    * Partitioned indexes carry their own meta (buckets/pvals read from
-    * `dir/meta`); for legacy flat indexes `buckets` must match the
-    * build-time value for the planner to prove the layout. */
+    * partition-discovery pass for the partitioned layout). Partitioned
+    * indexes carry their own meta (buckets/pvals read from `dir/meta`);
+    * for legacy flat indexes `buckets` must match the build-time value
+    * for the planner to prove the layout. */
   def attach(spark: SparkSession, dir: String,
       prefix: String = "dedup_idx", buckets: Int = DefaultBuckets): Unit = {
-    if (fsExists(spark, s"$dir/meta")) {
+    val l = layout(prefix)
+    if (IndexLifecycle.exists(spark, s"$dir/meta")) {
       val m = spark.read.parquet(s"$dir/meta").head()
-      // refuse a markerless partitioned artifact (crashed build or
-      // pre-wave layout): probes would resolve an empty committed set and
-      // serve `new` for everything — silent admission of the whole
-      // stream; loud beats silent ([[VectorIndex.attach]] twin). The
-      // pvals == 0 arm is future-proofing, not a live path: build writes
-      // dir/meta only when pvals > 0 today, but a meta-bearing FLAT
-      // layout (no waves, so no marker to demand) must keep attaching if
-      // one ever exists.
-      require(m.getAs[Int]("pvals") == 0 ||
-          Bucketing.committedWaves(spark, dir).nonEmpty,
-        s"$dir has a partitioned layout (pvals=${m.getAs[Int]("pvals")}) " +
-          "but no committed wave marker — a crashed build or a pre-wave " +
-          "artifact; attaching would serve an empty index (every verdict " +
-          "'new'). Rebuild it under the current layout.")
-      Bucketing.attachPlain(spark, s"${prefix}_meta", s"$dir/meta")
-      tables(prefix).foreach { case (table, keys, sub, partCol) =>
-        Bucketing.attachPartitionedBucketed(spark, table,
-          Seq("wave", partCol), keys, s"$dir/$sub", m.getAs[Int]("buckets"))
-      }
-    } else
-      tables(prefix).foreach { case (table, keys, sub, _) =>
-        Bucketing.attachBucketed(spark, table, keys, s"$dir/$sub", buckets)
-      }
-    // the tombstone table rides along when the artifact has removals —
-    // and a stale entry from a DIFFERENT index under this prefix must not
-    if (fsExists(spark, s"$dir/tombs"))
-      Bucketing.attachPlain(spark, s"${prefix}_tombs", s"$dir/tombs")
-    else spark.sql(s"DROP TABLE IF EXISTS ${prefix}_tombs")
+      IndexLifecycle.attach(spark, l, dir, m.getAs[Int]("pvals"),
+        m.getAs[Int]("buckets"), l.plain)
+    } else IndexLifecycle.attach(spark, l, dir, 0, buckets, Nil)
   }
 
-  /** WARM an attached index's bytes through the page cache — call after
-    * [[attach]] on a cold deployment, BEFORE the first serving request:
-    * the r16 cold-start decomposition measured first-probe latency at
-    * 2.8–9× of warm, dominated by cold bytes; this pays them at
-    * sequential bandwidth up front ([[Bucketing.warmFiles]]). Returns
-    * bytes read. */
-  def warm(spark: SparkSession, prefix: String = "dedup_idx"): Long = {
-    val d = dirOf(spark, prefix)
-    (Seq("hashes", "bands", "shingles", "meta", "tombs"))
-      .map(sub => Bucketing.warmFiles(spark, s"$d/$sub")).sum
-  }
+  /** WARM an attached index's bytes through the page cache
+    * ([[IndexLifecycle.warm]]) — call after [[attach]] on a cold
+    * deployment, before the first serving request. Returns bytes read. */
+  def warm(spark: SparkSession, prefix: String = "dedup_idx"): Long =
+    IndexLifecycle.warm(spark, layout(prefix))
 
   /** q48-semantics ingest verdicts for `batch`, served entirely off the
     * persisted `<prefix>_*` tables ([[build]] or [[attach]] must have
@@ -930,7 +552,7 @@ object DedupIndex {
     // bands keep removed docs out of the candidate set — the shingle
     // side needs nothing (candidates are already live-only)
     def live(df: DataFrame, idCol: String) =
-      notTombstoned(s, prefix, df, idCol)
+      IndexLifecycle.notTombstoned(s, layout(prefix), df, idCol)
     if (pvals == 0)
       TextOps.incrementalVerdicts(nb,
         live(s.table(s"${prefix}_hashes"), "exact_partner"),
@@ -949,7 +571,7 @@ object DedupIndex {
       // history (like any log-structured store). TAKEDOWNS stay global
       // by design: a tombstoned doc serves from NO snapshot —
       // right-to-be-forgotten outranks reproducibility.
-      val cws = Bucketing.committedWaves(s, dirOf(s, prefix))
+      val cws = Bucketing.committedWaves(s, location(s, prefix))
         .filter(_ <= asOfWave)
       def pruned(table: String, partCol: String, values: Array[Int]) =
         s.table(table)

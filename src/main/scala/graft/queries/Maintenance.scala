@@ -314,7 +314,7 @@ object Maintenance {
         // in-place garbage deletion (lease/TTL-aware by construction) —
         // no rewrite, no catalog flip, outDir unused
         Bucketing.reclaimGarbage(spark, DedupIndex.liveDir(spark, prefix),
-          Seq("hashes", "bands", "shingles"))
+          DedupIndex.layout(prefix).subs)
       case _ => ()
     }
     (rec, rec.action != "none")
@@ -349,7 +349,7 @@ object Maintenance {
           force = force)
       case "reclaim" =>
         Bucketing.reclaimGarbage(spark, VectorIndex.liveDir(spark, prefix),
-          Seq("vecs", "bands", "cells", "pqcodes"))
+          VectorIndex.layout(prefix).subs)
       case _ => ()
     }
     (rec, rec.action != "none")

@@ -909,12 +909,6 @@ object TextDedup {
   def q41JaccardCapped(s: SparkSession, dir: String): DataFrame =
     cappedJaccardPairsOf(docs(s, dir), 0.5, DFCAP).orderBy("id_a", "id_b")
 
-  /** Shared capped PAIR-STAT frame: (id_a, id_b, n_common, na, nb) for
-    * every doc pair sharing at least one cold (df <= cap) shingle, with
-    * n_common EXACT (cold count + hot-array intersection). Cached by plan
-    * identity — the Jaccard (q41) and containment (q69) scorings are just
-    * different ratios over this same frame, so a session computing both
-    * pays the candidate join once. */
   /** The df-annotated hashed-shingle frame (doc_id, n, sh, df), cached:
     * consumed by the capped self-join (both sides) and the hot-array
     * builder. Document frequency via TWO-PHASE groupBy + join-back,
@@ -925,11 +919,9 @@ object TextDedup {
     * groupBy combines map-side (each task emits one (sh, cnt) pair per
     * local shingle), and the join-back is an equi-join AQE can handle: it
     * broadcasts the df table when it measures small and skew-splits the
-    * sort-merge fallback — both regimes a window cannot reach. */
-  private[queries] def dfAnnotatedProbe(d: DataFrame): DataFrame =
-    dfAnnotatedOf(d)
-
-  /** Cache point deliberately on the JOINED frame, not the (sh, df)
+    * sort-merge fallback — both regimes a window cannot reach.
+    *
+    * Cache point deliberately on the JOINED frame, not the (sh, df)
     * table: moving it to dfTab (tried r20 — "cache the narrow side,
     * re-stream the join" per guide §5) measured the family 1.96 → 3.20 s
     * in-suite, because cappedPairStatsOf consumes this frame THREE times
@@ -942,6 +934,12 @@ object TextDedup {
     base.join(dfTab, Seq("sh")).dedupCached
   }
 
+  /** Shared capped PAIR-STAT frame: (id_a, id_b, n_common, na, nb) for
+    * every doc pair sharing at least one cold (df <= cap) shingle, with
+    * n_common EXACT (cold count + hot-array intersection). Cached by plan
+    * identity — the Jaccard (q41) and containment (q69) scorings are just
+    * different ratios over this same frame, so a session computing both
+    * pays the candidate join once. */
   private[queries] def cappedPairStatsOf(d: DataFrame, dfCap: Long): DataFrame = {
     val exDf = dfAnnotatedOf(d)
     val cold = exDf.filter(col("df") <= dfCap).select("doc_id", "n", "sh")

@@ -186,6 +186,22 @@ class OnlineCompactSpec extends SparkSpec {
       prefix, minCos = 0.999).collect()
     assert(got.nonEmpty && got.forall(_.getString(1) == "near_dup"),
       s"carried wave lost: ${got.take(4).mkString(";")}")
+    // catch-up: a writer not yet redirected lands one more wave at the OLD
+    // location after the compact returned; carryNewWaves brings exactly
+    // that wave over, and a second call finds nothing new
+    VectorIndex.attach(spark, a, "olc_vec_w")
+    val late = emb.filter(col("vec_id") % 14 === 10).limit(8)
+      .select((col("vec_id") + 610000L).as("vec_id"), col("embedding"))
+      .localCheckpoint(true)
+    VectorIndex.append(late, "vec_id", "embedding", "olc_vec_w") // a: wave 2
+    assert(VectorIndex.carryNewWaves(spark, prefix) == Seq(2 -> 2))
+    val lateGot = VectorIndex.incrementalDedup(
+      late.select((col("vec_id") + 50000L).as("vec_id"), col("embedding")),
+      "vec_id", "embedding", prefix, minCos = 0.999).collect()
+    assert(lateGot.nonEmpty && lateGot.length == late.count() &&
+      lateGot.forall(_.getString(1) == "near_dup"),
+      s"caught-up wave lost: ${lateGot.take(4).mkString(";")}")
+    assert(VectorIndex.carryNewWaves(spark, prefix).isEmpty)
     // tombstones carried: the removed id serves from NO snapshot
     val knn = VectorIndex.knn(
       emb.filter(col("vec_id") === victim)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.operators.Bucketing
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
@@ -37,12 +38,12 @@ class BucketingSpec extends SparkSpec {
     val stats = docs.select(col("doc_id"), length(col("text")).as("n"))
     try {
       Bucketing.writeBucketed(docs.select("doc_id", "lang", "source"),
-        "b_docs", buckets = 8, key = "doc_id", sortCols = Seq("doc_id"))
-      Bucketing.writeBucketed(stats,
-        "b_stats", buckets = 8, key = "doc_id", sortCols = Seq("doc_id"))
+        "b_docs", key = "doc_id", buckets = 8)
+      Bucketing.writeBucketed(stats, "b_stats", key = "doc_id", buckets = 8)
       // force a non-broadcast join so co-location is what's under test
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = Bucketing.coLocatedJoin(spark, "b_docs", "b_stats", "doc_id")
+      val joined = Bucketing.coLocatedJoin(spark, "b_docs", "b_stats",
+        "doc_id", "doc_id")
       assert(joined.count() == docs.count())
       assert(shuffles(joined) == 0,
         "bucketed join shuffled; co-location metadata not used")
@@ -61,11 +62,12 @@ class BucketingSpec extends SparkSpec {
     val docs = graft.queries.Tables.load(spark, sfDir, "documents")
     try {
       Bucketing.writeBucketed(docs.select("doc_id", "lang"),
-        "b_a", buckets = 8, key = "doc_id")
+        "b_a", key = "doc_id", buckets = 8)
       Bucketing.writeBucketed(docs.select(col("doc_id"), col("n_chars")),
-        "b_b", buckets = 4, key = "doc_id")
+        "b_b", key = "doc_id", buckets = 4)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = Bucketing.coLocatedJoin(spark, "b_a", "b_b", "doc_id")
+      val joined = Bucketing.coLocatedJoin(spark, "b_a", "b_b", "doc_id",
+        "doc_id")
       // correctness holds regardless of layout
       assert(joined.count() == docs.count())
     } finally {
