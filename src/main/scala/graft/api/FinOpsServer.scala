@@ -25,6 +25,7 @@ import java.util.concurrent.Executors
 final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
 
   import ApiResponses.{collectRows, toJson}
+  import Requests.{PayloadTooLarge, param}
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   private val pool = Executors.newFixedThreadPool(8)
@@ -47,19 +48,12 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
     Map("success" -> true, "data" -> rows, "row_count" -> rows.size)
   }
 
-  private def param(ex: HttpExchange, name: String): Option[String] =
-    Option(ex.getRequestURI.getRawQuery).toSeq
-      .flatMap(_.split("&").toSeq)
-      .map(_.split("=", 2))
-      .collectFirst { case Array(k, v) if k == name =>
-        java.net.URLDecoder.decode(v, "UTF-8")
-      }
-
   private def dparam(ex: HttpExchange, name: String, dflt: Double): Double =
     param(ex, name).map(_.toDouble).getOrElse(dflt)
 
+  /** Request body, capped while streaming in ([[Requests.body]]). */
   private def body(ex: HttpExchange): String =
-    new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+    Requests.body(ex, Requests.DefaultMaxBodyBytes)
 
   private def jsonField(raw: String, field: String): Option[String] = {
     val node = ApiResponses.readTree(raw).get(field)
@@ -298,6 +292,7 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
           case Raw(s) => 200 -> s
           case value => 200 -> toJson(value)
         } catch {
+          case e: PayloadTooLarge => Requests.tooLarge(e)
           case e: Exception =>
             500 -> toJson(Map("success" -> false,
               "error" -> Option(e.getMessage).getOrElse(e.toString).take(500),

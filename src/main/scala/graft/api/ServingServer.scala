@@ -59,17 +59,15 @@ final class ServingServer(spark: SparkSession,
     textPrefix: String = "dedup_idx", vecPrefix: String = "vec_idx",
     port: Int = 0,
     maxIngestRows: Int = ServingServer.DefaultMaxIngestRows,
-    maxBodyBytes: Long = ServingServer.DefaultMaxBodyBytes) {
+    maxBodyBytes: Long = Requests.DefaultMaxBodyBytes) {
 
   import ApiResponses.{collectRows, toJson}
+  import Requests.{PayloadTooLarge, param}
 
   /** Oversized request arrays map to HTTP 413 — the driver materializes
     * every ingest row from JSON before planning, so an unbounded array is
     * an unbounded driver allocation (r16 verdict item 4; the FinOps SQL
     * surface enforces the reference's 10k-row discipline already). */
-  private final class PayloadTooLarge(msg: String)
-    extends RuntimeException(msg)
-
   private def capped(
       n: com.fasterxml.jackson.databind.JsonNode,
       field: String): com.fasterxml.jackson.databind.JsonNode = {
@@ -95,51 +93,13 @@ final class ServingServer(spark: SparkSession,
 
   // ---- request helpers --------------------------------------------------
 
-  /** Request body, capped at `maxBodyBytes` WHILE STREAMING IN: the row
-    * cap alone bounded element COUNT only after the whole body was
-    * buffered and tree-parsed, so one huge row (or deep padding) still
-    * allocated unboundedly on the driver before any check (r17 advisor)
-    * — the byte cap closes that half, before Jackson sees a byte.
-    *
-    * On a cap trip the remaining bytes are DRAINED (bounded) and the
-    * stream closed before the 413 goes out: com.sun.net.httpserver resets
-    * the connection on an unread request body, so a client still writing
-    * could otherwise never read the 413 that tells it why (r18 advisor).
-    * The drain is bounded — a client streaming forever still gets cut,
-    * just without the courtesy status. */
-  private def body(ex: HttpExchange): String = {
-    val in = ex.getRequestBody
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](64 * 1024)
-    var n = in.read(buf)
-    while (n >= 0) {
-      out.write(buf, 0, n)
-      if (out.size() > maxBodyBytes) {
-        var drained = 0L
-        try {
-          var d = in.read(buf)
-          while (d >= 0 && drained < ServingServer.DrainCapBytes) {
-            drained += d
-            d = in.read(buf)
-          }
-          in.close()
-        } catch { case _: java.io.IOException => () } // best-effort drain
-        throw new PayloadTooLarge(
-          s"request body exceeds $maxBodyBytes bytes — split the epoch " +
-            "into smaller requests (each appends its own wave)")
-      }
-      n = in.read(buf)
-    }
-    new String(out.toByteArray, StandardCharsets.UTF_8)
-  }
-
-  private def param(ex: HttpExchange, name: String): Option[String] =
-    Option(ex.getRequestURI.getRawQuery).toSeq
-      .flatMap(_.split("&").toSeq)
-      .map(_.split("=", 2))
-      .collectFirst { case Array(k, v) if k == name =>
-        java.net.URLDecoder.decode(v, "UTF-8")
-      }
+  /** Request body, capped at `maxBodyBytes` while streaming in
+    * ([[Requests.body]]): the row cap alone bounded element COUNT only
+    * after the whole body was buffered and tree-parsed, so one huge row
+    * (or deep padding) still allocated unboundedly on the driver before
+    * any check (r17 advisor). */
+  private def body(ex: HttpExchange): String =
+    Requests.body(ex, maxBodyBytes)
 
   private def jsonDouble(n: com.fasterxml.jackson.databind.JsonNode,
       field: String, dflt: Double): Double = {
@@ -383,9 +343,7 @@ final class ServingServer(spark: SparkSession,
       case Some(handler) =>
         try 200 -> toJson(handler(ex))
         catch {
-          case e: PayloadTooLarge =>
-            413 -> toJson(Map("success" -> false,
-              "error" -> e.getMessage.take(500)))
+          case e: PayloadTooLarge => Requests.tooLarge(e)
           case e: IllegalArgumentException =>
             400 -> toJson(Map("success" -> false,
               "error" -> Option(e.getMessage).getOrElse("bad request")
@@ -418,15 +376,4 @@ object ServingServer {
   /** Default per-request row cap for ingest/knn arrays — matches the
     * reference's REST row-limit discipline on its SQL surface. */
   val DefaultMaxIngestRows = 10000
-
-  /** Default request-body byte cap (the row cap's streaming-in half):
-    * generous for a full 10k-row batch of documents or 64-dim embedding
-    * JSON, while bounding what a single request can make the driver
-    * buffer. */
-  val DefaultMaxBodyBytes: Long = 64L * 1024 * 1024
-
-  /** Bound on the post-413 courtesy drain — enough for any in-flight
-    * client write buffer, far from an unbounded read of a hostile
-    * stream. */
-  val DrainCapBytes: Long = 4L * 1024 * 1024
 }

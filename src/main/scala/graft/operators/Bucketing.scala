@@ -53,33 +53,20 @@ object Bucketing {
       .saveAsTable(table)
   }
 
-  /** Persist `df` as a bucketed+sorted EXTERNAL table at `location` —
-    * the serving-artifact form: the data outlives the session, and
-    * [[attachBucketed]] re-registers it in any later session (even a new
-    * JVM, whose in-memory catalog forgot the table) without touching the
-    * data. Multi-column keys bucket on the tuple, so an equi-join on
-    * exactly those keys needs no exchange on this side. */
-  def writeBucketedExternal(df: DataFrame, table: String, keys: Seq[String],
-      location: String, buckets: Int): Unit = {
-    require(keys.nonEmpty, "need at least one bucket key")
-    df.sparkSession.sql(s"DROP TABLE IF EXISTS $table")
-    df.repartition(buckets, keys.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .option("path", location)
-      .option("compression", "snappy")
-      .saveAsTable(table)
-  }
-
-  /** [[writeBucketedExternal]] with Hive-style PARTITION directories on
-    * `partCols` layered above the bucket files — the layout for a table
-    * whose probes are scoped to a data-dependent key subset (e.g. the
-    * IVF cells a serving batch actually lands in): a literal
-    * partition-column predicate prunes whole directories at planning
-    * time, so the probe's scan touches |probed partitions|/|partitions|
-    * of the data instead of all of it, while the bucket spec still
-    * proves the exchange-free side of the probe join. `partCols` must be
+  /** Persist `df` as a bucketed+sorted EXTERNAL table at `location` with
+    * Hive-style PARTITION directories on `partCols` layered above the
+    * bucket files — the serving-artifact form: the data outlives the
+    * session, and [[attachPartitionedBucketed]] re-registers it in any
+    * later session (even a new JVM, whose in-memory catalog forgot the
+    * table) without touching the data. Multi-column keys bucket on the
+    * tuple, so an equi-join on exactly those keys needs no exchange on
+    * this side. The partitions serve probes scoped to a data-dependent
+    * key subset (e.g. the IVF cells a serving batch actually lands in): a
+    * literal partition-column predicate prunes whole directories at
+    * planning time, so the probe's scan touches
+    * |probed partitions|/|partitions| of the data instead of all of it,
+    * while the bucket spec still proves the exchange-free side of the
+    * probe join. `partCols` must be
     * present in `df`; they land LAST in the on-disk schema (Spark moves
     * partition columns to the end). */
   def writePartitionedBucketedExternal(df: DataFrame, table: String,
@@ -175,22 +162,6 @@ object Bucketing {
     specs.grouped(1000).foreach(g =>
       spark.sql(s"ALTER TABLE $table ADD IF NOT EXISTS " +
         g.mkString(" ")))
-  }
-
-  /** Register an existing [[writeBucketedExternal]] artifact in `spark`'s
-    * catalog — metadata only (schema read from the parquet footers, no
-    * data job): the bucket spec in the DDL is what lets the planner prove
-    * the layout and skip the exchange, exactly as at write time. */
-  def attachBucketed(spark: SparkSession, table: String, keys: Seq[String],
-      location: String, buckets: Int): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val schema = spark.read.parquet(location).schema.toDDL
-    spark.sql(
-      s"""CREATE TABLE $table ($schema) USING PARQUET
-         |CLUSTERED BY (${keys.mkString(", ")})
-         |SORTED BY (${keys.mkString(", ")})
-         |INTO $buckets BUCKETS
-         |LOCATION '$location'""".stripMargin)
   }
 
   /** Persist `df` as a plain (unbucketed, unpartitioned) external table —
@@ -1593,8 +1564,8 @@ object Bucketing {
   }
 
   /** PREFETCH every data file under `location` through the OS page cache —
-    * the cold-start mitigation the r16 `ColdWarmProbe` decomposition
-    * called for: the first probe after a cold attach pays 2.8–9× of the
+    * the cold-start mitigation the r16 cold/warm decomposition
+    * (BENCH_NOTES) called for: the first probe after a cold attach pays 2.8–9× of the
     * warm steady state, and the measured dominant term is BYTES (cold
     * page cache), not listing — so the fix is to pay those bytes UP
     * FRONT, at sequential-read bandwidth, on deploy/attach, instead of as

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
@@ -14,12 +14,10 @@ import org.apache.spark.sql.functions._
   * their bucket/partition/tombstone/dedup keys, its plain model tables
   * and its per-wave stats binding — and keeps only what is its own: the
   * derivations it writes, its probes, its stats numbers and meta schema.
-  * Every data table carries `wave` as its first partition column on the
-  * partitioned layout (grain > 0) — the atomic multi-table publish: an
-  * append stages one wave across all tables and ONE marker-file create
-  * ([[Bucketing.commitWave]]) makes it visible. Grain 0 is the flat
-  * legacy layout: no waves, per-table publish, kept because the specs
-  * use it as the reference layout.
+  * Every data table carries `wave` as its first partition column, above
+  * its hash-partition column at the index's grain (> 0) — the atomic
+  * multi-table publish: an append stages one wave across all tables and
+  * ONE marker-file create ([[Bucketing.commitWave]]) makes it visible.
   */
 object IndexLifecycle {
 
@@ -62,16 +60,24 @@ object IndexLifecycle {
     path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path)
   }
 
-  /** Persist one data table at `dir/<sub>`: wave-partitioned (the frame
-    * carries `wave` and the partition columns) or flat. */
+  /** The partition grain a build or re-graining compact writes at:
+    * `auto` sizes it from `rows` ([[Bucketing.autoGrain]]; only then is
+    * `rows` evaluated), a positive value pins it. Anything else is
+    * refused — the grain is what every probe prunes on. */
+  def resolveGrain(name: String, grain: Int, auto: Int,
+      rows: => Long): Int = {
+    require(grain == auto || grain > 0,
+      s"$name = $grain is not a partition grain: pass a positive value, " +
+        s"or the Auto sentinel ($auto) to size it from the row count")
+    if (grain == auto) Bucketing.autoGrain(rows) else grain
+  }
+
+  /** Persist one data table at `dir/<sub>`; the frame carries `wave` and
+    * the partition columns. */
   def writeTable(l: Layout, t: WaveTable, df: DataFrame, dir: String,
-      partitioned: Boolean, buckets: Int): Unit =
-    if (partitioned)
-      Bucketing.writePartitionedBucketedExternal(df, l.table(t.sub),
-        "wave" +: t.partCols, t.keys, s"$dir/${t.sub}", buckets)
-    else
-      Bucketing.writeBucketedExternal(df, l.table(t.sub), t.keys,
-        s"$dir/${t.sub}", buckets)
+      buckets: Int): Unit =
+    Bucketing.writePartitionedBucketedExternal(df, l.table(t.sub),
+      "wave" +: t.partCols, t.keys, s"$dir/${t.sub}", buckets)
 
   /** The end of a build: a rebuild starts with no removals, so drop any
     * stale tombstone entry a previous index under this prefix left in
@@ -80,45 +86,48 @@ object IndexLifecycle {
     * index's takedown list against the rebuilt data. Then PUBLISH wave 0
     * — last, so every table (and the meta/tomb state) is in place before
     * any reader can resolve a committed wave. */
-  def finishBuild(spark: SparkSession, l: Layout, dir: String,
-      partitioned: Boolean): Unit = {
+  def finishBuild(spark: SparkSession, l: Layout, dir: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS ${l.tombs}")
     val tombs = new org.apache.hadoop.fs.Path(s"$dir/tombs")
     val fs = tombs.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(tombs)) fs.delete(tombs, true)
-    if (partitioned) {
-      Bucketing.commitWave(spark, dir, 0)
-      buildWaveStatsAtCommit(spark, l, dir, 0)
-    }
+    Bucketing.commitWave(spark, dir, 0)
+    buildWaveStatsAtCommit(spark, l, dir, 0)
   }
 
   /** Register an existing index in `spark`'s catalog — metadata only (no
-    * data job), plus partition discovery on the partitioned layout.
-    * `plain` names the model/meta tables present at `dir`.
+    * data job) plus partition discovery. The bucket count comes from the
+    * index's `meta` row, whose `grainCol` holds its partition grain.
     *
-    * Refuses a partitioned artifact with NO committed wave marker: every
-    * healthy partitioned index has one (build/compact/rebuild commit
-    * `_wave_0` last, even for an empty corpus), so a markerless directory
-    * is a crashed build or a pre-wave artifact — probes would resolve an
-    * EMPTY committed set and serve `new` for everything, which in a
-    * dedup gate silently admits the whole stream. Loud beats silent. */
-  def attach(spark: SparkSession, l: Layout, dir: String, grain: Int,
-      buckets: Int, plain: Seq[String]): Unit = {
-    require(grain == 0 || Bucketing.committedWaves(spark, dir).nonEmpty,
-      s"$dir has a partitioned layout (grain $grain) but no committed " +
-        "wave marker — a crashed build or a pre-wave artifact; attaching " +
-        "would serve an empty index (every verdict 'new'). Rebuild it " +
-        "under the current layout.")
-    plain.foreach(sub =>
+    * Refuses an artifact with no meta row or a grain of 0: that is the
+    * flat (unpartitioned) layout of indexes written before partitioning,
+    * which has no wave markers to resolve a committed set from. Refuses
+    * an artifact with NO committed wave marker too: every healthy index
+    * has one (build/compact/rebuild commit `_wave_0` last, even for an
+    * empty corpus), so a markerless directory is a crashed build or a
+    * pre-wave artifact — probes would resolve an EMPTY committed set and
+    * serve `new` for everything, which in a dedup gate silently admits
+    * the whole stream. Loud beats silent. */
+  def attach(spark: SparkSession, l: Layout, dir: String,
+      grainCol: String): Unit = {
+    val meta = Option.when(exists(spark, s"$dir/meta"))(
+        spark.read.parquet(s"$dir/meta").head())
+      .filter(m => m.schema.fieldNames.contains(grainCol) &&
+        m.getAs[Int](grainCol) > 0)
+    require(meta.isDefined,
+      s"$dir has no meta row with a positive $grainCol — a flat-layout " +
+        "(unpartitioned) index, which cannot be served; rebuild it from " +
+        "the corpus.")
+    require(Bucketing.committedWaves(spark, dir).nonEmpty,
+      s"$dir has no committed wave marker — a crashed build or a " +
+        "pre-wave artifact; attaching would serve an empty index (every " +
+        "verdict 'new'). Rebuild it from the corpus.")
+    val buckets = meta.get.getAs[Int]("buckets")
+    l.plain.foreach(sub =>
       Bucketing.attachPlain(spark, l.table(sub), s"$dir/$sub"))
-    l.tables.foreach { t =>
-      if (grain > 0)
-        Bucketing.attachPartitionedBucketed(spark, l.table(t.sub),
-          "wave" +: t.partCols, t.keys, s"$dir/${t.sub}", buckets)
-      else
-        Bucketing.attachBucketed(spark, l.table(t.sub), t.keys,
-          s"$dir/${t.sub}", buckets)
-    }
+    l.tables.foreach(t =>
+      Bucketing.attachPartitionedBucketed(spark, l.table(t.sub),
+        "wave" +: t.partCols, t.keys, s"$dir/${t.sub}", buckets))
     // the tombstone table rides along when the artifact has removals —
     // and a stale entry from a DIFFERENT index under this prefix must not
     if (exists(spark, s"$dir/tombs"))
@@ -188,25 +197,28 @@ object IndexLifecycle {
   }
 
   /** The staging half of an append: writes one wave across the data
-    * tables WITHOUT publishing it and returns the staged wave number, or
-    * −1 on the flat layout (grain 0), whose writes publish per table.
+    * tables WITHOUT publishing it and returns the staged wave number.
     * `derive` maps the checkpointed batch to one frame per data table, in
-    * layout order, carrying the partition columns on the partitioned
-    * layout; `release` frees the batch's caches afterwards. `maxTables`
-    * is the torn-write specs' fault-injection knob (stop after N table
-    * writes) — production callers never pass it. */
-  def appendStaged(batch: DataFrame, l: Layout, grain: Int, buckets: Int,
+    * layout order, carrying the partition columns; `release` frees the
+    * batch's caches afterwards. `maxTables` is the torn-write specs'
+    * fault-injection knob (stop after N table writes) — production
+    * callers never pass it.
+    *
+    * Writer-private staging, per-FILE moves — no shared committer dir,
+    * cross-JVM-safe, no lock ([[Bucketing.appendWave]]; [[commit]] lands
+    * the manifest). */
+  def appendStaged(batch: DataFrame, l: Layout, buckets: Int,
       maxTables: Int, release: DataFrame => Unit)(
       derive: DataFrame => Seq[DataFrame]): Int = {
     val s = batch.sparkSession
-    val dir = if (grain > 0) dirOf(s, l) else ""
+    val dir = dirOf(s, l)
     // the wave number is LEASED (atomic create-no-overwrite) before any
     // staging, so two concurrent appenders land on DISJOINT waves instead
     // of interleaving one ([[Bucketing.acquireWave]]). Concurrent writers
     // must append DISJOINT content (novel ids, not duplicated across
     // writers): parallel ingest shards partitioned by id/hash satisfy
     // this by construction.
-    val wave = if (grain > 0) Bucketing.acquireWave(s, dir, l.subs) else -1
+    val wave = Bucketing.acquireWave(s, dir, l.subs)
     // EAGER local checkpoint: a caller's `batch` routinely derives from
     // probe verdicts against THIS index (the appendAdmitted loops), and
     // each table write below refreshes its catalog table — which
@@ -218,50 +230,30 @@ object IndexLifecycle {
     try {
       val writes = l.tables.zip(derive(staged)).take(math.max(0, maxTables))
       writes.zipWithIndex.foreach { case ((t, df), i) =>
-        appendTo(s, l, t, df, dir, grain, buckets, wave)
+        Bucketing.appendWave(s, df.withColumn("wave", lit(wave))
+            .repartition(buckets, t.keys.map(col): _*),
+          l.table(t.sub), t.keys, t.partCols, buckets, dir, wave)
         // lease heartbeat between table writes: liveness age measures
         // time since last PROGRESS, so an append longer than the writer
         // TTL is not misread as crashed mid-write ([[Bucketing.touchLease]])
-        if (wave >= 0 && i < l.tables.size - 1)
-          Bucketing.touchLease(s, dir, wave)
+        if (i < l.tables.size - 1) Bucketing.touchLease(s, dir, wave)
       }
-      if (grain > 0) Bucketing.releaseStaging(s, dir, wave)
+      Bucketing.releaseStaging(s, dir, wave)
       wave
     } finally release(staged)
-  }
-
-  /** Partitioned layout: writer-private staging, per-FILE moves — no
-    * shared committer dir, cross-JVM-safe, no lock
-    * ([[Bucketing.appendWave]]; [[commit]] lands the manifest). The flat
-    * layout appends in place and publishes per table. */
-  private def appendTo(s: SparkSession, l: Layout, t: WaveTable,
-      df: DataFrame, dir: String, grain: Int, buckets: Int,
-      wave: Int): Unit = {
-    val staged = (if (grain > 0) df.withColumn("wave", lit(wave)) else df)
-      .repartition(buckets, t.keys.map(col): _*)
-    if (grain > 0)
-      Bucketing.appendWave(s, staged, l.table(t.sub), t.keys, t.partCols,
-        buckets, dir, wave)
-    else
-      staged.write.mode(SaveMode.Append)
-        .bucketBy(buckets, t.keys.head, t.keys.tail: _*)
-        .sortBy(t.keys.head, t.keys.tail: _*)
-        .option("compression", "snappy")
-        .saveAsTable(l.table(t.sub))
   }
 
   /** The commit half of an append: the single `_wave_W` marker lands
     * LAST, so a reader between the table writes — or after a crash
     * mid-append — still resolves the previous committed set; the lease
     * is released after it (the marker supersedes it), then the wave's
-    * stats sidecar is built. No-op for −1 (the flat layout). */
-  def commit(spark: SparkSession, l: Layout, wave: Int): Unit =
-    if (wave >= 0) {
-      val d = dirOf(spark, l)
-      Bucketing.commitWave(spark, d, wave)
-      Bucketing.releaseWave(spark, d, wave)
-      buildWaveStatsAtCommit(spark, l, d, wave)
-    }
+    * stats sidecar is built. */
+  def commit(spark: SparkSession, l: Layout, wave: Int): Unit = {
+    val d = dirOf(spark, l)
+    Bucketing.commitWave(spark, d, wave)
+    Bucketing.releaseWave(spark, d, wave)
+    buildWaveStatsAtCommit(spark, l, d, wave)
+  }
 
   /** Commit-time sidecar build: building lazily on the first folded
     * `stats()` put the wave's full aggregate on the READ path — measured
@@ -298,14 +290,12 @@ object IndexLifecycle {
     * entry first, and a PARTITIONED table's scan consults the catalog
     * lazily at execution (CatalogFileIndex) — reading the location keeps
     * the plan catalog-independent (partition columns come back via
-    * directory inference, identically valued). On the partitioned layout
-    * only the committed waves `cws` are kept. */
+    * directory inference, identically valued). Only the committed waves
+    * `cws` are kept. */
   def committedFiles(spark: SparkSession, src: Layout, sub: String,
-      partitioned: Boolean, cws: Seq[Int]): DataFrame = {
-    val df = spark.read.parquet(tableLocation(spark, src.table(sub)))
-    if (partitioned) df.where(col("wave").isin(cws.map(Integer.valueOf): _*))
-    else df
-  }
+      cws: Seq[Int]): DataFrame =
+    spark.read.parquet(tableLocation(spark, src.table(sub)))
+      .where(col("wave").isin(cws.map(Integer.valueOf): _*))
 
   /** COMPACT `src` into `outDir` under `out` (same tables, possibly a new
     * prefix): the shared frame of every index's compact. `srcGrain` is
@@ -337,35 +327,26 @@ object IndexLifecycle {
     val horizon = upToWave != Int.MaxValue
     val oldDir = dirOf(spark, src)
     if (horizon) {
-      require(srcGrain > 0,
-        "wave-horizon compact needs the wave-partitioned layout")
       require(!reshape,
         "wave-horizon compact cannot re-grain or re-bucket: carried " +
           "waves keep their source-grain partition values, which a new " +
           "grain would silently mis-prune — run a full (quiesced) " +
           "compact to re-shape")
       require(upToWave >= 0, s"upToWave=$upToWave is not a wave horizon")
-    } else if (srcGrain > 0)
-      Bucketing.requireQuiesced(spark, oldDir, force, "compact")
+    } else Bucketing.requireQuiesced(spark, oldDir, force, "compact")
     requireFreshTarget(spark, src, outDir, "compact")
-    val cws = (if (srcGrain > 0) Bucketing.committedWaves(spark, oldDir)
-      else Nil).filter(_ <= upToWave)
+    val cws = Bucketing.committedWaves(spark, oldDir).filter(_ <= upToWave)
     def live(sub: String): DataFrame = {
       val t = src.tables.find(_.sub == sub).get
-      val committed = committedFiles(spark, src, sub, srcGrain > 0, cws)
       notTombstoned(spark, src,
-        if (srcGrain > 0) committed.withColumn("wave", lit(0))
-        else committed, t.tombCol)
+        committedFiles(spark, src, sub, cws).withColumn("wave", lit(0)),
+        t.tombCol)
         .dropDuplicates(t.dedupKeys)
     }
-    // re-graining a flat source upgrades it to the partitioned layout
     val outGrain =
       if (grain == 0) srcGrain
-      else if (grain == auto) Bucketing.autoGrain(liveRows(live))
-      else grain
-    require(outGrain > 0 || srcGrain == 0,
-      "downgrading a partitioned index to the flat layout is not supported")
-    if (outGrain > 0) Bucketing.clearWaveMarkers(spark, outDir)
+      else resolveGrain("grain", grain, auto, liveRows(live))
+    Bucketing.clearWaveMarkers(spark, outDir)
     write(live, outGrain)
     spark.sql(s"DROP TABLE IF EXISTS ${out.tombs}")
     // horizon: carried forward, not cleared — deletions are materialized
@@ -373,12 +354,10 @@ object IndexLifecycle {
     // landing at the old location mid-transition — still need the list
     if (horizon && Bucketing.syncTombFiles(spark, oldDir, outDir))
       Bucketing.attachPlain(spark, out.tombs, s"$outDir/tombs")
-    if (outGrain > 0) {
-      Bucketing.commitWave(spark, outDir, 0)
-      // carried (> H) waves stay lazy: each is batch-proportional, and
-      // the carry loop below races appenders — the next stats() backfills
-      buildWaveStatsAtCommit(spark, out, outDir, 0)
-    }
+    Bucketing.commitWave(spark, outDir, 0)
+    // carried (> H) waves stay lazy: each is batch-proportional, and the
+    // carry loop below races appenders — the next stats() backfills
+    buildWaveStatsAtCommit(spark, out, outDir, 0)
     if (horizon) {
       Bucketing.writeCarryLedger(spark, outDir, oldDir, upToWave, Nil)
       // carry committed > H waves until a round brings nothing new — a
@@ -467,12 +446,8 @@ object IndexLifecycle {
   /** Take the [[Census]] of an attached index. Counting sees what probes
     * see — committed waves only; `abandonedWaves > 0` is the
     * crashed-append detector (invisible garbage; compact reclaims it). */
-  def census(spark: SparkSession, l: Layout, partitioned: Boolean): Census = {
+  def census(spark: SparkSession, l: Layout): Census = {
     val d = dirOf(spark, l)
-    val (cws, abandoned) =
-      if (partitioned) (Bucketing.committedWaves(spark, d),
-        Bucketing.abandonedWaves(spark, d, l.subs))
-      else (Nil, 0)
     val tombs =
       if (spark.catalog.tableExists(l.tombs)) spark.table(l.tombs).count()
       else 0L
@@ -481,24 +456,25 @@ object IndexLifecycle {
     // staging roots split by age against the presumed-live writer TTL:
     // a YOUNG root is probably an in-flight append (not a compact
     // reason); an OLD one is crash garbage
-    val stages = if (partitioned) Bucketing.stagingDirAges(spark, d) else Nil
+    val stages = Bucketing.stagingDirAges(spark, d)
     val ttl = Bucketing.writerLiveTtlMs(spark)
-    Census(cws, abandoned, tombs, files, stages.size,
+    Census(Bucketing.committedWaves(spark, d),
+      Bucketing.abandonedWaves(spark, d, l.subs), tombs, files, stages.size,
       stages.count(_._2 >= ttl),
       // stranded prior locations (past in-place compacts/rebuilds) — dead
       // full copies of the index until retirePrior deletes them
       Bucketing.priorLocations(spark, d),
-      if (partitioned) Bucketing.quarantinedWaves(spark, d).size else 0)
+      Bucketing.quarantinedWaves(spark, d).size)
   }
 
   /** The committed waves' per-wave stats sidecars folded over
-    * `occKeys` — None when the live aggregate applies instead (the flat
-    * layout, or `spark.graft.stats.mode=full`, the parity oracle). Waves
+    * `occKeys` — None when the live aggregate applies instead
+    * (`spark.graft.stats.mode=full`, the parity oracle). Waves
     * are immutable, so each wave's sidecar is computed once, wave-pruned,
     * and persisted under `_wavestats/` ([[WaveStats]]). */
-  def foldedStats(spark: SparkSession, l: Layout, partitioned: Boolean,
-      cws: Seq[Int], occKeys: Seq[String]): Option[WaveStats.Folded] =
-    if (!partitioned || WaveStats.mode(spark) != "folded") None
+  def foldedStats(spark: SparkSession, l: Layout, cws: Seq[Int],
+      occKeys: Seq[String]): Option[WaveStats.Folded] =
+    if (WaveStats.mode(spark) != "folded") None
     else {
       val d = dirOf(spark, l)
       // catalog self-heal before computing sidecars: a sidecar computed
@@ -509,11 +485,10 @@ object IndexLifecycle {
         occKeys))
     }
 
-  /** Table `sub` restricted to the committed waves `cws` (the whole table
-    * on the flat layout) — the live aggregate's input. */
+  /** Table `sub` restricted to the committed waves `cws` — the live
+    * aggregate's input. */
   def committedTable(spark: SparkSession, l: Layout, sub: String,
-      partitioned: Boolean, cws: Seq[Int]): DataFrame =
-    if (partitioned) spark.table(l.table(sub))
+      cws: Seq[Int]): DataFrame =
+    spark.table(l.table(sub))
       .where(col("wave").isin(cws.map(Integer.valueOf): _*))
-    else spark.table(l.table(sub))
 }

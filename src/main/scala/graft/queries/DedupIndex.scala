@@ -27,20 +27,18 @@ import graft.operators.IndexLifecycle.WaveTable
   *
   * Bucketing prunes EXCHANGES but not SCANS: a constant-size batch would
   * still read all three corpus-sized tables per probe (the linear residual
-  * the vector index's r14 scale series measured). The default layout
-  * therefore layers Hive-style hash-partition directories above the
-  * bucket files — `pch = xxhash64(ch) % pvals` on hashes,
-  * `pbh = h % pvals` on bands, `pdoc = doc_id % pvals` on shingles — and
-  * the probe filters each table to the partition values the batch (or its
-  * candidates) actually lands in, collected in tiny batch-proportional
-  * jobs. Every potential match necessarily shares the probe's key, so the
-  * pruning is verdict-neutral (spec-pinned against the flat layout); the
-  * scan cost drops to |probed partitions|/pvals of the index. `pvals = 0`
-  * keeps the flat pre-partitioned layout, and indexes without a meta
-  * table (built before partitioning existed) attach and probe unchanged.
+  * the vector index's r14 scale series measured). The layout therefore
+  * layers Hive-style hash-partition directories above the bucket files —
+  * `pch = xxhash64(ch) % pvals` on hashes, `pbh = h % pvals` on bands,
+  * `pdoc = doc_id % pvals` on shingles — and the probe filters each table
+  * to the partition values the batch (or its candidates) actually lands
+  * in, collected in tiny batch-proportional jobs. Every potential match
+  * necessarily shares the probe's key, so the pruning is verdict-neutral
+  * (spec-pinned against the in-session [[TextOps.incrementalDedup]]); the
+  * scan cost drops to |probed partitions|/pvals of the index.
   *
-  * ATOMIC multi-table publish: the partitioned layout additionally
-  * carries `wave` as the FIRST partition column — each [[append]] stages
+  * ATOMIC multi-table publish: every table additionally carries `wave`
+  * as the FIRST partition column — each [[append]] stages
   * its rows under `wave=W` directories across all three tables and
   * publishes them with ONE atomic marker-file create
   * ([[Bucketing.commitWave]]); probes filter `wave IN (committed set)`
@@ -71,16 +69,11 @@ object DedupIndex {
     * makes constant-batch probe cost resume linear growth one decade up
     * (1.13 → 3.57 s at 5M docs), and the fix had to be known at build
     * time. Auto is the default; pass an explicit positive pvals to pin a
-    * grain, or 0 for the flat (unpartitioned) legacy layout. A small
-    * serving batch probes a handful of partitions either way: a 10-doc
-    * batch touches ≤10 hash partitions, ≤60 band partitions, and as many
-    * shingle partitions as it has CANDIDATES — each scan reads that
-    * fraction of the index. */
+    * grain. A small serving batch probes a handful of partitions either
+    * way: a 10-doc batch touches ≤10 hash partitions, ≤60 band
+    * partitions, and as many shingle partitions as it has CANDIDATES —
+    * each scan reads that fraction of the index. */
   val AutoPvals: Int = -1
-
-  /** The pre-r16 fixed default grain — kept for harnesses that pin the
-    * fixed-grain operating point ([[graft.ServingScaleProbe]]'s A/B). */
-  val DefaultPvals = 64
 
   /** The lifecycle layout of the index under `prefix`
     * ([[IndexLifecycle]]): each table bucketed on its probe-join key and
@@ -120,12 +113,9 @@ object DedupIndex {
     pmod(v, lit(pvals.toLong)).cast("int")
   }
 
-  /** Partition count of an attached/built index: the meta row when the
-    * index has one, 0 (flat legacy layout) when it does not. */
+  /** Partition count of an attached/built index (its meta row). */
   def pvalsOf(spark: SparkSession, prefix: String = "dedup_idx"): Int =
-    if (spark.catalog.tableExists(s"${prefix}_meta"))
-      spark.table(s"${prefix}_meta").head().getAs[Int]("pvals")
-    else 0
+    spark.table(s"${prefix}_meta").head().getAs[Int]("pvals")
 
   /** The live index directory of an attached/built index (parent of the
     * hashes table's location) — the REST stats surface reports
@@ -208,16 +198,14 @@ object DedupIndex {
     // replay (r14 advisor). [[compact]] dedups by id, re-aligning the
     // physical artifact with these logical counts.
     val l = layout(prefix)
-    val part = pvalsOf(spark, prefix) > 0
-    val c = IndexLifecycle.census(spark, l, part)
+    val c = IndexLifecycle.census(spark, l)
     val (docs, hashes, buckets, maxN, meanN) =
-      IndexLifecycle.foldedStats(spark, l, part, c.committedWaves,
+      IndexLifecycle.foldedStats(spark, l, c.committedWaves,
           Seq("b", "h")) match {
         case Some(f) => (f.nIds, f.nAux, f.occCnt, f.occMax, f.occMean)
         case None =>
           def committedT(sub: String) =
-            IndexLifecycle.committedTable(spark, l, sub, part,
-              c.committedWaves)
+            IndexLifecycle.committedTable(spark, l, sub, c.committedWaves)
           val dc = committedT("shingles")
             .agg(count_distinct(col("doc_id"))).head().getLong(0)
           val hc = committedT("hashes")
@@ -239,12 +227,6 @@ object DedupIndex {
   /** `df` with table `t`'s partition column derived at grain `pvals`. */
   private def withPart(t: WaveTable, df: DataFrame, pvals: Int): DataFrame =
     df.withColumn(t.partCols.head, partValue(t.partCols.head, pvals))
-
-  /** Bucket count of the index's tables (all three share one). */
-  private def bucketsOf(s: SparkSession, prefix: String): Int =
-    s.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(s"${prefix}_hashes"))
-      .bucketSpec.map(_.numBuckets).getOrElse(DefaultBuckets)
 
   private def writeMeta(s: SparkSession, prefix: String, dir: String,
       pvals: Int, buckets: Int): Unit = {
@@ -268,13 +250,13 @@ object DedupIndex {
     // AUTO grain: one count of the narrow (id, text) projection — a small
     // fraction of the multi-pass derivation cost below, and the price of
     // a grain that probes at constant cost as the corpus decades up
-    val pv = if (pvals == AutoPvals) Bucketing.autoGrain(nc.count())
-      else pvals
+    val pv = IndexLifecycle.resolveGrain("pvals", pvals, AutoPvals,
+      nc.count())
     // the wave history restarts with the rebuild: old markers must not
     // make the new tables' wave=0 visible before it is written (build is
     // not atomic — the single-writer contract covers rebuilds; readers
     // of a LIVE index rebuild into a fresh directory instead)
-    if (pv > 0) Bucketing.clearWaveMarkers(s, dir)
+    Bucketing.clearWaveMarkers(s, dir)
     val frames = Seq(
       nc.select(col("doc_id"), md5(col("text")).as("ch"))
         .groupBy("ch").agg(min("doc_id").as("exact_partner")),
@@ -282,11 +264,10 @@ object DedupIndex {
       TextDedup.shingleSetsOf(nc))
     l.tables.zip(frames).foreach { case (t, df) =>
       IndexLifecycle.writeTable(l, t,
-        if (pv > 0) withPart(t, df, pv).withColumn("wave", lit(0)) else df,
-        dir, pv > 0, buckets)
+        withPart(t, df, pv).withColumn("wave", lit(0)), dir, buckets)
     }
-    if (pv > 0) writeMeta(s, prefix, dir, pv, buckets)
-    IndexLifecycle.finishBuild(s, l, dir, pv > 0)
+    writeMeta(s, prefix, dir, pv, buckets)
+    IndexLifecycle.finishBuild(s, l, dir)
     // release the derivation caches build() itself populated: the index
     // is on disk now, and a long-lived builder session should not keep
     // the corpus-sized shingle/band plans pinned
@@ -305,7 +286,7 @@ object DedupIndex {
     * partner by definition. Each append adds one file set per bucket;
     * compact to collapse them.
     *
-    * ATOMIC PUBLISH (partitioned layout): the wave's rows are staged
+    * ATOMIC PUBLISH: the wave's rows are staged
     * under `wave=W` partition directories across all three tables and
     * become visible only when the single `_wave_W` marker is created
     * LAST ([[IndexLifecycle.commit]]) — a reader between the three table
@@ -319,8 +300,6 @@ object DedupIndex {
     * so concurrent appenders — other threads AND other processes, on
     * local disk, HDFS or an object store — interleave safely with no
     * lock, under the DISJOINT-CONTENT contract (see [[appendStaged]]).
-    * Legacy flat indexes (pvals = 0) keep the old per-table commit
-    * semantics.
     *
     * Visibility: the writing session (and any session attached LATER)
     * sees the append immediately; a DIFFERENT already-attached session
@@ -338,47 +317,44 @@ object DedupIndex {
 
   /** The staging half of [[append]] ([[IndexLifecycle.appendStaged]]):
     * writes the wave's files across all tables WITHOUT publishing them
-    * and returns the staged wave number (−1 on the legacy flat layout).
-    * `maxTables` is the fault-injection knob the torn-write spec uses to
-    * stop after N table writes. */
+    * and returns the staged wave number. `maxTables` is the
+    * fault-injection knob the torn-write spec uses to stop after N table
+    * writes. */
   private[queries] def appendStaged(batch: DataFrame, id: String,
       text: String, prefix: String = "dedup_idx",
       maxTables: Int = Int.MaxValue): Int = {
     val s = batch.sparkSession
     val l = layout(prefix)
-    val pvals = pvalsOf(s, prefix)
+    val meta = s.table(s"${prefix}_meta").head()
+    val pvals = meta.getAs[Int]("pvals")
     // committed-set horizon for the novel-ch anti-join: an UNCOMMITTED
     // leftover wave (crashed append) must not suppress re-appending its
     // content — those rows are invisible to every probe forever
-    val cws =
-      if (pvals > 0) Bucketing.committedWaves(s, location(s, prefix)) else Nil
+    val cws = Bucketing.committedWaves(s, location(s, prefix))
     // the anti-join below would re-insert the hashes of a wave this
     // session's catalog does not know as novel — duplicate exact-verdict
     // rows until compact; self-heal first
-    if (pvals > 0) IndexLifecycle.recoverUnseenWaves(s, l, cws)
+    IndexLifecycle.recoverUnseenWaves(s, l, cws)
     IndexLifecycle.appendStaged(
       batch.select(col(id).cast("long").as("doc_id"),
         col(text).cast("string").as("text")),
-      l, pvals, bucketsOf(s, prefix), maxTables,
+      l, meta.getAs[Int]("buckets"), maxTables,
       TextDedup.unpersistDerivationsOf) { nc =>
-      // novel-ch anti-join, PRUNED on the partitioned layout: any index ch
-      // equal to a batch ch necessarily lives in one of the batch's pch
-      // partitions (same partValue derivation), so the anti-join scans
-      // |batch ch|/pvals of the corpus-sized table instead of all of it.
-      // It reads the committed snapshot, so two concurrent writers
-      // carrying the same new text would each see it as novel and both
-      // insert its hash row (compact collapses them by ch) — hence the
-      // disjoint-content contract
-      val existingCh =
-        if (pvals > 0) {
-          val pch = nc.select(md5(col("text")).as("ch"))
-            .select(partValue("pch", pvals).as("p"))
-            .distinct().collect().map(_.getInt(0)).sorted
-          s.table(s"${prefix}_hashes")
-            .where(col("wave").isin(cws.map(Integer.valueOf): _*) &&
-              col("pch").isin(pch.map(Integer.valueOf): _*))
-            .select("ch")
-        } else s.table(s"${prefix}_hashes").select("ch")
+      // novel-ch anti-join, PRUNED: any index ch equal to a batch ch
+      // necessarily lives in one of the batch's pch partitions (same
+      // partValue derivation), so the anti-join scans |batch ch|/pvals of
+      // the corpus-sized table instead of all of it. It reads the
+      // committed snapshot, so two concurrent writers carrying the same
+      // new text would each see it as novel and both insert its hash row
+      // (compact collapses them by ch) — hence the disjoint-content
+      // contract
+      val pch = nc.select(md5(col("text")).as("ch"))
+        .select(partValue("pch", pvals).as("p"))
+        .distinct().collect().map(_.getInt(0)).sorted
+      val existingCh = s.table(s"${prefix}_hashes")
+        .where(col("wave").isin(cws.map(Integer.valueOf): _*) &&
+          col("pch").isin(pch.map(Integer.valueOf): _*))
+        .select("ch")
       val frames = Seq(
         nc.select(col("doc_id"), md5(col("text")).as("ch"))
           .groupBy("ch").agg(min("doc_id").as("exact_partner"))
@@ -386,9 +362,7 @@ object DedupIndex {
           .join(existingCh, Seq("ch"), "left_anti"),
         TextDedup.bandRowsOf(nc),
         TextDedup.shingleSetsOf(nc))
-      if (pvals > 0)
-        l.tables.zip(frames).map { case (t, df) => withPart(t, df, pvals) }
-      else frames
+      l.tables.zip(frames).map { case (t, df) => withPart(t, df, pvals) }
     }
   }
 
@@ -400,10 +374,10 @@ object DedupIndex {
     * freeze). Refuses the live location.
     *
     * `buckets <= 0` (the default) INHERITS the source index's bucket
-    * count — the meta row when present, else the attached table's bucket
-    * spec — so compacting an index built with a non-default count never
-    * silently rewrites its layout/parallelism (r14 advisor); pass an
-    * explicit positive value only to deliberately re-bucket.
+    * count (its meta row), so compacting an index built with a
+    * non-default count never silently rewrites its layout/parallelism
+    * (r14 advisor); pass an explicit positive value only to deliberately
+    * re-bucket.
     *
     * `pvals` RE-GRAINS during the rewrite — the answer to the r15 scale
     * series' one open finding (grain was write-once; a wrong or outgrown
@@ -414,10 +388,7 @@ object DedupIndex {
     * growth); an explicit positive value pins it. Re-partitioning here is
     * nearly free — compaction already rewrites every row of every table —
     * and the probe side reads the new grain from the rewritten meta, so
-    * verdicts are grain-invariant (spec-pinned). A flat (pvals = 0)
-    * source can be UPGRADED to the partitioned layout the same way — the
-    * legacy-migration path that needs no original corpus; downgrading a
-    * partitioned index to flat is not supported.
+    * verdicts are grain-invariant (spec-pinned).
     *
     * Interleaving contract (single-writer, made explicit): compaction
     * snapshots the committed wave set ONCE — an [[append]] or [[remove]]
@@ -465,30 +436,21 @@ object DedupIndex {
     // parameter to another)
     val outPfx = Option(outPrefix).getOrElse(prefix)
     val out = layout(outPfx)
-    val srcPvals = pvalsOf(spark, prefix)
+    val meta = spark.table(s"${prefix}_meta").head()
     val outBuckets =
-      if (buckets > 0) buckets
-      else if (spark.catalog.tableExists(s"${prefix}_meta"))
-        spark.table(s"${prefix}_meta").head().getAs[Int]("buckets")
-      else bucketsOf(spark, prefix)
-    IndexLifecycle.compact(spark, layout(prefix), out, outDir, srcPvals,
-      pvals, AutoPvals, pvals != 0 || buckets > 0, force, upToWave)(
+      if (buckets > 0) buckets else meta.getAs[Int]("buckets")
+    IndexLifecycle.compact(spark, layout(prefix), out, outDir,
+      meta.getAs[Int]("pvals"), pvals, AutoPvals, pvals != 0 || buckets > 0,
+      force, upToWave)(
       live => live("shingles").select("doc_id").distinct().count()) {
       (live, outPvals) =>
-        out.tables.foreach { t =>
-          // ALWAYS recompute the partition column at the output grain
-          // (identical values when the grain is inherited — partValue is
-          // the one shared derivation — and the re-grain path otherwise);
-          // a flat source additionally gains its wave column here
-          val df = live(t.sub)
-          IndexLifecycle.writeTable(out, t,
-            if (outPvals == 0) df
-            else withPart(t, if (srcPvals > 0) df.drop(t.partCols.head)
-              else df.withColumn("wave", lit(0)), outPvals),
-            outDir, outPvals > 0, outBuckets)
-        }
-        if (outPvals > 0) writeMeta(spark, outPfx, outDir, outPvals,
-          outBuckets)
+        // ALWAYS recompute the partition column at the output grain
+        // (identical values when the grain is inherited — partValue is
+        // the one shared derivation — and the re-grain path otherwise)
+        out.tables.foreach(t => IndexLifecycle.writeTable(out, t,
+          withPart(t, live(t.sub).drop(t.partCols.head), outPvals), outDir,
+          outBuckets))
+        writeMeta(spark, outPfx, outDir, outPvals, outBuckets)
     }
   }
 
@@ -507,20 +469,13 @@ object DedupIndex {
     IndexLifecycle.retirePrior(spark, layout(prefix), force)
 
   /** Register an existing index written by [[build]] in `spark`'s catalog
-    * — metadata only (no data job, no corpus recomputation, plus one
-    * partition-discovery pass for the partitioned layout). Partitioned
-    * indexes carry their own meta (buckets/pvals read from `dir/meta`);
-    * for legacy flat indexes `buckets` must match the build-time value
-    * for the planner to prove the layout. */
+    * — metadata only (no data job, no corpus recomputation) plus one
+    * partition-discovery pass; buckets/pvals come from `dir/meta`.
+    * Refuses a meta-less or grain-0 (flat-layout) artifact and one with
+    * no committed wave ([[IndexLifecycle.attach]]). */
   def attach(spark: SparkSession, dir: String,
-      prefix: String = "dedup_idx", buckets: Int = DefaultBuckets): Unit = {
-    val l = layout(prefix)
-    if (IndexLifecycle.exists(spark, s"$dir/meta")) {
-      val m = spark.read.parquet(s"$dir/meta").head()
-      IndexLifecycle.attach(spark, l, dir, m.getAs[Int]("pvals"),
-        m.getAs[Int]("buckets"), l.plain)
-    } else IndexLifecycle.attach(spark, l, dir, 0, buckets, Nil)
-  }
+      prefix: String = "dedup_idx"): Unit =
+    IndexLifecycle.attach(spark, layout(prefix), dir, "pvals")
 
   /** WARM an attached index's bytes through the page cache
     * ([[IndexLifecycle.warm]]) — call after [[attach]] on a cold
@@ -532,8 +487,8 @@ object DedupIndex {
     * persisted `<prefix>_*` tables ([[build]] or [[attach]] must have
     * registered them in `batch`'s session). Batch-proportional: the batch
     * derives its own hashes/bands/shingles; the corpus contributes only
-    * bucketed table scans — pruned, on the partitioned layout, to the
-    * partition values the batch probes (two tiny batch-side collect jobs
+    * bucketed table scans — pruned to the partition values the batch
+    * probes (two tiny batch-side collect jobs
     * for hashes/bands; the shingle pruning keys on the CANDIDATES, so its
     * collect runs the pruned band probe once more — batch-proportional,
     * and both executions read only probed partitions). */
@@ -544,67 +499,56 @@ object DedupIndex {
     val nb = batch.select(col(id).cast("long").as("doc_id"),
       col(text).cast("string").as("text"))
     val pvals = pvalsOf(s, prefix)
-    require(asOfWave == Int.MaxValue || pvals > 0,
-      "asOfWave needs the wave-partitioned layout — a flat index keeps " +
-        "no append history to rewind")
     // the tombstone anti-join rides the partner-bearing sides only: a
     // filtered exactMap hides removed exact partners, filtered corpus
     // bands keep removed docs out of the candidate set — the shingle
     // side needs nothing (candidates are already live-only)
     def live(df: DataFrame, idCol: String) =
       IndexLifecycle.notTombstoned(s, layout(prefix), df, idCol)
-    if (pvals == 0)
-      TextOps.incrementalVerdicts(nb,
-        live(s.table(s"${prefix}_hashes"), "exact_partner"),
-        live(s.table(s"${prefix}_bands"), "doc_id"),
-        s.table(s"${prefix}_shingles"), threshold)
-    else {
-      // the probe's consistency horizon: the committed wave SET, resolved
-      // ONCE per call, so all three table scans see the same snapshot
-      // even while a writer stages (or publishes) the next wave
-      // concurrently — the atomic-publish read side. `wave IN (set)` is a
-      // partition-column predicate: planning-time directory pruning, zero
-      // data cost (and abandoned crashed-append waves stay invisible
-      // forever — the set never includes them). `asOfWave` TIME-TRAVELS
-      // the horizon: only waves ≤ it serve, so yesterday's verdicts
-      // reproduce bit-identically until a compact/rebuild folds the
-      // history (like any log-structured store). TAKEDOWNS stay global
-      // by design: a tombstoned doc serves from NO snapshot —
-      // right-to-be-forgotten outranks reproducibility.
-      val cws = Bucketing.committedWaves(s, location(s, prefix))
-        .filter(_ <= asOfWave)
-      def pruned(table: String, partCol: String, values: Array[Int]) =
-        s.table(table)
-          .where(col("wave").isin(cws.map(Integer.valueOf): _*) &&
-            col(partCol).isin(values.map(Integer.valueOf): _*))
-          .drop("wave", partCol)
-      // ONE collect job for both batch-side partition sets (each extra
-      // job costs a scheduling floor that dominates the probe wall at
-      // small index sizes); the band leg rides the shared cached band
-      // derivation — the same node the verdict core's candidate join
-      // consumes
-      val batchParts = nb.select(md5(col("text")).as("ch"))
-        .select(lit(0).as("t"), partValue("pch", pvals).as("p"))
-        .unionAll(TextDedup.bandRowsOf(nb)
-          .select(lit(1).as("t"), partValue("pbh", pvals).as("p")))
-        .distinct().collect()
-      val pch = batchParts.filter(_.getInt(0) == 0).map(_.getInt(1)).sorted
-      val pbh = batchParts.filter(_.getInt(0) == 1).map(_.getInt(1)).sorted
-      TextOps.incrementalVerdicts(nb,
-        live(pruned(s"${prefix}_hashes", "pch", pch), "exact_partner"),
-        live(pruned(s"${prefix}_bands", "pbh", pbh), "doc_id"),
-        s.table(s"${prefix}_shingles"), threshold,
-        setsFor = Some { cand =>
-          val pdoc = cand
-            .select(pmod(col("partner_id"), lit(pvals.toLong)).cast("int")
-              .as("p"))
-            .distinct().collect().map(_.getInt(0)).sorted
-          pruned(s"${prefix}_shingles", "pdoc", pdoc)
-        },
-        // stage candidates ONCE (eager local checkpoint): the pruner's
-        // collect above and the re-rank join both consume the staged
-        // frame, so the band-probe join runs a single time per call
-        candStage = _.localCheckpoint(true))
-    }
+    // the probe's consistency horizon: the committed wave SET, resolved
+    // ONCE per call, so all three table scans see the same snapshot
+    // even while a writer stages (or publishes) the next wave
+    // concurrently — the atomic-publish read side. `wave IN (set)` is a
+    // partition-column predicate: planning-time directory pruning, zero
+    // data cost (and abandoned crashed-append waves stay invisible
+    // forever — the set never includes them). `asOfWave` TIME-TRAVELS
+    // the horizon: only waves ≤ it serve, so yesterday's verdicts
+    // reproduce bit-identically until a compact/rebuild folds the
+    // history (like any log-structured store). TAKEDOWNS stay global
+    // by design: a tombstoned doc serves from NO snapshot —
+    // right-to-be-forgotten outranks reproducibility.
+    val cws = Bucketing.committedWaves(s, location(s, prefix))
+      .filter(_ <= asOfWave)
+    def pruned(table: String, partCol: String, values: Array[Int]) =
+      s.table(table)
+        .where(col("wave").isin(cws.map(Integer.valueOf): _*) &&
+          col(partCol).isin(values.map(Integer.valueOf): _*))
+        .drop("wave", partCol)
+    // ONE collect job for both batch-side partition sets (each extra
+    // job costs a scheduling floor that dominates the probe wall at
+    // small index sizes); the band leg rides the shared cached band
+    // derivation — the same node the verdict core's candidate join
+    // consumes
+    val batchParts = nb.select(md5(col("text")).as("ch"))
+      .select(lit(0).as("t"), partValue("pch", pvals).as("p"))
+      .unionAll(TextDedup.bandRowsOf(nb)
+        .select(lit(1).as("t"), partValue("pbh", pvals).as("p")))
+      .distinct().collect()
+    val pch = batchParts.filter(_.getInt(0) == 0).map(_.getInt(1)).sorted
+    val pbh = batchParts.filter(_.getInt(0) == 1).map(_.getInt(1)).sorted
+    TextOps.incrementalVerdicts(nb,
+      live(pruned(s"${prefix}_hashes", "pch", pch), "exact_partner"),
+      live(pruned(s"${prefix}_bands", "pbh", pbh), "doc_id"),
+      cand => {
+        val pdoc = cand
+          .select(pmod(col("partner_id"), lit(pvals.toLong)).cast("int")
+            .as("p"))
+          .distinct().collect().map(_.getInt(0)).sorted
+        pruned(s"${prefix}_shingles", "pdoc", pdoc)
+      }, threshold,
+      // stage candidates ONCE (eager local checkpoint): the pruner's
+      // collect above and the re-rank join both consume the staged
+      // frame, so the band-probe join runs a single time per call
+      candStage = _.localCheckpoint(true))
   }
 }

@@ -97,7 +97,7 @@ object Maintenance {
       warnings: Seq[String], currentGrain: Int, recommendedGrain: Int)
 
   private def grainReason(current: Int, recommended: Int): Option[String] =
-    if (current > 0 && recommended >= current.toLong * GrainRatio)
+    if (recommended >= current.toLong * GrainRatio)
       Some(s"grain outgrown: live rows want $recommended partitions, " +
         s"index has $current — probe scan fraction has grown " +
         s"${recommended / current}x past the design point")
@@ -213,9 +213,7 @@ object Maintenance {
     val current = DedupIndex.pvalsOf(spark, prefix)
     val recommended = Bucketing.autoGrain(st.liveDocs)
     val (strayReasons, integrity) =
-      if (current > 0) auditFindings(spark, DedupIndex.liveDir(spark,
-        prefix))
-      else (Nil, Nil)
+      auditFindings(spark, DedupIndex.liveDir(spark, prefix))
     val reasons = compactReasons(st.tombstones, st.liveDocs,
       st.abandonedWaves, st.committedWaveCount, st.staleStagingDirs,
       grainReason(current, recommended)) ++ strayReasons
@@ -254,9 +252,7 @@ object Maintenance {
         "past the measured knee (r15 drift calibration); rebuild " +
         "retrains from the index's own vectors")
     val (strayReasons, integrity) =
-      if (current > 0) auditFindings(spark, VectorIndex.liveDir(spark,
-        prefix))
-      else (Nil, Nil)
+      auditFindings(spark, VectorIndex.liveDir(spark, prefix))
     val compact = compactReasons(st.tombstones, st.liveRows,
       st.abandonedWaves, st.committedWaveCount, st.staleStagingDirs,
       grainReason(current, recommended)) ++ strayReasons
@@ -309,7 +305,7 @@ object Maintenance {
     rec.action match {
       case "compact" =>
         DedupIndex.compact(spark, outDir, prefix,
-          pvals = regrainArg(rec, DedupIndex.AutoPvals, 0), force = force)
+          pvals = regrainArg(rec, DedupIndex.AutoPvals), force = force)
       case "reclaim" =>
         // in-place garbage deletion (lease/TTL-aware by construction) —
         // no rewrite, no catalog flip, outDir unused
@@ -341,11 +337,10 @@ object Maintenance {
     rec.action match {
       case "rebuild" =>
         VectorIndex.rebuild(spark, outDir, prefix,
-          pcells = regrainArg(rec, VectorIndex.AutoPcells,
-            VectorIndex.InheritPcells), force = force)
+          pcells = regrainArg(rec, VectorIndex.AutoPcells), force = force)
       case "compact" =>
         VectorIndex.compact(spark, outDir, prefix,
-          pcells = regrainArg(rec, VectorIndex.AutoPcells, 0),
+          pcells = regrainArg(rec, VectorIndex.AutoPcells),
           force = force)
       case "reclaim" =>
         Bucketing.reclaimGarbage(spark, VectorIndex.liveDir(spark, prefix),
@@ -363,10 +358,9 @@ object Maintenance {
       s"action '${rec.action}' rewrites into a fresh location — " +
         "out_dir required")
 
-  // Auto grain only when the grain rule fired — otherwise the op's own
-  // inherit sentinel (0 for compact, InheritPcells for rebuild), so a
-  // maintenance run never silently re-grains inside the flap guard band
-  private def regrainArg(rec: Recommendation, auto: Int,
-      inherit: Int): Int =
-    if (rec.reasons.exists(_.startsWith("grain "))) auto else inherit
+  // Auto grain only when the grain rule fired — otherwise 0, the inherit
+  // value of both compact and rebuild, so a maintenance run never
+  // silently re-grains inside the flap guard band
+  private def regrainArg(rec: Recommendation, auto: Int): Int =
+    if (rec.reasons.exists(_.startsWith("grain "))) auto else 0
 }

@@ -158,23 +158,23 @@ object TextOps {
     incrementalVerdicts(norm(batch, id, text),
       nc.select(col("doc_id"), md5(col("text")).as("ch"))
         .groupBy("ch").agg(min("doc_id").as("exact_partner")),
-      TextDedup.bandRowsOf(nc), TextDedup.shingleSetsOf(nc), threshold)
+      TextDedup.bandRowsOf(nc), _ => TextDedup.shingleSetsOf(nc), threshold)
   }
 
   /** The verdict core shared by [[incrementalDedup]] (corpus derivations
     * computed in-session) and [[DedupIndex.incrementalDedup]] (corpus
     * derivations read back from persisted bucketed tables): batch
     * (doc_id, text) against the three corpus-side artifacts —
-    * `exactMap` (ch, exact_partner), `corpusBands` (doc_id, b, h),
-    * `corpusSets` (doc_id, ts). Output and semantics are q48's.
+    * `exactMap` (ch, exact_partner), `corpusBands` (doc_id, b, h), and
+    * the shingle sets (doc_id, ts) `setsFor` returns. Output and
+    * semantics are q48's.
     *
-    * `setsFor` is the partition-pruning hook for a PARTITIONED corpusSets
-    * artifact ([[DedupIndex]] pvals layout): the shingle table can only
-    * be pruned to the partitions the CANDIDATES land in, and candidates
-    * exist only here — so the caller hands a function from the candidate
-    * frame (doc_id, partner_id) to the (possibly pruned) sets frame, and
-    * this core calls it once `cand` is built. `None` keeps `corpusSets`
-    * as-is (the in-session path and legacy flat indexes).
+    * `setsFor` is the partition-pruning hook for the PARTITIONED shingle
+    * table ([[DedupIndex]] pvals layout): it can only be pruned to the
+    * partitions the CANDIDATES land in, and candidates exist only here —
+    * so the caller hands a function from the candidate frame (doc_id,
+    * partner_id) to the (possibly pruned) sets frame, and this core calls
+    * it once `cand` is built. The in-session path ignores the candidates.
     *
     * `candStage` wraps the candidate frame before BOTH consumers (the
     * pruner's partition-value collect and the re-rank join): the pruned
@@ -183,9 +183,8 @@ object TextOps {
     * the verdict plan — at scale that is a whole extra pass over the
     * (pruned) band table per epoch. Identity for the in-session path. */
   private[queries] def incrementalVerdicts(nb: DataFrame, exactMap: DataFrame,
-      corpusBands: DataFrame, corpusSets: DataFrame,
+      corpusBands: DataFrame, setsFor: DataFrame => DataFrame,
       threshold: Double,
-      setsFor: Option[DataFrame => DataFrame] = None,
       candStage: DataFrame => DataFrame = identity): DataFrame = {
     // BATCH-member partners (any partner_id that is itself a batch id —
     // not just the probing doc's own id) are excluded on both paths: they
@@ -213,7 +212,7 @@ object TextOps {
       .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("partner_id"))
       .join(batchIds, col("partner_id") === col("__b_id"), "left_anti")
       .distinct())
-    val setsT = setsFor.map(_(cand)).getOrElse(corpusSets)
+    val setsT = setsFor(cand)
     val interC = size(array_intersect(col("ts_a"), col("ts_b"))).cast("long")
     val j = interC.cast("double") /
       ((size(col("ts_a")) + size(col("ts_b"))).cast("long") - interC).cast("double")

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes are on each operator; none of them introduces a plan shape
   * the dedup family hasn't already proven at 10× replication
-  * ([[graft.ScaleStress]]) — pure projections, token-keyed two-phase
-  * aggregates, bounded-vocab broadcast joins, and per-stratum windows.
+  * (BENCH_NOTES) — pure projections, token-keyed two-phase aggregates,
+  * bounded-vocab broadcast joins, and per-stratum windows.
   */
 object TextPipeline {
 
@@ -123,41 +123,6 @@ object TextPipeline {
 
   def q54TfidfTopK(s: SparkSession, dir: String): DataFrame =
     tfidfTopKOf(docs(s, dir), 5).orderBy("doc_id", "rank")
-
-  /** q54 ALTERNATIVE plan shape (r13 verdict item 4 — the floor probe):
-    * pre-partition the exploded tokens on doc_id so the tf aggregate AND
-    * the per-doc top-k window share ONE exchange (HashPartitioning(doc_id)
-    * satisfies both the (doc_id, token) aggregate's clustering and the
-    * window's, so EnsureRequirements inserts no further shuffle; the
-    * window degrades to a local sort). The trade vs [[tfidfTopKOf]]: this
-    * shuffles RAW exploded tokens (no map-side combine — the repartition
-    * is below the aggregate), where the windowed plan shuffles map-side-
-    * combined tf rows once and WindowGroupLimit-pruned rows once.
-    * Same output bit-for-bit (spec'd). MEASURED (BENCH_NOTES r14,
-    * min-of-2 solo at both sizes): ties at 1× (0.73 vs 0.71 s) and
-    * LOSES 2.4× at 100× (10.57 vs 4.39 s) — the un-combined raw-token
-    * exchange dwarfs the WindowGroupLimit-pruned window shuffle it
-    * saves. q54 ships the windowed plan; this stays as the reproducible
-    * negative result. */
-  private[graft] def tfidfTopKOneShuffle(d: DataFrame, k: Int): DataFrame = {
-    val tf = d.select(col("doc_id"), explode(toks).as("token"))
-      .repartition(col("doc_id"))
-      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-    val dfTbl = tf.groupBy("token").agg(count(lit(1)).as("df"))
-    val nTbl = d.select(count(lit(1)).as("n_docs"))
-    val score = col("tf").cast("double") *
-      ((col("n_docs").cast("double") - col("df").cast("double") + lit(0.5)) /
-        (col("df").cast("double") + lit(0.5)))
-    val w = Window.partitionBy("doc_id")
-      .orderBy(col("score").desc, col("token").asc)
-    tf.join(dfTbl, "token")
-      .crossJoin(broadcast(nTbl))
-      .withColumn("score", score)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("doc_id"), col("token"), col("tf"), col("df"),
-        round(col("score"), 6).as("score"), col("rank"))
-  }
 
   val oracleQ54: String =
     """WITH tok AS (

@@ -65,36 +65,22 @@ object VectorIndex {
     * file stays executor-sized ([[DedupIndex.DefaultBuckets]] rationale). */
   val DefaultBuckets = 8
 
-  /** Default cell-range PARTITION count for the bands/vecs tables
-    * (`pcell = cell % pcells` Hive-style directories above the bucket
-    * files): bucketing prunes EXCHANGES but not SCANS, so without it a
-    * constant-size serving batch still reads the whole band table — the
-    * linear residual the r14 probe series measured (2.2× wall for 100×
-    * index). A batch probes only the cells it lands in, and the probe
-    * filters `pcell IN (batch's cells % pcells)` — planning-time
-    * directory pruning caps the scan at |probed pcells|/pcells of the
-    * index. 64 keeps directory counts trivial (64 × buckets files per
-    * table) while a small batch typically probes a handful. Kept for
-    * harnesses that pin the fixed-grain operating point; [[build]]
-    * defaults to [[AutoPcells]] since r16. */
-  val DefaultPcells = 64
-
-  /** AUTO-SIZE sentinel for `pcells` ([[DedupIndex.AutoPvals]] twin): the
-    * grain derives from the corpus row count via [[Bucketing.autoGrain]],
-    * so it follows the corpus across decades instead of freezing the
-    * build-time default — the r15 series' one open scale finding. The
-    * default for [[build]]; [[compact]] accepts it to RE-grain from live
-    * rows during its rewrite. */
+  /** AUTO-SIZE sentinel for the cell-range PARTITION count `pcells` of
+    * the bands/vecs tables (`pcell = cell % pcells` Hive-style directories
+    * above the bucket files): bucketing prunes EXCHANGES but not SCANS,
+    * so without them a constant-size serving batch still reads the whole
+    * band table — the linear residual the r14 probe series measured (2.2×
+    * wall for 100× index). A batch probes only the cells it lands in, and
+    * the probe filters `pcell IN (batch's cells % pcells)` —
+    * planning-time directory pruning caps the scan at |probed
+    * pcells|/pcells of the index. The grain derives from the corpus row
+    * count via [[Bucketing.autoGrain]] ([[DedupIndex.AutoPvals]] twin), so
+    * it follows the corpus across decades — the r15 series' one open
+    * scale finding. The default for [[build]]; [[compact]] and
+    * [[rebuild]] accept it to RE-grain from live rows. */
   val AutoPcells: Int = -1
 
-  /** [[rebuild]]'s "inherit the source grain" sentinel (its default;
-    * distinct from [[AutoPcells]], which re-sizes — rebuild can express
-    * an explicit flat 0, so inherit needs its own value). */
-  val InheritPcells: Int = -2
-
-  /** Driver-held image of `<prefix>_meta`. `pcells = 0` marks a legacy
-    * unpartitioned index (pre-r14 layout) — probes skip the partition
-    * filter and scan as before. */
+  /** Driver-held image of `<prefix>_meta`. */
   final case class Meta(minCos: Double, dims: Int, nCells: Int,
       kmeansIters: Int, trainSampleCap: Long, targetCellRows: Int,
       planes: Int, bands: Int, pqM: Int, pqKsub: Int, corpusRows: Long,
@@ -106,8 +92,7 @@ object VectorIndex {
     r.getAs[Int]("target_cell_rows"), r.getAs[Int]("planes"),
     r.getAs[Int]("bands"), r.getAs[Int]("pq_m"), r.getAs[Int]("pq_ksub"),
     r.getAs[Long]("corpus_rows"), r.getAs[Int]("buckets"),
-    if (r.schema.fieldNames.contains("pcells")) r.getAs[Int]("pcells")
-    else 0)
+    r.getAs[Int]("pcells"))
 
   /** Read the persisted meta row for `prefix` from the session catalog. */
   def meta(spark: SparkSession, prefix: String = "vec_idx"): Meta =
@@ -152,10 +137,8 @@ object VectorIndex {
 
   /** The four data-table frames of the indexed vectors `idx` (layout
     * order) under a model — its cell assignment `cells`, LSH shape and PQ
-    * codebooks — shared by [[build]] and [[append]]. With `pcells > 0`
-    * vecs and bands carry their `pcell = cell % pcells` partition
-    * column; the legacy flat layout (pcells = 0) stays buildable so the
-    * pruning parity spec can compare against it directly. */
+    * codebooks — shared by [[build]] and [[append]]; vecs and bands carry
+    * their `pcell = cell % pcells` partition column. */
   private def dataFrames(idx: DataFrame, cells: DataFrame, planes: Int,
       bands: Int, dims: Int, books: IndexedSeq[IndexedSeq[Array[Long]]],
       pcells: Int): Seq[DataFrame] = {
@@ -164,12 +147,11 @@ object VectorIndex {
     val bandCols = Seq(col("vec_id").as("partner_id"), col("cell"),
       col("k"), col("v"))
     Seq(
-      if (pcells > 0) vecs.join(cells, Seq("vec_id"))
-        .select(col("vec_id"), col("efp"), col("nrm"), pcellOf)
-      else vecs,
+      vecs.join(cells, Seq("vec_id"))
+        .select(col("vec_id"), col("efp"), col("nrm"), pcellOf),
       VectorOps.lshBandRows(idx, planes, bands, dims)
         .join(cells, Seq("vec_id"))
-        .select((if (pcells > 0) bandCols :+ pcellOf else bandCols): _*),
+        .select(bandCols :+ pcellOf: _*),
       cells,
       VectorOps.pqEncodeIndexed(idx, books)
         .withColumn("rnorm2", VectorOps.pqRnorm2Col(col("codes"), books)))
@@ -208,8 +190,8 @@ object VectorIndex {
     val l = layout(prefix)
     val rows = idx.count()
     // AUTO grain resolves here — `rows` is already on hand
-    val pcells =
-      if (pcells0 == AutoPcells) Bucketing.autoGrain(rows) else pcells0
+    val pcells = IndexLifecycle.resolveGrain("pcells", pcells0, AutoPcells,
+      rows)
     val k = VectorOps.autoCellCount(rows, nCells, targetCellRows)
     val cellRows = math.max(1L, (rows + k - 1) / k)
     val (p, b) = VectorOps.autoShape(cellRows, minCos)
@@ -220,12 +202,11 @@ object VectorIndex {
     val books = VectorOps.pqBooksSampled(idx, pqM, pqKsub)
     // the wave history restarts with the rebuild (single-writer covers
     // rebuilds; wave 0 commits last — [[IndexLifecycle.finishBuild]])
-    if (pcells > 0) Bucketing.clearWaveMarkers(s, dir)
+    Bucketing.clearWaveMarkers(s, dir)
     l.tables.zip(dataFrames(idx, cells, p, b, dims, books, pcells))
       .foreach { case (t, df) =>
-        IndexLifecycle.writeTable(l, t,
-          if (pcells > 0) df.withColumn("wave", lit(0)) else df, dir,
-          pcells > 0, buckets)
+        IndexLifecycle.writeTable(l, t, df.withColumn("wave", lit(0)), dir,
+          buckets)
       }
 
     import scala.jdk.CollectionConverters._
@@ -262,7 +243,7 @@ object VectorIndex {
 
     writeMeta(s, Meta(minCos, dims, k, kmeansIters, trainSampleCap,
       targetCellRows, p, b, pqM, pqKsub, rows, buckets, pcells), prefix, dir)
-    IndexLifecycle.finishBuild(s, l, dir, pcells > 0)
+    IndexLifecycle.finishBuild(s, l, dir)
   }
 
   /** REBUILD an attached index into `outDir` from ITS OWN persisted
@@ -282,11 +263,12 @@ object VectorIndex {
     * quantization is a pure function of (vec_id, efp, nrm), and the
     * k-means seeds / PQ training sample are deterministic in vec_id.
     *
-    * Knobs default to the source meta (`0`/`-1`/[[InheritPcells]]
-    * sentinels) — pass explicit values to re-shape while re-training
-    * (e.g. more cells after growth; `nCells = AutoCells`, the default,
-    * already re-sizes the cell count to the LIVE row count, and
-    * `pcells = AutoPcells` re-sizes the partition grain the same way). Like [[compact]]: fresh
+    * Knobs default to the source meta (`0`/`-1` sentinels; `pcells = 0`
+    * inherits the grain, as for [[compact]]) — pass explicit values to
+    * re-shape while re-training (e.g. more cells after growth;
+    * `nCells = AutoCells`, the default, already re-sizes the cell count
+    * to the LIVE row count, and `pcells = AutoPcells` re-sizes the
+    * partition grain the same way). Like [[compact]]: fresh
     * `outDir` required, writer quiesce ENFORCED (a live lease refuses the
     * rebuild unless `force = true` — [[Bucketing.requireQuiesced]]),
     * readers of the old location are unaffected throughout.
@@ -299,12 +281,11 @@ object VectorIndex {
       nCells: Int = VectorOps.AutoCells, kmeansIters: Int = 0,
       targetCellRows: Int = 0, trainSampleCap: Long = -1L,
       pqM: Int = 0, pqKsub: Int = 0, buckets: Int = 0,
-      pcells: Int = InheritPcells, force: Boolean = false): Unit = {
+      pcells: Int = 0, force: Boolean = false): Unit = {
     val l = layout(prefix)
     val m = meta(spark, prefix)
     val srcDir = location(spark, prefix)
-    if (m.pcells > 0)
-      Bucketing.requireQuiesced(spark, srcDir, force, "rebuild")
+    Bucketing.requireQuiesced(spark, srcDir, force, "rebuild")
     // null outPrefix (the default) = IN PLACE under `prefix` — Scala
     // cannot default one parameter to another in the same list, and a
     // literal "vec_idx" default silently rebuilt a prefix="x" index into
@@ -316,8 +297,7 @@ object VectorIndex {
     // catalog entries mid-derivation; a path-based scan — and the cache
     // entries over it — is immune to those refreshes
     val committed = IndexLifecycle.committedFiles(spark, l, "vecs",
-      m.pcells > 0,
-      if (m.pcells > 0) Bucketing.committedWaves(spark, srcDir) else Nil)
+      Bucketing.committedWaves(spark, srcDir))
     val live = IndexLifecycle.notTombstoned(spark, l, committed, "vec_id")
       .select("vec_id", "efp", "nrm")
       .dropDuplicates("vec_id") // replayed appends write duplicate rows
@@ -333,8 +313,8 @@ object VectorIndex {
         if (pqKsub > 0) pqKsub else m.pqKsub,
         if (buckets > 0) buckets else m.buckets,
         // inherit / auto-size from live rows (buildIndexed resolves the
-        // Auto sentinel against its own count) / explicit (0 = flat)
-        if (pcells == InheritPcells) m.pcells else pcells)
+        // Auto sentinel against its own count) / explicit
+        if (pcells == 0) m.pcells else pcells)
       // in-place flip: the old location is stranded — record it for the
       // guarded retire ([[IndexLifecycle.compact]] rationale)
       if (outPfx == prefix)
@@ -353,16 +333,12 @@ object VectorIndex {
   /** Register an existing index written by [[build]] in `spark`'s catalog
     * — metadata only (no data job, no corpus recomputation). Bucket
     * counts come from the persisted meta, so the planner proves the
-    * layout exactly as at write time. Refuses a partitioned artifact
-    * with no committed wave marker ([[IndexLifecycle.attach]]) — rebuild
-    * the artifact (crashed build) or re-`build` it under the current
-    * layout (pre-wave). */
+    * layout exactly as at write time. Refuses a meta-less or pcells-0
+    * (flat-layout) artifact and one with no committed wave marker
+    * ([[IndexLifecycle.attach]]) — re-`build` it from the corpus. */
   def attach(spark: SparkSession, dir: String,
-      prefix: String = "vec_idx"): Unit = {
-    val m = metaOf(spark.read.parquet(s"$dir/meta").head())
-    val l = layout(prefix)
-    IndexLifecycle.attach(spark, l, dir, m.pcells, m.buckets, l.plain)
-  }
+      prefix: String = "vec_idx"): Unit =
+    IndexLifecycle.attach(spark, layout(prefix), dir, "pcells")
 
   /** TOMBSTONE vectors out of an attached/built index — the takedown /
     * deletion half of index maintenance ([[append]] is the growth half):
@@ -432,14 +408,14 @@ object VectorIndex {
     // totalRows/appendedRows and the compaction trigger after any replay
     // (r14 advisor). [[compact]] dedups by id, re-aligning the physical
     // artifact with these logical counts.
-    val c = IndexLifecycle.census(spark, l, m.pcells > 0)
+    val c = IndexLifecycle.census(spark, l)
     val (total, nCells, maxN, meanN) =
-      IndexLifecycle.foldedStats(spark, l, m.pcells > 0, c.committedWaves,
+      IndexLifecycle.foldedStats(spark, l, c.committedWaves,
           Seq("cell")) match {
         case Some(f) => (f.occSum, f.occCnt, f.occMax, f.occMean)
         case None =>
           val occ = IndexLifecycle.committedTable(spark, l, "cells",
-              m.pcells > 0, c.committedWaves)
+              c.committedWaves)
             .groupBy("cell").agg(count_distinct(col("vec_id")).as("n"))
             .agg(sum("n"), count(lit(1)), max("n"), avg("n")).head()
           // an empty index (degenerate but attachable) aggregates to nulls
@@ -494,52 +470,40 @@ object VectorIndex {
       asOfWave: Int = Int.MaxValue): DataFrame = {
     val s = batch.sparkSession
     val m = meta(s, prefix)
-    require(asOfWave == Int.MaxValue || m.pcells > 0,
-      "asOfWave needs the wave-partitioned layout — a flat index keeps " +
-        "no append history to rewind")
     val th = if (minCos.isNaN) m.minCos else minCos
     val cents = centroids(s, prefix)
     // uncached batch index: a narrow projection consumed three times is
     // cheaper than a cache entry per serving epoch the caller can't free
     val batchIdx = VectorOps.indexUncached(batch, id, vec)
     // ...but the cell ASSIGNMENT (the centroid cross-score, the expensive
-    // batch-side piece) is staged once on the partitioned path — the
-    // probed-pcell collect below and the candidate join would otherwise
-    // each evaluate it (the text probe's candidate-staging argument)
-    val assigned0 = VectorOps.assignCellsMulti(batchIdx, cents, probes,
-      probeMargin)
-    val assigned =
-      if (m.pcells > 0) assigned0.localCheckpoint(true) else assigned0
-    // partitioned layout: collect the batch's probed pcell values (one
-    // small batch-proportional job, ≤ pcells integers) and prune the
-    // index scans to those directories at planning time — every
-    // candidate partner necessarily lives in a probed cell, so filtering
-    // BOTH the band table and the re-rank vec table is recall-neutral
-    // (parity spec-pinned); the scan cost becomes |probed|/pcells of the
-    // index instead of all of it
-    val (bandsT, vecsT) =
-      if (m.pcells > 0) {
-        // the probe's consistency horizon: the committed wave SET,
-        // resolved once per call, so both scans see the same snapshot
-        // even while a writer stages or publishes the next wave — the
-        // atomic-publish read side ([[DedupIndex]] note); planning-time
-        // directory pruning, zero data cost. `asOfWave` time-travels the
-        // horizon (waves ≤ it); takedowns stay global by design
-        // ([[DedupIndex.incrementalDedup]] note).
-        val cws = Bucketing.committedWaves(s, location(s, prefix))
-          .filter(_ <= asOfWave).map(Integer.valueOf)
-        val probed = assigned
-          .select(pmod(col("cell"), lit(m.pcells)).cast("int").as("pcell"))
-          .distinct().collect().map(_.getInt(0)).sorted
-        (s.table(s"${prefix}_bands")
-            .where(col("wave").isin(cws: _*) &&
-              col("pcell").isin(probed.map(Integer.valueOf): _*))
-            .drop("wave", "pcell"),
-          s.table(s"${prefix}_vecs")
-            .where(col("wave").isin(cws: _*) &&
-              col("pcell").isin(probed.map(Integer.valueOf): _*))
-            .select(col("vec_id"), col("efp"), col("nrm")))
-      } else (s.table(s"${prefix}_bands"), s.table(s"${prefix}_vecs"))
+    // batch-side piece) is staged once — the probed-pcell collect below
+    // and the candidate join would otherwise each evaluate it (the text
+    // probe's candidate-staging argument)
+    val assigned = VectorOps.assignCellsMulti(batchIdx, cents, probes,
+      probeMargin).localCheckpoint(true)
+    // collect the batch's probed pcell values (one small
+    // batch-proportional job, ≤ pcells integers) and prune the index
+    // scans to those directories at planning time — every candidate
+    // partner necessarily lives in a probed cell, so filtering BOTH the
+    // band table and the re-rank vec table is recall-neutral (parity
+    // spec-pinned); the scan cost becomes |probed|/pcells of the index
+    // instead of all of it. The wave filter is the probe's consistency
+    // horizon: the committed wave SET, resolved once per call, so both
+    // scans see the same snapshot even while a writer stages or
+    // publishes the next wave — the atomic-publish read side
+    // ([[DedupIndex]] note); planning-time directory pruning, zero data
+    // cost. `asOfWave` time-travels the horizon (waves ≤ it); takedowns
+    // stay global by design ([[DedupIndex.incrementalDedup]] note).
+    val cws = Bucketing.committedWaves(s, location(s, prefix))
+      .filter(_ <= asOfWave).map(Integer.valueOf)
+    val probed = assigned
+      .select(pmod(col("cell"), lit(m.pcells)).cast("int").as("pcell"))
+      .distinct().collect().map(_.getInt(0)).sorted
+    def pruned(table: String) = s.table(s"${prefix}_$table")
+      .where(col("wave").isin(cws: _*) &&
+        col("pcell").isin(probed.map(Integer.valueOf): _*))
+    val bandsT = pruned("bands").drop("wave", "pcell")
+    val vecsT = pruned("vecs").select(col("vec_id"), col("efp"), col("nrm"))
     val bb = VectorOps.lshBandRows(batchIdx, m.planes, m.bands, m.dims)
       .join(assigned, Seq("vec_id"))
     // tombstoned vectors leave the candidate set at the band side
@@ -570,7 +534,7 @@ object VectorIndex {
     * answer (as for any IVF index), and each append adds one file set
     * per bucket (compact by rebuilding when file counts matter).
     *
-    * ATOMIC PUBLISH (partitioned layout): the wave's rows stage under
+    * ATOMIC PUBLISH: the wave's rows stage under
     * `wave=W` directories across all four data tables and become visible
     * only when the single `_wave_W` marker lands LAST
     * ([[IndexLifecycle.commit]]) — a reader
@@ -579,8 +543,7 @@ object VectorIndex {
     * ([[Bucketing.appendWave]]: per-file moves, then the manifest
     * marker), so concurrent appenders — threads AND processes, on any
     * supported filesystem — interleave safely lock-free under the
-    * disjoint-content contract. Legacy pcells = 0 indexes keep per-table
-    * commit semantics.
+    * disjoint-content contract.
     *
     * Visibility: the writing session (and any session attached LATER)
     * sees the append immediately; a DIFFERENT already-attached session
@@ -596,7 +559,7 @@ object VectorIndex {
 
   /** The staging half of [[append]] ([[IndexLifecycle.appendStaged]]):
     * writes the wave WITHOUT publishing it; returns the staged wave
-    * number (−1 on the legacy layout, whose writes publish per-table).
+    * number.
     * The batch derives its bands / cell assignment / PQ codes with the
     * persisted model ([[dataFrames]]). `maxTables` is the torn-write
     * spec's fault-injection knob. */
@@ -606,7 +569,7 @@ object VectorIndex {
     val s = batch.sparkSession
     val m = meta(s, prefix)
     IndexLifecycle.appendStaged(VectorOps.indexUncached(batch, id, vec),
-      layout(prefix), m.pcells, m.buckets, maxTables, _.unpersist(false)) {
+      layout(prefix), m.buckets, maxTables, _.unpersist(false)) {
       bIdx =>
         val cents = centroids(s, prefix)
         val books = pqBooks(s, prefix)
@@ -633,10 +596,8 @@ object VectorIndex {
     * vecs rewrite with the cells table to recover each vector's cell
     * (the old pcell cannot be re-derived from itself) — both sides are
     * vec_id-bucketed, so the join needs no exchange; the bands table
-    * recomputes from its own cell column. A flat source upgrades to the
-    * partitioned layout (the no-original-corpus legacy migration);
-    * downgrading is not supported. The rewritten meta carries the new
-    * grain, so every probe derives its pruning filter at it.
+    * recomputes from its own cell column. The rewritten meta carries the
+    * new grain, so every probe derives its pruning filter at it.
     *
     * Interleaving contract and wave-horizon mode (`upToWave`): see
     * [[IndexLifecycle.compact]] and [[DedupIndex.compact]] — compaction
@@ -665,9 +626,6 @@ object VectorIndex {
     IndexLifecycle.compact(spark, layout(prefix), out, outDir, m.pcells,
       pcells, AutoPcells, pcells != 0, force, upToWave)(
       live => live("cells").count()) { (live, outPcells) =>
-      // a flat source's rows gain their wave column in the rewrite
-      def waved(df: DataFrame) =
-        if (m.pcells > 0) df else df.withColumn("wave", lit(0))
       val newPcell = pmod(col("cell"), lit(outPcells)).cast("int")
         .as("pcell")
       // re-grain recovers each vector's cell from the cells table (both
@@ -675,15 +633,14 @@ object VectorIndex {
       val frames =
         if (outPcells == m.pcells) out.subs.map(live)
         else Seq(
-          waved(live("vecs")).drop("pcell")
+          live("vecs").drop("pcell")
             .join(live("cells").select("vec_id", "cell"), Seq("vec_id"))
             .withColumn("pcell", newPcell).drop("cell"),
-          waved(live("bands")).drop("pcell").withColumn("pcell", newPcell),
-          waved(live("cells")),
-          waved(live("pqcodes")))
+          live("bands").drop("pcell").withColumn("pcell", newPcell),
+          live("cells"),
+          live("pqcodes"))
       out.tables.zip(frames).foreach { case (t, df) =>
-        IndexLifecycle.writeTable(out, t, df, outDir, outPcells > 0,
-          m.buckets)
+        IndexLifecycle.writeTable(out, t, df, outDir, m.buckets)
       }
       // model tables ride unchanged (collect→rewrite keeps them tiny and
       // avoids reading a table the same statement is overwriting)
@@ -700,7 +657,7 @@ object VectorIndex {
       rewrite(cents, "cents")
       rewrite(books, "pqbooks")
       // the meta row is REGENERATED (not copied) so the output grain lands
-      // in it — and a legacy pre-pcells meta gains the column on upgrade
+      // in it
       writeMeta(spark, m.copy(pcells = outPcells), outPfx, outDir)
     }
   }
@@ -732,22 +689,14 @@ object VectorIndex {
       prefix: String = "vec_idx", rerank: Int = 50,
       asOfWave: Int = Int.MaxValue): DataFrame = {
     val s = queries.sparkSession
-    val m = meta(s, prefix)
-    require(asOfWave == Int.MaxValue || m.pcells > 0,
-      "asOfWave needs the wave-partitioned layout — a flat index keeps " +
-        "no append history to rewind")
     // committed-snapshot reads (the atomic-publish read side): the wave
     // set is resolved ONCE, so the ADC codes and the re-rank vectors see
     // the same snapshot even while a concurrent writer publishes;
     // `asOfWave` time-travels it ([[incrementalDedup]] note)
-    val cws = if (m.pcells > 0)
-      Bucketing.committedWaves(s, location(s, prefix))
-        .filter(_ <= asOfWave).map(Integer.valueOf)
-    else Nil
+    val cws = Bucketing.committedWaves(s, location(s, prefix))
+      .filter(_ <= asOfWave).map(Integer.valueOf)
     def committedT(table: String) =
-      if (m.pcells > 0)
-        s.table(table).where(col("wave").isin(cws: _*)).drop("wave")
-      else s.table(table)
+      s.table(table).where(col("wave").isin(cws: _*)).drop("wave")
     // tombstoned vectors leave the ADC scoring universe (broadcast
     // anti-join, map-side) — removed ids can never reach the re-rank
     val pq = VectorOps.PqIndex(pqBooks(s, prefix),

@@ -44,22 +44,29 @@ object VectorOps {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Session conf gating the silent auto-knob reroute to the cell-sharded
-    * approximate algorithm past [[DeepenMinBits]] occupancy (default on).
-    * Callers that rely on exact global LSH semantics at any corpus size
-    * set `spark.graft.vector.autoCellRoute=false` instead of pinning
-    * knobs; the engaged route also logs, so the semantic switch is never
-    * silent (r13 advisor). */
-  private[queries] def cellRouteEnabled(
-      s: org.apache.spark.sql.SparkSession): Boolean =
-    s.conf.get("spark.graft.vector.autoCellRoute", "true").toBoolean
-
-  private def logCellRoute(op: String, rows: Long): Unit =
-    log.info(s"graft: $op with auto knobs routed to the CELL-SHARDED " +
-      s"approximate path (corpus rows=$rows >= ~${64L << DeepenMinBits}): " +
-      "clusters cannot span k-means cells and boundary near-dups can be " +
-      "missed; set spark.graft.vector.autoCellRoute=false (or pass " +
-      "explicit planes/bands) for exact global LSH semantics")
+  /** The threshold family's knob policy, in one place: fully auto-knobbed
+    * calls (both sentinels) on a corpus at or past [[DeepenMinBits]]
+    * occupancy route to the CELL-SHARDED approximate path (None) — the
+    * regime where the r12 100× stress measured global threshold-LSH
+    * super-linear, while cell candidate volume stays O(rows) because
+    * cells hold ~targetCellRows regardless of corpus size. Everything
+    * else resolves to the global LSH (planes, bands) ([[resolveShape]]).
+    * Callers that rely on exact global LSH semantics pass explicit
+    * planes/bands; the engaged route logs, so the semantic switch is
+    * never silent (r13 advisor). `rows` (the corpus row count) is
+    * evaluated only when a sentinel needs it, so explicit-knob callers
+    * pay no count. */
+  private[graft] def routeShape(op: String, planes: Int, bands: Int,
+      minCos: Double, rows: => Long): Option[(Int, Int)] =
+    if (planes == AutoPlanes && bands == AutoBands &&
+        autoBitsPer(rows) >= DeepenMinBits) {
+      log.info(s"graft: $op with auto knobs routed to the CELL-SHARDED " +
+        s"approximate path (corpus rows=$rows >= " +
+        s"~${64L << DeepenMinBits}): clusters cannot span k-means cells " +
+        "and boundary near-dups can be missed; pass explicit planes/bands " +
+        "for exact global LSH semantics")
+      None
+    } else Some(resolveShape(planes, bands, minCos, rows))
 
   /** Sentinel default for `planes` in the THRESHOLD family
     * (semanticDedup / semanticIncremental / semanticKeepBest): size the
@@ -228,12 +235,13 @@ object VectorOps {
   /** Resolve the threshold family's (planes, bands): both sentinels →
     * the recall-preserving [[autoShape]]; explicit planes with sentinel
     * bands → the historical 4 bands; sentinel planes with explicit
-    * bands → occupancy-only [[autoPlanes]] at that band count. */
+    * bands → occupancy-only [[autoPlanes]] at that band count. `rows` is
+    * the corpus row count, evaluated only for the sentinel planes. */
   private def resolveShape(planes: Int, bands: Int, minCos: Double,
-      corpus: DataFrame): (Int, Int) =
+      rows: => Long): (Int, Int) =
     (planes, bands) match {
-      case (AutoPlanes, AutoBands) => autoShape(memoizedCount(corpus), minCos)
-      case (AutoPlanes, b) => (autoPlanes(memoizedCount(corpus), b), b)
+      case (AutoPlanes, AutoBands) => autoShape(rows, minCos)
+      case (AutoPlanes, b) => (autoPlanes(rows, b), b)
       case (p, AutoBands) => (p, 4)
       case (p, b) => (p, b)
     }
@@ -1230,23 +1238,18 @@ object VectorOps {
   def semanticDedupIndexed(idx: DataFrame, minCos: Double,
       planes: Int = AutoPlanes, bands: Int = AutoBands,
       dims: Int = 64): DataFrame = {
-    // At DeepenMinBits-and-above occupancy (the regime where the r12
-    // 100× stress measured global threshold-LSH super-linear — 174×
-    // wall for 100× rows, candidate volume ∝ rows·log rows), auto-knob
-    // callers route to the cell-sharded SemDeDup path: candidate volume
-    // there is O(rows) because cells hold ~targetCellRows regardless of
-    // corpus size. Explicit-knob callers (the q60 oracle binding) keep
-    // the exact global semantics they pinned; the route logs and is
-    // gated on spark.graft.vector.autoCellRoute ([[cellRouteEnabled]]).
-    if (planes == AutoPlanes && bands == AutoBands &&
-        cellRouteEnabled(idx.sparkSession) &&
-        autoBitsPer(memoizedCount(idx)) >= DeepenMinBits) {
-      logCellRoute("semanticDedup", memoizedCount(idx))
-      return semanticDedupCellsIndexed(idx, minCos, dims = dims)
-    }
-    val (rp, rb) = resolveShape(planes, bands, minCos, idx)
-    val cand = lshCandidatePairs(idx, rp, rb, dims)
-    clusterOutputOf(idx, cosineFilteredPairs(idx, cand, minCos))
+    // At DeepenMinBits-and-above occupancy (174× wall for 100× rows on
+    // the global path, candidate volume ∝ rows·log rows), auto-knob
+    // callers route to the cell-sharded SemDeDup path ([[routeShape]]).
+    // Explicit-knob callers (the q60 oracle binding) keep the exact
+    // global semantics they pinned.
+    routeShape("semanticDedup", planes, bands, minCos, memoizedCount(idx))
+      match {
+        case None => semanticDedupCellsIndexed(idx, minCos, dims = dims)
+        case Some((rp, rb)) =>
+          val cand = lshCandidatePairs(idx, rp, rb, dims)
+          clusterOutputOf(idx, cosineFilteredPairs(idx, cand, minCos))
+      }
   }
 
   /** Exact-cosine refine of candidate (id_a, id_b) pairs: join both
@@ -1460,29 +1463,27 @@ object VectorOps {
       minCos: Double, planes: Int = AutoPlanes, bands: Int = AutoBands,
       dims: Int = 64): DataFrame = {
     // Auto-knob callers past the DeepenMinBits occupancy route to the
-    // cell-sharded probe, mirroring [[semanticDedupIndexed]]: the global
-    // path's corpus-sized band artifact deepens with corpus occupancy,
-    // so per-batch-vector candidate volume grows with the CORPUS — the
-    // cell path keeps it pinned to ~targetCellRows. Explicit-knob
-    // callers (the q63 oracle binding) keep exact global semantics; the
-    // route logs and respects spark.graft.vector.autoCellRoute.
-    if (planes == AutoPlanes && bands == AutoBands &&
-        cellRouteEnabled(corpus.sparkSession) &&
-        autoBitsPer(memoizedCount(corpus)) >= DeepenMinBits) {
-      logCellRoute("semanticIncremental", memoizedCount(corpus))
-      return semanticIncrementalCellsIndexed(corpus, batch, minCos,
-        dims = dims)
+    // cell-sharded probe ([[routeShape]]): the global path's corpus-sized
+    // band artifact deepens with corpus occupancy, so per-batch-vector
+    // candidate volume grows with the CORPUS — the cell path keeps it
+    // pinned to ~targetCellRows. Explicit-knob callers (the q63 oracle
+    // binding) keep exact global semantics. The shape sizes against the
+    // big side, the corpus.
+    routeShape("semanticIncremental", planes, bands, minCos,
+        memoizedCount(corpus)) match {
+      case None =>
+        semanticIncrementalCellsIndexed(corpus, batch, minCos, dims = dims)
+      case Some((p, b)) =>
+        // corpus side cached (the serving artifact a long-lived session /
+        // streaming ingest probes every epoch); the batch side stays a
+        // per-epoch uncached projection
+        val cb = bandRowsCached(corpus, p, b, dims)
+          .select(col("vec_id").as("partner_id"), col("k"), col("v"))
+        val bb = lshBandRows(batch, p, b, dims)
+        val cand = bb.join(cb, Seq("k", "v"))
+          .select(col("vec_id"), col("partner_id")).distinct()
+        bestPartnerOf(corpus, batch, cand, minCos)
     }
-    val (p, b) = resolveShape(planes, bands, minCos, corpus) // the big side
-    // corpus side cached (the serving artifact a long-lived session /
-    // streaming ingest probes every epoch); the batch side stays a
-    // per-epoch uncached projection
-    val cb = bandRowsCached(corpus, p, b, dims)
-      .select(col("vec_id").as("partner_id"), col("k"), col("v"))
-    val bb = lshBandRows(batch, p, b, dims)
-    val cand = bb.join(cb, Seq("k", "v"))
-      .select(col("vec_id"), col("partner_id")).distinct()
-    bestPartnerOf(corpus, batch, cand, minCos)
   }
 
   /** [[semanticIncrementalIndexed]] where corpus and batch are the two
@@ -1496,29 +1497,29 @@ object VectorOps {
     * the same full frame now share a SINGLE cached band artifact
     * instead of three private derivations (the r19 q75/q78
     * cache-identity discipline; guide §2.4). Knob resolution (auto
-    * shape, cell-route occupancy check) is computed from the CORPUS
-    * half exactly like the generic entry, so auto-knob callers resolve
-    * identically; past the cell-route occupancy the generic entry takes
-    * over unchanged. `batchPred` must reference `vec_id` only — it is
+    * shape, cell-route occupancy check — [[routeShape]]) is computed
+    * from the CORPUS half exactly like the generic entry, so auto-knob
+    * callers resolve identically, including the cell-sharded route.
+    * `batchPred` must reference `vec_id` only — it is
     * applied to the (vec_id, k, v) band frame. */
   private[queries] def semanticIncrementalById(all: DataFrame,
       batchPred: Column, minCos: Double, planes: Int = AutoPlanes,
       bands: Int = AutoBands, dims: Int = 64): DataFrame = {
     val corpus = all.filter(!batchPred)
     val batch = all.filter(batchPred)
-    if (planes == AutoPlanes && bands == AutoBands &&
-        cellRouteEnabled(all.sparkSession) &&
-        autoBitsPer(memoizedCount(corpus)) >= DeepenMinBits)
-      return semanticIncrementalIndexed(corpus, batch, minCos, planes,
-        bands, dims)
-    val (p, b) = resolveShape(planes, bands, minCos, corpus)
-    val allBands = bandRowsCached(all, p, b, dims)
-    val cb = allBands.filter(!batchPred)
-      .select(col("vec_id").as("partner_id"), col("k"), col("v"))
-    val bb = allBands.filter(batchPred)
-    val cand = bb.join(cb, Seq("k", "v"))
-      .select(col("vec_id"), col("partner_id")).distinct()
-    bestPartnerOf(corpus, batch, cand, minCos)
+    routeShape("semanticIncremental", planes, bands, minCos,
+        memoizedCount(corpus)) match {
+      case None =>
+        semanticIncrementalCellsIndexed(corpus, batch, minCos, dims = dims)
+      case Some((p, b)) =>
+        val allBands = bandRowsCached(all, p, b, dims)
+        val cb = allBands.filter(!batchPred)
+          .select(col("vec_id").as("partner_id"), col("k"), col("v"))
+        val bb = allBands.filter(batchPred)
+        val cand = bb.join(cb, Seq("k", "v"))
+          .select(col("vec_id"), col("partner_id")).distinct()
+        bestPartnerOf(corpus, batch, cand, minCos)
+    }
   }
 
   /** Shared re-rank + verdict tail of the incremental variants: exact

@@ -649,34 +649,18 @@ object EventStream {
     val corpusIdx = graft.queries.VectorOps.index(corpus, id, vec)
     // Resolve auto-sizing ONCE from the static corpus before the stream
     // starts — per-epoch resolution would re-run the count and could
-    // drift the signature scheme between epochs. The recall-preserving
-    // autoShape sizes against minCos, like the batch operator. Fully
+    // drift the signature scheme between epochs. The knob policy is the
+    // batch operators' ([[graft.queries.VectorOps.routeShape]]): fully
     // auto-knobbed streams past the DeepenMinBits occupancy route to the
-    // CELL-SHARDED probe instead (mirroring the batch operators): the
-    // corpus's centroids + cell assignment are memoized across epochs,
-    // so each epoch pays batch assignment + a probe volume pinned to
-    // ~targetCellRows — the global shape would deepen with the corpus
-    // and grow every epoch's candidate volume with it.
-    // lazy: fully explicit-knob streams never pay the corpus count scan
-    // at stream start (r13 advisor) — only the Auto sentinels consume it
+    // CELL-SHARDED probe (None), whose corpus centroids + cell assignment
+    // are memoized across epochs, so each epoch pays batch assignment +
+    // a probe volume pinned to ~targetCellRows — the global shape would
+    // deepen with the corpus and grow every epoch's candidate volume
+    // with it. The count is lazy: fully explicit-knob streams never pay
+    // the corpus count scan at stream start (r13 advisor).
     lazy val corpusRows = corpusIdx.count()
-    val useCells =
-      planes == graft.queries.VectorOps.AutoPlanes &&
-        bands == graft.queries.VectorOps.AutoBands &&
-        corpus.sparkSession.conf
-          .get("spark.graft.vector.autoCellRoute", "true").toBoolean &&
-        graft.queries.VectorOps.autoBitsPer(corpusRows) >=
-          graft.queries.VectorOps.DeepenMinBits
-    val (resolvedPlanes, resolvedBands) =
-      (planes, bands) match {
-        case (graft.queries.VectorOps.AutoPlanes,
-          graft.queries.VectorOps.AutoBands) =>
-          graft.queries.VectorOps.autoShape(corpusRows, minCos)
-        case (graft.queries.VectorOps.AutoPlanes, b) =>
-          (graft.queries.VectorOps.autoPlanes(corpusRows, b), b)
-        case (p, graft.queries.VectorOps.AutoBands) => (p, 4)
-        case (p, b) => (p, b)
-      }
+    val shape = graft.queries.VectorOps.routeShape("runVectorIngest",
+      planes, bands, minCos, corpusRows)
     val q = vecStream.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
@@ -684,13 +668,14 @@ object EventStream {
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         val batchIdx = graft.queries.VectorOps.index(batch, id, vec)
         try {
-          val verdicts =
-            if (useCells)
+          val verdicts = shape match {
+            case None =>
               graft.queries.VectorOps.semanticIncrementalCellsIndexed(
                 corpusIdx, batchIdx, minCos, dims = dims)
-            else graft.queries.VectorOps.semanticIncrementalIndexed(
-              corpusIdx, batchIdx, minCos, resolvedPlanes, resolvedBands,
-              dims)
+            case Some((p, b)) =>
+              graft.queries.VectorOps.semanticIncrementalIndexed(
+                corpusIdx, batchIdx, minCos, p, b, dims)
+          }
           val admitted = batch.join(
             verdicts.filter(col("verdict") === "new")
               .select(col("vec_id").as("__new_id")),

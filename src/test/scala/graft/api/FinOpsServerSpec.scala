@@ -215,6 +215,35 @@ class FinOpsServerSpec extends SparkSpec {
     assert(body.contains("\"success\":false"))
   }
 
+  test("a request body over the byte cap answers 413 while streaming in") {
+    // streamed, not buffered client-side: the server must cut the read at
+    // the cap instead of buffering whatever a POST carries
+    val n = Requests.DefaultMaxBodyBytes + 1
+    val url = URI.create(
+      s"http://127.0.0.1:${server.boundPort}/api/v1/finops/sql/query").toURL
+    val conn = url.openConnection().asInstanceOf[HttpURLConnection]
+    conn.setRequestMethod("POST")
+    conn.setDoOutput(true)
+    conn.setFixedLengthStreamingMode(n)
+    val out = conn.getOutputStream
+    val chunk = Array.fill[Byte](64 * 1024)(' '.toByte)
+    var left = n
+    while (left > 0) {
+      val k = math.min(left, chunk.length.toLong).toInt
+      out.write(chunk, 0, k)
+      left -= k
+    }
+    out.close()
+    val status = conn.getResponseCode
+    val text = new String(conn.getErrorStream.readAllBytes(),
+      StandardCharsets.UTF_8)
+    conn.disconnect()
+    assert(status == 413, text)
+    assert(text.contains("\"success\":false"), text)
+    val (s2, b2) = get("/health")
+    assert(s2 == 200 && b2.contains("\"status\":\"healthy\""))
+  }
+
   test("unknown path returns a 404 envelope") {
     val (status, body) = get("/api/v1/finops/nope")
     assert(status == 404)

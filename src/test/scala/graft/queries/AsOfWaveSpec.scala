@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
   *   - the default horizon is the full committed set,
   *   - TAKEDOWNS are global: a tombstoned doc serves from NO snapshot
   *     (right-to-be-forgotten outranks reproducibility),
-  *   - compaction folds history (like any log-structured store),
-  *   - a flat (unpartitioned) index refuses the parameter loudly. */
+  *   - compaction folds history (like any log-structured store). */
 class AsOfWaveSpec extends SparkSpec {
 
   private lazy val docs = Tables.load(spark, sfDir, "documents")
@@ -83,15 +82,6 @@ class AsOfWaveSpec extends SparkSpec {
     assert(v1.nonEmpty && v1.forall { case (v, p) =>
       v != "exact_dup" && p != victim },
       s"a tombstoned doc served from a historical horizon: ${v1.mkString(";")}")
-
-    // flat layout refuses the parameter
-    val dF = java.nio.file.Files.createTempDirectory("asof_flat").toString
-    DedupIndex.build(corpus, "doc_id", "text", dF, prefix = "asof_flat",
-      pvals = 0)
-    intercept[IllegalArgumentException] {
-      DedupIndex.incrementalDedup(twinsA, "doc_id", "text", "asof_flat",
-        asOfWave = 0).count()
-    }
   }
 
   test("vector probes and knn rewind; default equals latest") {

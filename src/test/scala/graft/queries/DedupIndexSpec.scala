@@ -574,7 +574,7 @@ class DedupIndexSpec extends SparkSpec {
       // hashes + shingles appear in the served plan; the BANDS scan runs
       // once at candidate-staging time (localCheckpoint) and so leaves
       // the final plan — its pruning uses the identical pruned() helper
-      // and its correctness is covered by the flat-parity check below
+      // and its correctness is covered by the parity check below
       assert(scans.size >= 2, s"expected hashes+shingles scans, got $scans")
       assert(scans.forall(_.partitionFilters.nonEmpty),
         "an index scan carries no partition filter — nothing prunes")
@@ -590,15 +590,11 @@ class DedupIndexSpec extends SparkSpec {
       }
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
 
-    // pruning must be invisible to results: verdicts equal the ones a
-    // legacy FLAT index serves for the same batch
-    val ld = java.nio.file.Files.createTempDirectory("dedup_idx_flt").toString
-    val lpfx = "dedup_idx_flt"
-    DedupIndex.build(docs.filter(!isBatch), "doc_id", "text", ld,
-      prefix = lpfx, pvals = 0)
-    assert(DedupIndex.pvalsOf(spark, lpfx) == 0)
+    // pruning must be invisible to results: verdicts equal the unpruned
+    // in-session operator's over the same corpus
     val full = batchOf(docs)
-    val want = DedupIndex.incrementalDedup(full, "doc_id", "text", lpfx)
+    val want = TextOps.incrementalDedup(full, docs.filter(!isBatch),
+        "doc_id", "text")
       .collect().map(_.toString).sorted.toSeq
     val got = DedupIndex.incrementalDedup(full, "doc_id", "text", prefix)
       .collect().map(_.toString).sorted.toSeq

@@ -5,14 +5,15 @@ import graft.operators.Bucketing
 import org.apache.spark.sql.functions._
 
 /** The r16 grain story (r15 verdict item 1): the serving indexes'
-  * hash-partition grain is (a) AUTO-SIZED from the corpus at build —
-  * `DefaultPvals = 64` was static, and the r15 1000×-decade series
-  * measured the consequence (probe wall 1.13 → 3.57 s across one decade
-  * at fixed grain) — and (b) RE-SIZABLE after the fact: `compact` accepts
-  * a grain override and re-partitions during the rewrite it already does,
-  * so an outgrown (or legacy flat) index is corrected without the
-  * original corpus and without retraining. Grain must be INVISIBLE to
-  * results: every test pins verdict/ANN parity across grains. */
+  * hash-partition grain is (a) AUTO-SIZED from the corpus at build — a
+  * static grain of 64 was the old default, and the r15 1000×-decade
+  * series measured the consequence (probe wall 1.13 → 3.57 s across one
+  * decade at fixed grain) — and (b) RE-SIZABLE after the fact: `compact`
+  * accepts a grain override and re-partitions during the rewrite it
+  * already does, so an outgrown index is corrected without the original
+  * corpus and without retraining. Grain must be INVISIBLE to results:
+  * every test pins verdict/ANN parity across grains. Grain 0 (the removed
+  * flat layout) is refused at build and at attach. */
 class GrainSpec extends SparkSpec {
 
   private lazy val docs = Tables.load(spark, sfDir, "documents")
@@ -114,31 +115,43 @@ class GrainSpec extends SparkSpec {
       "AutoPvals compact did not size the grain from live rows")
   }
 
-  test("text index: compact upgrades a flat legacy index to the partitioned layout") {
-    val corpus = docs.filter(col("doc_id") % 10 =!= 3)
-    val batch = docs.filter(col("doc_id") % 10 === 3).unionAll(
-      corpus.filter(col("doc_id") % 100 === 4)
-        .select((col("doc_id") + 230000L).as("doc_id"), col("text")))
-    val d = java.nio.file.Files.createTempDirectory("grain_up").toString
-    DedupIndex.build(corpus, "doc_id", "text", d, prefix = "grain_up",
-      pvals = 0) // the pre-partitioning layout
-    assert(DedupIndex.pvalsOf(spark, "grain_up") == 0)
-    def probe() = DedupIndex
-      .incrementalDedup(batch, "doc_id", "text", "grain_up")
-      .collect().map(_.toString).sorted.toSeq
-    val want = probe()
-    val d2 = java.nio.file.Files.createTempDirectory("grain_up2").toString
-    DedupIndex.compact(spark, d2, "grain_up", pvals = 32)
-    assert(DedupIndex.pvalsOf(spark, "grain_up") == 32)
-    assert(Bucketing.committedWaves(spark, d2) == Seq(0),
-      "upgraded artifact must carry a committed wave-0 marker")
-    assert(probe() == want, "flat->partitioned upgrade changed verdicts")
-    // and the upgraded artifact attaches like any partitioned build
-    Seq("hashes", "bands", "shingles", "meta", "tombs")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS grain_up_$t"))
+  test("grain 0 builds and meta-less or grain-0 attaches are refused") {
+    val corpus = docs.filter(col("doc_id") % 50 === 1)
+    val dT = java.nio.file.Files.createTempDirectory("grain_zero_t").toString
+    val eT = intercept[IllegalArgumentException] {
+      DedupIndex.build(corpus, "doc_id", "text", dT, prefix = "grain_zt",
+        pvals = 0)
+    }
+    assert(eT.getMessage.contains("Auto sentinel"), eT.getMessage)
+    val vecs = emb.filter(col("vec_id") % 20 === 1)
+    val dV = java.nio.file.Files.createTempDirectory("grain_zero_v").toString
+    val eV = intercept[IllegalArgumentException] {
+      VectorIndex.build(vecs, "vec_id", "embedding", dV, minCos = 0.35,
+        prefix = "grain_zv", pcells = 0)
+    }
+    assert(eV.getMessage.contains("Auto sentinel"), eV.getMessage)
+
+    // a healthy build whose meta row is deleted (the flat layout's shape)
+    // or rewritten with grain 0: attach refuses both, naming the remedy
+    DedupIndex.build(corpus, "doc_id", "text", dT, prefix = "grain_zt")
+    VectorIndex.build(vecs, "vec_id", "embedding", dV, minCos = 0.35,
+      prefix = "grain_zv")
+    def refused(attach: => Unit): Unit = {
+      val e = intercept[IllegalArgumentException](attach)
+      assert(e.getMessage.contains("rebuild it from the corpus"),
+        e.getMessage)
+    }
+    val zeroed = spark.read.parquet(s"$dV/meta")
+      .withColumn("pcells", lit(0)).collect()
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$dT/meta"))
+    spark.createDataFrame(
+      java.util.Arrays.asList(zeroed: _*),
+      spark.read.parquet(s"$dV/meta").schema)
+      .write.mode("overwrite").parquet(s"$dV/meta")
     val fresh = spark.newSession()
-    DedupIndex.attach(fresh, d2, "grain_up")
-    assert(DedupIndex.pvalsOf(fresh, "grain_up") == 32)
+    refused(DedupIndex.attach(fresh, dT, "grain_zt"))
+    refused(VectorIndex.attach(fresh, dV, "grain_zv"))
   }
 
   // ---- vector index -----------------------------------------------------
@@ -192,13 +205,13 @@ class GrainSpec extends SparkSpec {
       "fresh-session ANN over the re-grained index diverged")
   }
 
-  test("vector index: compact upgrades a flat legacy index; auto re-grain sizes from live rows") {
+  test("vector index: auto re-grain compact sizes pcells from live rows") {
     val corpus = emb.filter(col("vec_id") % 7 =!= 3)
     val batch = emb.filter(col("vec_id") % 7 === 3).limit(5)
     val d = java.nio.file.Files.createTempDirectory("grain_vup").toString
     VectorIndex.build(corpus, "vec_id", "embedding", d, minCos = 0.35,
-      prefix = "grain_vup", pcells = 0)
-    assert(VectorIndex.meta(spark, "grain_vup").pcells == 0)
+      prefix = "grain_vup", pcells = 64)
+    assert(VectorIndex.meta(spark, "grain_vup").pcells == 64)
     def verdicts() = VectorIndex
       .incrementalDedup(batch, "vec_id", "embedding", "grain_vup")
       .collect().map(_.toString).sorted.toSeq
@@ -208,8 +221,8 @@ class GrainSpec extends SparkSpec {
       pcells = VectorIndex.AutoPcells)
     val m = VectorIndex.meta(spark, "grain_vup")
     assert(m.pcells == Bucketing.autoGrain(corpus.count()),
-      s"auto upgrade sized pcells=${m.pcells}")
+      s"auto re-grain sized pcells=${m.pcells}")
     assert(Bucketing.committedWaves(spark, d2) == Seq(0))
-    assert(verdicts() == want, "flat->partitioned upgrade changed verdicts")
+    assert(verdicts() == want, "auto re-grain changed verdicts")
   }
 }

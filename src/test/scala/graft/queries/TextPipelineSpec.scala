@@ -50,15 +50,6 @@ class TextPipelineSpec extends SparkSpec {
     t.unpersist()
   }
 
-  test("q54 one-shuffle variant is bit-equal to the windowed plan") {
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
-    val a = TextPipeline.q54TfidfTopK(spark, sfDir)
-      .collect().map(_.toString).toSeq
-    val b = TextPipeline.tfidfTopKOneShuffle(d, 5)
-      .orderBy("doc_id", "rank").collect().map(_.toString).toSeq
-    assert(a == b, "the alternative plan changed q54's output")
-  }
-
   test("q55 packing: offsets stay under budget and bins fill contiguously") {
     val p = TextPipeline.q55SeqPacking(spark, sfDir).cache()
     assert(p.filter(col("bin_offset") >= TextPipeline.PackBudget ||

@@ -364,16 +364,14 @@ class VectorIndexSpec extends SparkSpec {
       }
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
 
-    // pruning must be invisible to results: verdicts equal the ones a
-    // legacy UNPARTITIONED index serves for the same batch
-    val ldir = java.nio.file.Files.createTempDirectory("vec_idx_leg").toString
-    val lpfx = "vec_idx_legb"
-    VectorIndex.build(emb.filter(!isBatch), "vec_id", "embedding", ldir,
-      MinCos, prefix = lpfx, targetCellRows = 64, pcells = 0)
-    assert(VectorIndex.meta(spark, lpfx).pcells == 0)
+    // pruning must be invisible to results: verdicts equal the unpruned
+    // in-session cell-sharded operator's at the same targetCellRows
     val fullBatch = batchOf(emb)
-    val want = VectorIndex.incrementalDedup(fullBatch, "vec_id", "embedding",
-      lpfx).collect().map(_.toString).sorted.toSeq
+    val want = VectorOps.semanticIncrementalCellsIndexed(
+        VectorOps.index(emb.filter(!isBatch), "vec_id", "embedding"),
+        VectorOps.index(fullBatch, "vec_id", "embedding"), MinCos,
+        targetCellRows = 64)
+      .collect().map(_.toString).sorted.toSeq
     val got = VectorIndex.incrementalDedup(fullBatch, "vec_id", "embedding",
       prefix).collect().map(_.toString).sorted.toSeq
     assert(got == want, "partition pruning changed serving verdicts")

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 /** The cold-start mitigation (r16 verdict item 3): `warm()` pulls an
   * attached index's bytes through the page cache at sequential bandwidth
   * so the FIRST serving probe doesn't pay them as scattered reads inside
-  * its latency (the measured 2.8–9× cold penalty, ColdWarmProbe /
-  * BENCH_NOTES r16 — bytes, not listing). Correctness here; the decade
-  * A/B lives in `graft.ColdWarmProbe`. */
+  * its latency (the measured 2.8–9× cold penalty, BENCH_NOTES r16 —
+  * bytes, not listing). Correctness here; the decade A/B is recorded in
+  * BENCH_NOTES. */
 class WarmAttachSpec extends SparkSpec {
 
   private lazy val docs = Tables.load(spark, sfDir, "documents")
