@@ -20,9 +20,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * }}}
   *
   * Differences from the reference, by design (SURVEY.md §4): one
-  * long-lived SparkSession instead of a connection per query; lazy
-  * pruned temp views instead of eager materialization; results are
-  * DataFrames the caller collects.
+  * long-lived SparkSession instead of a connection per query; results
+  * are DataFrames the caller collects. Like the reference, the pruned
+  * export is materialized once — per registration, not per query, and
+  * only when it fits: [[ensureRegistered]] persists the registered view
+  * as an in-memory columnar relation when [[GraftFinOpsEngine.fitsInMemory]]
+  * accepts its listed bytes, so every later route and ad-hoc query scans
+  * cached column batches instead of decoding parquet again. An export
+  * too large for the storage memory keeps the lazy, partition-pruned
+  * view.
   */
 final class GraftFinOpsEngine(
     val config: DataConfig,
@@ -47,19 +53,40 @@ final class GraftFinOpsEngine(
   // source selection re-resolves on every call and re-registers only when
   // the resolved root actually changes.
   @volatile private var registeredRoot: Option[String] = None
+  // the registered view this engine persisted; None = the view is lazy
+  private var materialized: Option[DataFrame] = None
 
   /** Source selection + registration (duckdb_engine.py:246-266), re-run
-    * whenever the requested forceS3 resolves to a different root. */
+    * whenever the requested forceS3 resolves to a different root. Each
+    * registration then materializes the view once when it fits
+    * ([[materialize]]); a root change releases the previous root's copy
+    * without blocking, so requests already planned over it recompute
+    * from the files and stay correct. */
   def ensureRegistered(forceS3: Boolean = false): Unit = synchronized {
     val root = PartitionCatalog.chooseRoot(config, forceS3)
       .getOrElse(throw new IllegalStateException(
         "no data source configured: set localDataPath or s3Bucket"))
     if (!registeredRoot.contains(root)) {
-      PartitionCatalog.register(spark, root, config)
+      val reg = PartitionCatalog.registerListed(spark, root, config)
+      materialized.foreach(_.unpersist(blocking = false))
+      materialized = materialize(reg)
       registerApiTables()
       registeredRoot = Some(root)
     }
   }
+
+  /** Persist the registered view (MEMORY_AND_DISK) and force it with one
+    * count, when the export fits; otherwise leave it lazy. Re-registering
+    * the same files elsewhere in the session keeps hitting this copy: the
+    * cache matches plans, not view names. */
+  private def materialize(reg: PartitionCatalog.Registered): Option[DataFrame] =
+    if (!GraftFinOpsEngine.fitsInMemory(reg.listedBytes,
+        GraftFinOpsEngine.freeStorageBytes(spark))) None
+    else {
+      reg.view.persist()
+      reg.view.count()
+      Some(reg.view)
+    }
 
   /** "When API data sources are enabled, these tables are automatically
     * available" (reference README.md:583-592): one delegation to the
@@ -150,6 +177,32 @@ final class GraftFinOpsEngine(
 }
 
 object GraftFinOpsEngine {
+
+  /** Cached bytes per listed byte of a CUR export, rounded up from the
+    * measured expansion: the benchmark's 600k-row, 83-partition parquet
+    * export lists 45.1 MB and caches as 304.4 MB of column batches (6.7x).
+    * A gzip CSV export is sized by the same ratio (not measured). */
+  private[graft] val CachedBytesPerListedByte: Long = 8
+
+  /** The materialization rule: the expanded copy may take at most half of
+    * the free storage memory. The other half stays with the queries'
+    * execution memory, which may evict cached blocks beyond Spark's
+    * default 0.5 storage share (MEMORY_AND_DISK moves an evicted block to
+    * local disk, so a misjudged size costs time, not correctness). */
+  private[graft] def fitsInMemory(listedBytes: Long, freeStorageBytes: Long): Boolean =
+    listedBytes <= freeStorageBytes / 2 / CachedBytesPerListedByte
+
+  /** Storage memory the block managers that hold cached blocks report as
+    * free: the driver's in local mode, the executors' on a cluster. */
+  private[graft] def freeStorageBytes(spark: SparkSession): Long = {
+    val sc = spark.sparkContext
+    val status = sc.getExecutorMemoryStatus
+    val holders =
+      if (sc.isLocal) status
+      else status.toMap - org.apache.spark.SparkEnv.get.blockManager.blockManagerId.hostPort
+    holders.values.map(_._2).sum
+  }
+
   def apply(config: DataConfig,
       spark: SparkSession = GraftSession.local()): GraftFinOpsEngine =
     new GraftFinOpsEngine(config, spark)

@@ -1,14 +1,16 @@
 package graft.analytics
 
 import graft.views.KpiViews
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import java.time.LocalDate
 
 /** KPI comprehensive summary (reference analytics/kpi_summary.py,
   * test_12's golden `kpi_tracker_results.json` shape): builds the view
   * DAG, aggregates kpi_tracker over the window, and shapes the nested
-  * summary including the savings rollup (SURVEY.md §2.9 C5).
+  * summary including the savings rollup (SURVEY.md §2.9 C5). The DAG is
+  * built once per CUR view: it is rebuilt only when `table` has been
+  * replaced since (a re-registration or a root change), not per request.
   */
 final class KpiSummary(spark: SparkSession, asOf: LocalDate,
     table: String = "CUR") {
@@ -34,12 +36,31 @@ final class KpiSummary(spark: SparkSession, asOf: LocalDate,
       s3AllStorageCost: Double,
       savings: SavingsSummary)
 
+  // the temp view `table` named when the DAG was last built, and that
+  // DAG's kpi_tracker frame (kept, so a later registration of the views by
+  // someone else cannot swap the frame this summary reads)
+  private var built: Option[(AnyRef, DataFrame)] = None
+
+  /** kpi_tracker over the current `table`: the DAG is registered again
+    * only when `table` names a different view than at the last build. A
+    * table that is not a temp view has no identity to compare, so it is
+    * rebuilt on every call. */
+  private def tracker(): DataFrame = synchronized {
+    val cur = spark.sessionState.catalog.getRawTempView(table)
+    built match {
+      case Some((v, t)) if cur.exists(_ eq v) => t
+      case _ =>
+        val t = KpiViews.registerAll(spark, asOf, table)
+        built = cur.map(v => (v, t))
+        t
+    }
+  }
+
   /** Build DAG + aggregate + shape (kpi_summary.py:26-78, :322-450). */
   def comprehensiveSummary(billingPeriod: Option[String] = None,
       accountFilter: Option[Seq[String]] = None): ComprehensiveSummary = {
-    KpiViews.registerAll(spark, asOf, table)
     // filter injection (kpi_summary.py:290-320)
-    var t = spark.table("kpi_tracker")
+    var t = tracker()
     billingPeriod.foreach(bp =>
       t = t.filter(date_format(col("billing_period"), "yyyy-MM") === bp))
     accountFilter.foreach(accts => t = t.filter(col("linked_account_id").isin(accts: _*)))

@@ -11,8 +11,10 @@ import java.nio.file.{Files, Paths}
   *   - results stay lazy DataFrames; callers decide when to collect.
   *
   * Unlike the reference there is no per-query connection, no Arrow/pandas
-  * conversion fallback, and no eager materialization — Catalyst plans a
-  * distributed scan with pushdown each time.
+  * conversion fallback, and no materialization per query — Catalyst plans
+  * each query over the registered view, which scans the cached columnar
+  * copy when [[graft.GraftFinOpsEngine]] materialized it at registration
+  * and the pruned parquet files with pushdown otherwise.
   */
 class GraftEngine(val spark: SparkSession,
     referenceDate: Option[java.time.LocalDate] = None) {

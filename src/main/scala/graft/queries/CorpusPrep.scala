@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** End-to-end pretraining-corpus preparation: the individual operators
@@ -115,8 +116,9 @@ object CorpusPrep {
   /** `packed` — the training mix (one row per surviving doc with its bin
     * assignment); `survivors` — the cleaned (doc_id, text, strata) frame
     * feeding it; `stats` — one row per stage with the surviving doc
-    * count; `release()` — drops the dedup derivation caches this run
-    * persisted (shingle sets, hashed rows, the pair frame), which are
+    * count; `release()` — drops the caches this run persisted (the
+    * survivors, a driver-local input's copy, and the dedup derivations:
+    * shingle sets, hashed rows, the pair frame), which are
     * keyed to internal plans a caller could not otherwise reach: call it
     * when done with the result in a long-lived session, or caches
     * accumulate across prepare() calls. */
@@ -129,8 +131,18 @@ object CorpusPrep {
   def prepare(df: DataFrame, id: String, text: String, strata: String,
       bench: Option[DataFrame] = None,
       cfg: Config = Config()): Prepared = {
-    val dIn = df.select(col(id).cast("long").as("doc_id"),
+    val dInPlan = df.select(col(id).cast("long").as("doc_id"),
       col(text).cast("string").as("text"), col(strata))
+    // a driver-local input (createDataFrame over collected rows) is cached
+    // once: left bare, the optimizer's ConvertToLocalRelation folds every
+    // text projection over it into the plan, evaluating it interpretively
+    // on the driver again for each of the many plans a run optimizes. Its
+    // rows already sit in driver memory, so the copy is bounded by them.
+    val localInput = dInPlan.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation])
+    val dIn =
+      if (localInput) Caching.cached(dInPlan, "spark.graft.dedup.storageLevel")
+      else dInPlan
 
     // 0. domain blocklist (optional): source-level drop before anything
     // touches the text
@@ -305,8 +317,11 @@ object CorpusPrep {
       case None => d5
     }
 
-    // 6. pack survivors into token-budget bins per stratum
-    val packed = TextPipeline.packOf(d6, strata, cfg.packBudget)
+    // 6. pack survivors into token-budget bins per stratum. The survivors
+    // are cached: packing, the stats and every caller probe read them, and
+    // uncached each read re-derives (and re-plans) the whole pipeline.
+    val survivors = Caching.cached(d6, "spark.graft.dedup.storageLevel")
+    val packed = TextPipeline.packOf(survivors, strata, cfg.packBudget)
 
     def stage(ord: Int, name: String, frame: DataFrame): DataFrame =
       frame.agg(count(lit(1)).as("n_docs"))
@@ -338,7 +353,10 @@ object CorpusPrep {
       }
       TextDedup.unpersistDerivationsOf(d3Text)
       importanceModel.foreach(_.unpersist(false))
+      survivors.unpersist(false)
+      if (localInput) dIn.unpersist(false)
+      ()
     }
-    Prepared(packed, d6, stats, release)
+    Prepared(packed, survivors, stats, release)
   }
 }

@@ -10,7 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (s3_data_manager.py:24-162, local_data_manager.py:20-95,
   * duckdb_engine.py:97-182) — but registered as a LAZY temp view so
   * Catalyst pushes filters/projections into the parquet scan instead of the
-  * reference's eager CREATE TABLE AS materialization.
+  * reference's eager CREATE TABLE AS materialization. `register` itself
+  * always stays lazy; the one copy is [[graft.GraftFinOpsEngine]]'s: it
+  * materializes the registered view once per registration, and only when
+  * the listed bytes fit the session's storage memory.
   *
   * All listing goes through the Hadoop `FileSystem` API, so the SAME
   * pruning drives every scheme the deployment has on its classpath —
@@ -110,7 +113,19 @@ object PartitionCatalog {
     * kpi_instance_all.sql:10-11 — Spark's basePath partition discovery
     * gives it natively; we select it under the export type's column name
     * lowercased for query compatibility). */
-  def register(spark: SparkSession, root: String, cfg: DataConfig): DataFrame = {
+  def register(spark: SparkSession, root: String, cfg: DataConfig): DataFrame =
+    registerListed(spark, root, cfg).view
+
+  /** One registration: the lazy view and the pruned files it scans. */
+  private[graft] final case class Registered(view: DataFrame, files: Seq[PartFile]) {
+    /** Bytes of the registered files as listed (no extra stat). */
+    def listedBytes: Long = files.iterator.map(_.sizeBytes).sum
+  }
+
+  /** [[register]], keeping the pruned file list it registered, so a caller
+    * sizes the export without listing it again. */
+  private[graft] def registerListed(spark: SparkSession, root: String,
+      cfg: DataConfig): Registered = {
     // the session's Hadoop conf carries cluster credentials/endpoints for
     // remote schemes; a bare Configuration would miss them
     val conf = spark.sessionState.newHadoopConf()
@@ -137,7 +152,7 @@ object PartitionCatalog {
         df.withColumnRenamed(pcol, pcol.toLowerCase)
       else df
     out.createOrReplaceTempView(cfg.tableName)
-    out
+    Registered(out, files)
   }
 
   /** Source selection local-vs-S3 (duckdb_engine.py:246-266): prefer the

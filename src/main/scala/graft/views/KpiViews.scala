@@ -23,9 +23,13 @@ import java.time.LocalDate
   * of hand-writing each CASE (same semantics, one definition).
   *
   * Scale: every view is a LAZY temp view — Catalyst inlines the whole DAG
-  * into one plan per query, pushes the month filter into the partition-
-  * pruned scan, and AQE broadcasts the small post-aggregation join sides
-  * (the reference materializes each view eagerly in DuckDB RAM instead).
+  * into one plan per query, pushes the month filter into the CUR scan
+  * (partition pruning over parquet, batch statistics over the engine's
+  * in-memory copy), and AQE broadcasts the small post-aggregation join
+  * sides (the reference materializes each view eagerly in DuckDB RAM
+  * instead). Registering the DAG costs about a second of analysis, so
+  * [[graft.analytics.KpiSummary]] does it once per CUR view, not per
+  * request.
   *
   * `asOf` pins the reference's CURRENT_DATE-relative 3-month window
   * (kpi_tracker.sql:93,206) for deterministic tests.

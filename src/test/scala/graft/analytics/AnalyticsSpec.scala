@@ -160,6 +160,29 @@ class AnalyticsSpec extends SparkSpec {
     assert(s.savings.totalPotentialSavings > 0)
   }
 
+  test("kpi summary builds its view DAG once per CUR view and follows a replaced view") {
+    import org.apache.spark.sql.functions.col
+    val views = spark.sessionState.catalog
+    val all = CurFixture.df(spark)
+    all.createOrReplaceTempView("CUR_KPI_SWAP")
+    try {
+      val kpi = new FinOps(spark, "CUR_KPI_SWAP", asOf).kpi
+      val first = kpi.comprehensiveSummary()
+      assert(first.recordsAnalyzed == CurFixture.rows.size)
+      // a second request reuses the DAG: no view is registered again
+      val tracker = views.getRawTempView("kpi_tracker").get
+      assert(kpi.comprehensiveSummary() == first)
+      assert(views.getRawTempView("kpi_tracker").get eq tracker)
+      // a replaced CUR view (re-registration, root change) is read
+      val one = all.filter(col("line_item_usage_account_id") === "222222222222")
+      one.createOrReplaceTempView("CUR_KPI_SWAP")
+      val second = kpi.comprehensiveSummary()
+      assert(second.recordsAnalyzed == one.count())
+      assert(second.spendAllCost > 0 && second.spendAllCost < first.spendAllCost)
+      assert(!(views.getRawTempView("kpi_tracker").get eq tracker))
+    } finally spark.catalog.dropTempView("CUR_KPI_SWAP")
+  }
+
   test("health check composes category scores") {
     val h = finops.healthCheck()
     assert(h.categoryScores.keySet ==
