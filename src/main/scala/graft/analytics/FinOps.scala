@@ -26,8 +26,10 @@ final class FinOps(val spark: SparkSession, val table: String = "CUR",
 
   /** C6: health scoring — savings ratio ×2 capped at 100, −5 pts per idle
     * resource, mean of category scores (finops_engine.py:249-287). */
-  def healthCheck(): HealthCheck = {
-    val summary = kpi.comprehensiveSummary()
+  def healthCheck(): HealthCheck = healthOf(kpi.comprehensiveSummary())
+
+  /** [[healthCheck]] over a KPI summary the caller already computed. */
+  private def healthOf(summary: kpi.ComprehensiveSummary): HealthCheck = {
     val savingsRatio =
       if (summary.spendAllCost > 0)
         summary.savings.totalPotentialSavings / summary.spendAllCost * 100
@@ -75,7 +77,7 @@ final class FinOps(val spark: SparkSession, val table: String = "CUR",
   def executiveSummary(): ExecutiveSummary = {
     val summary = kpi.comprehensiveSummary()
     val invoice = spend.invoiceSummary()
-    val health = healthCheck()
+    val health = healthOf(summary)
     val mom = invoice.momChangePct.getOrElse(0.0)
     val potential = summary.savings.totalPotentialSavings
     ExecutiveSummary(

@@ -18,7 +18,11 @@ import java.util.concurrent.Executors
   *
   * Deployment note: the server runs DRIVER-side on a cluster — each
   * request plans a Spark job and collects an API-sized (LIMIT-bounded)
-  * result, exactly like the reference collects a DuckDB result. The
+  * result, exactly like the reference collects a DuckDB result. A repeated
+  * GET of a route marked `cached` is answered from the [[ResponseCache]]
+  * instead, until the CUR view is replaced (the reference memoizes its
+  * analytics with a TTL, performance.py:140-281; here the registration
+  * scopes the entries, so there is no TTL to tune). The
   * request pool is deliberately small: concurrency should come from
   * Spark's scheduler (fair pools), not from stacking driver threads.
   */
@@ -64,19 +68,32 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
 
   private type Handler = HttpExchange => Any
 
-  private val routes: Map[(String, String), Handler] = Map(
-    ("GET", "/") -> (_ => Map(
+  /** A bound handler; `cached` marks a GET whose answer reads only the CUR
+    * view and asOf, so its 200 bodies are served from [[ResponseCache]]
+    * while the view keeps its identity. Routes that read the catalog or a
+    * request body are `live`. */
+  private final case class Route(handler: Handler, cached: Boolean)
+  private def cached(h: Handler): Route = Route(h, cached = true)
+  private def live(h: Handler): Route = Route(h, cached = false)
+
+  private val responses = new ResponseCache(finops.spark, finops.table)
+
+  /** Responses held for the current CUR view. */
+  private[api] def cachedResponses: Int = responses.size
+
+  private val routes: Map[(String, String), Route] = Map(
+    ("GET", "/") -> live(_ => Map(
       "message" -> "FinOps Cost Analytics API", "version" -> "1.0.0",
       "health" -> "/health", "api_base" -> "/api/v1/finops")),
-    ("GET", "/health") -> (_ => Map(
+    ("GET", "/health") -> live(_ => Map(
       "status" -> "healthy", "version" -> "1.0.0",
       "engine_status" -> "operational", "data_source" -> "local")),
 
     // KPI (kpi_endpoints.py)
-    ("GET", "/api/v1/finops/kpi/summary") -> (_ => finops.kpi.comprehensiveSummary()),
-    ("GET", "/api/v1/finops/kpi/health-check") -> (_ => finops.healthCheck()),
-    ("GET", "/api/v1/finops/kpi/executive-summary") -> (_ => finops.executiveSummary()),
-    ("GET", "/api/v1/finops/kpi/dashboard-data") -> { _ =>
+    ("GET", "/api/v1/finops/kpi/summary") -> cached(_ => finops.kpi.comprehensiveSummary()),
+    ("GET", "/api/v1/finops/kpi/health-check") -> cached(_ => finops.healthCheck()),
+    ("GET", "/api/v1/finops/kpi/executive-summary") -> cached(_ => finops.executiveSummary()),
+    ("GET", "/api/v1/finops/kpi/dashboard-data") -> cached { _ =>
       // finops_engine.py:203-233 — every dashboard component in one call
       finops.dashboard().map {
         case (k, frame: DataFrame) => k -> collectRows(frame)
@@ -85,16 +102,16 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
     },
 
     // Spend (spend_endpoints.py)
-    ("GET", "/api/v1/finops/spend/invoice/summary") -> (_ => finops.spend.invoiceSummary()),
-    ("GET", "/api/v1/finops/spend/regions/top") -> (_ => df(finops.spend.topRegions())),
-    ("GET", "/api/v1/finops/spend/services/top") -> (_ => df(finops.spend.topServices())),
-    ("GET", "/api/v1/finops/spend/breakdown") -> { ex =>
+    ("GET", "/api/v1/finops/spend/invoice/summary") -> cached(_ => finops.spend.invoiceSummary()),
+    ("GET", "/api/v1/finops/spend/regions/top") -> cached(_ => df(finops.spend.topRegions())),
+    ("GET", "/api/v1/finops/spend/services/top") -> cached(_ => df(finops.spend.topServices())),
+    ("GET", "/api/v1/finops/spend/breakdown") -> cached { ex =>
       val dims = param(ex, "dimensions")
         .map(_.split(",").toSeq).getOrElse(Seq("region", "service"))
       df(finops.spend.spendBreakdown(dims))
     },
-    ("GET", "/api/v1/finops/spend/trend") -> (_ => df(finops.spend.monthlySpend())),
-    ("POST", "/api/v1/finops/spend/export") -> { ex =>
+    ("GET", "/api/v1/finops/spend/trend") -> cached(_ => df(finops.spend.monthlySpend())),
+    ("POST", "/api/v1/finops/spend/export") -> live { ex =>
       val raw = body(ex)
       finops.spend.exportSpendData(
         format = jsonField(raw, "format").getOrElse("csv"),
@@ -104,10 +121,10 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
 
     // Optimization (optimization_endpoints.py)
     ("GET", "/api/v1/finops/optimization/idle-resources") ->
-      (_ => df(finops.optimization.idleResources())),
+      cached(_ => df(finops.optimization.idleResources())),
     ("GET", "/api/v1/finops/optimization/rightsizing") ->
-      (_ => df(finops.optimization.rightsizing())),
-    ("GET", "/api/v1/finops/optimization/cross-service-migration") -> { _ =>
+      cached(_ => df(finops.optimization.rightsizing())),
+    ("GET", "/api/v1/finops/optimization/cross-service-migration") -> cached { _ =>
       val rows = collectRows(finops.optimization.crossServiceMigration())
       val annual = rows.map(r =>
         r("potential_monthly_savings").asInstanceOf[Double] * 12).sum
@@ -115,7 +132,7 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
         "business_case" -> finops.optimization.migrationBusinessCase(annual),
         "roadmap" -> finops.optimization.migrationRoadmap(rows.nonEmpty))
     },
-    ("GET", "/api/v1/finops/optimization/vpc-charges") -> { ex =>
+    ("GET", "/api/v1/finops/optimization/vpc-charges") -> cached { ex =>
       val rows = collectRows(
         finops.optimization.vpcOptimization(dparam(ex, "min_transfer_cost", 100.0)))
       val total = rows.map(_("potential_savings").asInstanceOf[Double]).sum
@@ -124,7 +141,7 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
         "savings" -> math.rint(total * 100) / 100)
     },
 
-    ("POST", "/api/v1/finops/optimization/implement-recommendation") -> { ex =>
+    ("POST", "/api/v1/finops/optimization/implement-recommendation") -> live { ex =>
       val raw = body(ex)
       finops.optimization.implementRecommendation(
         recommendationId = jsonField(raw, "recommendation_id").getOrElse("unknown"),
@@ -132,7 +149,7 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
     },
 
     // Allocation (allocation_endpoints.py)
-    ("POST", "/api/v1/finops/allocation/tagging-rules") -> { ex =>
+    ("POST", "/api/v1/finops/allocation/tagging-rules") -> live { ex =>
       val node = ApiResponses.readTree(body(ex)).get("rules")
       val rules = if (node == null || !node.isArray) Seq.empty else {
         (0 until node.size()).map { i =>
@@ -151,7 +168,7 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
       Map("created_rules" -> created, "total_rules" -> created.size,
         "total_affected_resources" -> affected, "status" -> "success")
     },
-    ("GET", "/api/v1/finops/allocation/account-hierarchy") -> { _ =>
+    ("GET", "/api/v1/finops/allocation/account-hierarchy") -> cached { _ =>
       val rows = collectRows(finops.allocation.accountHierarchy())
       Map("accounts" -> rows.map(r => r +
           ("cost_center" -> finops.allocation.costCenterOf(
@@ -159,8 +176,8 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
         "allocation_rules" -> finops.allocation.allocationRules())
     },
     ("GET", "/api/v1/finops/allocation/tagging-compliance") ->
-      (_ => finops.allocation.complianceSummary()),
-    ("GET", "/api/v1/finops/allocation/cost-center-breakdown") -> { _ =>
+      cached(_ => finops.allocation.complianceSummary()),
+    ("GET", "/api/v1/finops/allocation/cost-center-breakdown") -> cached { _ =>
       val rows = collectRows(finops.allocation.costCenterBreakdown())
       val envTotals = rows.groupBy(_("environment").asInstanceOf[String])
         .map { case (env, rs) =>
@@ -169,13 +186,13 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
       Map("cost_centers" -> rows,
         "variances" -> finops.allocation.budgetVariances(envTotals))
     },
-    ("GET", "/api/v1/finops/allocation/third-party-integration") -> { _ =>
+    ("GET", "/api/v1/finops/allocation/third-party-integration") -> cached { _ =>
       Map("integrations" -> finops.allocation.thirdPartyIntegrations(),
         "sync_status" -> finops.allocation.syncStatus())
     },
 
     // Discounts (discounts_endpoints.py)
-    ("GET", "/api/v1/finops/discounts/current-agreements") -> { _ =>
+    ("GET", "/api/v1/finops/discounts/current-agreements") -> cached { _ =>
       val rep = finops.discounts.currentAgreements()
       Map("agreements" -> rep.agreements,
         "utilization" -> Map(
@@ -185,13 +202,13 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
           "underutilized_agreements" -> rep.underutilizedCount),
         "renewals" -> finops.discounts.renewalTimeline(rep.agreements))
     },
-    ("GET", "/api/v1/finops/discounts/negotiation-opportunities") -> { ex =>
+    ("GET", "/api/v1/finops/discounts/negotiation-opportunities") -> cached { ex =>
       df(finops.discounts.negotiationOpportunities(
         dparam(ex, "min_annual_spend", 10000.0)))
     },
     ("GET", "/api/v1/finops/discounts/usage-forecasting") ->
-      (_ => df(finops.discounts.usageForecastingDf())),
-    ("POST", "/api/v1/finops/discounts/commitment-planning") -> { _ =>
+      cached(_ => df(finops.discounts.usageForecastingDf())),
+    ("POST", "/api/v1/finops/discounts/commitment-planning") -> live { _ =>
       // the reference's three default scenarios (discounts.py:373-378)
       val scenarios = Seq((1, "No Upfront", 70.0), (3, "No Upfront", 50.0),
         (1, "All Upfront", 80.0))
@@ -203,8 +220,8 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
 
     // AI (ai_endpoints.py)
     ("GET", "/api/v1/finops/ai/anomaly-detection") ->
-      (_ => df(finops.ai.detectAnomalies())),
-    ("GET", "/api/v1/finops/ai/optimization-insights") -> { ex =>
+      cached(_ => df(finops.ai.detectAnomalies())),
+    ("GET", "/api/v1/finops/ai/optimization-insights") -> cached { ex =>
       val rows = collectRows(
         finops.ai.optimizationInsights(dparam(ex, "min_avg_monthly_spend", 1000.0)))
       val withInsights = rows.map { r =>
@@ -223,28 +240,28 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
           (r("service").asInstanceOf[String], r("pattern_type").asInstanceOf[String],
             r("growth_rate").asInstanceOf[Double]))))
     },
-    ("POST", "/api/v1/finops/ai/custom-analysis") -> { ex =>
+    ("POST", "/api/v1/finops/ai/custom-analysis") -> live { ex =>
       val q = jsonField(body(ex), "query").getOrElse("")
       mcp.ask(q) match {
         case Right(frame) => df(frame) + ("intent" -> finops.ai.parseIntent(q))
         case Left(err) => Map("success" -> false, "error" -> err)
       }
     },
-    ("GET", "/api/v1/finops/ai/forecasting") -> { _ =>
+    ("GET", "/api/v1/finops/ai/forecasting") -> cached { _ =>
       val monthly = collectRows(finops.spend.monthlySpend())
         .map(_("total_spend").asInstanceOf[Double]).reverse // asc
       Map("forecast" -> finops.ai.mlForecast(monthly))
     },
 
     // MCP (mcp_endpoints.py)
-    ("GET", "/api/v1/finops/mcp/resources") -> (_ => Map("resources" -> mcp.listResources())),
-    ("GET", "/api/v1/finops/mcp/tools") -> (_ => Map("tools" -> mcp.listTools())),
-    ("GET", "/api/v1/finops/mcp/stream-config") -> { _ =>
+    ("GET", "/api/v1/finops/mcp/resources") -> cached(_ => Map("resources" -> mcp.listResources())),
+    ("GET", "/api/v1/finops/mcp/tools") -> cached(_ => Map("tools" -> mcp.listTools())),
+    ("GET", "/api/v1/finops/mcp/stream-config") -> cached { _ =>
       Map("stream_config" -> mcp.streamConfig(),
         "event_schemas" -> mcp.eventSchemas(),
         "sample_events" -> mcp.sampleEvents())
     },
-    ("POST", "/api/v1/finops/mcp/query") -> { ex =>
+    ("POST", "/api/v1/finops/mcp/query") -> live { ex =>
       val q = jsonField(body(ex), "question").getOrElse("")
       mcp.ask(q) match {
         case Right(frame) => df(frame)
@@ -253,19 +270,19 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
     },
 
     // SQL (sql_endpoints.py:89-312)
-    ("POST", "/api/v1/finops/sql/query") -> { ex =>
+    ("POST", "/api/v1/finops/sql/query") -> live { ex =>
       val raw = body(ex)
       val sql = jsonField(raw, "query").getOrElse("")
       val maxRows = jsonField(raw, "max_rows").map(_.toInt).getOrElse(1000)
       Raw(ApiResponses.sqlQueryResponse(engine, sql, maxRows))
     },
-    ("GET", "/api/v1/finops/sql/schema") -> { ex =>
+    ("GET", "/api/v1/finops/sql/schema") -> live { ex =>
       val table = param(ex, "table").getOrElse("CUR")
       Map("table" -> table, "columns" ->
         finops.spark.table(table).schema.fields
           .map(f => Map("name" -> f.name, "type" -> f.dataType.simpleString)).toSeq)
     },
-    ("GET", "/api/v1/finops/sql/tables") -> { _ =>
+    ("GET", "/api/v1/finops/sql/tables") -> live { _ =>
       Map("tables" -> finops.spark.catalog.listTables().collect()
         .map(_.name).toSeq.sorted)
     })
@@ -275,31 +292,40 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
 
   /** Route discovery — the stand-in for FastAPI's generated /docs:
     * GET /api/v1/finops/routes lists every bound (method, path). */
-  private val allRoutes: Map[(String, String), Handler] = routes +
-    (("GET", "/api/v1/finops/routes") -> ((_: HttpExchange) =>
+  private val allRoutes: Map[(String, String), Route] = routes +
+    (("GET", "/api/v1/finops/routes") -> live(_ =>
       Map("routes" -> (routes.keys.toSeq :+ ("GET", "/api/v1/finops/routes"))
         .sortBy(r => (r._2, r._1))
         .map { case (m, p) => Map("method" -> m, "path" -> p) })))
 
+  private def utf8(json: String): Array[Byte] = json.getBytes(StandardCharsets.UTF_8)
+
+  private def render(value: Any): Array[Byte] = utf8(value match {
+    case Raw(s) => s
+    case v => toJson(v)
+  })
+
   server.createContext("/", (ex: HttpExchange) => {
-    val key = (ex.getRequestMethod, ex.getRequestURI.getPath)
-    val (status, json) = allRoutes.get(key) match {
+    val path = ex.getRequestURI.getPath
+    val (status, bytes) = allRoutes.get((ex.getRequestMethod, path)) match {
       case None =>
-        404 -> toJson(Map("success" -> false, "error" -> "not found",
-          "path" -> ex.getRequestURI.getPath))
-      case Some(handler) =>
-        try handler(ex) match {
-          case Raw(s) => 200 -> s
-          case value => 200 -> toJson(value)
+        404 -> utf8(toJson(Map("success" -> false, "error" -> "not found",
+          "path" -> path)))
+      case Some(route) =>
+        try {
+          def answer = render(route.handler(ex))
+          200 -> (if (!route.cached) answer else
+            responses(path, Option(ex.getRequestURI.getRawQuery).getOrElse(""))(answer))
         } catch {
-          case e: PayloadTooLarge => Requests.tooLarge(e)
+          case e: PayloadTooLarge =>
+            val (st, json) = Requests.tooLarge(e)
+            st -> utf8(json)
           case e: Exception =>
-            500 -> toJson(Map("success" -> false,
+            500 -> utf8(toJson(Map("success" -> false,
               "error" -> Option(e.getMessage).getOrElse(e.toString).take(500),
-              "error_type" -> GraftEngine.classifyError(e)))
+              "error_type" -> GraftEngine.classifyError(e))))
         }
     }
-    val bytes = json.getBytes(StandardCharsets.UTF_8)
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(status, bytes.length)
     ex.getResponseBody.write(bytes)

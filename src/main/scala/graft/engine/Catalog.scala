@@ -35,6 +35,20 @@ object Catalog {
       }.toMap
   }
 
+  /** The identity of the temp view `name` names now: the catalog's raw plan
+    * object, which every `createOrReplaceTempView` replaces (a
+    * re-registration, a root change). None when `name` is not a temp view,
+    * which has no identity to compare. Anything derived from a temp view
+    * stays valid while [[sameView]] holds for the identity read before the
+    * derivation started. */
+  def viewIdentity(spark: SparkSession, name: String): Option[AnyRef] =
+    spark.sessionState.catalog.getRawTempView(name)
+
+  /** Whether `name` still names the temp view whose identity was `seen`.
+    * Identities are fresh objects, so a replaced view never matches again. */
+  def sameView(spark: SparkSession, name: String, seen: AnyRef): Boolean =
+    viewIdentity(spark, name).exists(_ eq seen)
+
   /** Cheap schema description, mirroring DuckDBEngine.schema()
     * (duckdb_engine.py:315-327) — but free in Spark: no LIMIT-0 probe. */
   def schema(spark: SparkSession, table: String): Map[String, String] =

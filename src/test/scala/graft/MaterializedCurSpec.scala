@@ -12,6 +12,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.time.LocalDate
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
@@ -183,6 +184,41 @@ class MaterializedCurSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(cached(remote), "the new root was not materialized")
       remote.unpersist(blocking = true)
       spark.catalog.dropTempView("CUR_ROOT_PROBE")
+    } finally {
+      hc.unset("fs.s3a.impl")
+      hc.unset("fs.s3a.impl.disable.cache")
+    }
+  }
+
+  test("after a root change, a cached route's answer follows the new root") {
+    // the s3a root holds one account's rows, so its answers differ
+    val other = Files.createTempDirectory("cur_materialized_s3").toString
+    CurFixture.df(spark).filter(col("line_item_usage_account_id") === "222222222222")
+      .withColumnRenamed("billing_period", "BILLING_PERIOD")
+      .write.mode("overwrite").partitionBy("BILLING_PERIOD").parquet(other)
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.s3a.impl", classOf[MockS3aFileSystem].getName)
+    hc.setBoolean("fs.s3a.impl.disable.cache", true)
+    try {
+      val e = new GraftFinOpsEngine(config.copy(
+        s3Bucket = Some(MockS3aFileSystem.Bucket), s3Prefix = Some(other.stripPrefix("/"))),
+        spark)
+      val srv = e.serve(0)
+      try {
+        val local = call(srv.boundPort, "GET", "spend/trend", None)
+        assert(call(srv.boundPort, "GET", "spend/trend", None) == local)
+        e.ensureRegistered(forceS3 = true)
+        val remote = call(srv.boundPort, "GET", "spend/trend", None)
+        assert(remote != local, "the route still answers from the previous root")
+        val fresh = new FinOpsServer(new FinOps(spark, "CUR", asOf),
+          new GraftEngine(spark, Some(asOf)))
+        fresh.start()
+        try assert(remote == call(fresh.boundPort, "GET", "spend/trend", None))
+        finally fresh.stop()
+      } finally {
+        srv.stop()
+        release()
+      }
     } finally {
       hc.unset("fs.s3a.impl")
       hc.unset("fs.s3a.impl.disable.cache")

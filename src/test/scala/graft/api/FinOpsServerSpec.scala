@@ -7,15 +7,19 @@ import graft.fixtures.CurFixture
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 import java.time.LocalDate
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
 
 /** End-to-end HTTP tests: real server on an ephemeral port, real requests
   * through java.net, JSON envelopes asserted (reference api/fastapi_app.py
   * route table). */
 class FinOpsServerSpec extends SparkSpec {
 
+  private val asOf = LocalDate.of(2025, 7, 15)
+
   lazy val server: FinOpsServer = {
-    CurFixture.df(spark).createOrReplaceTempView("CUR")
-    val asOf = LocalDate.of(2025, 7, 15)
+    restoreCur()
     val s = new FinOpsServer(
       new FinOps(spark, "CUR", asOf), new GraftEngine(spark, Some(asOf)))
     s.start()
@@ -27,8 +31,8 @@ class FinOpsServerSpec extends SparkSpec {
   }
 
   private def request(method: String, path: String,
-      body: Option[String] = None): (Int, String) = {
-    val url = URI.create(s"http://127.0.0.1:${server.boundPort}$path").toURL
+      body: Option[String] = None, port: => Int = server.boundPort): (Int, String) = {
+    val url = URI.create(s"http://127.0.0.1:$port$path").toURL
     val conn = url.openConnection().asInstanceOf[HttpURLConnection]
     conn.setRequestMethod(method)
     body.foreach { b =>
@@ -43,6 +47,39 @@ class FinOpsServerSpec extends SparkSpec {
   }
 
   private def get(path: String): (Int, String) = request("GET", path)
+
+  private def restoreCur(): Unit = CurFixture.df(spark).createOrReplaceTempView("CUR")
+
+  /** The answer of a server that has cached nothing yet. */
+  private def uncached(path: String): (Int, String) = {
+    val fresh = new FinOpsServer(new FinOps(spark, "CUR", asOf),
+      new GraftEngine(spark, Some(asOf)))
+    fresh.start()
+    try request("GET", path, port = fresh.boundPort) finally fresh.stop()
+  }
+
+  /** Spark jobs started while `body` runs. The listener bus delivers
+    * events asynchronously, so a marker job submitted afterwards flushes
+    * it: once the marker's start arrives, every earlier start has. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val markerKey = "graft.test.jobs.marker"
+    val jobs = new AtomicInteger(0)
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(markerKey) != null)) marked.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setLocalProperty(markerKey, "flush")
+      try spark.range(1).count() finally sc.setLocalProperty(markerKey, null)
+      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get()
+    } finally sc.removeSparkListener(l)
+  }
 
   test("root and health endpoints answer") {
     val (s1, b1) = get("/")
@@ -254,5 +291,79 @@ class FinOpsServerSpec extends SparkSpec {
     val (status, body) = get("/api/v1/finops/sql/schema?table=NOPE")
     assert(status == 500)
     assert(body.contains("\"success\":false"))
+  }
+
+  test("a repeated cached GET returns an identical body") {
+    val (s1, b1) = get("/api/v1/finops/kpi/summary")
+    val (s2, b2) = get("/api/v1/finops/kpi/summary")
+    assert(s1 == 200 && s2 == 200)
+    assert(b1 == b2)
+    assert(server.cachedResponses > 0)
+  }
+
+  test("after the CUR view is replaced, a cached route returns the new answer") {
+    val path = "/api/v1/finops/spend/trend"
+    val (_, before) = get(path)
+    CurFixture.df(spark).filter(col("line_item_usage_account_id") === "222222222222")
+      .createOrReplaceTempView("CUR")
+    try {
+      val (status, after) = get(path)
+      assert(status == 200)
+      assert(after != before)
+      assert(after == uncached(path)._2)
+    } finally restoreCur()
+    assert(get(path)._2 == before)
+  }
+
+  test("a failing route is not kept: it answers again once the view is back") {
+    val path = "/api/v1/finops/spend/services/top"
+    spark.catalog.dropTempView("CUR")
+    try {
+      val (status, body) = get(path)
+      assert(status == 500, body)
+      assert(body.contains("\"success\":false"))
+    } finally restoreCur()
+    val (status, body) = get(path)
+    assert(status == 200, body)
+    assert(body.contains("AmazonEC2") && !body.contains("\"row_count\":0"))
+  }
+
+  test("sql/tables lists a view registered after an earlier request") {
+    assert(!get("/api/v1/finops/sql/tables")._2.contains("late_view"))
+    spark.range(3).createOrReplaceTempView("late_view")
+    try assert(get("/api/v1/finops/sql/tables")._2.contains("late_view"))
+    finally spark.catalog.dropTempView("late_view")
+  }
+
+  test("concurrent first requests for one route run its Spark jobs once") {
+    import java.util.concurrent.Executors
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    // the handler ignores `probe`, so each value is a new key over the same work
+    val route = "/api/v1/finops/spend/breakdown?dimensions=service"
+    val one = jobsDuring(assert(get(s"$route&probe=one")._1 == 200))
+    assert(one > 0)
+    val n = 6
+    val pool = Executors.newFixedThreadPool(n)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      var bodies = Seq.empty[(Int, String)]
+      val burst = jobsDuring {
+        bodies = Await.result(Future.traverse(1 to n)(_ =>
+          Future(get(s"$route&probe=burst"))), 120.seconds)
+      }
+      assert(bodies.forall(_._1 == 200) && bodies.map(_._2).distinct.size == 1)
+      assert(burst == one, s"$n concurrent first requests ran $burst jobs, one request $one")
+    } finally pool.shutdown()
+  }
+
+  test("distinct query strings beyond the cap are answered uncached") {
+    val extra = 20
+    (0 until ResponseCache.MaxEntries + extra).foreach { i =>
+      val (status, body) = get(s"/api/v1/finops/mcp/tools?n=$i")
+      assert(status == 200 && body.contains("sql_query"), body)
+    }
+    // the first MaxEntries keys filled the view's entries; the rest were not kept
+    assert(server.cachedResponses == ResponseCache.MaxEntries)
   }
 }
