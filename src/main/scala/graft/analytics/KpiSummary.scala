@@ -10,9 +10,8 @@ import java.time.LocalDate
   * test_12's golden `kpi_tracker_results.json` shape): builds the view
   * DAG, aggregates kpi_tracker over the window, and shapes the nested
   * summary including the savings rollup (SURVEY.md §2.9 C5). The DAG is
-  * built, and its kpi_tracker aggregate cached, once per CUR view: it is
-  * rebuilt only when `table` has been replaced since (a re-registration or
-  * a root change), not per request.
+  * built once per CUR view: it is rebuilt only when `table` has been
+  * replaced since (a re-registration or a root change), not per request.
   */
 final class KpiSummary(spark: SparkSession, asOf: LocalDate,
     table: String = "CUR") {
@@ -39,25 +38,21 @@ final class KpiSummary(spark: SparkSession, asOf: LocalDate,
       savings: SavingsSummary)
 
   // the temp view `table` named when the DAG was last built, and that
-  // DAG's kpi_tracker frame, persisted (kept, so a later registration of
-  // the views by someone else cannot swap the frame this summary reads)
+  // DAG's kpi_tracker frame (kept, so a later registration of the views by
+  // someone else cannot swap the frame this summary reads)
   private var built: Option[(AnyRef, DataFrame)] = None
 
   /** kpi_tracker over the current `table`: the DAG is registered again
     * only when `table` names a different view than at the last build
-    * ([[Catalog.sameView]]). The frame is persisted once per view, so every
-    * summary (and its `billingPeriod`/`accountFilter` variants) plans over
-    * the small cached aggregate instead of the inlined view DAG; a rebuild
-    * releases the previous view's copy. A table that is not a temp view has
-    * no identity to compare, so it is rebuilt, uncached, on every call. */
+    * ([[Catalog.sameView]]). A table that is not a temp view has no
+    * identity to compare, so it is rebuilt on every call. */
   private def tracker(): DataFrame = synchronized {
     built match {
       case Some((v, t)) if Catalog.sameView(spark, table, v) => t
       case _ =>
         val cur = Catalog.viewIdentity(spark, table)
-        built.foreach(_._2.unpersist(blocking = false))
         val t = KpiViews.registerAll(spark, asOf, table)
-        built = cur.map(v => (v, t.persist()))
+        built = cur.map(v => (v, t))
         t
     }
   }

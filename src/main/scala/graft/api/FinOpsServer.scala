@@ -22,8 +22,11 @@ import java.util.concurrent.Executors
   * GET of a route marked `cached` is answered from the [[ResponseCache]]
   * instead, until the CUR view is replaced (the reference memoizes its
   * analytics with a TTL, performance.py:140-281; here the registration
-  * scopes the entries, so there is no TTL to tune). The
-  * request pool is deliberately small: concurrency should come from
+  * scopes the entries, so there is no TTL to tune). This assumes the data
+  * behind the CUR view does not change while the view exists, as for the
+  * views `GraftFinOpsEngine` registers over a fixed file list; a view over
+  * a table that is written to keeps its identity and would be answered
+  * stale. The request pool is deliberately small: concurrency should come from
   * Spark's scheduler (fair pools), not from stacking driver threads.
   */
 final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {

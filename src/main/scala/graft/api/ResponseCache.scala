@@ -3,105 +3,67 @@ package graft.api
 import graft.engine.Catalog
 import org.apache.spark.sql.SparkSession
 
-import java.util.concurrent.{CompletableFuture, ExecutionException}
-
 /** Response bodies of the GET routes whose answer reads only the CUR view
   * and asOf, kept for as long as that view keeps its identity
-  * ([[Catalog.sameView]]). A registration fixes the files the view reads,
-  * so the answer to (path, raw query string) cannot change until the view
-  * is replaced — a re-registration, a root change, a
-  * `createOrReplaceTempView` — and then every entry is dropped at once.
-  * No TTL: an entry is never older than the registration it answers.
+  * ([[Catalog.sameView]]). Every entry is dropped when the view is
+  * replaced — a re-registration, a root change, a `createOrReplaceTempView`.
+  * No TTL.
   *
-  * Concurrent first requests for one key compute once: the first claims
-  * the entry, the others wait for its answer. A failure reaches the
-  * requests that waited for it and is never kept, and neither is an answer
-  * computed while the view was replaced under it. Query strings come from
-  * clients, so one view holds at most [[ResponseCache.MaxEntries]] entries;
-  * requests beyond that are answered uncached. A `table` that is not a
-  * temp view has no identity, so nothing is cached over it.
+  * Precondition: the data behind the view must not change while the view
+  * exists. That holds for the views `PartitionCatalog.registerListed`
+  * makes, which read a fixed list of files; a temp view over a catalog
+  * table that is written to, or refreshed with `refreshTable`, keeps its
+  * identity while its data changes, and would be answered stale.
+  *
+  * A body is computed outside the lock and kept only if it was computed
+  * and the view is still the one it was computed over; a failure is never
+  * kept. Concurrent first requests for one key each compute. Query strings
+  * come from clients, so at most [[ResponseCache.MaxEntries]] bodies are
+  * kept, the least recently used making room for a new one. A `table` that
+  * is not a temp view has no identity, so nothing is cached over it.
   */
 private[api] final class ResponseCache(spark: SparkSession, table: String) {
 
   private type Key = (String, String)
 
-  /** The entries computed over one identity of the view. */
-  private final class Scope(val view: AnyRef) {
-    val entries = new java.util.HashMap[Key, CompletableFuture[Array[Byte]]]()
+  // guarded by `this`: the view identity the entries were computed over,
+  // and the entries in access order
+  private var view: AnyRef = _
+  private val entries = new java.util.LinkedHashMap[Key, Array[Byte]](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Key, Array[Byte]]): Boolean =
+      size > ResponseCache.MaxEntries
   }
 
-  // guarded by `this`; replaced whole when the view is replaced
-  private var scope: Option[Scope] = None
+  /** Entries held for the current view. */
+  def size: Int = synchronized(entries.size)
 
-  /** Entries held for the current view (computed or in flight). */
-  def size: Int = synchronized(scope.fold(0)(_.entries.size))
-
-  private sealed trait Claim
-  /** Another request is computing (or has kept) the body: wait for it. */
-  private final case class Wait(pending: CompletableFuture[Array[Byte]]) extends Claim
-  /** This request computes the body into `slot`, an entry of `s`. */
-  private final case class Own(s: Scope, slot: CompletableFuture[Array[Byte]]) extends Claim
-  /** No temp view, or the view's entries are full: compute, keep nothing. */
-  private case object Uncached extends Claim
-
-  /** The body for (path, query): the kept one, the one another request is
-    * computing, or `compute`'s. */
+  /** The kept body for (path, query), or `compute`'s. */
   def apply(path: String, query: String)(compute: => Array[Byte]): Array[Byte] = {
     val key = (path, query)
-    claim(key) match {
-      case Wait(pending) =>
-        try pending.get()
-        catch { case e: ExecutionException => throw e.getCause }
-      case Uncached => compute
-      case Own(s, slot) =>
-        val body =
-          try compute
-          catch {
-            case e: Throwable =>
-              release(s, key, slot)
-              slot.completeExceptionally(e)
-              throw e
-          }
-        if (!Catalog.sameView(spark, table, s.view)) release(s, key, slot)
-        slot.complete(body)
-        body
+    val (seen, kept) = synchronized {
+      // read under the lock, so `view` follows the catalog's order of views
+      val seen = Catalog.viewIdentity(spark, table)
+      if (!seen.exists(_ eq view)) {
+        entries.clear()
+        view = seen.orNull
+      }
+      (seen, Option(entries.get(key)))
     }
-  }
-
-  private def claim(key: Key): Claim = synchronized {
-    // read under the lock, so scopes follow the catalog's order of views
-    Catalog.viewIdentity(spark, table) match {
-      case None =>
-        scope = None
-        Uncached
-      case Some(v) =>
-        val s = scope.filter(_.view eq v).getOrElse {
-          val fresh = new Scope(v)
-          scope = Some(fresh)
-          fresh
-        }
-        Option(s.entries.get(key)) match {
-          case Some(pending) => Wait(pending)
-          case None if s.entries.size >= ResponseCache.MaxEntries => Uncached
-          case None =>
-            val slot = new CompletableFuture[Array[Byte]]()
-            s.entries.put(key, slot)
-            Own(s, slot)
-        }
+    kept.getOrElse {
+      val body = compute
+      synchronized {
+        if (seen.exists(Catalog.sameView(spark, table, _))) entries.put(key, body)
+      }
+      body
     }
-  }
-
-  private def release(s: Scope, key: Key,
-      slot: CompletableFuture[Array[Byte]]): Unit = synchronized {
-    s.entries.remove(key, slot)
   }
 }
 
 private[api] object ResponseCache {
 
-  /** Entries per view. The route table binds about two dozen cached GET
+  /** Entries kept. The route table binds about two dozen cached GET
     * routes, so this leaves room for about ten query-string variants of
-    * each; a client cycling through more gets uncached answers rather than
-    * growing the driver's heap. */
+    * each; a client cycling through more evicts the least recently used
+    * entries rather than growing the driver's heap. */
   val MaxEntries = 256
 }

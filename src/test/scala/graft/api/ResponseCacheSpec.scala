@@ -2,14 +2,11 @@ package graft.api
 
 import graft.SparkSpec
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration._
 
 /** The response cache's rules, on its own: entries live while the view
-  * keeps its identity, first requests compute once, failures and answers
-  * over a replaced view are never kept. */
+  * keeps its identity, failures and answers over a replaced view are never
+  * kept, and the least recently used entry makes room for a new one. */
 class ResponseCacheSpec extends SparkSpec {
 
   private val view = "RESPONSE_CACHE_VIEW"
@@ -64,39 +61,17 @@ class ResponseCacheSpec extends SparkSpec {
     assert(cache.size == 0)
   }
 
-  test("concurrent first requests compute once and share the answer or the failure") {
+  test("past the cap, a new key evicts the least recently used one") {
     register()
     val cache = new ResponseCache(spark, view)
-    val n = 6
-    val pool = Executors.newFixedThreadPool(n)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      Seq(Right("shared"), Left("shared failure")).foreach { outcome =>
-        val key = outcome.fold(identity, identity)
-        val calls = new AtomicInteger(0)
-        val release = new CountDownLatch(1)
-        val arrived = new CountDownLatch(n)
-        val asks = (1 to n).map(_ => Future {
-          arrived.countDown()
-          scala.util.Try(text(cache("/p", key) {
-            calls.incrementAndGet()
-            release.await(30, TimeUnit.SECONDS)
-            outcome.fold(m => throw new IllegalStateException(m), bytes)
-          }))
-        })
-        // every request claims or waits before the one computation ends
-        assert(arrived.await(30, TimeUnit.SECONDS))
-        Thread.sleep(200)
-        release.countDown()
-        val results = Await.result(Future.sequence(asks), 60.seconds)
-        assert(calls.get == 1, s"$key computed ${calls.get} times")
-        outcome match {
-          case Right(v) => assert(results.forall(_.toOption.contains(v)))
-          case Left(m) =>
-            assert(results.forall(_.failed.toOption.exists(_.getMessage == m)))
-        }
-      }
-      assert(cache.size == 1, "only the answer is kept")
-    } finally pool.shutdown()
+    (0 until ResponseCache.MaxEntries).foreach(i => cache("/a", s"n=$i")(bytes(s"a$i")))
+    assert(cache.size == ResponseCache.MaxEntries)
+    // n=0 is used again, so n=1 is now the least recently used
+    assert(text(cache("/a", "n=0")(bytes("recomputed"))) == "a0")
+    assert(text(cache("/b", "")(bytes("b"))) == "b")
+    assert(cache.size == ResponseCache.MaxEntries)
+    assert(text(cache("/b", "")(bytes("recomputed"))) == "b", "the new key is kept")
+    assert(text(cache("/a", "n=0")(bytes("recomputed"))) == "a0")
+    assert(text(cache("/a", "n=1")(bytes("a1 again"))) == "a1 again", "the eldest was evicted")
   }
 }
