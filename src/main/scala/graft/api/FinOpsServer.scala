@@ -1,13 +1,11 @@
 package graft.api
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import graft.analytics.{FinOps, McpIntegration}
 import graft.engine.GraftEngine
 import org.apache.spark.sql.DataFrame
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.Executors
 
 /** HTTP binding for the FinOps analytics surface (reference
   * api/fastapi_app.py:1-225 and the api/endpoints modules). The reference serves
@@ -26,27 +24,20 @@ import java.util.concurrent.Executors
   * behind the CUR view does not change while the view exists, as for the
   * views `GraftFinOpsEngine` registers over a fixed file list; a view over
   * a table that is written to keeps its identity and would be answered
-  * stale. The request pool is deliberately small: concurrency should come from
-  * Spark's scheduler (fair pools), not from stacking driver threads.
+  * stale. Requests run on 8 threads ([[Requests.bind]]), and their Spark
+  * jobs share the session's scheduler (FIFO; graft sets no fair pools).
   */
 final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
 
   import ApiResponses.{collectRows, toJson}
   import Requests.{PayloadTooLarge, param}
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  private val pool = Executors.newFixedThreadPool(8)
-  server.setExecutor(pool)
-
   private val mcp = new McpIntegration(finops.spark, finops.table, finops.asOf)
 
-  def boundPort: Int = server.getAddress.getPort
+  def boundPort: Int = binding.port
 
-  def start(): Unit = server.start()
-  def stop(): Unit = {
-    server.stop(0)
-    pool.shutdown()
-  }
+  def start(): Unit = binding.start()
+  def stop(): Unit = binding.stop()
 
   // ---- helpers ---------------------------------------------------------
 
@@ -308,7 +299,7 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
     case v => toJson(v)
   })
 
-  server.createContext("/", (ex: HttpExchange) => {
+  private val binding = Requests.bind(port) { (ex: HttpExchange) =>
     val path = ex.getRequestURI.getPath
     val (status, bytes) = allRoutes.get((ex.getRequestMethod, path)) match {
       case None =>
@@ -329,9 +320,6 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
               "error_type" -> GraftEngine.classifyError(e))))
         }
     }
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(status, bytes.length)
-    ex.getResponseBody.write(bytes)
-    ex.close()
-  })
+    Requests.respond(ex, status, bytes)
+  }
 }

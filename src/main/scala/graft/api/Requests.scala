@@ -1,13 +1,62 @@
 package graft.api
 
-import com.sun.net.httpserver.HttpExchange
+import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
+import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ExecutorService, Executors}
 
-/** Request-side helpers shared by the REST servers ([[FinOpsServer]],
-  * [[ServingServer]]): the capped body reader, its 413 mapping and
-  * query-parameter lookup. */
+/** Transport and request helpers shared by the REST servers
+  * ([[FinOpsServer]], [[ServingServer]]): the one JDK `HttpServer`
+  * binding, the JSON response writer, the capped body reader, its 413
+  * mapping and query-parameter lookup. */
 object Requests {
+
+  /** The JDK's switch for `TCP_NODELAY` on accepted connections. */
+  private val NoDelay = "sun.net.httpserver.nodelay"
+
+  /** Request threads per server: few on purpose, since each request runs
+    * its Spark jobs on the driver and the jobs share Spark's scheduler. */
+  private val RequestThreads = 8
+
+  /** A bound loopback server and its request pool. */
+  private[graft] final class Binding(server: HttpServer, pool: ExecutorService) {
+    def port: Int = server.getAddress.getPort
+    def start(): Unit = server.start()
+    def stop(): Unit = {
+      server.stop(0)
+      pool.shutdown()
+    }
+  }
+
+  /** Bind `handler` on 127.0.0.1:`port` (0 = ephemeral) with a fixed pool
+    * of [[RequestThreads]]. Every JDK `HttpServer` in graft is created
+    * here.
+    *
+    * Without `TCP_NODELAY` every response on a kept-alive connection
+    * reaches the client ~40 ms late: the JDK writes the headers and the
+    * body as two TCP writes, and Nagle holds the body back until the
+    * client's delayed ACK arrives (uvicorn, the reference's server, sets
+    * `TCP_NODELAY` on every socket). The JDK reads its switch once, when
+    * the JVM creates its first `HttpServer`, so it is set here before
+    * that, unless already set (`-Dsun.net.httpserver.nodelay=false`
+    * keeps the JDK default). */
+  private[graft] def bind(port: Int)(handler: HttpHandler): Binding = {
+    System.getProperties.putIfAbsent(NoDelay, "true")
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    val pool = Executors.newFixedThreadPool(RequestThreads)
+    server.setExecutor(pool)
+    server.createContext("/", handler)
+    new Binding(server, pool)
+  }
+
+  /** Send `bytes` as the JSON response with `status` and close `ex`. */
+  private[api] def respond(ex: HttpExchange, status: Int, bytes: Array[Byte]): Unit = {
+    ex.getResponseHeaders.set("Content-Type", "application/json")
+    ex.sendResponseHeaders(status, bytes.length)
+    ex.getResponseBody.write(bytes)
+    ex.close()
+  }
 
   /** Default request-body byte cap: generous for a full 10k-row batch of
     * documents or 64-dim embedding JSON, or any SQL text, while bounding

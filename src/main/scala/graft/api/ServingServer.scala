@@ -1,13 +1,11 @@
 package graft.api
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.Executors
 
 import graft.queries.{DedupIndex, Maintenance, VectorIndex}
 
@@ -79,17 +77,9 @@ final class ServingServer(spark: SparkSession,
     n
   }
 
-  private val server =
-    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  private val pool = Executors.newFixedThreadPool(8)
-  server.setExecutor(pool)
-
-  def boundPort: Int = server.getAddress.getPort
-  def start(): Unit = server.start()
-  def stop(): Unit = {
-    server.stop(0)
-    pool.shutdown()
-  }
+  def boundPort: Int = binding.port
+  def start(): Unit = binding.start()
+  def stop(): Unit = binding.stop()
 
   // ---- request helpers --------------------------------------------------
 
@@ -334,7 +324,7 @@ final class ServingServer(spark: SparkSession,
         .sortBy(r => (r._2, r._1))
         .map { case (m, p) => Map("method" -> m, "path" -> p) })))
 
-  server.createContext("/", (ex: HttpExchange) => {
+  private val binding = Requests.bind(port) { (ex: HttpExchange) =>
     val key = (ex.getRequestMethod, ex.getRequestURI.getPath)
     val (status, json) = allRoutes.get(key) match {
       case None =>
@@ -364,12 +354,8 @@ final class ServingServer(spark: SparkSession,
               "error" -> Option(e.getMessage).getOrElse(e.toString).take(500)))
         }
     }
-    val bytes = json.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(status, bytes.length)
-    ex.getResponseBody.write(bytes)
-    ex.close()
-  })
+    Requests.respond(ex, status, json.getBytes(StandardCharsets.UTF_8))
+  }
 }
 
 object ServingServer {

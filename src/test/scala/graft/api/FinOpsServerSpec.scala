@@ -127,6 +127,12 @@ class FinOpsServerSpec extends SparkSpec {
     }
   }
 
+  test("kept-alive responses arrive without the ~40 ms delayed-ACK stall") {
+    val p50 = KeepAlive.medianMs(server.boundPort, "/health")
+    info(f"median $p50%.1f ms")
+    assert(p50 < 20.0, s"median $p50 ms over one kept-alive connection")
+  }
+
   test("vpc-charges composes analysis, recommendations, and total savings") {
     val (_, body) = get("/api/v1/finops/optimization/vpc-charges?min_transfer_cost=0")
     assert(body.contains("transfer_analysis"))

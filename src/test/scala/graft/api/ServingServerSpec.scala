@@ -71,6 +71,12 @@ class ServingServerSpec extends SparkSpec {
       b2.contains("/api/v1/serving/vector/knn"), b2)
   }
 
+  test("kept-alive responses arrive without the ~40 ms delayed-ACK stall") {
+    val p50 = KeepAlive.medianMs(server.boundPort, "/api/v1/serving/routes")
+    info(f"median $p50%.1f ms")
+    assert(p50 < 20.0, s"median $p50 ms over one kept-alive connection")
+  }
+
   test("dedup ingest gate: verdicts over HTTP; append_admitted closes the loop") {
     val docs = Tables.load(spark, Sf01, "documents").select("doc_id", "text")
     // one exact copy of a corpus doc (re-idded) + one novel doc

@@ -1,14 +1,15 @@
 package graft.pricing
 
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import com.sun.net.httpserver.{HttpExchange, HttpHandler}
 import com.fasterxml.jackson.databind.json.JsonMapper
-import java.net.InetSocketAddress
+import graft.api.Requests
 import java.nio.charset.StandardCharsets.UTF_8
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
 
 /** Recorded-response replay for the REAL [[AwsPricingClient]]: a loopback
-  * JDK `HttpServer` serves captured Price List response SHAPES (the
+  * JDK `HttpServer` (bound by [[Requests.bind]], like every JDK server in
+  * graft, so the JVM's first server never fixes `TCP_NODELAY` off) serves captured Price List response SHAPES (the
   * double-encoded PriceList, NextToken pagination, AWS-style error
   * bodies), and the client's actual network path — SigV4 signing, send,
   * page walk, parse, error mapping — runs end-to-end with zero egress.
@@ -39,9 +40,9 @@ class PricingReplaySpec extends AnyFunSuite {
       run: (AwsPricingClient, mutable.Buffer[(Map[String, String], String)]) => Unit): Unit = {
     val seen = mutable.Buffer.empty[(Map[String, String], String)]
     val remaining = mutable.Queue(responses: _*)
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
+    val server = Requests.bind(0)(new HttpHandler {
+      // requests run on the binding's pool: one at a time over the queue
+      override def handle(ex: HttpExchange): Unit = synchronized {
         val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
         val headers = ex.getRequestHeaders.entrySet().iterator()
         val hm = mutable.Map.empty[String, String]
@@ -64,11 +65,11 @@ class PricingReplaySpec extends AnyFunSuite {
     try {
       val client = new AwsPricingClient(
         AwsSigV4.Credentials("AKIDEXAMPLE", "wJalrXUtnFEMI", None),
-        endpointOverride = Some(s"http://127.0.0.1:${server.getAddress.getPort}"),
+        endpointOverride = Some(s"http://127.0.0.1:${server.port}"),
         clock = () => java.time.ZonedDateTime.of(2026, 1, 15, 12, 0, 0, 0,
           java.time.ZoneOffset.UTC))
       run(client, seen)
-    } finally server.stop(0)
+    } finally server.stop()
   }
 
   test("onDemandPrice walks NextToken pagination and parses the second page") {
