@@ -85,14 +85,5 @@ object GraftSession {
     // class cache thrashes and queries silently re-pay janino compilation
     // (seconds for wide plans). Size to the session's working set.
     "spark.sql.codegen.cache.maxEntries" -> "2000",
-    // graft's own scale knobs, set to their cluster-shaped values: the
-    // shared dedup/vector derivation caches spill to disk instead of
-    // evicting (they are re-read by many queries per session), and the
-    // component solver's driver union-find threshold stays at its
-    // default (2e6 edges) — raise it on fat drivers, or set
-    // spark.graft.dedup.checkpointDir to make the distributed fallback
-    // executor-loss-safe (see graft.queries.Caching).
-    "spark.graft.dedup.storageLevel" -> "MEMORY_AND_DISK",
-    "spark.graft.vector.storageLevel" -> "MEMORY_AND_DISK",
     "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer")
 }

@@ -10,34 +10,42 @@ import org.apache.spark.sql.types._
 /** Top-2 nearest-centroid assignment of one `array<long>` fixed-point
   * vector against a FIXED centroid matrix, as a single codegen'd
   * projection: returns `struct<c1 int, s1 double, c2 int, s2 double>` —
-  * the best and second-best cell with their scores
-  * (`s = Σ efp(i)·cent_c(i) / ‖cent_c‖`, the cosine numerator scoring
-  * [[graft.queries.VectorOps.assignCells]] has always used; `‖v‖` is a
-  * common positive factor, so the argmax is the cosine argmax).
+  * the best and second-best centroid with their scores
+  * `s_c = (Σ v(i)·cent_c(i) − bias_c).toDouble / norm_c`.
   *
-  * Why a custom Catalyst Expression (SURVEY.md §7.4): above the plan-
-  * literal regime (`kmeansLiteralMaxK`) the assignment used to fan each
-  * vector out k ways through a broadcast cross join and take
-  * `max(struct(score, -cell))` — but a struct aggregation buffer is
-  * ineligible for HashAggregate, so Catalyst planned a SORT aggregate
-  * over the fan-out: rows × k sorted per partition. At the r15 1000×-
-  * decade index build (2M vectors × ~4000 cells) that is an 8-billion-row
-  * sort whose spill filled the disk before the build's first table write.
-  * This expression evaluates the same argmax as a primitive loop inside
-  * WholeStageCodegen — zero fan-out, zero shuffle, zero sort; assignment
-  * cost returns to O(rows × k × dims) multiply-adds, the floor.
+  * This is the ONE nearest-centroid kernel of the library; both
+  * quantizers of [[graft.queries.VectorOps]] call it:
+  *   - k-means cells pass `bias = 0` and `norm = ‖cent‖`: the cosine
+  *     numerator scoring (`‖v‖` is a common positive factor, so the
+  *     argmax is the cosine argmax);
+  *   - PQ codes pass `cent = 2·codeword`, `bias = ‖codeword‖²` and
+  *     `norm = 1`: the argmax of `2·v·c − c·c` is the argmin of the
+  *     squared distance `‖v − c‖²` (the common `v·v` dropped). The long
+  *     is exact in a double while |value| < 2^53 (≈1.6e13 at 8 dims).
   *
-  * Semantics are pinned to the literal regime (spec: bit-equal): exact
-  * long dot ([[ArrayIntDot]] arithmetic) over the common prefix length,
-  * `score = dot.toDouble / norm` with the norm computed ON THE DRIVER by
-  * the caller (same double arithmetic as `cellCentTable`), zero-norm
-  * centroids score `Double.MinValue`, and ties resolve to the LOWEST cell
-  * id at each rank (ascending scan keeps the first occurrence). With one
-  * centroid, `c2 = -1` and `s2 = -∞` (callers route k < 2 elsewhere).
+  * Why a custom Catalyst Expression (SURVEY.md §7.4): the argmax used to
+  * run either as k×dims plan literals (plans and janino methods growing
+  * with k: 16.3 s against 0.28 s for this kernel at 50k×64, k = 64, on
+  * 4 vCPUs) or as a k-way broadcast fan-out whose
+  * `max(struct(score, -cell))` planned a SORT aggregate (struct buffers
+  * are HashAggregate-ineligible) — at the r15 1000×-decade index build
+  * (2M vectors × ~4000 cells) an 8-billion-row sort whose spill filled
+  * the disk. This expression
+  * evaluates the argmax as a primitive loop inside WholeStageCodegen —
+  * zero fan-out, zero shuffle, zero sort; O(rows × k × dims)
+  * multiply-adds, the floor.
   *
-  * The centroid matrix rides as constructor data (a reference object in
-  * generated code, NOT k×dims plan literals) — plans stay small and the
-  * matrix is shared per-JVM, the executor-side analogue of a broadcast.
+  * Arithmetic: exact long dot ([[ArrayIntDot]] arithmetic) over the
+  * common prefix length, minus the bias, divided by the norm the caller
+  * computed ON THE DRIVER; zero-norm centroids score `Double.MinValue`,
+  * and ties resolve to the LOWEST centroid id at each rank (ascending
+  * scan keeps the first occurrence). With one centroid, `c2 = -1` and
+  * `s2 = -∞`.
+  *
+  * The centroid matrix, norms and biases ride as constructor data
+  * (reference objects in generated code, NOT plan literals) — plans stay
+  * small at any k and the matrix is shared per-JVM, the executor-side
+  * analogue of a broadcast.
   *
   * Input contract: array ELEMENTS must be non-null. The type check
   * accepts `array<bigint>` regardless of its containsNull flag (every
@@ -52,31 +60,31 @@ import org.apache.spark.sql.types._
   */
 object CellTop2 {
   /** The registry/extension builder (shared so the temp-function and
-    * SparkSessionExtensions registrations can never drift): the centroid
-    * matrix and norms arrive as FOLDABLE literals and are consumed HERE,
-    * at expression-build time — they become constructor data (a codegen
-    * reference object), never plan literals. */
+    * SparkSessionExtensions registrations can never drift):
+    * `(efp, cents, norms, bias)`, where the centroid matrix, norms and
+    * biases arrive as FOLDABLE literals and are consumed HERE, at
+    * expression-build time — they become constructor data (codegen
+    * reference objects), never plan literals. */
   def fromExprs(name: String, exprs: Seq[Expression]): CellTop2 = {
-    require(exprs.length == 3 && exprs(1).foldable && exprs(2).foldable,
-      s"$name(efp, cents, norms) needs literal cents/norms")
-    val m = exprs(1).eval()
-      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    require(exprs.length == 4 && exprs.tail.forall(_.foldable),
+      s"$name(efp, cents, norms, bias) needs literal cents/norms/bias")
+    def arr(e: Expression) = e.eval().asInstanceOf[ArrayData]
+    val m = arr(exprs(1))
     val cents = (0 until m.numElements()).map(c =>
       m.getArray(c).toLongArray().toSeq)
-    val n = exprs(2).eval()
-      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    CellTop2(exprs.head, cents, n.toDoubleArray().toSeq)
+    CellTop2(exprs.head, cents, arr(exprs(2)).toDoubleArray().toSeq,
+      arr(exprs(3)).toLongArray().toSeq)
   }
 }
 
 case class CellTop2(child: Expression, cents: Seq[Seq[Long]],
-    cns: Seq[Double]) extends UnaryExpression {
+    cns: Seq[Double], bias: Seq[Long]) extends UnaryExpression {
 
   require(cents.nonEmpty, "cellTop2 needs at least one centroid")
   require(cents.forall(_.length == cents.head.length),
     "cellTop2 centroids must share one dimensionality")
-  require(cns.length == cents.length,
-    "cellTop2 needs one precomputed norm per centroid")
+  require(cns.length == cents.length && bias.length == cents.length,
+    "cellTop2 needs one precomputed norm and one bias per centroid")
 
   private val k = cents.length
   private val dims = cents.head.length
@@ -95,6 +103,7 @@ case class CellTop2(child: Expression, cents: Seq[Seq[Long]],
     a
   }
   @transient private lazy val norms: Array[Double] = cns.toArray
+  @transient private lazy val biases: Array[Long] = bias.toArray
 
   override def nullIntolerant: Boolean = true
 
@@ -126,7 +135,7 @@ case class CellTop2(child: Expression, cents: Seq[Seq[Long]],
           var i = 0
           val off = c * dims
           while (i < n) { acc += v.getLong(i) * flat(off + i); i += 1 }
-          acc.toDouble / cn
+          (acc - biases(c)).toDouble / cn
         }
       if (s > s1) { s2 = s1; c2 = c1; s1 = s; c1 = c }
       else if (s > s2) { s2 = s; c2 = c }
@@ -140,6 +149,7 @@ case class CellTop2(child: Expression, cents: Seq[Seq[Long]],
     nullSafeCodeGen(ctx, ev, v => {
       val f = ctx.addReferenceObj("cellTop2Cents", flat, "long[]")
       val nm = ctx.addReferenceObj("cellTop2Norms", norms, "double[]")
+      val b = ctx.addReferenceObj("cellTop2Bias", biases, "long[]")
       val c = ctx.freshName("c"); val i = ctx.freshName("i")
       val n = ctx.freshName("n"); val off = ctx.freshName("off")
       val acc = ctx.freshName("acc"); val s = ctx.freshName("s")
@@ -161,7 +171,7 @@ case class CellTop2(child: Expression, cents: Seq[Seq[Long]],
          |    for (int $i = 0; $i < $n; $i++) {
          |      $acc += $v.getLong($i) * $f[$off + $i];
          |    }
-         |    $s = (double) $acc / $cn;
+         |    $s = (double) ($acc - $b[$c]) / $cn;
          |  }
          |  if ($s > $s1) { $s2 = $s1; $c2 = $c1; $s1 = $s; $c1 = $c; }
          |  else if ($s > $s2) { $s2 = $s; $c2 = $c; }

@@ -54,16 +54,23 @@ object GraftFunctions {
 
   /** Top-2 nearest-centroid assignment of an `array<long>` fixed-point
     * vector column against a fixed centroid set, as one codegen'd
-    * projection — `struct<c1, s1, c2, s2>` ([[CellTop2]]). The matrix and
-    * norms ride through the registry as foldable literals and are folded
-    * into the expression at analysis time. Norms are computed here with
-    * the same driver-side double arithmetic the plan-literal regime uses,
-    * so the two regimes score identically. Requires [[register]]. */
-  def cellTop2(efp: Column, cents: IndexedSeq[Array[Long]]): Column = {
+    * projection — `struct<c1, s1, c2, s2>` ([[CellTop2]]), scored by
+    * `dot / ‖cent‖` (bias 0): the k-means cell rule. The norms are
+    * computed here on the driver. Requires [[register]]. */
+  def cellTop2(efp: Column, cents: IndexedSeq[Array[Long]]): Column =
+    cellTop2(efp, cents,
+      cents.map(c => math.sqrt(c.map(x => x.toDouble * x.toDouble).sum)),
+      cents.map(_ => 0L))
+
+  /** [[CellTop2]] with caller-chosen per-centroid norms and biases,
+    * `s_c = (dot_c − bias_c) / norm_c` — the PQ encoder passes doubled
+    * codewords, `bias = ‖codeword‖²` and norm 1. The matrix, norms and
+    * biases ride through the registry as foldable literals and are folded
+    * into the expression at analysis time. */
+  def cellTop2(efp: Column, cents: IndexedSeq[Array[Long]],
+      norms: Seq[Double], bias: Seq[Long]): Column = {
     import org.apache.spark.sql.functions.typedLit
-    call_function(CellTop2Name, efp,
-      typedLit(cents.map(_.toSeq)),
-      typedLit(cents.map(c =>
-        math.sqrt(c.map(x => x.toDouble * x.toDouble).sum))))
+    call_function(CellTop2Name, efp, typedLit(cents.map(_.toSeq)),
+      typedLit(norms), typedLit(bias))
   }
 }

@@ -1,25 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
-/** Session-configurable persistence for the shared derivation caches.
-  *
-  * The dedup/vector pipelines hang many queries off a few expensive cached
-  * nodes (shingle sets, band signatures, the quantized vector index). In
-  * local/test mode the default `MEMORY_AND_DISK` is right; at 100 TB those
-  * nodes outgrow executor memory and a deployment wants
-  * `persist(DISK_ONLY)` (or a materialized table). Rather than hard-coding
-  * either, each family reads a session conf at cache time:
-  *
-  *   - `spark.graft.dedup.storageLevel`  — [[TextDedup]]'s shared caches
-  *   - `spark.graft.vector.storageLevel` — [[VectorOps.index]]
-  *
-  * Values are [[StorageLevel.fromString]] names (`MEMORY_AND_DISK`,
-  * `DISK_ONLY`, `MEMORY_ONLY`, ...). The level applies when a plan is
-  * FIRST cached in a session; later identical plans share the existing
-  * entry (Spark cache semantics).
-  */
 /** Bounded LRU memo for session-lifetime derivation artifacts (trained
   * models, cached assignment frames) keyed by canonicalized plan or dir —
   * the shared shape of the cellsMemo/centsMemo/trainMemo/dsirModelMemo
@@ -78,12 +60,11 @@ private[queries] final class BoundedMemo[K, V](max: Int,
     }
 }
 
+/** Lineage cuts for the shared derivation caches. The caches themselves
+  * are plain `persist()` calls: Spark resolves their level from
+  * `spark.sql.defaultCacheStorageLevel` (MEMORY_AND_DISK by default;
+  * DISK_ONLY where they outgrow executor memory at TB scale). */
 private[queries] object Caching {
-
-  def cached(df: DataFrame, confKey: String): DataFrame = {
-    val lvl = df.sparkSession.conf.get(confKey, "MEMORY_AND_DISK")
-    df.persist(StorageLevel.fromString(lvl))
-  }
 
   /** Lineage cut for driver-side fixpoint loops: `localCheckpoint` by
     * default (blocks on executors — fine single-JVM, lossy under executor

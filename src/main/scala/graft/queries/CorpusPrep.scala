@@ -141,7 +141,7 @@ object CorpusPrep {
     val localInput = dInPlan.queryExecution.analyzed.collectLeaves()
       .forall(_.isInstanceOf[LocalRelation])
     val dIn =
-      if (localInput) Caching.cached(dInPlan, "spark.graft.dedup.storageLevel")
+      if (localInput) dInPlan.persist()
       else dInPlan
 
     // 0. domain blocklist (optional): source-level drop before anything
@@ -186,10 +186,8 @@ object CorpusPrep {
     // downstream stage/stat — uncached, the two corpus-wide count
     // aggregates would re-execute per consumer. Released in release().
     val importanceModel = cfg.importanceTarget.map { t =>
-      Caching.cached(
-        Curation.fitImportanceModel(t.select(col("doc_id"), col("text")),
-          d1.select(col("doc_id"), col("text")), "text"),
-        "spark.graft.dedup.storageLevel")
+      Curation.fitImportanceModel(t.select(col("doc_id"), col("text")),
+        d1.select(col("doc_id"), col("text")), "text").persist()
     }
     val d1i = importanceModel match {
       case Some(m) =>
@@ -320,7 +318,7 @@ object CorpusPrep {
     // 6. pack survivors into token-budget bins per stratum. The survivors
     // are cached: packing, the stats and every caller probe read them, and
     // uncached each read re-derives (and re-plans) the whole pipeline.
-    val survivors = Caching.cached(d6, "spark.graft.dedup.storageLevel")
+    val survivors = d6.persist()
     val packed = TextPipeline.packOf(survivors, strata, cfg.packBudget)
 
     def stage(ord: Int, name: String, frame: DataFrame): DataFrame =

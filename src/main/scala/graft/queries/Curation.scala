@@ -16,12 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  /** Same session-configurable cache level as the TextDedup family. */
-  private implicit class CurationCache(private val df: DataFrame) {
-    def dedupCached: DataFrame =
-      Caching.cached(df, "spark.graft.dedup.storageLevel")
-  }
-
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
 
@@ -497,7 +491,7 @@ object Curation {
     // the selection itself at sf0.1. Materializing (doc_id, sel) first
     // makes the explode a read of stored arrays. The cached node is also
     // reused by the df table and both join sides.
-    val selFrame = winnowedSelOf(d, k, w).dedupCached
+    val selFrame = winnowedSelOf(d, k, w).persist()
     val s = selFrame
       .select(col("doc_id"), size(col("sel")).cast("long").as("nfp"),
         explode(col("sel")).as("fp0"))
@@ -588,7 +582,7 @@ object Curation {
     val tok = d.select(col(strata).as("source"),
       explode(split(col(text), " ")).as("token"))
     val st = tok.groupBy("source", "token").agg(count(lit(1)).as("o"))
-      .dedupCached
+      .persist()
     val srcTot = st.groupBy("source").agg(sum(col("o")).as("t_s"),
       count(lit(1)).as("n_distinct_tokens"))
     val globTot = st.groupBy("token").agg(sum(col("o")).as("g_t"))
@@ -672,7 +666,7 @@ object Curation {
     * ingest batch (the q68/vocab/LM fit-apply house pattern). */
   /** The per-batch (source, token) count aggregate [[tokenDriftOf]]
     * caches (it feeds both the per-source totals and the main join —
-    * the q85 `st.dedupCached` pattern). Exposed so streaming callers
+    * the q85 `st.persist()` pattern). Exposed so streaming callers
     * can release it per epoch via [[unpersistDriftCaches]]. */
   private def driftBatchCounts(batch: DataFrame, strata: String,
       text: String): DataFrame =
@@ -689,7 +683,7 @@ object Curation {
 
   def tokenDriftOf(batch: DataFrame, fitted: DataFrame, strata: String,
       text: String): DataFrame = {
-    val st = driftBatchCounts(batch, strata, text).dedupCached
+    val st = driftBatchCounts(batch, strata, text).persist()
     val srcTot = st.groupBy("source").agg(sum(col("o")).as("t_s"))
     val tot = fitted.agg(sum(col("g_t")).as("g"))
     val e = col("t_s").cast("double") * col("g_t").cast("double") /
@@ -743,7 +737,7 @@ object Curation {
     tokenDriftOf(d.filter(col("doc_id") % 2 === 1),
       capVocabulary(
         fitTokenDistribution(d.filter(col("doc_id") % 2 === 0), "text"),
-        DriftVocabCap).dedupCached,
+        DriftVocabCap).persist(),
       "source", "text")
   }
 
@@ -974,7 +968,7 @@ object Curation {
     // aggregates execute once per consumer; memoized per (session, dir)
     // so repeated runs reuse ONE cached copy instead of accumulating
     val model = dsirModelMemo.getOrBuild((s, dir))(
-      fitImportanceModel(target, raw, "text").dedupCached)
+      fitImportanceModel(target, raw, "text").persist())
     importanceScoreOf(raw, model, "text")
       .orderBy("doc_id")
   }

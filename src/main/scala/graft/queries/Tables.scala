@@ -121,7 +121,7 @@ object Tables {
     * assignment without the sort-before-repartition tax, and the
     * results are row-identical either way (everything above is
     * aggregate/join work, partitioning never reaches output values).
-    * Callers apply this UNDER their `dedupCached` nodes, so the
+    * Callers apply this UNDER their persisted nodes, so the
     * decision is part of the shared canonical plan and cache identity
     * is preserved across the family. */
   private[queries] def parallelized(d: DataFrame, key: String): DataFrame = {

@@ -22,13 +22,6 @@ import graft.functions.GraftFunctions
   */
 object TextDedup {
 
-  /** All shared dedup caches go through the session-configurable storage
-    * level (`spark.graft.dedup.storageLevel`, default MEMORY_AND_DISK) —
-    * see [[Caching]]. */
-  private implicit class DedupCache(private val df: DataFrame) {
-    def dedupCached: DataFrame = Caching.cached(df, "spark.graft.dedup.storageLevel")
-  }
-
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
 
@@ -73,9 +66,10 @@ object TextDedup {
   // once and every later query in the family starts from the in-memory
   // relation (Spark's cache matches by canonicalized plan identity, so
   // each query still works standalone — the first one to run pays the
-  // materialization). At 100 TB these nodes outgrow memory: set
-  // `spark.graft.dedup.storageLevel=DISK_ONLY` (see [[Caching]]) — or
-  // materialize them as tables; the plan shape above them is unchanged.
+  // materialization). At 100 TB these nodes outgrow memory: set Spark's
+  // `spark.sql.defaultCacheStorageLevel=DISK_ONLY` (`persist()` reads it)
+  // — or materialize them as tables; the plan shape above them is
+  // unchanged.
   // ---------------------------------------------------------------------
 
   /** (doc_id, ts = distinct 3-gram shingles) — cached array form; also the
@@ -84,7 +78,7 @@ object TextDedup {
     * them; the (s, dir) forms bind them to the driver's documents table. */
   private[queries] def shingleSetsOf(d: DataFrame): DataFrame =
     Tables.parallelized(d, "doc_id")
-      .select(col("doc_id"), shingles3(toks).as("ts")).dedupCached
+      .select(col("doc_id"), shingles3(toks).as("ts")).persist()
 
   private def shingleSets(s: SparkSession, dir: String): DataFrame =
     shingleSetsOf(docs(s, dir))
@@ -106,7 +100,7 @@ object TextDedup {
     * through a shuffle (collision caveat on q28). */
   private[queries] def hashedShingleRowsOf(d: DataFrame): DataFrame =
     shingleRowsOf(d)
-      .select(col("doc_id"), col("n"), xxhash64(col("sh")).as("sh")).dedupCached
+      .select(col("doc_id"), col("n"), xxhash64(col("sh")).as("sh")).persist()
 
   private def hashedShingleRows(s: SparkSession, dir: String): DataFrame =
     hashedShingleRowsOf(docs(s, dir))
@@ -119,14 +113,14 @@ object TextDedup {
   private[queries] def shingleSetsNOf(d: DataFrame, n: Int): DataFrame =
     if (n == 3) shingleSetsOf(d)
     else Tables.parallelized(d, "doc_id")
-      .select(col("doc_id"), shinglesN(toks, n).as("ts")).dedupCached
+      .select(col("doc_id"), shinglesN(toks, n).as("ts")).persist()
 
   private[queries] def hashedShingleRowsNOf(d: DataFrame, n: Int): DataFrame =
     if (n == 3) hashedShingleRowsOf(d)
     else shingleSetsNOf(d, n)
       .select(col("doc_id"), size(col("ts")).cast("long").as("n"),
         explode(col("ts")).as("sh"))
-      .select(col("doc_id"), col("n"), xxhash64(col("sh")).as("sh")).dedupCached
+      .select(col("doc_id"), col("n"), xxhash64(col("sh")).as("sh")).persist()
 
   // =====================================================================
   // q24: token counting + quality scoring (text analysis)
@@ -291,7 +285,7 @@ object TextDedup {
     inter.filter(j >= threshold)
       .select(col("id_a"), col("id_b"), col("n_common"), col("na"), col("nb"),
         round(j, 6).as("jaccard"))
-      .dedupCached
+      .persist()
   }
 
   private def jaccardPairsFrame(s: SparkSession, dir: String): DataFrame =
@@ -358,7 +352,7 @@ object TextDedup {
         min((col("ha") + lit(i.toLong) * col("hb")) % MPRIME).as(s"mh$i")).head,
         (0 until K).map(i =>
           min((col("ha") + lit(i.toLong) * col("hb")) % MPRIME).as(s"mh$i")).tail: _*)
-      .dedupCached
+      .persist()
   }
 
   /** doc_id + band0..band5 columns. Cached: q29 returns it directly and
@@ -371,7 +365,7 @@ object TextDedup {
         col(s"mh${3 * b}"), col(s"mh${3 * b + 1}"), col(s"mh${3 * b + 2}"))), 1, 16)
         .as(s"band$b")
     }
-    mhDfOf(d).select(col("doc_id") +: bands: _*).dedupCached
+    mhDfOf(d).select(col("doc_id") +: bands: _*).persist()
   }
 
   private def bandDf(s: SparkSession, dir: String): DataFrame =
@@ -430,7 +424,7 @@ object TextDedup {
         struct(lit(b).as("b"),
           xxhash64(lit(b), col(s"band$b")).as("h"))): _*)).as("e"))
       .select(col("doc_id"), col("e.b").as("b"), col("e.h").as("h"))
-      .dedupCached
+      .persist()
 
   private def bandRows(s: SparkSession, dir: String): DataFrame =
     bandRowsOf(docs(s, dir))
@@ -598,7 +592,7 @@ object TextDedup {
     // cached: both sides of the chunk-pair self-join consume it — without
     // this the whole shingle+aggregate pipeline runs twice (measured 2x)
     val sh = sums.select(col("doc_id"),
-      half(0 until 4).as("sim_lo"), half(4 until 8).as("sim_hi")).dedupCached
+      half(0 until 4).as("sim_lo"), half(4 until 8).as("sim_hi")).persist()
     def byteOf(c: Int): Column =
       shiftright(col(if (c < 4) "sim_lo" else "sim_hi"), 8 * (c % 4))
         .bitwiseAND(lit(255L))
@@ -713,7 +707,7 @@ object TextDedup {
   /** Converged cluster labels (doc_id, cluster_id) — memoized; see
     * [[clusterMemo]]. */
   private def dedupClusterLabels(s: SparkSession, dir: String): DataFrame =
-    clusterMemo.getOrElseUpdate((s, dir), computeClusterLabels(s, dir).dedupCached)
+    clusterMemo.getOrElseUpdate((s, dir), computeClusterLabels(s, dir).persist())
 
   def q40DedupClusters(s: SparkSession, dir: String): DataFrame = {
     val all = dedupClusterLabels(s, dir)
@@ -751,7 +745,7 @@ object TextDedup {
     * recursive-CTE oracles pin cross-engine. */
   private[queries] def propagateLabels(pairs: DataFrame): DataFrame = {
     val s = pairs.sparkSession
-    val p = pairs.select(col("id_a"), col("id_b")).dedupCached
+    val p = pairs.select(col("id_a"), col("id_b")).persist()
     val nEdges = p.count()
     val maxLocal =
       s.conf.get("spark.graft.dedup.localCcMaxEdges", "2000000").toLong
@@ -801,7 +795,7 @@ object TextDedup {
     val edges = pairs
       .unionAll(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .withColumnRenamed("id_a", "src").withColumnRenamed("id_b", "dst")
-      .dedupCached
+      .persist()
     // iterate ONLY over nodes that have at least one edge: a singleton's
     // label can never change (no neighbors), so it joins the result at
     // the end with its own id. At corpus scale this shrinks every round
@@ -931,7 +925,7 @@ object TextDedup {
   private def dfAnnotatedOf(d: DataFrame): DataFrame = {
     val base = hashedShingleRowsOf(d)
     val dfTab = base.groupBy("sh").agg(count(lit(1)).as("df"))
-    base.join(dfTab, Seq("sh")).dedupCached
+    base.join(dfTab, Seq("sh")).persist()
   }
 
   /** Shared capped PAIR-STAT frame: (id_a, id_b, n_common, na, nb) for
@@ -949,7 +943,7 @@ object TextDedup {
     // corpus a boilerplate shingle with df ~ 10^6 puts millions of docs
     // here, so this side must NOT be force-broadcast; AQE broadcasts it
     // when it measures small and falls back to a shuffle join when not.
-    // Deliberately NOT dedupCached even though hot_a/hot_b join it twice:
+    // Deliberately NOT persisted even though hot_a/hot_b join it twice:
     // the two broadcast builds run CONCURRENTLY as independent subtrees,
     // while a cache entry serializes them into materialize-then-read —
     // measured r20: q69 1.31 → 1.53/1.64 s, q41/q75 regress too (the
@@ -969,7 +963,7 @@ object TextDedup {
       .join(hot.select(col("doc_id").as("id_b"), col("hot").as("hot_b")), Seq("id_b"), "left")
       .select(col("id_a"), col("id_b"),
         (col("n_cold") + nHot).as("n_common"), col("na"), col("nb"))
-      .dedupCached
+      .persist()
   }
 
   private[queries] def cappedJaccardPairsOf(d: DataFrame, threshold: Double,
@@ -1850,7 +1844,7 @@ object TextDedup {
     //    xxhash64(w[i], w[i+1], w[i+2]) inside the transform — no
     //    concatenated shingle strings, no array_distinct (duplicates
     //    collapse in the idempotent bit_or partial agg), and no
-    //    dedupCached write+read (the cache build alone was ~1.1 s of the
+    //    persist() write+read (the cache build alone was ~1.1 s of the
     //    1.55 s total; tokens never contain spaces, so triples map 1:1
     //    to the oracle's space-joined shingle strings — same birthday
     //    collision caveat as q28);
@@ -1970,7 +1964,7 @@ object TextDedup {
       .select(col("source"), explode(col("ts")).as("shs"))
       .groupBy(xxhash64(col("shs")).as("sh"))
       .agg(sort_array(collect_set(col("source"))).as("srcs"))
-      .dedupCached
+      .persist()
     val sizes = srcSets.select(explode(col("srcs")).as("source"))
       .groupBy("source").agg(count(lit(1)).as("n_sh"))
     val p = srcSets.filter(size(col("srcs")) >= 2)

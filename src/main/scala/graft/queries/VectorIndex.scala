@@ -301,8 +301,7 @@ object VectorIndex {
     val live = IndexLifecycle.notTombstoned(spark, l, committed, "vec_id")
       .select("vec_id", "efp", "nrm")
       .dropDuplicates("vec_id") // replayed appends write duplicate rows
-    val idx = graft.queries.Caching.cached(live,
-      "spark.graft.vector.storageLevel")
+    val idx = live.persist()
     try {
       buildIndexed(idx, outDir, m.minCos, outPfx, nCells,
         if (kmeansIters > 0) kmeansIters else m.kmeansIters,

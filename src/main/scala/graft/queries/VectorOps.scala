@@ -267,16 +267,15 @@ object VectorOps {
     dot.cast("double") / (sqrt(na.cast("double")) * sqrt(nb.cast("double")))
 
   /** Normalize any (id, vec) frame to the internal indexed contract:
-    * (vec_id: long, carry..., efp: array<long>, nrm: long), cached at
-    * the `spark.graft.vector.storageLevel` level (default MEMORY_AND_DISK;
-    * DISK_ONLY for indexes that outgrow memory — see [[Caching]]).
+    * (vec_id: long, carry..., efp: array<long>, nrm: long), persisted at
+    * the session's `spark.sql.defaultCacheStorageLevel` (MEMORY_AND_DISK
+    * unless a deployment sets DISK_ONLY for indexes that outgrow memory).
     * Repeated calls with the same input share the cache entry by
     * plan identity. `carry` columns ride along into operator output
     * (must not collide with vec_id/efp/nrm/cos/rank/query_id). */
   def index(df: DataFrame, id: String, vec: String,
       carry: Seq[String] = Nil): DataFrame =
-    Caching.cached(indexUncached(df, id, vec, carry),
-      "spark.graft.vector.storageLevel")
+    indexUncached(df, id, vec, carry).persist()
 
   /** [[index]] without the cache pin — for batch-proportional serving
     * probes (streaming epochs) where recomputing the narrow projection a
@@ -407,8 +406,7 @@ object VectorOps {
     * entries (the [[indexUncached]] rationale). */
   private[queries] def bandRowsCached(idx: DataFrame, planes: Int,
       bands: Int, dims: Int): DataFrame =
-    Caching.cached(lshBandRows(idx, planes, bands, dims),
-      "spark.graft.vector.storageLevel")
+    lshBandRows(idx, planes, bands, dims).persist()
 
   def knnLshIndexed(corpus: DataFrame, queries: DataFrame, k: Int,
       planes: Int = 16, bands: Int = 4, dims: Int = 64,
@@ -584,24 +582,20 @@ object VectorOps {
 
   /** The code column for subspace `j` under `books`: argmin over the
     * ksub codewords of ‖v_j − c‖² = c·c − 2·v_j·c (the common v_j·v_j
-    * dropped — it cannot change the argmin), ties to the LOWEST code via
-    * struct array-min. All integer: |c·c| and |2·dot| ≤ 2·subdim·SCALE²
-    * ≈ 1.6e13 at 8 dims — exact in Long. The subvector is LET-BOUND as
-    * a lambda variable (the single-element-array `transform` trick, see
-    * [[Curation.winnowedSelOf]]) so the slice is evaluated once per row,
-    * not once per codeword. */
+    * dropped — it cannot change the argmin), ties to the LOWEST code —
+    * one [[graft.functions.CellTop2]] call over the subvector, scoring
+    * centroid 2·c with bias c·c and norm 1, so its argmax is this
+    * argmin. All integer until the kernel's one exact long → double
+    * conversion: |c·c| and |2·dot| ≤ 2·subdim·SCALE² ≈ 1.6e13 at 8 dims,
+    * far below 2^53. The codebook rides as kernel constructor data, not
+    * plan literals. */
   private def pqCodeCol(efp: Column,
       books: IndexedSeq[IndexedSeq[Array[Long]]], j: Int): Column = {
-    val sub = books(j).head.length
-    element_at(transform(array(slice(efp, j * sub + 1, sub)), vj => {
-      val scored = books(j).indices.map { c =>
-        val cc = books(j)(c).map(x => x * x).sum
-        struct((lit(cc) - lit(2L) *
-          GraftFunctions.intDot(vj, typedLit(books(j)(c).toSeq))).as("d"),
-          lit(c).as("c"))
-      }
-      array_min(array(scored: _*)).getField("c")
-    }), 1)
+    val book = books(j)
+    val sub = book.head.length
+    GraftFunctions.cellTop2(slice(efp, j * sub + 1, sub),
+      book.map(_.map(2L * _)), book.map(_ => 1.0),
+      book.map(c => c.map(x => x * x).sum)).getField("c1")
   }
 
   private def pqCodesCol(efp: Column,
@@ -648,9 +642,9 @@ object VectorOps {
   }
 
   /** PQ-encode an indexed frame: (vec_id, carry..., codes: array<int>) —
-    * a PURE PROJECTION (codewords ride as plan literals; no shuffle, no
-    * join), the compressed representation that replaces the raw vectors
-    * at serving time: m bytes/vector instead of dims·4. */
+    * a PURE PROJECTION (one [[graft.functions.CellTop2]] per subspace;
+    * no shuffle, no join), the compressed representation that replaces
+    * the raw vectors at serving time: m bytes/vector instead of dims·4. */
   def pqEncodeIndexed(idx: DataFrame,
       books: IndexedSeq[IndexedSeq[Array[Long]]],
       carry: Seq[String] = Nil): DataFrame =
@@ -688,7 +682,9 @@ object VectorOps {
     * ksub integer dots (vector subspace × every codeword). Used on the
     * query side of [[knnPqIndexed]] and, in the residual form, on the
     * per-cell centroid table of [[knnIvfPqIndexed]]. The subvector is
-    * let-bound per subspace (the [[pqCodeCol]] trick). */
+    * LET-BOUND as a lambda variable (the single-element-array `transform`
+    * trick, see [[Curation.winnowedSelOf]]) so the slice is evaluated
+    * once per subspace, not once per codeword. */
   private def pqLutCol(vec: Column,
       books: IndexedSeq[IndexedSeq[Array[Long]]]): Column = {
     val sub = books.head.head.length
@@ -767,10 +763,8 @@ object VectorOps {
   def pqIndexOf(corpus: DataFrame, m: Int = 8, ksub: Int = 16,
       iters: Int = 0): PqIndex = {
     val books = memoizedPqBooks(corpus, m, ksub, iters)
-    PqIndex(books, Caching.cached(
-      pqEncodeIndexed(corpus, books)
-        .withColumn("rnorm2", pqRnorm2Col(col("codes"), books)),
-      "spark.graft.vector.storageLevel"))
+    PqIndex(books, pqEncodeIndexed(corpus, books)
+      .withColumn("rnorm2", pqRnorm2Col(col("codes"), books)).persist())
   }
 
   /** The probe half of [[knnPqIndexed]]: ADC over an already-encoded
@@ -813,10 +807,8 @@ object VectorOps {
     // (vec_id, codes, rnorm2) relation instead of each re-encoding the
     // corpus (guide §2.4) — the same artifact pqIndexOf persists for
     // serving. Memory: m small ints + one long per vector.
-    val enc = Caching.cached(
-      pqEncodeIndexed(corpus, books)
-        .withColumn("rnorm2", pqRnorm2Col(col("codes"), books)),
-      "spark.graft.vector.storageLevel")
+    val enc = pqEncodeIndexed(corpus, books)
+      .withColumn("rnorm2", pqRnorm2Col(col("codes"), books)).persist()
     pqProbe(corpus, books, enc, queries, k, rerank, carry)
   }
 
@@ -883,8 +875,11 @@ object VectorOps {
       .withColumn("cdot_lut", pqLutCol(col("cefp"), books))
     val enc = corpus.select(col(cell), col("vec_id"), col("efp"))
       .join(broadcast(centsK), Seq(cell))
+      // the residual is projected once; every subspace's code slices it
+      .select(col(cell), col("vec_id"), resCol.as("refp"), col("cnorm2"),
+        col("cdot_lut"))
       .select(col(cell), col("vec_id"),
-        pqCodesCol(resCol, books).as("codes"),
+        pqCodesCol(col("refp"), books).as("codes"),
         col("cnorm2"), col("cdot_lut"))
       .select(col(cell), col("vec_id"), col("codes"),
         (col("cnorm2") + lit(2L) * pqAdcSum(col("codes"), col("cdot_lut")) +
@@ -1414,10 +1409,8 @@ object VectorOps {
         kmeansIters, trainSampleCap, probes,
         if (probes == 1) 0L
         else java.lang.Double.doubleToLongBits(probeMargin)))(
-      Caching.cached(
-        assignCellsMulti(idx, memoizedCentroids(idx, k, kmeansIters,
-          trainSampleCap), probes, probeMargin),
-        "spark.graft.vector.storageLevel"))
+      assignCellsMulti(idx, memoizedCentroids(idx, k, kmeansIters,
+        trainSampleCap), probes, probeMargin).persist())
     // band rows cached (the self-join below reads them on both sides;
     // the cell join itself stays lazy — its inputs are both cached)
     val br = bandRowsCached(idx, p, b, dims).join(cells, Seq("vec_id"))
@@ -1591,8 +1584,7 @@ object VectorOps {
     val corpusCells = memoizedCells(
       (corpus.sparkSession, corpus.queryExecution.logical.canonicalized, k,
         kmeansIters, trainSampleCap, 1, 0L))(
-      Caching.cached(assignCells(corpus, cents),
-        "spark.graft.vector.storageLevel"))
+      assignCells(corpus, cents).persist())
     // corpus band rows cached: the streaming ingest loop probes this
     // same (corpus, shape) artifact every epoch
     val cb = bandRowsCached(corpus, p, b, dims).join(corpusCells, Seq("vec_id"))
@@ -1669,7 +1661,7 @@ object VectorOps {
     *     repartitioning;
     *   - assignment: argmax of cos(v, centroid); since |v| is a common
     *     positive factor it reduces to argmax of dot/|centroid| — ties
-    *     break to the LOWEST cell id via a struct array-max;
+    *     break to the LOWEST cell id ([[graft.functions.CellTop2]]);
     *   - update: exact integer per-dimension sums; the new centroid is
     *     the mean re-quantized to the 1e6 grid (round-half-up), keeping
     *     centroid coordinates in the same integer range as vectors so
@@ -1677,80 +1669,37 @@ object VectorOps {
     *   - `iters` is fixed — no data-dependent convergence test, so cost
     *     and output are exactly reproducible.
     *
-    * Scale shape per iteration, TWO assignment regimes (identical
-    * arithmetic, bit-identical output — spec'd):
-    *   - k <= `spark.graft.vector.kmeansLiteralMaxK` (default 64): a PURE
-    *     MAP — centroids ride along as k×dims plan literals, no join, no
-    *     shuffle;
-    *   - larger k: the literal form would blow janino method limits /
-    *     plan-compile budgets at serving-scale cell counts (k =
-    *     4096–65536) long before data size matters, so centroids become a
-    *     BROADCAST table instead — a broadcast nested-loop join fans each
-    *     vector out to k scored rows and a partial-aggregated
-    *     max-of-struct per vec_id picks the argmax cell. Every vector's k
-    *     rows sit in one task, so the map-side partial agg collapses them
-    *     before the one corpus-sized shuffle.
-    * The update is one (cell, dim)-keyed partial-aggregated groupBy
-    * collecting k×dims rows to the driver (bounded by construction,
-    * independent of corpus size). Empty cells keep their previous
+    * Scale shape per iteration: the assignment is a PURE MAP — one
+    * [[graft.functions.CellTop2]] projection whose centroid matrix is a
+    * codegen reference object, so plans stay small at any k (no join, no
+    * shuffle, no plan literals). The update is one (cell, dim)-keyed
+    * partial-aggregated groupBy collecting k×dims rows to the driver
+    * (bounded by construction, independent of corpus size). Empty cells keep their previous
     * centroid. Returns (vec_id, cell: int). */
   def kmeansCells(idx: DataFrame, k: Int, iters: Int = 5,
       trainSampleCap: Long = 0L): DataFrame =
     assignCells(idx, kmeansCentroids(idx, k, iters, trainSampleCap))
 
-  // scoring is IDENTICAL in both assignment regimes: cos reduces to
-  // dot/|centroid| (|v| is a common positive factor), |centroid| computed
-  // ON THE DRIVER with the same double arithmetic, ties to the lowest
-  // cell id via the negated-cell struct field — so path choice never
-  // changes the output
-  private def cellScoredArr(cents: IndexedSeq[Array[Long]]): Column =
-    array((0 until cents.length).map { c =>
-      val cn = math.sqrt(cents(c).map(x => x.toDouble * x.toDouble).sum)
-      val score =
-        if (cn == 0.0) lit(Double.MinValue)
-        else GraftFunctions.intDot(col("efp"), typedLit(cents(c).toSeq))
-          .cast("double") / lit(cn)
-      struct(score.as("s"), lit(-c).as("nc"))
-    }: _*)
-
-  private def cellAssignCol(cents: IndexedSeq[Array[Long]]): Column =
-    (array_max(cellScoredArr(cents)).getField("nc") * -1).as("cell")
-
   /** (vec_id, cell) for an indexed frame under a FIXED centroid set —
     * the assignment half of [[kmeansCells]], public so serving paths
     * ([[semanticIncrementalCellsIndexed]]) can place NEW batches into a
-    * corpus's existing cells with the exact training-time scoring. Two
-    * regimes, bit-identical output (spec'd), BOTH pure projections:
-    * k ≤ `kmeansLiteralMaxK` rides as plan literals; larger k evaluates
-    * the argmax inside one codegen'd expression whose centroid matrix is
-    * a reference object ([[graft.functions.CellTop2]]) — plans stay small
-    * at any k, and nothing fans out (the pre-r15 broadcast-join +
-    * max-of-struct formulation planned a SortAggregate over the k-way
-    * fan-out, a disk-filling 8B-row sort at the 1000×-decade build). */
+    * corpus's existing cells with the exact training-time scoring. A pure
+    * projection at any k: the argmax runs inside one codegen'd expression
+    * whose centroid matrix is a reference object
+    * ([[graft.functions.CellTop2]]) — plans stay small, and nothing fans
+    * out (the pre-r15 broadcast-join + max-of-struct formulation planned
+    * a SortAggregate over the k-way fan-out, a disk-filling 8B-row sort
+    * at the 1000×-decade build). */
   def assignCells(frame: DataFrame,
       cents: IndexedSeq[Array[Long]]): DataFrame = {
-    // self-register (idempotent): both regimes ride registry functions
-    // (intDot / cellTop2), and callers like VectorIndex.rebuild reach
+    // self-register (idempotent): callers like VectorIndex.rebuild reach
     // here without ever passing through index()'s registration
     GraftFunctions.register(frame.sparkSession)
-    val k = cents.length
-    val literalMaxK = frame.sparkSession.conf
-      .get("spark.graft.vector.kmeansLiteralMaxK", "64").toInt
-    if (k <= literalMaxK)
-      frame.select(col("vec_id"), cellAssignCol(cents))
-    else
-      // large-k regime: argmax as ONE codegen'd projection
-      // ([[GraftFunctions.cellTop2]]) — the former broadcast crossJoin +
-      // max(struct(score, -cell)) partial agg planned as a SORT aggregate
-      // (struct buffers are HashAggregate-ineligible), so every vector's
-      // k-way fan-out was sorted: at the r15 1000×-decade build
-      // (2M vectors × ~4000 cells) the 8-billion-row sort spill filled
-      // the disk. The expression keeps the scoring arithmetic and
-      // lowest-cell tie rule bit-identical to the literal regime (spec'd)
-      // with zero fan-out, zero shuffle, zero sort.
-      frame.select(col("vec_id"),
-        GraftFunctions.cellTop2(col("efp"), cents).getField("c1").as("cell"))
+    frame.select(col("vec_id"), cellCol(cents))
   }
+
+  private def cellCol(cents: IndexedSeq[Array[Long]]): Column =
+    GraftFunctions.cellTop2(col("efp"), cents).getField("c1").as("cell")
 
   /** TOP-`probes` cell assignment — [[assignCells]] widened to SemDeDup's
     * standard boundary mitigation: each vector gets one output row per
@@ -1776,13 +1725,10 @@ object VectorOps {
     * separated corpora. The default 2.0 (the cosine diameter) is
     * unconditional, i.e. plain top-2.
     *
-    * Cost shape: BOTH regimes are pure maps. The literal regime
-    * (k ≤ `kmeansLiteralMaxK`) let-binds the scored array once and takes
-    * the top-2 via array_max + a filtered array_max; the large-k regime
-    * reads best AND runner-up out of the same single
-    * [[graft.functions.CellTop2]] evaluation, so multi-probe assignment
-    * costs the same one pass as single-probe — the 2× is only in the
-    * emitted rows. */
+    * Cost shape: a pure map that reads best AND runner-up out of the same
+    * single [[graft.functions.CellTop2]] evaluation, so multi-probe
+    * assignment costs the same one pass as single-probe — the 2× is only
+    * in the emitted rows. */
   def assignCellsMulti(frame: DataFrame, cents: IndexedSeq[Array[Long]],
       probes: Int, maxMargin: Double = 2.0): DataFrame = {
     require(probes >= 1 && probes <= 2,
@@ -1791,40 +1737,16 @@ object VectorOps {
     if (probes == 1 || cents.length < 2) assignCells(frame, cents)
     else {
       GraftFunctions.register(frame.sparkSession) // assignCells rationale
-      val k = cents.length
-      val literalMaxK = frame.sparkSession.conf
-        .get("spark.graft.vector.kmeansLiteralMaxK", "64").toInt
       // score s = dot/|cent|, so cos = s/|v|: the margin condition
-      // (cos1 − cos2 ≤ maxMargin) is (s1 − s2) ≤ maxMargin·|v|
-      def marginOk(s1: Column, s2: Column): Column =
-        (s1 - s2) <= lit(maxMargin) * sqrt(col("nrm").cast("double"))
-      if (k <= literalMaxK) {
-        // let-bind the scored array, then the best struct, then emit
-        // [best] or [best, second] — the single-element-array
-        // `transform` trick; the margin gate rides the same projection
-        val cellsArr = element_at(transform(array(cellScoredArr(cents)), a =>
-          element_at(transform(array(array_max(a)), b =>
-            element_at(transform(
-              array(array_max(filter(a, x =>
-                x.getField("nc") =!= b.getField("nc")))), s2 =>
-              when(marginOk(b.getField("s"), s2.getField("s")),
-                array(b.getField("nc") * -1, s2.getField("nc") * -1))
-                .otherwise(array(b.getField("nc") * -1))), 1)), 1)), 1)
-        frame.select(col("vec_id"), explode(cellsArr).as("cell"))
-      } else {
-        // large-k regime: best AND runner-up from the same codegen'd
-        // projection ([[assignCells]] rationale — the old double fan-out
-        // through max(struct) planned SORT aggregates); the margin gate
-        // rides the projection, and the second row explodes out only when
-        // it passes — identical emit rule to the former second leg
-        val t = GraftFunctions.cellTop2(col("efp"), cents)
-        frame.select(col("vec_id"), col("nrm"), t.as("t2"))
-          .select(col("vec_id"), explode(
-            when(col("t2.c2") >= 0 &&
-                marginOk(col("t2.s1"), col("t2.s2")),
-              array(col("t2.c1"), col("t2.c2")))
-              .otherwise(array(col("t2.c1")))).as("cell"))
-      }
+      // (cos1 − cos2 ≤ maxMargin) is (s1 − s2) ≤ maxMargin·|v|, and the
+      // second row explodes out only when it passes
+      val t = GraftFunctions.cellTop2(col("efp"), cents)
+      frame.select(col("vec_id"), col("nrm"), t.as("t2"))
+        .select(col("vec_id"), explode(
+          when(col("t2.c2") >= 0 && (col("t2.s1") - col("t2.s2")) <=
+              lit(maxMargin) * sqrt(col("nrm").cast("double")),
+            array(col("t2.c1"), col("t2.c2")))
+            .otherwise(array(col("t2.c1")))).as("cell"))
     }
   }
 
@@ -1836,8 +1758,6 @@ object VectorOps {
       trainSampleCap: Long = 0L): IndexedSeq[Array[Long]] = {
     require(k >= 1 && iters >= 1, s"need k>=1, iters>=1 (got $k, $iters)")
     GraftFunctions.register(idx.sparkSession) // assignCells rationale
-    val literalMaxK = idx.sparkSession.conf
-      .get("spark.graft.vector.kmeansLiteralMaxK", "64").toInt
     val dims = idx.select(size(col("efp"))).head().getInt(0)
 
     // SAMPLED TRAINING (trainSampleCap > 0): seeds and every Lloyd update
@@ -1860,17 +1780,6 @@ object VectorOps {
           s"CAST(conv(substring(md5(CAST(vec_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % ${m}L = 0"))
       }
 
-    /** (cell, efp) for the update pass: the literal regime reads both in
-      * one projection; the broadcast regime joins the narrow assignment
-      * back to the index — corpus-row-proportional on both sides (the
-      * fan-out rows are gone by here). */
-    def assignedWithVec(cents: IndexedSeq[Array[Long]]): DataFrame =
-      if (k <= literalMaxK)
-        trainIdx.select(cellAssignCol(cents), col("efp"))
-      else trainIdx.select(
-        GraftFunctions.cellTop2(col("efp"), cents).getField("c1").as("cell"),
-        col("efp"))
-
     val seeds = trainIdx
       .select(col("vec_id"), col("efp"), md5(col("vec_id").cast("string")).as("h"))
       .orderBy(col("h"), col("vec_id")).limit(k)
@@ -1881,7 +1790,7 @@ object VectorOps {
 
     var cents = seeds
     for (_ <- 0 until iters) {
-      val sums = assignedWithVec(cents)
+      val sums = trainIdx.select(cellCol(cents), col("efp"))
         .select(col("cell"), posexplode(col("efp")).as(Seq("i", "x")))
         .groupBy(col("cell"), col("i"))
         .agg(sum(col("x")).as("sx"), count(lit(1)).as("n"))

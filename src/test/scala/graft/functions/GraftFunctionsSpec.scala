@@ -108,7 +108,8 @@ class GraftFunctionsSpec extends SparkSpec {
         null, org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.LongType)),
       cents.map(_.toSeq),
-      cents.map(v => math.sqrt(v.map(x => x.toDouble * x.toDouble).sum)))
+      cents.map(v => math.sqrt(v.map(x => x.toDouble * x.toDouble).sum)),
+      cents.map(_ => 0L))
     val interp = rows.zipWithIndex.map { case (v, i) =>
       val arr = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
         v.toArray)
@@ -119,5 +120,79 @@ class GraftFunctionsSpec extends SparkSpec {
     }
     assert(viaCodegen.map(_._2) == interp.map(_._2),
       s"codegen $viaCodegen vs interpreted $interp")
+  }
+
+  test("CellTop2: with a non-zero bias, interpreted eval matches codegen and the formula") {
+    GraftFunctions.register(spark)
+    val cents = IndexedSeq(Array(3L, -2L, 8L), Array(-1L, 9L, 4L),
+      Array(5L, 5L, 5L), Array(0L, 0L, 0L))
+    val norms = Seq(2.5, 1.0, 4.0, 0.0)
+    val bias = Seq(40L, -7L, 100L, 3L)
+    val rows = Seq(Seq(13L, 7L, -4L), Seq(-6L, 2L, 11L), Seq(0L, 0L, 0L),
+      Seq(9L, 9L, 9L))
+    val df = spark.createDataFrame(rows.zipWithIndex.map {
+      case (v, i) => (i.toLong, v)
+    }).toDF("vec_id", "efp")
+    def tuple(t: org.apache.spark.sql.catalyst.InternalRow) =
+      (t.getInt(0), t.getDouble(1), t.getInt(2), t.getDouble(3))
+    val viaCodegen = df
+      .select(col("vec_id"),
+        GraftFunctions.cellTop2(col("efp"), cents, norms, bias).as("t"))
+      .collect().sortBy(_.getLong(0)).map { r =>
+        val t = r.getStruct(1)
+        (t.getInt(0), t.getDouble(1), t.getInt(2), t.getDouble(3))
+      }.toSeq
+    val expr = CellTop2(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(
+        null, org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.LongType)),
+      cents.map(_.toSeq), norms, bias)
+    val interp = rows.map(v => tuple(expr.nullSafeEval(
+      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v.toArray))
+      .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
+    assert(viaCodegen == interp, s"codegen $viaCodegen vs interpreted $interp")
+    // the same scores computed in plain Scala: (dot − bias) / norm, a
+    // zero norm scores Double.MinValue, ties to the lowest id
+    val driver = rows.map { v =>
+      val s = cents.indices.map { c =>
+        if (norms(c) == 0.0) Double.MinValue
+        else (v.zip(cents(c)).map { case (a, b) => a * b }.sum - bias(c))
+          .toDouble / norms(c)
+      }
+      val order = s.indices.sortBy(c => (-s(c), c))
+      (order(0), s(order(0)), order(1), s(order(1)))
+    }
+    assert(viaCodegen == driver, s"codegen $viaCodegen vs driver $driver")
+  }
+
+  test("CellTop2 PQ codes equal a driver-side argmin of c·c − 2·v·c, ties to the lowest code") {
+    GraftFunctions.register(spark)
+    // m = 2 subspaces of 2 dims, ksub = 4; subspace 0 plants an exact
+    // duplicate codeword (codes 1 and 3), subspace 1 two distinct
+    // codewords at equal distance from the origin (codes 0 and 2)
+    val books = IndexedSeq(
+      IndexedSeq(Array(10L, 0L), Array(0L, 10L), Array(-10L, 0L),
+        Array(0L, 10L)),
+      IndexedSeq(Array(4L, 0L), Array(7L, 7L), Array(0L, 4L),
+        Array(-9L, 1L)))
+    val vecs = Seq(
+      1L -> Array(0L, 9L, 0L, 0L),    // code 1 (tie with 3); tie 0/2 -> 0
+      2L -> Array(8L, 1L, 6L, 5L),
+      3L -> Array(-3L, -4L, -8L, 2L),
+      4L -> Array(1L, 12L, 3L, 3L))
+    val idx = spark.createDataFrame(vecs.map { case (id, v) => (id, v.toSeq) })
+      .toDF("vec_id", "efp")
+    val got = graft.queries.VectorOps.pqEncodeIndexed(idx, books).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    vecs.foreach { case (id, v) =>
+      val want = books.indices.map { j =>
+        val vj = v.slice(j * 2, j * 2 + 2)
+        val d = books(j).map(c =>
+          c.map(x => x * x).sum - 2L * vj.zip(c).map { case (a, b) => a * b }.sum)
+        d.indexOf(d.min)
+      }
+      assert(got(id) == want, s"vec $id: kernel ${got(id)} vs driver $want")
+    }
+    assert(got(1L) == Seq(1, 0), s"planted ties must resolve low: ${got(1L)}")
   }
 }

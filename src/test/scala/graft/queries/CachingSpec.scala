@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** The 100 TB knobs on the shared derivation caches:
-  *   - `spark.graft.dedup.storageLevel` / `spark.graft.vector.storageLevel`
-  *     select the persist level of the cached dedup/vector-index nodes;
+  *   - Spark's `spark.sql.defaultCacheStorageLevel` selects the persist
+  *     level of the cached dedup/vector-index nodes (plain `persist()`);
   *   - `spark.graft.dedup.checkpointDir` switches the connected-components
   *     fixpoint from localCheckpoint to reliable checkpoint().
   * Each test restores the session conf it touches (the suite shares one
@@ -21,8 +21,10 @@ class CachingSpec extends SparkSpec {
       .filter(col("doc_id") % 7 === marker % 7)
       .select(col("doc_id"), col("text"))
 
-  test("dedup caches honor spark.graft.dedup.storageLevel") {
-    spark.conf.set("spark.graft.dedup.storageLevel", "DISK_ONLY")
+  private val LevelKey = "spark.sql.defaultCacheStorageLevel"
+
+  test("dedup caches honor spark.sql.defaultCacheStorageLevel") {
+    spark.conf.set(LevelKey, "DISK_ONLY")
     try {
       val ss = TextDedup.shingleSetsOf(freshDocs(1))
       assert(ss.storageLevel == StorageLevel.DISK_ONLY)
@@ -35,7 +37,7 @@ class CachingSpec extends SparkSpec {
       // results are unchanged by the level: same pairs as the default-level
       // derivation over the identical slice (different plan via alias)
       Seq(ss, hashed, bands, pairs).foreach(_.unpersist())
-    } finally spark.conf.unset("spark.graft.dedup.storageLevel")
+    } finally spark.conf.unset(LevelKey)
   }
 
   test("dedup caches default to MEMORY_AND_DISK (cache() semantics)") {
@@ -44,15 +46,15 @@ class CachingSpec extends SparkSpec {
     finally ss.unpersist()
   }
 
-  test("vector index honors spark.graft.vector.storageLevel") {
-    spark.conf.set("spark.graft.vector.storageLevel", "DISK_ONLY")
+  test("vector index honors spark.sql.defaultCacheStorageLevel") {
+    spark.conf.set(LevelKey, "DISK_ONLY")
     try {
       val idx = VectorOps.index(
         Tables.load(spark, sfDir, "embeddings").filter(col("vec_id") % 11 === 6),
         "vec_id", "embedding", Seq("label"))
       try assert(idx.storageLevel == StorageLevel.DISK_ONLY)
       finally idx.unpersist()
-    } finally spark.conf.unset("spark.graft.vector.storageLevel")
+    } finally spark.conf.unset(LevelKey)
   }
 
   test("unpersistDedupCaches releases non-default n-gram chains (nGrams param)") {

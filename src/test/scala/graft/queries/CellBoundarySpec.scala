@@ -141,32 +141,38 @@ class CellBoundarySpec extends SparkSpec {
       "margin-gated probes=2 lost boundary pairs the unconditional path catches")
   }
 
-  test("probes=2 assignment emits each vector's two distinct nearest cells in both regimes") {
+  test("probes=2 assignment, ungated and margin-gated, equals a driver-side top-2 reference") {
     val idx = VectorOps.index(fixture, "vec_id", "embedding")
     val cents = VectorOps.kmeansCentroids(idx, k = 2, iters = 2)
-    val multi = VectorOps.assignCellsMulti(idx, cents, probes = 2)
-      .collect().map(r => (r.getLong(0), r.getInt(1)))
+    def assigned(maxMargin: Double): Seq[(Long, Int)] =
+      VectorOps.assignCellsMulti(idx, cents, probes = 2, maxMargin = maxMargin)
+        .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
+    val multi = assigned(2.0)
     val byVec = multi.groupBy(_._1)
     assert(byVec.forall(_._2.length == 2), "two rows per vector")
     assert(byVec.forall { case (_, rs) => rs.map(_._2).distinct.length == 2 },
       "the two probed cells must be distinct")
-    // the broadcast regime (k > kmeansLiteralMaxK) must agree bit-exactly
-    val s = spark
-    val old = s.conf.get("spark.graft.vector.kmeansLiteralMaxK", "64")
-    s.conf.set("spark.graft.vector.kmeansLiteralMaxK", "1")
-    try {
-      val multiB = VectorOps.assignCellsMulti(idx, cents, probes = 2)
-        .collect().map(r => (r.getLong(0), r.getInt(1)))
-      assert(multiB.sorted.toSeq == multi.sorted.toSeq,
-        "literal vs broadcast multi-probe assignment diverged")
-      // and the margin-GATED form agrees across regimes too
-      val gatedB = VectorOps.assignCellsMulti(idx, cents, probes = 2,
-        maxMargin = 0.3).collect().map(r => (r.getLong(0), r.getInt(1)))
-      s.conf.set("spark.graft.vector.kmeansLiteralMaxK", old)
-      val gatedL = VectorOps.assignCellsMulti(idx, cents, probes = 2,
-        maxMargin = 0.3).collect().map(r => (r.getLong(0), r.getInt(1)))
-      assert(gatedB.sorted.toSeq == gatedL.sorted.toSeq,
-        "literal vs broadcast margin-gated assignment diverged")
-    } finally s.conf.set("spark.graft.vector.kmeansLiteralMaxK", old)
+    // the same rule in plain Scala over the collected index: score
+    // dot/|cent| (ties to the lowest cell at each rank), the second cell
+    // emitted when s1 − s2 ≤ maxMargin·|v|
+    val vecs = idx.select("vec_id", "efp", "nrm").collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
+    def reference(maxMargin: Double): Seq[(Long, Int)] = vecs.flatMap {
+      case (id, v, nrm) =>
+        val s = cents.map { c =>
+          v.zip(c).map { case (a, b) => a * b }.sum.toDouble /
+            math.sqrt(c.map(x => x.toDouble * x.toDouble).sum)
+        }
+        val Seq(c1, c2) = s.indices.sortBy(c => (-s(c), c)).take(2)
+        if (s(c1) - s(c2) <= maxMargin * math.sqrt(nrm.toDouble))
+          Seq(id -> c1, id -> c2)
+        else Seq(id -> c1)
+    }.sorted.toSeq
+    assert(multi == reference(2.0), "ungated top-2 diverged from the reference")
+    val gated = assigned(0.3)
+    assert(gated == reference(0.3),
+      "margin-gated top-2 diverged from the reference")
+    assert(gated.length > vecs.length && gated.length < multi.length,
+      s"the 0.3 gate should double some vectors, not all: ${gated.length}")
   }
 }

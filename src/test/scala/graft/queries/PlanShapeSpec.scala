@@ -457,6 +457,35 @@ class PlanShapeSpec extends SparkSpec {
       s"candidate pool not group-limited before the exchange:\n${p.take(2000)}")
   }
 
+  test("k-means cells and PQ codes plan one cell_top2 per quantizer and no literal int-dot") {
+    import graft.functions.{ArrayIntDot, CellTop2}
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    val idx = VectorOps.index(Tables.load(spark, sfDir, "embeddings"),
+      "vec_id", "embedding")
+    def exprs(df: org.apache.spark.sql.DataFrame): Seq[Expression] =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case e => e
+      }))
+    def check(df: org.apache.spark.sql.DataFrame, quantizers: Int): Unit = {
+      val es = exprs(df)
+      val kernels = es.count(_.isInstanceOf[CellTop2])
+      assert(kernels == quantizers,
+        s"$kernels cell_top2 calls for $quantizers quantizers:\n" +
+          df.queryExecution.optimizedPlan.toString.take(2000))
+      assert(!es.exists {
+        case d: ArrayIntDot => d.children.exists(_.foldable)
+        case _ => false
+      }, "centroids or codewords planned as literal int-dot operands")
+    }
+    // k = 64 centroids: the assignment the plan-literal regime used to
+    // write out as 64 literal dots
+    val cents = idx.select("efp").orderBy("vec_id").limit(64).collect()
+      .map(_.getSeq[Long](0).toArray).toIndexedSeq
+    check(VectorOps.assignCells(idx, cents), 1)
+    // m = 8 subspaces × ksub = 16 codewords: one kernel per subspace
+    check(VectorOps.pqEncodeIndexed(idx, VectorOps.pqBooksSampled(idx, 8, 16)), 8)
+  }
+
   test("q92 span scrub is window-free: partial span agg, hash anti-join, agg rebuild") {
     val df = TextPipeline.q92SpanScrub(spark, sfDir)
     df.collect() // finalize the adaptive plan

@@ -436,27 +436,52 @@ class VectorOpsSpec extends SparkSpec {
     assert(a.map(_._2).distinct.length > 1)
   }
 
-  test("kmeansCells broadcast-join path is bit-identical to the literal path") {
+  test("kmeansCells equals driver-side Lloyd iterations plus argmax, as one cell_top2 projection") {
     val idx = VectorOps.index(renamed, "vid", "v")
-    val lit = VectorOps.kmeansCells(idx, 8, iters = 3).collect()
+    val (k, iters) = (8, 3)
+    val data = idx.select("vec_id", "efp").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).sortBy(_._1)
+    // the same rules in plain Scala: md5-ordered seeds, argmax of
+    // dot/|centroid| with ties to the lowest cell, re-quantized means,
+    // empty cells keep their centroid
+    def md5(id: Long): String = java.security.MessageDigest.getInstance("MD5")
+      .digest(id.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    def assign(cents: IndexedSeq[Array[Long]], v: Array[Long]): Int = {
+      val s = cents.map { c =>
+        val cn = math.sqrt(c.map(x => x.toDouble * x.toDouble).sum)
+        if (cn == 0.0) Double.MinValue
+        else v.zip(c).map { case (a, b) => a * b }.sum.toDouble / cn
+      }
+      s.indexOf(s.max)
+    }
+    var cents: IndexedSeq[Array[Long]] = data
+      .sortBy { case (id, _) => (md5(id), id) }.take(k).map(_._2).toIndexedSeq
+    for (_ <- 0 until iters) {
+      val byCell = data.groupBy { case (_, v) => assign(cents, v) }
+      cents = cents.indices.map { c =>
+        byCell.get(c).fold(cents(c)) { members =>
+          members.map(_._2).transpose
+            .map(xs => math.round(xs.sum.toDouble / members.length)).toArray
+        }
+      }
+    }
+    val want = data.map { case (id, v) => (id, assign(cents, v)) }.toSeq
+    assert(VectorOps.kmeansCentroids(idx, k, iters).map(_.toSeq) ==
+      cents.map(_.toSeq), "centroids diverged from the driver-side Lloyd")
+
+    val cells = VectorOps.kmeansCells(idx, k, iters)
+    // shape check: the assignment is a PURE PROJECTION (the CellTop2
+    // reference-object argmax) — no join fan-out and, above all, no
+    // SortAggregate (the pre-r15 max-of-struct formulation's
+    // disk-filling failure mode at the 1000× decade)
+    val plan = cells.queryExecution.executedPlan.toString
+    assert(plan.contains("cell_top2"),
+      "kmeans assignment did not plan the CellTop2 projection")
+    assert(!plan.contains("SortAggregate") && !plan.contains("Join"),
+      s"kmeans assignment must not aggregate or join:\n$plan")
+    val got = cells.collect()
       .map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq
-    val key = "spark.graft.vector.kmeansLiteralMaxK"
-    spark.conf.set(key, "1") // force every k onto the broadcast path
-    try {
-      val bc = VectorOps.kmeansCells(idx, 8, iters = 3)
-      // shape check: the large-k assignment must be a PURE PROJECTION
-      // (CellTop2 reference-object argmax) — no join fan-out and, above
-      // all, no SortAggregate (the pre-r15 max-of-struct formulation's
-      // disk-filling failure mode at the 1000× decade)
-      val plan = bc.queryExecution.executedPlan.toString
-      assert(plan.contains("cell_top2"),
-        "forced large-k path did not plan the CellTop2 projection")
-      assert(!plan.contains("SortAggregate") && !plan.contains("Join"),
-        s"large-k assignment must not aggregate or join:\n$plan")
-      val got = bc.collect()
-        .map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq
-      assert(got == lit, "broadcast-path assignments diverged from literal path")
-    } finally spark.conf.unset(key)
+    assert(got == want, "kmeansCells diverged from the driver-side argmax")
   }
 
   test("knnIvfAuto serves IVF over a frame with no cell column, with real recall") {
