@@ -1674,8 +1674,8 @@ object VectorOps {
     * codegen reference object, so plans stay small at any k (no join, no
     * shuffle, no plan literals). The update is one (cell, dim)-keyed
     * partial-aggregated groupBy collecting k×dims rows to the driver
-    * (bounded by construction, independent of corpus size). Empty cells keep their previous
-    * centroid. Returns (vec_id, cell: int). */
+    * (bounded by construction, independent of corpus size). Empty cells
+    * keep their previous centroid. Returns (vec_id, cell: int). */
   def kmeansCells(idx: DataFrame, k: Int, iters: Int = 5,
       trainSampleCap: Long = 0L): DataFrame =
     assignCells(idx, kmeansCentroids(idx, k, iters, trainSampleCap))
@@ -1743,7 +1743,7 @@ object VectorOps {
       val t = GraftFunctions.cellTop2(col("efp"), cents)
       frame.select(col("vec_id"), col("nrm"), t.as("t2"))
         .select(col("vec_id"), explode(
-          when(col("t2.c2") >= 0 && (col("t2.s1") - col("t2.s2")) <=
+          when((col("t2.s1") - col("t2.s2")) <=
               lit(maxMargin) * sqrt(col("nrm").cast("double")),
             array(col("t2.c1"), col("t2.c2")))
             .otherwise(array(col("t2.c1")))).as("cell"))
