@@ -1,30 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.engine.GraftSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Static conf, default 100: the 40-query suite generates far more
-      // than 100 whole-stage-codegen classes, so with the default the
-      // warm-up's compiled classes are EVICTED before the timed runs and
-      // every timed query re-pays janino compilation (measured: q31 8.7s
-      // evicted vs 2.9s warm). A long-lived session sizes this to its
-      // workload; same knob in GraftSession.clusterDefaults.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // AQE stays ON (the honest cluster-representative config): measured
-      // at sf0.1 its per-stage re-planning costs ~7% of the suite total
-      // (25.2s off vs 27.0s on, 2-run averages) because every query here
-      // is sub-GB — at real scale the skew/coalesce wins dominate. The
-      // env toggle exists to reproduce that measurement, not to ship off.
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE stays ON (the honest cluster-representative config): measured
+    // at sf0.1 its per-stage re-planning costs ~7% of the suite total
+    // (25.2s off vs 27.0s on, 2-run averages) because every query here
+    // is sub-GB — at real scale the skew/coalesce wins dominate.
+    val spark = GraftSession.local(appName = "graft-bench")
     // Warmup: JVM JIT, whole-stage-codegen class compilation, and parquet
     // footer caches, off the clock. Every query runs once at the SMALLEST
     // scale factor (sf0.001) so each generated codegen class is compiled

@@ -27,7 +27,7 @@ object Demo {
         |WHERE o_orderdate >= TIMESTAMP '2001-01-01 00:00:00' - INTERVAL '12 months'
         |GROUP BY 1 ORDER BY 1""".stripMargin).show(truncate = false)
 
-    println("== guarded endpoint: LIMIT injection ==")
+    println("== guarded endpoint: row cap ==")
     engine.guardedQuery("SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_totalprice DESC", maxRows = 3) match {
       case Right(df) => df.show()
       case Left(err) => println(s"rejected: $err")

@@ -33,9 +33,23 @@ object ApiResponses {
       error_type: String,
       query_metadata: Map[String, Any])
 
+  /** The largest `max_rows` an ad-hoc query may ask for — the
+    * reference's own bound (sql_endpoints.py:19). */
+  private[api] val MaxRowsCap = 10000
+
+  /** A requested `max_rows`, when it is an integer in 1..[[MaxRowsCap]]. */
+  private[api] def parseMaxRows(raw: String): Option[Int] =
+    raw.toIntOption.filter(n => n >= 1 && n <= MaxRowsCap)
+
+  /** The in-envelope rejection of a request before any SQL runs. */
+  private[api] def validationError(reason: String, sql: String): String =
+    toJson(ErrorResponse(success = false, error = reason,
+      error_type = "VALIDATION_ERROR",
+      query_metadata = Map("query_length" -> sql.length)))
+
   /** Execute guarded SQL and build the success/error envelope
-    * (sql_endpoints.py:150-233). The result must already be LIMIT-bounded
-    * (guardedQuery injects one), so the collect is API-sized. */
+    * (sql_endpoints.py:150-233). guardedQuery caps the plan at `maxRows`,
+    * so the collect is API-sized. */
   def sqlQueryResponse(engine: GraftEngine, sql: String,
       maxRows: Int = 1000): String = {
     val t0 = System.nanoTime()
@@ -44,10 +58,7 @@ object ApiResponses {
     // so the whole pipeline sits under one handler
     try {
       engine.guardedQuery(sql, maxRows) match {
-        case Left(reason) =>
-          toJson(ErrorResponse(success = false, error = reason,
-            error_type = "VALIDATION_ERROR",
-            query_metadata = Map("query_length" -> sql.length)))
+        case Left(reason) => validationError(reason, sql)
         case Right(df) =>
           val rows = collectRows(df)
           toJson(QueryResponse(success = true, rows = rows,

@@ -267,8 +267,11 @@ final class FinOpsServer(finops: FinOps, engine: GraftEngine, port: Int = 0) {
     ("POST", "/api/v1/finops/sql/query") -> live { ex =>
       val raw = body(ex)
       val sql = jsonField(raw, "query").getOrElse("")
-      val maxRows = jsonField(raw, "max_rows").map(_.toInt).getOrElse(1000)
-      Raw(ApiResponses.sqlQueryResponse(engine, sql, maxRows))
+      Raw(jsonField(raw, "max_rows").fold(Option(1000))(ApiResponses.parseMaxRows) match {
+        case Some(maxRows) => ApiResponses.sqlQueryResponse(engine, sql, maxRows)
+        case None => ApiResponses.validationError(
+          s"max_rows must be an integer in 1..${ApiResponses.MaxRowsCap}", sql)
+      })
     },
     ("GET", "/api/v1/finops/sql/schema") -> live { ex =>
       val table = param(ex, "table").getOrElse("CUR")

@@ -28,11 +28,13 @@ class GraftEngine(val spark: SparkSession,
   }
 
   /** Guarded ad-hoc endpoint semantics (sql_endpoints.py:89-233): firewall +
-    * LIMIT injection. Returns Left(reason) on rejected SQL. */
+    * a row cap. Returns Left(reason) on rejected SQL. The cap is a Limit on
+    * the plan, not LIMIT text: the reference's text injection skips any
+    * query that says LIMIT anywhere (a subquery, a string literal, one
+    * UNION branch) and returns it uncapped. */
   def guardedQuery(sql: String, maxRows: Int = 1000): Either[String, DataFrame] =
     SqlTranslator.validateReadOnly(sql).map { ok =>
-      spark.sql(SqlTranslator.translate(
-        SqlTranslator.injectLimit(ok, maxRows), referenceDate))
+      spark.sql(SqlTranslator.translate(ok, referenceDate)).limit(maxRows)
     }
 
   /** Load a SQL file, trying absolute then cwd-relative path

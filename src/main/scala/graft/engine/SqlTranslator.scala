@@ -190,7 +190,9 @@ object SqlTranslator {
   /** LIMIT injection if absent (sql_endpoints.py:144-147). Mirrors the
     * reference: skip whenever LIMIT appears ANYWHERE in the query — a
     * trailing `LIMIT 5 OFFSET 10` or a subquery LIMIT must not receive a
-    * second, syntactically invalid LIMIT suffix. */
+    * second, syntactically invalid LIMIT suffix. Text only: any LIMIT
+    * in the query skips the cap, so [[GraftEngine.guardedQuery]] caps the
+    * plan instead. */
   def injectLimit(sql: String, limit: Int): String =
     if (sql.toUpperCase.matches("(?s).*\\bLIMIT\\b.*")) sql
     else sql.trim.stripSuffix(";") + s" LIMIT $limit"

@@ -2,25 +2,17 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SparkSessionExtensions installer for graft's custom expressions —
-  * the deployment route for clusters
-  * (`spark.sql.extensions=graft.functions.GraftExtensions` in
-  * spark-defaults, or `.withExtensions(new GraftExtensions)` on the
-  * builder). Local mains use [[GraftFunctions.register]] on an
-  * already-built session; both paths install the same builders.
-  */
+/** SparkSessionExtensions installer for graft's custom expressions:
+  * `spark.sql.extensions=graft.functions.GraftExtensions`, which
+  * [[graft.engine.GraftSession]] sets on every session it builds (and
+  * `clusterDefaults` hands to spark-defaults). Injects the same table
+  * [[GraftFunctions.register]] installs on sessions built elsewhere. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.IntDotName),
-      new ExpressionInfo(classOf[ArrayIntDot].getName, GraftFunctions.IntDotName),
-      (exprs: Seq[Expression]) => ArrayIntDot(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.CellTop2Name),
-      new ExpressionInfo(classOf[CellTop2].getName, GraftFunctions.CellTop2Name),
-      (exprs: Seq[Expression]) =>
-        CellTop2.fromExprs(GraftFunctions.CellTop2Name, exprs)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
 }

@@ -262,16 +262,15 @@ object IndexLifecycle {
     * wave-proportional by construction. Failures are logged, never
     * thrown: the wave is ALREADY committed (a caller retrying the append
     * would double-append), and the sidecar is derived data the next
-    * `stats()` backfills. No-op outside folded mode. */
+    * `stats()` backfills. */
   private def buildWaveStatsAtCommit(spark: SparkSession, l: Layout,
       d: String, w: Int): Unit =
-    if (WaveStats.mode(spark) == "folded")
-      try { l.waveStats(spark, d, w); () }
-      catch {
-        case e: Exception => Console.err.println(
-          s"[graft] wave $w sidecar build under $d failed " +
-            s"(stats() will backfill): $e")
-      }
+    try { l.waveStats(spark, d, w); () }
+    catch {
+      case e: Exception => Console.err.println(
+        s"[graft] wave $w sidecar build under $d failed " +
+          s"(stats() will backfill): $e")
+    }
 
   /** Refuse a rewrite into the live location — `op` rewrites tables
     * while reading them. Hadoop-Path comparison, NOT java.io.File:
@@ -468,27 +467,15 @@ object IndexLifecycle {
   }
 
   /** The committed waves' per-wave stats sidecars folded over
-    * `occKeys` — None when the live aggregate applies instead
-    * (`spark.graft.stats.mode=full`, the parity oracle). Waves
-    * are immutable, so each wave's sidecar is computed once, wave-pruned,
-    * and persisted under `_wavestats/` ([[WaveStats]]). */
+    * `occKeys`. Waves are immutable, so each wave's sidecar is computed
+    * once, wave-pruned, and persisted under `_wavestats/` ([[WaveStats]]). */
   def foldedStats(spark: SparkSession, l: Layout, cws: Seq[Int],
-      occKeys: Seq[String]): Option[WaveStats.Folded] =
-    if (WaveStats.mode(spark) != "folded") None
-    else {
-      val d = dirOf(spark, l)
-      // catalog self-heal before computing sidecars: a sidecar computed
-      // over a view that prunes out another process's wave would PERSIST
-      // zeros for it
-      recoverUnseenWaves(spark, l, cws)
-      Some(WaveStats.fold(spark, d, cws.map(w => l.waveStats(spark, d, w)),
-        occKeys))
-    }
-
-  /** Table `sub` restricted to the committed waves `cws` — the live
-    * aggregate's input. */
-  def committedTable(spark: SparkSession, l: Layout, sub: String,
-      cws: Seq[Int]): DataFrame =
-    spark.table(l.table(sub))
-      .where(col("wave").isin(cws.map(Integer.valueOf): _*))
+      occKeys: Seq[String]): WaveStats.Folded = {
+    val d = dirOf(spark, l)
+    // catalog self-heal before computing sidecars: a sidecar computed
+    // over a view that prunes out another process's wave would PERSIST
+    // zeros for it
+    recoverUnseenWaves(spark, l, cws)
+    WaveStats.fold(spark, d, cws.map(w => l.waveStats(spark, d, w)), occKeys)
+  }
 }

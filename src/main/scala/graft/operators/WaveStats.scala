@@ -81,17 +81,6 @@ object WaveStats {
     def occMean: Double = if (occCnt == 0) 0.0 else occSum.toDouble / occCnt
   }
 
-  /** `spark.graft.stats.mode`: `folded` (default — per-wave sidecars,
-    * lazily built, folded at read) or `full` (the original full-table
-    * aggregate; the parity oracle and the escape hatch). */
-  def mode(spark: SparkSession): String = {
-    val m = spark.conf.get("spark.graft.stats.mode", "folded")
-    require(m == "folded" || m == "full",
-      s"spark.graft.stats.mode='$m' is not a stats mode — expected " +
-        "folded or full")
-    m
-  }
-
   /** Collected-delta row cap before the fold falls back to a
     * sidecar-union aggregate (`spark.graft.stats.deltaCap`). */
   def deltaCap(spark: SparkSession): Long =

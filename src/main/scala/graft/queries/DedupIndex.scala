@@ -180,9 +180,9 @@ object DedupIndex {
     * only; an appended-to index adds one shuffle-free scan of the base
     * wave's occupancy table — never the full band-table distinct
     * aggregate (14–30 s at the 5M-doc decade) the pre-r19 path paid per
-    * call. `spark.graft.stats.mode=full` restores that path (the parity
-    * oracle); tombstones, staging ages, priors, and file counts stay
-    * live-computed either way. */
+    * call (`StatsFoldSpec` keeps that aggregate as its parity oracle);
+    * tombstones, staging ages, priors, and file counts stay
+    * live-computed. */
   final case class IndexStats(docs: Long, liveDocs: Long, tombstones: Long,
       distinctHashes: Long, bandBuckets: Long, maxBandBucket: Long,
       meanBandBucket: Double, bandSkew: Double, fileSets: Map[String, Int],
@@ -199,28 +199,10 @@ object DedupIndex {
     // physical artifact with these logical counts.
     val l = layout(prefix)
     val c = IndexLifecycle.census(spark, l)
-    val (docs, hashes, buckets, maxN, meanN) =
-      IndexLifecycle.foldedStats(spark, l, c.committedWaves,
-          Seq("b", "h")) match {
-        case Some(f) => (f.nIds, f.nAux, f.occCnt, f.occMax, f.occMean)
-        case None =>
-          def committedT(sub: String) =
-            IndexLifecycle.committedTable(spark, l, sub, c.committedWaves)
-          val dc = committedT("shingles")
-            .agg(count_distinct(col("doc_id"))).head().getLong(0)
-          val hc = committedT("hashes")
-            .agg(count_distinct(col("ch"))).head().getLong(0)
-          val occ = committedT("bands")
-            .groupBy("b", "h").agg(count_distinct(col("doc_id")).as("n"))
-            .agg(count(lit(1)), max("n"), avg("n")).head()
-          // an empty index (degenerate but attachable) aggregates to nulls
-          (dc, hc, occ.getLong(0),
-            if (occ.isNullAt(1)) 0L else occ.getLong(1),
-            if (occ.isNullAt(2)) 0.0 else occ.getDouble(2))
-      }
-    IndexStats(docs, docs - c.tombstones, c.tombstones, hashes, buckets,
-      maxN, meanN, if (meanN == 0.0) 0.0 else maxN / meanN, c.fileSets,
-      c.committedWave, c.abandonedWaves, c.committedWaves.length,
+    val f = IndexLifecycle.foldedStats(spark, l, c.committedWaves, Seq("b", "h"))
+    IndexStats(f.nIds, f.nIds - c.tombstones, c.tombstones, f.nAux, f.occCnt,
+      f.occMax, f.occMean, if (f.occMean == 0.0) 0.0 else f.occMax / f.occMean,
+      c.fileSets, c.committedWave, c.abandonedWaves, c.committedWaves.length,
       c.stagingDirs, c.staleStagingDirs, c.priorDirs, c.quarantinedWaves)
   }
 

@@ -18,8 +18,8 @@ import graft.operators.Bucketing
   *   - REBUILD (vector index only; the text index is model-free — its
   *     maintenance story is complete with compact): appended mass
   *     fraction ≥ [[Maintenance.RebuildAppendedFraction]] AND the index
-  *     serves PQ ANN. MEASURED (r15 `graft.DriftCalibration`,
-  *     BENCH_NOTES "Frozen-quantizer drift calibration"): frozen-model
+  *     serves PQ ANN. MEASURED (BENCH_NOTES "Frozen-quantizer drift
+  *     calibration", r15): frozen-model
   *     PQ recall matches a retrained counterfactual up to ~0.25 appended
   *     fraction, then falls away (−27% of attainable recall at 0.35,
   *     −76% at 2.0). The DEDUP-VERDICT path measured drift-IMMUNE to

@@ -361,9 +361,9 @@ object VectorIndex {
     *
     *   - `appendedRows / corpusRowsAtBuild` — frozen-quantizer drift:
     *     appended mass was assigned with centroids/PQ codebooks trained
-    *     before it existed. MEASURED (graft.DriftCalibration, shifted-
-    *     distribution waves vs a retrained counterfactual — BENCH_NOTES
-    *     "Frozen-quantizer drift calibration"): rebuild when the
+    *     before it existed. MEASURED (BENCH_NOTES "Frozen-quantizer
+    *     drift calibration": shifted-distribution waves vs a retrained
+    *     counterfactual): rebuild when the
     *     fraction exceeds ~0.3 IF the index serves PQ ANN — frozen
     *     recall matches a rebuild up to 0.25, then falls away (−27% of
     *     attainable recall at 0.35, −42% at 0.5, −76% at 2.0). The
@@ -386,10 +386,9 @@ object VectorIndex {
     *     [[compact]] (small-file pressure on the scan side).
     *
     * Cost: the cell occupancy folds from per-wave cached sidecars
-    * ([[IndexLifecycle.foldedStats]]; `spark.graft.stats.mode=full`
-    * restores the live aggregate over the narrow cells table, the parity
-    * oracle) + a count of the tiny tombstone set + driver-side file
-    * listings. */
+    * ([[IndexLifecycle.foldedStats]]; `StatsFoldSpec` checks them
+    * against the live aggregate over the narrow cells table) + a count
+    * of the tiny tombstone set + driver-side file listings. */
   final case class IndexStats(corpusRowsAtBuild: Long, totalRows: Long,
       liveRows: Long, tombstones: Long, appendedRows: Long, cells: Long,
       maxCellRows: Long, meanCellRows: Double, cellSkew: Double,
@@ -408,28 +407,16 @@ object VectorIndex {
     // (r14 advisor). [[compact]] dedups by id, re-aligning the physical
     // artifact with these logical counts.
     val c = IndexLifecycle.census(spark, l)
-    val (total, nCells, maxN, meanN) =
-      IndexLifecycle.foldedStats(spark, l, c.committedWaves,
-          Seq("cell")) match {
-        case Some(f) => (f.occSum, f.occCnt, f.occMax, f.occMean)
-        case None =>
-          val occ = IndexLifecycle.committedTable(spark, l, "cells",
-              c.committedWaves)
-            .groupBy("cell").agg(count_distinct(col("vec_id")).as("n"))
-            .agg(sum("n"), count(lit(1)), max("n"), avg("n")).head()
-          // an empty index (degenerate but attachable) aggregates to nulls
-          (if (occ.isNullAt(0)) 0L else occ.getLong(0), occ.getLong(1),
-            if (occ.isNullAt(2)) 0L else occ.getLong(2),
-            if (occ.isNullAt(3)) 0.0 else occ.getDouble(3))
-      }
+    val f = IndexLifecycle.foldedStats(spark, l, c.committedWaves, Seq("cell"))
+    val total = f.occSum
     // appendedRows derives from the meta's build-time row count, which
     // compact() deliberately preserves (it is the quantizer's training
     // size); compacting away tombstoned BUILD-time rows therefore
     // under-counts appended mass by that many rows — clamped at 0 so a
     // removal-heavy compacted index reads "no drift" rather than nonsense
     IndexStats(m.corpusRows, total, total - c.tombstones, c.tombstones,
-      math.max(0L, total - m.corpusRows), nCells, maxN, meanN,
-      if (meanN == 0.0) 0.0 else maxN / meanN, c.fileSets,
+      math.max(0L, total - m.corpusRows), f.occCnt, f.occMax, f.occMean,
+      if (f.occMean == 0.0) 0.0 else f.occMax / f.occMean, c.fileSets,
       c.committedWave, c.abandonedWaves, c.committedWaves.length,
       c.stagingDirs, c.staleStagingDirs, c.priorDirs, c.quarantinedWaves)
   }

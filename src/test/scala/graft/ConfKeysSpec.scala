@@ -5,9 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** README's conf-key table is the one list of `spark.graft.*` session
-  * keys: every key literal in `src/main` must have a row, and every row
-  * must name a key that `src/main` still reads. */
+/** Source scans of `src/main`. README's conf-key table is the one list
+  * of `spark.graft.*` session keys: every key literal in `src/main` must
+  * have a row, and every row must name a key that `src/main` still reads.
+  * `GraftSession` is the one session recipe: no other file builds one. */
 class ConfKeysSpec extends AnyFunSuite {
 
   private val Key = """spark\.graft\.[A-Za-z0-9_.]*[A-Za-z0-9_]""".r
@@ -32,5 +33,15 @@ class ConfKeysSpec extends AnyFunSuite {
       s"keys read in src/main but missing from README's table: ${inCode -- inTable}")
     assert((inTable -- inCode).isEmpty,
       s"README rows for keys src/main no longer reads: ${inTable -- inCode}")
+  }
+
+  test("GraftSession is the only file in src/main that builds a session") {
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"run from the repo root (no $root)")
+    val builders = sources(root)
+      .filter(p => Files.readString(p).contains("SparkSession.builder"))
+      .map(p => root.relativize(p).toString)
+    assert(builders == Seq("scala/graft/engine/GraftSession.scala"),
+      s"files that build their own session: $builders")
   }
 }

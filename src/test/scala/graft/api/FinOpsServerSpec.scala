@@ -164,6 +164,32 @@ class FinOpsServerSpec extends SparkSpec {
     assert(body.contains("COLUMN_NOT_FOUND"))
   }
 
+  test("sql/query caps the rows at max_rows whatever LIMIT the text holds") {
+    spark.range(5000).selectExpr("id", "CAST(id AS STRING) AS name")
+      .createOrReplaceTempView("cap_rows")
+    Seq(
+      "SELECT * FROM (SELECT * FROM cap_rows LIMIT 4000) t",
+      "SELECT * FROM cap_rows WHERE name <> 'no limit'",
+      "SELECT id FROM cap_rows UNION ALL (SELECT id FROM cap_rows LIMIT 3)"
+    ).foreach { q =>
+      val (status, body) = request("POST", "/api/v1/finops/sql/query",
+        Some(s"""{"query": "$q", "max_rows": 10}"""))
+      assert(status == 200 && body.contains("\"success\":true"), s"$q -> ${body.take(300)}")
+      val n = ApiResponses.readTree(body).get("row_count").asLong()
+      assert(n <= 10, s"$q returned $n rows")
+    }
+  }
+
+  test("sql/query rejects a max_rows outside 1..10000 as a validation error") {
+    Seq("0", "-1", "\"abc\"", "10001").foreach { m =>
+      val (status, body) = request("POST", "/api/v1/finops/sql/query",
+        Some(s"""{"query": "SELECT 1 AS one", "max_rows": $m}"""))
+      assert(status == 200, s"max_rows=$m -> $status")
+      assert(body.contains("\"success\":false") &&
+        body.contains("VALIDATION_ERROR"), s"max_rows=$m -> $body")
+    }
+  }
+
   test("mcp/query routes natural-language questions") {
     val (status, body) = request("POST", "/api/v1/finops/mcp/query",
       Some("""{"question": "top services by spend"}"""))

@@ -1,7 +1,8 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, SimpleFunctionRegistry}
 import org.apache.spark.sql.functions._
 
 class GraftFunctionsSpec extends SparkSpec {
@@ -29,17 +30,19 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("GraftExtensions installs the function at session build time") {
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .appName("ext-test")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      val v = s2.sql(s"SELECT ${GraftFunctions.IntDotName}(array(2L, 2L), array(3L, 4L))")
-        .collect()(0).getLong(0)
-      assert(v == 14L)
-    } finally () // shared-JVM session: do not stop (would kill the shared context)
+    // a fresh extensions object, not a session: the shared test session
+    // may already hold every function, whatever the extension injects
+    val ext = new SparkSessionExtensions
+    new GraftExtensions()(ext)
+    val registry = new SimpleFunctionRegistry
+    // registerFunctions is Spark-internal (private[sql]); it is the call
+    // a session build makes to install the injected functions
+    classOf[SparkSessionExtensions]
+      .getMethod("registerFunctions", classOf[FunctionRegistry])
+      .invoke(ext, registry)
+    val injected = registry.listFunction().map(_.funcName).toSet
+    assert(injected == Set(GraftFunctions.IntDotName, GraftFunctions.BloomAggName,
+      GraftFunctions.BloomContainsName, GraftFunctions.CellTop2Name))
   }
 
   test("type checking rejects non-long arrays") {

@@ -1,20 +1,21 @@
 package graft.queries
 
 import graft.SparkSpec
-import graft.operators.{Bucketing, WaveStats}
+import graft.operators.{Bucketing, IndexLifecycle, WaveStats}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-wave CACHED stats (r18 verdict item 2): `stats()` paid a
   * data-proportional occupancy aggregate per call; waves are immutable,
-  * so each wave's contribution is now computed once (lazily, pruned to
-  * the wave), persisted under `_wavestats/`, and FOLDED at read time.
-  * The contract here is PARITY: the folded numbers equal the full
-  * aggregate (`spark.graft.stats.mode=full`) across the whole lifecycle
-  * — appends, an at-least-once REPLAY (duplicate rows under a fresh
-  * wave, twin-detected by id fingerprint), tombstones, quarantine and
-  * restore, carried waves after an online compact, and a same-dir
-  * rebuild (which must reset the sidecar history with the wave
-  * numbers). */
+  * so each wave's contribution is now computed once (at wave commit,
+  * pruned to the wave), persisted under `_wavestats/`, and FOLDED at read
+  * time. The contract here is PARITY: the folded numbers equal the live
+  * full-table aggregate over the committed waves (computed here, the
+  * oracle) across the whole lifecycle — appends, an at-least-once REPLAY
+  * (duplicate rows under a fresh wave, twin-detected by id fingerprint),
+  * tombstones, quarantine and restore, carried waves after an online
+  * compact, and a same-dir rebuild (which must reset the sidecar history
+  * with the wave numbers). */
 class StatsFoldSpec extends SparkSpec {
 
   private lazy val docs = Tables.load(spark, sfDir, "documents")
@@ -22,9 +23,49 @@ class StatsFoldSpec extends SparkSpec {
   private lazy val emb = Tables.load(spark, sfDir, "embeddings")
     .select("vec_id", "embedding")
 
-  private def withMode[A](m: String)(body: => A): A = {
-    spark.conf.set("spark.graft.stats.mode", m)
-    try body finally spark.conf.unset("spark.graft.stats.mode")
+  /** Table `sub` of `l` restricted to the committed waves. */
+  private def committedTable(l: IndexLifecycle.Layout, sub: String): DataFrame = {
+    val cws = IndexLifecycle.census(spark, l).committedWaves
+    spark.table(l.table(sub))
+      .where(col("wave").isin(cws.map(Integer.valueOf): _*))
+  }
+
+  /** `s` with its doc/hash/band numbers from the live full-table
+    * aggregate instead of the fold. */
+  private def fullTextStats(prefix: String,
+      s: DedupIndex.IndexStats): DedupIndex.IndexStats = {
+    val l = DedupIndex.layout(prefix)
+    val nDocs = committedTable(l, "shingles")
+      .agg(count_distinct(col("doc_id"))).head().getLong(0)
+    val hashes = committedTable(l, "hashes")
+      .agg(count_distinct(col("ch"))).head().getLong(0)
+    val occ = committedTable(l, "bands")
+      .groupBy("b", "h").agg(count_distinct(col("doc_id")).as("n"))
+      .agg(count(lit(1)), max("n"), avg("n")).head()
+    // an empty index (degenerate but attachable) aggregates to nulls
+    val maxN = if (occ.isNullAt(1)) 0L else occ.getLong(1)
+    val meanN = if (occ.isNullAt(2)) 0.0 else occ.getDouble(2)
+    s.copy(docs = nDocs, liveDocs = nDocs - s.tombstones,
+      distinctHashes = hashes, bandBuckets = occ.getLong(0),
+      maxBandBucket = maxN, meanBandBucket = meanN,
+      bandSkew = if (meanN == 0.0) 0.0 else maxN / meanN)
+  }
+
+  /** `s` with its cell occupancy from the live aggregate over the
+    * committed cells table instead of the fold. */
+  private def fullVecStats(prefix: String,
+      s: VectorIndex.IndexStats): VectorIndex.IndexStats = {
+    val occ = committedTable(VectorIndex.layout(prefix), "cells")
+      .groupBy("cell").agg(count_distinct(col("vec_id")).as("n"))
+      .agg(sum("n"), count(lit(1)), max("n"), avg("n")).head()
+    // an empty index (degenerate but attachable) aggregates to nulls
+    val total = if (occ.isNullAt(0)) 0L else occ.getLong(0)
+    val maxN = if (occ.isNullAt(2)) 0L else occ.getLong(2)
+    val meanN = if (occ.isNullAt(3)) 0.0 else occ.getDouble(3)
+    s.copy(totalRows = total, liveRows = total - s.tombstones,
+      appendedRows = math.max(0L, total - s.corpusRowsAtBuild),
+      cells = occ.getLong(1), maxCellRows = maxN, meanCellRows = meanN,
+      cellSkew = if (meanN == 0.0) 0.0 else maxN / meanN)
   }
 
   private def assertClose(a: Double, b: Double, what: String): Unit =
@@ -32,8 +73,8 @@ class StatsFoldSpec extends SparkSpec {
       s"$what drifted: folded=$a full=$b")
 
   private def assertTextParity(prefix: String, where: String): Unit = {
-    val folded = withMode("folded")(DedupIndex.stats(spark, prefix))
-    val full = withMode("full")(DedupIndex.stats(spark, prefix))
+    val folded = DedupIndex.stats(spark, prefix)
+    val full = fullTextStats(prefix, folded)
     assert(folded.copy(meanBandBucket = 0, bandSkew = 0) ==
       full.copy(meanBandBucket = 0, bandSkew = 0),
       s"[$where] folded=$folded full=$full")
@@ -43,8 +84,8 @@ class StatsFoldSpec extends SparkSpec {
   }
 
   private def assertVecParity(prefix: String, where: String): Unit = {
-    val folded = withMode("folded")(VectorIndex.stats(spark, prefix))
-    val full = withMode("full")(VectorIndex.stats(spark, prefix))
+    val folded = VectorIndex.stats(spark, prefix)
+    val full = fullVecStats(prefix, folded)
     assert(folded.copy(meanCellRows = 0, cellSkew = 0) ==
       full.copy(meanCellRows = 0, cellSkew = 0),
       s"[$where] folded=$folded full=$full")
@@ -174,27 +215,19 @@ class StatsFoldSpec extends SparkSpec {
     assert(WaveStats.read(spark, vdir, vw).nonEmpty,
       s"vector wave-$vw sidecar missing right after append commit")
     assertVecParity(vprefix, "commit-built sidecars")
-    // full mode commits build NO sidecar (the read path never folds)
-    val fdir = java.nio.file.Files.createTempDirectory("sf_cmf").toString
-    withMode("full") {
-      DedupIndex.build(docs.limit(20), "doc_id", "text", fdir,
-        prefix = "sf_cmf")
-      assert(WaveStats.read(spark, fdir, 0).isEmpty,
-        "full-mode build wrote a sidecar")
-    }
   }
 
   test("a same-dir rebuild resets the sidecar history with the wave numbers") {
     val dir = java.nio.file.Files.createTempDirectory("sf_rb").toString
     val prefix = "sf_rb"
     DedupIndex.build(docs.limit(50), "doc_id", "text", dir, prefix = prefix)
-    withMode("folded")(DedupIndex.stats(spark, prefix))
+    DedupIndex.stats(spark, prefix)
     assert(exists(s"$dir/_wavestats"), "sidecars not persisted")
     // rebuild the SAME dir from a different corpus: wave 0 is reused by
     // number — a stale sidecar would be trusted for data it never saw
     DedupIndex.build(docs.limit(25), "doc_id", "text", dir, prefix = prefix)
     assertTextParity(prefix, "after same-dir rebuild")
-    val folded = withMode("folded")(DedupIndex.stats(spark, prefix))
+    val folded = DedupIndex.stats(spark, prefix)
     assert(folded.docs == 25, s"stale sidecar served: $folded")
   }
 }
